@@ -11,12 +11,12 @@ import org.apache.spark.storage.StorageLevel
   *
   * Why it exists: every one of those tables is "the thing a 100 TB
   * pipeline materializes ONCE and every consumer reads" — but a
-  * session-keyed TrieMap makes "once" mean "once per JVM". A restarted
+  * session-keyed memo makes "once" mean "once per JVM". A restarted
   * job would redo hours of LSH/CC/Lloyd work. With an index root
   * configured (`spark.graft.index.dir`), the first builder WRITES the
   * intermediate to parquet under
   * `<root>/<corpus-key>/<index-name>/data` and every later session
-  * LOADS it — the session TrieMaps in Dedup/Similarity/IvfIndex become
+  * LOADS it — the session memos in Dedup/Similarity/IvfIndex become
   * a read-through cache over this store. Unset (the default, and what
   * the driver's Verify/Bench run), behavior is exactly the session-memo
   * DISK_ONLY persist it always was.

@@ -1,16 +1,21 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
-/** Session-lifetime bookkeeping for the plan/memo caches that are keyed
-  * by SparkSession (Tables.dfCache, Dedup.pairCache, KMeans.fitCache).
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** Session-lifetime bookkeeping for state keyed by SparkSession: every
+  * [[SessionMemo]], plus the few session-owned resources that are not
+  * memos (Graph's instance-keyed adjacency LRU, IndexStore's
+  * footprint-checked fingerprint memo, Lineage's checkpoint files and
+  * Bloom's broadcasts).
   *
-  * Those caches are TrieMaps with no eviction, so in a long-lived
-  * multi-session JVM a stopped session (and every DataFrame it pinned)
-  * would be retained forever. Each cache registers an evictor once; each
-  * session is tracked once, and when its context ends all evictors run
-  * for it.
+  * That state would otherwise live as long as the JVM, so in a
+  * long-lived multi-session JVM a stopped session (and every DataFrame
+  * it pinned) would be retained forever. Each owner registers an
+  * evictor once; each session is tracked once, and when its context
+  * ends all evictors run for it.
   */
 object SessionCaches {
 
@@ -19,8 +24,8 @@ object SessionCaches {
   private val tracked = java.util.Collections.newSetFromMap(
     new java.util.concurrent.ConcurrentHashMap[SparkSession, java.lang.Boolean]())
 
-  /** Register a callback that drops one cache's entries for a session.
-    * Call once per cache object (from its companion's initializer). */
+  /** Register a callback that drops one owner's entries for a session.
+    * Call once per owner (from its initializer). */
   def registerEvictor(f: SparkSession => Unit): Unit = evictors.add(f)
 
   /** Run every evictor for `spark` NOW — the spec hook for eviction
@@ -31,8 +36,8 @@ object SessionCaches {
     evictors.forEach(f => f(spark))
   }
 
-  /** Ensure `spark`'s cache entries are evicted when its application
-    * ends. Idempotent per session; call on every cache insert. */
+  /** Ensure `spark`'s entries are evicted when its application ends.
+    * Idempotent per session; call on every insert. */
   def track(spark: SparkSession): Unit =
     if (tracked.add(spark)) {
       spark.sparkContext.addSparkListener(new SparkListener {
@@ -44,48 +49,78 @@ object SessionCaches {
     }
 }
 
-/** The per-(session, key) DataFrame-memo discipline in one place
-  * (bigram pairs, DSIR features/selection — the corpus-sized
-  * intermediates that must be materialized ONCE per session, not once
-  * per query invocation):
-  *   - the builder returns an already-persisted frame;
-  *   - an EMPTY build is never memoized (its plan snapshots the empty
-  *     file listing and would freeze the query at this key even after
-  *     data lands) — it is unpersisted and returned as-is;
-  *   - a lost putIfAbsent race unpersists the loser's copy;
-  *   - entries evict (and unpersist) when the application ends. NOTE:
-  *     evictors fire from onApplicationEnd, i.e. at CONTEXT stop —
-  *     there is no per-newSession()-sibling death hook in Spark — so
-  *     the unpersist is belt-and-braces for a future finer-grained
-  *     eviction trigger, not a today-observable behavior change
-  *     (Spark reclaims all blocks at context stop anyway).
-  * Future fixes to any of these rules now exist exactly once. */
-final class DfMemo[K] {
-  import org.apache.spark.sql.DataFrame
-  private val m = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, K), DataFrame]
-  // Unpersist each evicted frame. Today this is belt-and-braces: the
-  // evictor only fires at context stop (see the class doc note), where
-  // Spark reclaims the blocks anyway — but if a finer-grained
-  // per-session eviction trigger is ever added, this is the line that
-  // keeps a dead newSession() sibling's DISK_ONLY blocks from
-  // outliving it.
-  SessionCaches.registerEvictor(s =>
-    m.keySet.toSeq.filter(_._1 eq s).foreach { k =>
-      m.remove(k).foreach(df =>
-        try df.unpersist(blocking = false) catch { case _: Throwable => () })
-    })
+/** A per-(session, key) memo: the corpus-sized intermediates, solves
+  * and read-back plans that are built once per session, not once per
+  * query invocation. It owns every rule those memos share:
+  *   - each lookup tracks the session, and the memo registers its own
+  *     evictor, so a session's entries drop when its application ends;
+  *   - a built value that `keep` rejects is released and returned, but
+  *     not stored. An empty build is the usual case: its plan snapshots
+  *     the empty file listing and would freeze the key even after data
+  *     lands;
+  *   - inserts use putIfAbsent, and the copy that loses a race is
+  *     released in favour of the winner;
+  *   - every evicted or replaced value is released.
+  * A race loser persisted from the same plan as the winner shares the
+  * winner's cache entry (Spark caches by plan), so unpersisting it
+  * drops the winner's blocks too: results are unchanged and the next
+  * use materializes again. Evictors fire at CONTEXT stop (Spark has no per-newSession() death
+  * hook), where Spark reclaims cached blocks anyway, so releasing on
+  * eviction matters for [[SessionCaches.evictNow]] and any finer
+  * eviction trigger, not for today's listener path. */
+final class SessionMemo[K, V](keep: V => Boolean = (_: V) => true,
+    release: V => Unit = (_: V) => ()) {
 
-  def get(s: SparkSession, k: K)(build: => DataFrame): DataFrame = {
+  private val m = scala.collection.concurrent.TrieMap.empty[(SparkSession, K), V]
+
+  SessionCaches.registerEvictor(s =>
+    m.keySet.toSeq.filter(_._1 eq s).foreach(k => m.remove(k).foreach(quietRelease)))
+
+  // eviction runs inside the shared evictor loop: one failed release
+  // must not stop the other owners' evictions
+  private def quietRelease(v: V): Unit =
+    try release(v) catch { case NonFatal(_) => () }
+
+  /** The value memoized for `(s, k)`, building it on a miss. */
+  def get(s: SparkSession, k: K)(build: => V): V = {
     SessionCaches.track(s)
-    m.get((s, k)).getOrElse {
-      val built = build
-      if (built.limit(1).isEmpty) {
-        built.unpersist(blocking = false); built
-      } else m.putIfAbsent((s, k), built) match {
-        case Some(winner) => built.unpersist(blocking = false); winner
-        case None => built
-      }
+    m.get((s, k)) match {
+      case Some(v) => v
+      case None =>
+        val v = build
+        if (!keep(v)) { release(v); v }
+        else m.putIfAbsent((s, k), v) match {
+          case Some(winner) => release(v); winner
+          case None => v
+        }
     }
   }
+
+  /** The value memoized for `(s, k)`, if any; never builds. */
+  def peek(s: SparkSession, k: K): Option[V] = m.get((s, k))
+
+  /** Store `v` for `(s, k)` unconditionally (a pointer the caller
+    * publishes, not a build), releasing the value it replaces. */
+  def put(s: SparkSession, k: K, v: V): Unit = {
+    SessionCaches.track(s)
+    m.put((s, k), v).filter(_ != v).foreach(release)
+  }
+
+  /** Drop (and release) `k` in EVERY session — for a key whose backing
+    * data this JVM just rewrote. */
+  def invalidate(k: K): Unit =
+    m.keySet.toSeq.filter(_._2 == k).foreach(key => m.remove(key).foreach(release))
+}
+
+object SessionMemo {
+  /** `keep` for frames: reject an empty build (a limit-1 probe). */
+  val nonEmpty: DataFrame => Boolean = df => !df.limit(1).isEmpty
+
+  /** `release` for persisted frames. */
+  val unpersist: DataFrame => Unit = df => df.unpersist(blocking = false)
+
+  /** A memo of persisted frames: empty builds are not stored, and
+    * race losers, rejected builds and evicted frames are unpersisted. */
+  def frames[K]: SessionMemo[K, DataFrame] =
+    new SessionMemo[K, DataFrame](nonEmpty, unpersist)
 }

@@ -25,25 +25,13 @@ object Tables {
   // (and at scale, repeated file listing of a 100 TB table is real work).
   // Cache the analyzed DataFrame per (session, dir, table) — plan-level
   // reuse only, no data is pinned.
+  // An empty table is not memoized: the probe is a limit-1 scan, paid
+  // once per (session, dir, table) miss and only until data exists.
   private val dfCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), DataFrame]
-  SessionCaches.registerEvictor(s =>
-    dfCache.keySet.toSeq.filter(_._1 eq s).foreach(dfCache.remove))
+    new SessionMemo[(String, String), DataFrame](keep = SessionMemo.nonEmpty)
 
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    SessionCaches.track(spark)
-    dfCache.get((spark, sfDir, name)).getOrElse {
-      val df = doLoad(spark, sfDir, name)
-      // The "empty verdict is never memoized" rule, applied at the root:
-      // a plan built while the table was empty snapshots the empty file
-      // listing, and memoizing it would freeze every query at this dir
-      // even after data lands (the scatterSolve/ivfInt8Centroids rule one
-      // level down). The probe is a limit-1 scan, paid once per
-      // (session, dir, table) miss and only until data exists.
-      if (df.limit(1).isEmpty) df
-      else { dfCache.put((spark, sfDir, name), df); df }
-    }
-  }
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
+    dfCache.get(spark, (sfDir, name))(doLoad(spark, sfDir, name))
 
   private def doLoad(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     if (name == "events") {

@@ -79,7 +79,8 @@ object Bloom {
       out.toSeq
     }
     // destroy outside the lock: it can block on the BlockManager
-    dead.foreach(b => try b.destroy() catch { case _: Throwable => () })
+    dead.foreach(b =>
+      try b.destroy() catch { case scala.util.control.NonFatal(_) => () })
   }
 
   /** Entries currently held for `s` — spec hook for the eviction

@@ -47,11 +47,12 @@ object Bucketing {
   // join, so bk01 builds the bucketed twins once per (session, dir) and
   // re-runs join the existing layout — the honest 100 TB cost model.
   // Table names carry a dir suffix so two scale factors in one session
-  // cannot collide.
-  private val built =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), (String, String)]
-  graft.SessionCaches.registerEvictor(s =>
-    built.keySet.toSeq.filter(_._1 eq s).foreach(built.remove))
+  // cannot collide. A pair built while either source table was empty is
+  // not memoized: the bucketed copies would hold no rows for the rest of
+  // the session, even after data lands.
+  private final case class BucketedPair(orders: String, lineitem: String,
+      empty: Boolean)
+  private val built = new graft.SessionMemo[String, BucketedPair](keep = !_.empty)
 
   // Strong per-corpus-dir suffix for derived table/dir names.
   // String.hashCode is 32-bit: two DIFFERENT corpus dirs colliding
@@ -65,8 +66,7 @@ object Bucketing {
 
   /** (ordersTable, lineitemTable) bucketed by orderkey, built on demand. */
   def bucketedPair(s: SparkSession, d: String): (String, String) = {
-    graft.SessionCaches.track(s)
-    built.getOrElseUpdate((s, d), {
+    val p = built.get(s, d) {
       val sfx = dirSfx(d)
       val (ot, lt) = (s"graft_bk_orders_$sfx", s"graft_bk_lineitem_$sfx")
       writeBucketed(s, Tables.load(s, d, "orders")
@@ -74,8 +74,10 @@ object Bucketing {
       writeBucketed(s, Tables.load(s, d, "lineitem")
         .select(col("l_orderkey").as("o_orderkey"), col("l_quantity")),
         lt, "o_orderkey", 8)
-      (ot, lt)
-    })
+      BucketedPair(ot, lt,
+        empty = Seq(ot, lt).exists(t => s.table(t).limit(1).isEmpty))
+    }
+    (p.orders, p.lineitem)
   }
 
   // bk02: Z-ORDER layout — the 2-D companion to bk01's single-key
@@ -90,17 +92,14 @@ object Bucketing {
   // clustering as a first-class layout + query path — a query box of
   // 1/64 of the key space touches ~4 of 256 partitions instead of
   // scanning the table.
-  private val zBuilt = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Option[(String, Long, Long, Long, Long)]]
-  graft.SessionCaches.registerEvictor(s =>
-    zBuilt.keySet.toSeq.filter(_._1 eq s).foreach(zBuilt.remove))
+  // Only a built layout is memoized: the None (empty corpus) verdict
+  // re-runs the cheap maxima probe until a layout exists.
+  private val zBuilt = new graft.SessionMemo[String,
+    Option[(String, Long, Long, Long, Long)]](keep = _.isDefined)
 
   // analyzed-plan memo of the layout read-back (see bk02): keyed by the
   // layout path, which zBuilt/IndexStore already scope per corpus
-  private val zRead = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-  graft.SessionCaches.registerEvictor(s =>
-    zRead.keySet.toSeq.filter(_._1 eq s).foreach(zRead.remove))
+  private val zRead = new graft.SessionMemo[String, DataFrame]
 
   /** (layoutPath, cellWidthA, cellWidthB, maxA, maxB) for the
     * z-ordered lineitem copy, built on demand once per (session, dir).
@@ -114,14 +113,8 @@ object Bucketing {
     * corpus-sized copies. The corpus maxima ride along in the memo so
     * the query never re-scans the table for bounds it already
     * computed. */
-  def zorderLayout(s: SparkSession, d: String): Option[(String, Long, Long, Long, Long)] = {
-    graft.SessionCaches.track(s)
-    // NOTE: only a built layout is memoized. Caching the None (empty
-    // corpus) verdict would poison the session — data landing in the
-    // same dir later would keep answering "empty" until the JVM died;
-    // instead the cheap maxima probe re-runs until a layout exists.
-    zBuilt.get((s, d)).getOrElse {
-      val built: Option[(String, Long, Long, Long, Long)] = {
+  def zorderLayout(s: SparkSession, d: String): Option[(String, Long, Long, Long, Long)] =
+    zBuilt.get(s, d) {
       val li = Tables.load(s, d, "lineitem")
         .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"),
           col("l_suppkey"), col("l_quantity"))
@@ -161,11 +154,7 @@ object Bucketing {
       }
       Some((path, wa, wb, ma, mb))
       }
-      }
-      if (built.isDefined) zBuilt.putIfAbsent((s, d), built)
-      built
     }
-  }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // 2-D range query over the z-ordered layout: the box
@@ -193,7 +182,7 @@ object Bucketing {
           // across calls — exactly Tables.load's rationale; the partition
           // filter below still prunes per query at planning time. No
           // data is pinned.
-          zRead.getOrElseUpdate((s, path), s.read.parquet(path))
+          zRead.get(s, path)(s.read.parquet(path))
             .filter(col("zcell").isin(cells: _*) &&
               col("l_partkey").between(a0, a1) &&
               col("l_suppkey").between(b0, b1))

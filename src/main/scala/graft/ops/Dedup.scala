@@ -130,16 +130,14 @@ object Dedup {
   // dd12's span table is consumed twice (the dd12 report and the dd13
   // apply) — like the dd08 cluster map, it is the intermediate a 100 TB
   // pipeline materializes ONCE and every consumer reads. "Once" now
-  // means once per CORPUS, not once per JVM: the TrieMap is a
+  // means once per CORPUS, not once per JVM: the memo is a
   // read-through cache over graft.IndexStore (parquet under the index
   // root when configured; the historical DISK_ONLY session persist
   // otherwise). Keyed by the spare-one flag too: dd13b's keep-one span
   // table is a different (smaller) table than dd12/dd13's remove-all
   // one.
-  private val spanCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Boolean), DataFrame]
-  graft.SessionCaches.registerEvictor(s =>
-    spanCache.keySet.toSeq.filter(_._1 eq s).foreach(spanCache.remove))
+  private val spanCache = new graft.SessionMemo[(String, Boolean), DataFrame](
+    release = graft.SessionMemo.unpersist)
 
   /** Maximal duplicated token spans per doc (dd12's body, shared with
     * the dd13/dd13b applies): K-token md5 seed windows → global
@@ -147,13 +145,12 @@ object Dedup {
     * comment for the linear three-shuffle shape. Memoized per
     * (session, dir, spareOne). */
   private def dupSpans(s: SparkSession, d: String,
-      spareOne: Boolean = false): DataFrame = {
-    graft.SessionCaches.track(s)
-    spanCache.getOrElseUpdate((s, d, spareOne),
+      spareOne: Boolean = false): DataFrame =
+    spanCache.get(s, (d, spareOne)) {
       graft.IndexStore.dataFrame(s, d,
         if (spareOne) "span_table_keep1" else "span_table", "documents")(
-        spanPipeline(corpusNear(s, d), 6, spareOne)))
-  }
+        spanPipeline(corpusNear(s, d), 6, spareOne))
+    }
 
   /** dd12's span pipeline over an arbitrary (doc_id, text) corpus —
     * also the entry tools.GramStress drives at 100x scale. With
@@ -295,22 +292,16 @@ object Dedup {
   // dd11's bloom over the standing-corpus fingerprints, one per
   // (session, dir) — a property of the standing corpus, rebuilt only
   // when it changes (here: never within a session).
-  private val standingBloomCache = scala.collection.concurrent
-    .TrieMap.empty[(SparkSession, String), Array[Byte]]
-  graft.SessionCaches.registerEvictor(s =>
-    standingBloomCache.keySet.toSeq.filter(_._1 eq s).foreach(standingBloomCache.remove))
+  private val standingBloomCache = new graft.SessionMemo[String, Array[Byte]]
 
   private val pairCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  graft.SessionCaches.registerEvictor(s =>
-    pairCache.keySet.toSeq.filter(_._1 eq s).foreach(pairCache.remove))
+    new graft.SessionMemo[String, DataFrame](release = graft.SessionMemo.unpersist)
 
-  def minhashPairs(s: SparkSession, d: String): DataFrame = {
-    graft.SessionCaches.track(s)
-    pairCache.getOrElseUpdate((s, d),
+  def minhashPairs(s: SparkSession, d: String): DataFrame =
+    pairCache.get(s, d) {
       graft.IndexStore.dataFrame(s, d, "lsh_pairs", "documents")(
-        queries("dd03_minhash_lsh")(s, d)))
-  }
+        queries("dd03_minhash_lsh")(s, d))
+    }
 
   /** Distributed connected components over an undirected edge list
     * (columns `a`, `b`) via min-label propagation with pointer jumping:
@@ -413,22 +404,19 @@ object Dedup {
   // read by every downstream report. DISK_ONLY for the same
   // executor-memory reason as the pair cache.
   private val ccCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  graft.SessionCaches.registerEvictor(s =>
-    ccCache.keySet.toSeq.filter(_._1 eq s).foreach(ccCache.remove))
+    new graft.SessionMemo[String, DataFrame](release = graft.SessionMemo.unpersist)
 
   /** The memoized near-dup cluster map (dd08's output) for pipeline
     * composition — pp12 consumes it to materialize the deduped corpus. */
   def clusterMap(s: SparkSession, d: String): DataFrame = dd08(s, d)
 
-  private def dd08(s: SparkSession, d: String): DataFrame = {
-    graft.SessionCaches.track(s)
-    ccCache.getOrElseUpdate((s, d),
+  private def dd08(s: SparkSession, d: String): DataFrame =
+    ccCache.get(s, d) {
       graft.IndexStore.dataFrame(s, d, "cluster_map", "documents")(
         connectedComponents(
           minhashPairs(s, d).filter(col("jaccard") >= 0.7)
-            .select(col("a"), col("b")))))
-  }
+            .select(col("a"), col("b"))))
+    }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "dd08_cc_clusters" -> { (s, d) => dd08(s, d) },
@@ -556,12 +544,11 @@ object Dedup {
       val fp = md5(trim(regexp_replace(lower(col("text")), "\\s+", " ")))
       val standing = docs.filter(col("doc_id") % 5 =!= 0)
         .select(fp.as("fp")).distinct()
-      val bloom = standingBloomCache.getOrElseUpdate((s, d), {
-        graft.SessionCaches.track(s)
+      val bloom = standingBloomCache.get(s, d) {
         graft.IndexStore.bytes(s, d, "standing_bloom", "documents")(
           graft.functions.Bloom.build(standing, col("fp"),
             expectedItems = 1000000L, fpp = 0.01))
-      })
+      }
       val batch = docs.filter(col("doc_id") % 5 === 0).withColumn("fp", fp)
       val definitelyNew =
         batch.filter(!graft.functions.Bloom.mightContain(bloom, col("fp")))

@@ -107,12 +107,11 @@ object Graph {
           }
       }
     def evict(s: SparkSession): Unit = m.synchronized {
-      // unpersist what we evict (the DfMemo rule; belt-and-braces
-      // today — evictors fire at context stop, see SessionCaches)
+      // unpersist what we evict (the SessionMemo rule)
       m.keysIterator.filter(_._1 eq s).toSeq.foreach { k =>
         m.remove(k).foreach(_.foreach(df =>
           try df.unpersist(blocking = false)
-          catch { case _: Throwable => () }))
+          catch { case scala.util.control.NonFatal(_) => () }))
       }
     }
   }
@@ -147,10 +146,7 @@ object Graph {
   // gr02's co-purchase projection, memoized UNPERSISTED per (session,
   // dir) so repeated gr02 calls hand triangleCount the same instance
   // (its triCache keys on it) instead of rebuilding per call.
-  private val copurchaseCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-  graft.SessionCaches.registerEvictor(s =>
-    copurchaseCache.keySet.toSeq.filter(_._1 eq s).foreach(copurchaseCache.remove))
+  private val copurchaseCache = new graft.SessionMemo[String, DataFrame]
 
   // gr06's directed adjacency pair: the customer→supplier half of the
   // memoized symmetrized trade graph (even src) and its transpose (odd
@@ -159,48 +155,26 @@ object Graph {
   // edges from BOTH sides every round, so each direction gets its own
   // partitioning and only the (node, score) state shuffles per round.
   // Filtering tradeEdges (not re-extracting) shares the
-  // IndexStore-materialized extraction with gr01/gr03/gr05. putIfAbsent
-  // + loser-unpersist: the quantized-cache race discipline.
-  private val hitsAdjCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, DataFrame)]
-  graft.SessionCaches.registerEvictor(s =>
-    hitsAdjCache.keySet.toSeq.filter(_._1 eq s).foreach { k =>
-      hitsAdjCache.remove(k).foreach { p =>
-        try {
-          p._1.unpersist(blocking = false)
-          p._2.unpersist(blocking = false)
-        } catch { case _: Throwable => () }
-      }
-    })
+  // IndexStore-materialized extraction with gr01/gr03/gr05. An empty
+  // graph is not memoized (the symmetrized halves are same-sized, so
+  // probing one suffices).
+  private val hitsAdjCache = new graft.SessionMemo[String, (DataFrame, DataFrame)](
+    keep = p => graft.SessionMemo.nonEmpty(p._1),
+    release = p => { graft.SessionMemo.unpersist(p._1); graft.SessionMemo.unpersist(p._2) })
 
-  private def hitsAdj(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    graft.SessionCaches.track(s)
-    hitsAdjCache.get((s, d)).getOrElse {
+  private def hitsAdj(s: SparkSession, d: String): (DataFrame, DataFrame) =
+    hitsAdjCache.get(s, d) {
       val disk = org.apache.spark.storage.StorageLevel.DISK_ONLY
       val parts = s.sessionState.conf.numShufflePartitions
       val te = tradeEdges(s, d)
-      def half(parity: Int): DataFrame =
-        te.filter(col("src") % 2 === parity)
+      def half(parity: Int): DataFrame = {
+        val h = te.filter(col("src") % 2 === parity)
           .repartition(parts, col("src")).persist(disk)
-      val pair = (half(0), half(1))
-      // the empty-build rule (DfMemo's): a graph extracted before data
-      // lands must not freeze this session's gr06 at empty forever
-      // (the symmetrized halves are same-sized, so probing one suffices)
-      if (pair._1.limit(1).isEmpty) {
-        pair._1.unpersist(blocking = false)
-        pair._2.unpersist(blocking = false)
-        pair
-      } else hitsAdjCache.putIfAbsent((s, d), pair) match {
-        case Some(winner) =>
-          pair._1.unpersist(blocking = false)
-          pair._2.unpersist(blocking = false)
-          winner
-        case None =>
-          pair._1.count(); pair._2.count()
-          pair
+        h.count()
+        h
       }
+      (half(0), half(1))
     }
-  }
 
   /** Fixed-iteration integer PageRank over a directed edge list with
     * columns (src, dst). Returns (node, rank); every node that appears
@@ -519,8 +493,7 @@ object Graph {
     // count is a single exact integer, and the DuckDB oracle recomputes
     // it with the same orientation rule.
     "gr02_triangles" -> { (s, d) =>
-      graft.SessionCaches.track(s)
-      val und = copurchaseCache.getOrElseUpdate((s, d), {
+      val und = copurchaseCache.get(s, d) {
         val line = Tables.load(s, d, "lineitem")
           .select(col("l_orderkey"), col("l_partkey"))
         line.as("x").join(line.as("y"),
@@ -528,7 +501,7 @@ object Graph {
               col("x.l_partkey") < col("y.l_partkey"))
           .select(col("x.l_partkey").as("a"), col("y.l_partkey").as("b"))
           .distinct()
-      })
+      }
       triangleCount(und)
     },
 
@@ -602,18 +575,15 @@ object Graph {
   // materialize-the-intermediate-once discipline as Dedup.pairCache:
   // at 100 TB the relationship graph is extracted from the fact tables
   // once and every graph analytic reads the materialization.
-  private val edgeCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-  graft.SessionCaches.registerEvictor(s =>
-    edgeCache.keySet.toSeq.filter(_._1 eq s).foreach(edgeCache.remove))
+  private val edgeCache =
+    new graft.SessionMemo[String, DataFrame](release = graft.SessionMemo.unpersist)
 
   /** The symmetrized customer—supplier trade graph shared by gr01 and
     * gr03: customer keys map to even node ids (2k), supplier keys to
     * odd (2k+1), so the two key spaces never collide, and the two
     * directions of the bipartite graph are disjoint row sets. */
-  private def tradeEdges(s: SparkSession, d: String): DataFrame = {
-    graft.SessionCaches.track(s)
-    edgeCache.getOrElseUpdate((s, d), {
+  private def tradeEdges(s: SparkSession, d: String): DataFrame =
+    edgeCache.get(s, d) {
       // IndexStore-managed like the dedup/ANN intermediates: with an
       // index root configured the extraction runs ONCE across JVMs and
       // later sessions scan the materialized edge parquet; the
@@ -631,8 +601,7 @@ object Graph {
           .distinct()
         e0.unionByName(e0.select(col("dst").as("src"), col("src").as("dst")))
       }
-    })
-  }
+    }
 
   // The recurrence unrolled: r_{i} = teleport + 0.85 * sum of inbound
   // floor-shares of r_{i-1}, all in BIGINT (DuckDB's SUM widens to

@@ -42,19 +42,13 @@ object IvfIndex {
 
   // one build per (session, source dir) — probes (bench reps, repeated
   // query construction) reuse the materialized index
-  private val indexCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Index]
-  graft.SessionCaches.registerEvictor(s =>
-    indexCache.keySet.toSeq.filter(_._1 eq s).foreach(indexCache.remove))
+  private val indexCache = new graft.SessionMemo[String, Index]
 
   // unmanaged-mode "current" pointer: with no index root there is no
   // pointer FILE, so a drift rebuild publishes its handle here and
   // currentFor serves it session-scoped (the unmanaged contract — all
   // unmanaged state is session-scoped)
-  private val currentCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Index]
-  graft.SessionCaches.registerEvictor(s =>
-    currentCache.keySet.toSeq.filter(_._1 eq s).foreach(currentCache.remove))
+  private val currentCache = new graft.SessionMemo[String, Index]
 
   // Posting read-back memo (round 16 — the bk02 z-layout lesson):
   // `s.read.parquet(index.dir)` re-LISTS the index's cell partition
@@ -67,13 +61,10 @@ object IvfIndex {
   // visible to the next probe. Cross-JVM writers are governed by the
   // IndexStore freshness fingerprint exactly as before (the memo holds
   // a plan, not data — the same trust level as Tables.load's dfCache).
-  private val postingRead =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  graft.SessionCaches.registerEvictor(s =>
-    postingRead.keySet.toSeq.filter(_._1 eq s).foreach(postingRead.remove))
+  private val postingRead = new graft.SessionMemo[String, DataFrame]
 
   private[ops] def postingDf(s: SparkSession, dir: String): DataFrame =
-    postingRead.getOrElseUpdate((s, dir), s.read.parquet(dir))
+    postingRead.get(s, dir)(s.read.parquet(dir))
 
   /** Assign with FIXED centroids and write the cell-partitioned
     * postings (vec_id, embedding, c_id) — the float vector rides along
@@ -87,7 +78,7 @@ object IvfIndex {
       .partitionBy("c_id").parquet(out)
     // a stale memoized listing would silently hide the rows just
     // written (ss11's append-then-probe) — drop every session's entry
-    postingRead.keySet.toSeq.filter(_._2 == out).foreach(postingRead.remove)
+    postingRead.invalidate(out)
   }
 
   /** Train + assign + write the cell-partitioned assignment table. */
@@ -156,9 +147,8 @@ object IvfIndex {
     * Trains through [[Similarity.ivfInt8Centroids]] — the SAME memoized
     * K=16 centroid set ss03b/ss03c use, so all three queries probe one
     * coarse quantizer. */
-  def builtFor(s: SparkSession, d: String): Index = {
-    graft.SessionCaches.track(s)
-    indexCache.getOrElseUpdate((s, d), {
+  def builtFor(s: SparkSession, d: String): Index =
+    indexCache.get(s, d) {
       def all = Tables.load(s, d, "embeddings")
         .select(col("vec_id"), col("embedding"))
       def buildShared(out: String): Index = {
@@ -173,8 +163,7 @@ object IvfIndex {
       // name keeps a pre-rewrite persisted index from being read back
       // as the wrong schema
       resolveIndex(s, d, "ivf8", "graft_ivf")(buildShared)
-    })
-  }
+    }
 
   /** ss11's memoized standing-corpus + appended-batch index: the
     * standing 90% (vec_id % 10 != 0) trains the frozen quantizer and
@@ -185,9 +174,8 @@ object IvfIndex {
     * name "ivf8a" keeps its lineage separate from the full-corpus
     * ivf8 index; qa11 audits the merged index's recall against the
     * exact brute force. */
-  def builtForAppend(s: SparkSession, d: String): Index = {
-    graft.SessionCaches.track(s)
-    indexCache.getOrElseUpdate((s, d + "#append"), {
+  def builtForAppend(s: SparkSession, d: String): Index =
+    indexCache.get(s, d + "#append") {
       def all = Tables.load(s, d, "embeddings")
         .select(col("vec_id"), col("embedding"))
       def standing = all.filter(col("vec_id") % 10 =!= 0)
@@ -202,8 +190,7 @@ object IvfIndex {
         idx
       }
       resolveIndex(s, d, "ivf8a", "graft_ivfa")(buildShared)
-    })
-  }
+    }
 
   // ---- recall-drift policy -------------------------------------------
   //
@@ -334,7 +321,7 @@ object IvfIndex {
     }
     val idx = resolveIndex(s, d, RebuiltStore, "graft_ivfr")(buildShared)
     graft.IndexStore.writeCurrent(s, d, CurrentAlias, RebuiltStore)
-    currentCache((s, d)) = idx
+    currentCache.put(s, d, idx)
     idx
   }
 
@@ -350,15 +337,13 @@ object IvfIndex {
     * unmanaged, to the session-scoped pointer a rebuild published. A
     * pointer at a STALE index (corpus changed since the rebuild) fails
     * loudly via [[graft.IndexStore.peekFresh]]. */
-  def currentFor(s: SparkSession, d: String): Index = {
-    graft.SessionCaches.track(s)
+  def currentFor(s: SparkSession, d: String): Index =
     graft.IndexStore.readCurrent(s, d, CurrentAlias) match {
       case Some(target) =>
         graft.IndexStore.peekFresh(s, d, target, "embeddings") match {
           case Some(base) =>
             val fp = graft.IndexStore.fingerprint(s, d, "embeddings")
-            indexCache.getOrElseUpdate((s, s"$d#cur#$target#$fp"),
-              loadIndex(s, base))
+            indexCache.get(s, s"$d#cur#$target#$fp")(loadIndex(s, base))
           case None =>
             // dangling pointer: the pointed-at index dir was removed
             // out-of-band — serve the standing index, loudly
@@ -368,9 +353,8 @@ object IvfIndex {
             builtForAppend(s, d)
         }
       case None =>
-        currentCache.getOrElse((s, d), builtForAppend(s, d))
+        currentCache.peek(s, d).getOrElse(builtForAppend(s, d))
     }
-  }
 
   /** Ingest-cadence drift auditing (round-16): the drift gate is only
     * useful if something actually RUNS it, and the natural cadence is

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.VectorOps._
 
@@ -14,13 +14,6 @@ import graft.functions.VectorOps._
   * run-to-run on any cluster size.
   */
 object KMeans {
-
-  // fitting is deterministic per (session, plan, params) — memoize so
-  // repeated query construction (bench reps, pipeline reuse) trains once
-  private val fitCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String, String, Int, Int), Seq[Seq[Double]]]
-  graft.SessionCaches.registerEvictor(s =>
-    fitCache.keySet.toSeq.filter(_._1 eq s).foreach(fitCache.remove))
 
   /** The `keep` nearest centroids for a vector column, as an array of
     * struct(cos, c_id) ordered by cosine desc then c_id asc.
@@ -48,16 +41,8 @@ object KMeans {
 
   /** Returns the trained centroids as a local k×dim structure (tiny by
     * construction: k centroids of `dim` doubles). */
-  def fit(spark: SparkSession, df: DataFrame, idCol: String, vecCol: String,
-      k: Int, iters: Int): Seq[Seq[Double]] = {
-    graft.SessionCaches.track(spark)
-    fitCache.getOrElseUpdate(
-      (spark, df.queryExecution.logical.canonicalized.toString, idCol, vecCol, k, iters),
-      doFit(spark, df, idCol, vecCol, k, iters))
-  }
-
-  private def doFit(spark: SparkSession, df: DataFrame, idCol: String,
-      vecCol: String, k: Int, iters: Int): Seq[Seq[Double]] = {
+  def fit(df: DataFrame, idCol: String, vecCol: String, k: Int,
+      iters: Int): Seq[Seq[Double]] = {
     val n = df.count()
     val stride = math.max(n / k, 1L)
     val init = df

@@ -27,11 +27,8 @@ object Similarity {
   // ss09's per-subspace PQ codebooks — a property of (session, dir),
   // built once (M one-round Lloyd fits) and probed thereafter (the
   // IvfIndex build/probe split); evicted with the session.
-  private val pqCodebookCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Seq[Seq[(Int, Seq[Int])]]]
-  graft.SessionCaches.registerEvictor(s =>
-    pqCodebookCache.keySet.toSeq.filter(_._1 eq s)
-      .foreach(pqCodebookCache.remove))
+  private val pqCodebookCache =
+    new graft.SessionMemo[String, Seq[Seq[(Int, Seq[Int])]]]
 
   // The int8-quantized corpus (ss05's grid) — consumed by the PQ
   // build, the encode scan, the LUT collect, and the ss10 re-rank, and
@@ -46,12 +43,10 @@ object Similarity {
 
   // memoized per (session, dir): the corpus scans behind the solve
   // (mean agg + scatter agg) run once per session, not per
-  // invocation/bench rep. Pure values (no persisted DataFrames), so
-  // eviction is just map cleanup.
-  private val pcaCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), PcaSolve]
-  graft.SessionCaches.registerEvictor(s =>
-    pcaCache.keySet.toSeq.filter(_._1 eq s).foreach(pcaCache.remove))
+  // invocation/bench rep. Only a solved (non-empty corpus) result is
+  // kept: a query issued before data lands must not pin "empty".
+  private val pcaCache =
+    new graft.SessionMemo[String, Option[PcaSolve]](keep = _.isDefined)
 
   private val PcaDim = 64
   private val JlDim = 16
@@ -61,24 +56,18 @@ object Similarity {
     * power-iteration rounds on the collected d×d matrix, sign fix,
     * 6-decimal integer scaling, plus the Rayleigh quotient λ = vᵀSv
     * for emb06 — every float step order-pinned to DuckDB's sequential
-    * list_dot_product. None on an empty corpus (deliberately NOT
-    * cached — the ivfInt8Centroids rule). */
+    * list_dot_product. None on an empty corpus. */
   /** The corpus side of every eigensolve, shared by emb05/emb06/emb07:
     * truncating integer means + the integer scatter triangle — exactly
     * two corpus aggregations, memoized per (session, dir) so the three
     * queries cost ONE pass between them. */
-  private val scatterCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Option[(Seq[Int], Long, Seq[Seq[Long]])]]
-  graft.SessionCaches.registerEvictor(s =>
-    scatterCache.keySet.toSeq.filter(_._1 eq s).foreach(scatterCache.remove))
+  private val scatterCache =
+    new graft.SessionMemo[String, Option[(Seq[Int], Long, Seq[Seq[Long]])]](
+      keep = _.isDefined)
 
   private def scatterSolve(s: SparkSession, d: String)
-      : Option[(Seq[Int], Long, Seq[Seq[Long]])] = {
-    graft.SessionCaches.track(s)
-    // Empty-corpus None is deliberately NOT cached (the pcaSolve /
-    // ivfInt8Centroids rule): a query issued before data lands must not
-    // pin "empty" for the rest of the session. Only Some is memoized.
-    scatterCache.get((s, d)).getOrElse {
+      : Option[(Seq[Int], Long, Seq[Seq[Long]])] =
+    scatterCache.get(s, d) {
       val dim = PcaDim
       val q8 = quantized(s, d)
       val sc = sum(col("col").cast("long"))
@@ -95,16 +84,12 @@ object Similarity {
             expr(s"zip_with(q, array(${m.mkString(",")}), (a, b) -> a - b)"))
           .agg(graft.functions.Scatter.scatterMatrix(col("c"), dim).as("s"))
           .head.getSeq[scala.collection.Seq[Long]](0)
-        val solved = Some((m, nVecs, scatL.map(_.toSeq).toSeq))
-        scatterCache.put((s, d), solved)
-        solved
+        Some((m, nVecs, scatL.map(_.toSeq).toSeq))
       }
     }
-  }
 
-  private def pcaSolve(s: SparkSession, d: String): Option[PcaSolve] = {
-    graft.SessionCaches.track(s)
-    pcaCache.get((s, d)).orElse {
+  private def pcaSolve(s: SparkSession, d: String): Option[PcaSolve] =
+    pcaCache.get(s, d) {
       val dim = PcaDim
       scatterSolve(s, d).map { case (m, nVecs, scatL) =>
         val trace = (0 until dim).map(i => scatL(i)(i)).sum
@@ -137,14 +122,11 @@ object Similarity {
         var lam = 0.0
         var i = 0
         while (i < dim) { lam += v(i) * w(i); i += 1 }
-        val r = PcaSolve(m,
+        PcaSolve(m,
           v.map(x => graft.functions.Num.rhalf(x * 1000000.0)),
           nVecs, trace, lam)
-        pcaCache.put((s, d), r)
-        r
       }
     }
-  }
 
   /** Top-k eigensolve by HOTELLING DEFLATION on the shared scatter
     * matrix — emb07's driver work, same Lloyd-class d² transfer as
@@ -162,15 +144,12 @@ object Similarity {
   private[ops] final case class PcaSolveK(m: Seq[Int],
       comps: Seq[Array[Long]], lams: Seq[Double], nVecs: Long)
 
-  private val pcaKCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Int), PcaSolveK]
-  graft.SessionCaches.registerEvictor(s =>
-    pcaKCache.keySet.toSeq.filter(_._1 eq s).foreach(pcaKCache.remove))
+  private val pcaKCache =
+    new graft.SessionMemo[(String, Int), Option[PcaSolveK]](keep = _.isDefined)
 
   private[ops] def pcaSolveK(s: SparkSession, d: String, k: Int)
-      : Option[PcaSolveK] = {
-    graft.SessionCaches.track(s)
-    pcaKCache.get((s, d, k)).orElse {
+      : Option[PcaSolveK] =
+    pcaKCache.get(s, (d, k)) {
       val dim = PcaDim
       scatterSolve(s, d).map { case (m, nVecs, scatL) =>
         val scat = scatL.map(_.map(_.toDouble).toArray).toArray
@@ -213,12 +192,9 @@ object Similarity {
             i += 1
           }
         }
-        val r = PcaSolveK(m, comps.result(), lams.result(), nVecs)
-        pcaKCache.put((s, d, k), r)
-        r
+        PcaSolveK(m, comps.result(), lams.result(), nVecs)
       }
     }
-  }
 
   /** emb08's Johnson–Lindenstrauss sign matrix, derived entirely from
     * md5 so BOTH engines can mint it independently: sign(i, j) = +1
@@ -239,33 +215,24 @@ object Similarity {
     }
   }
 
-  private val q8Cache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-  graft.SessionCaches.registerEvictor(s =>
-    q8Cache.keySet.toSeq.filter(_._1 eq s).foreach(q8Cache.remove))
+  private val q8Cache = graft.SessionMemo.frames[String]
 
   // The k-center traversal's result (≤K rows) — emb10 AND qa09 both
   // need it, and the traversal is K driver-round scans; without this
   // memo qa09's cost silently re-included its upstream selection on
-  // every invocation. Empty results are never memoized (data may land
-  // at the dir later — the scatterSolve/pcaSolve rule).
-  private val kcenterCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Int), Vector[(Int, Long, Long)]]
-  graft.SessionCaches.registerEvictor(s =>
-    kcenterCache.keySet.toSeq.filter(_._1 eq s).foreach(kcenterCache.remove))
+  // every invocation. Empty results are not memoized.
+  private val kcenterCache =
+    new graft.SessionMemo[(String, Int), Vector[(Int, Long, Long)]](
+      keep = _.nonEmpty)
 
   /** Memoized k-center traversal over the quantized corpus at `d` —
     * the shared upstream of emb10 (which emits it) and qa09 (which
     * audits coverage of its centers). */
-  private def kcenterRows(s: SparkSession, d: String, k: Int): Vector[(Int, Long, Long)] = {
-    graft.SessionCaches.track(s)
-    kcenterCache.get((s, d, k)).getOrElse {
-      val rows = kcenterGreedy(s, quantized(s, d), k).collect()
+  private def kcenterRows(s: SparkSession, d: String, k: Int): Vector[(Int, Long, Long)] =
+    kcenterCache.get(s, (d, k)) {
+      kcenterGreedy(s, quantized(s, d), k).collect()
         .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toVector
-      if (rows.nonEmpty) kcenterCache.putIfAbsent((s, d, k), rows)
-      rows
     }
-  }
 
   // The PQ-ENCODED corpus (vec_id, codes) — the compressed index a PQ
   // deployment materializes ONCE (Jégou et al.: the codes ARE the
@@ -276,10 +243,8 @@ object Similarity {
   // read-through cache; unmanaged it is one DISK_ONLY persist per
   // (session, dir). Codes derive deterministically from the quantized
   // corpus + codebooks, so the oracle replay is unchanged.
-  private val encCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-  graft.SessionCaches.registerEvictor(s =>
-    encCache.keySet.toSeq.filter(_._1 eq s).foreach(encCache.remove))
+  private val encCache =
+    new graft.SessionMemo[String, DataFrame](release = graft.SessionMemo.unpersist)
 
   /** ss05's symmetric int8 grid appended to an arbitrary
     * (…, embedding) frame as `q` — the stateless kernel shared by the
@@ -338,28 +303,11 @@ object Similarity {
     }
   }
 
-  private def quantized(s: SparkSession, d: String): DataFrame = {
-    graft.SessionCaches.track(s)
-    q8Cache.get((s, d)).getOrElse {
-      val q = quantize(emb(s, d)).select(col("vec_id"), col("q"))
-      // Empty corpus → return the un-persisted plan WITHOUT caching
-      // (the scatterSolve/pcaSolve rule): a persisted-empty memo would
-      // freeze every quantized-corpus query at the dir even after data
-      // lands. The probe is a limit-1 scan — trivial on the miss path.
-      if (emb(s, d).limit(1).isEmpty) q
-      else {
-        val p = q.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-        // putIfAbsent, not put: two threads racing the miss path would
-        // otherwise BOTH persist, and the overwritten copy leaks
-        // DISK_ONLY storage forever. The loser unpersists its copy and
-        // adopts the winner's.
-        q8Cache.putIfAbsent((s, d), p) match {
-          case Some(winner) => p.unpersist(blocking = false); winner
-          case None => p
-        }
-      }
+  private def quantized(s: SparkSession, d: String): DataFrame =
+    q8Cache.get(s, d) {
+      quantize(emb(s, d)).select(col("vec_id"), col("q"))
+        .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
     }
-  }
 
   private def emb(s: SparkSession, d: String): DataFrame =
     Tables.load(s, d, "embeddings").select(col("vec_id"), col("embedding"))
@@ -394,14 +342,11 @@ object Similarity {
   // probe) and ss03c (ADC shortlist + exact re-rank): emb03's Lloyd
   // chain — hash-ordered seeds, one truncating-integer-mean round.
   // Memoized per (session, dir): the centroid list is k×dim integers
-  // (the bounded Lloyd transfer). An EMPTY corpus yields Nil and is
-  // NOT cached — the zBuilt rule: an empty verdict must re-check once
-  // data lands.
+  // (the bounded Lloyd transfer). An EMPTY corpus yields Nil, which is
+  // not memoized.
   private val IvfK = 16
-  private val ivfCentCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Seq[(Int, Seq[Int])]]
-  graft.SessionCaches.registerEvictor(s =>
-    ivfCentCache.keySet.toSeq.filter(_._1 eq s).foreach(ivfCentCache.remove))
+  private val ivfCentCache =
+    new graft.SessionMemo[String, Seq[(Int, Seq[Int])]](keep = _.nonEmpty)
 
   /** emb03's integer Lloyd chain over an arbitrary quantized
     * (vec_id, q) frame: hash-ordered seeds, one truncating-integer-mean
@@ -426,14 +371,8 @@ object Similarity {
   }
 
   private[ops] def ivfInt8Centroids(s: SparkSession,
-      d: String): Seq[(Int, Seq[Int])] = {
-    graft.SessionCaches.track(s)
-    ivfCentCache.get((s, d)).getOrElse {
-      val cents = int8LloydTrain(quantized(s, d), IvfK)
-      if (cents.nonEmpty) ivfCentCache.putIfAbsent((s, d), cents)
-      cents
-    }
-  }
+      d: String): Seq[(Int, Seq[Int])] =
+    ivfCentCache.get(s, d)(int8LloydTrain(quantized(s, d), IvfK))
 
   /** ss11's frozen quantizer: trained on the STANDING corpus only
     * (vec_id % 10 != 0) — the appended batch must be assigned by
@@ -442,32 +381,17 @@ object Similarity {
     * would invalidate every posting list). Memoized under a distinct
     * key so it never collides with the full-corpus quantizer. */
   private[ops] def ivfAppendCentroids(s: SparkSession,
-      d: String): Seq[(Int, Seq[Int])] = {
-    graft.SessionCaches.track(s)
-    ivfCentCache.get((s, d + "#append")).getOrElse {
-      val cents = int8LloydTrain(
-        quantized(s, d).filter(col("vec_id") % 10 =!= 0), IvfK)
-      if (cents.nonEmpty) ivfCentCache.putIfAbsent((s, d + "#append"), cents)
-      cents
+      d: String): Seq[(Int, Seq[Int])] =
+    ivfCentCache.get(s, d + "#append") {
+      int8LloydTrain(quantized(s, d).filter(col("vec_id") % 10 =!= 0), IvfK)
     }
-  }
 
   // memoized NON-emptiness of the embeddings table (ss03's guard): a
   // "non-empty" verdict is stable, an "empty" one is not — see ss03
-  private val embNonEmpty = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Boolean]
-  graft.SessionCaches.registerEvictor(s =>
-    embNonEmpty.keySet.toSeq.filter(_._1 eq s).foreach(embNonEmpty.remove))
+  private val embNonEmpty = new graft.SessionMemo[String, Boolean](keep = identity)
 
-  private def embEmpty(s: SparkSession, d: String, e: DataFrame): Boolean = {
-    graft.SessionCaches.track(s)
-    if (embNonEmpty.contains((s, d))) false
-    else {
-      val empty = e.isEmpty
-      if (!empty) embNonEmpty.putIfAbsent((s, d), true)
-      empty
-    }
-  }
+  private def embEmpty(s: SparkSession, d: String, e: DataFrame): Boolean =
+    !embNonEmpty.get(s, d)(!e.isEmpty)
 
   /** The qa10/qa11 recall audit (Spark twin of the shared
     * annRecallTail SQL): recall@10 of `annName`'s top-k vs the exact
@@ -494,15 +418,10 @@ object Similarity {
     * Same discipline as [[embEmpty]] — only the non-empty verdict is
     * memoized (keyed under a distinct suffix in the same map), so warm
     * ss11/qa11 invocations don't pay a probe job per construction. */
-  private def standingEmpty(s: SparkSession, d: String, e: DataFrame): Boolean = {
-    graft.SessionCaches.track(s)
-    if (embNonEmpty.contains((s, d + "#standing"))) false
-    else {
-      val empty = e.filter(col("vec_id") % 10 =!= 0).limit(1).isEmpty
-      if (!empty) embNonEmpty.putIfAbsent((s, d + "#standing"), true)
-      empty
+  private def standingEmpty(s: SparkSession, d: String, e: DataFrame): Boolean =
+    !embNonEmpty.get(s, d + "#standing") {
+      !e.filter(col("vec_id") % 10 =!= 0).limit(1).isEmpty
     }
-  }
 
   /** Deterministic pseudo-random hyperplanes (fixed seed, 16 × 64). */
   private lazy val planes: Seq[Seq[Double]] = {
@@ -985,7 +904,7 @@ object Similarity {
         q8.select(col("vec_id"), lit(0).as("c_id"),
           lit(0L).as("dist")).limit(0)
       else {
-        // Lloyd scaffolding shared with KMeans.doFit (ops.Lloyd); this
+        // Lloyd scaffolding shared with KMeans.fit (ops.Lloyd); this
         // kernel: integer squared-L2 argmin, truncating integer mean
         // ((s - s % n) / n divides exactly, so every division operator
         // agrees cross-engine), empty clusters DROPPED (the oracle
@@ -1368,8 +1287,7 @@ object Similarity {
   // differently than the session that built the index.
   private def pqCodebooksFor(s: SparkSession,
       d: String): Seq[Seq[(Int, Seq[Int])]] =
-    pqCodebookCache.getOrElseUpdate((s, d), {
-      graft.SessionCaches.track(s)
+    pqCodebookCache.get(s, d) {
       val df = graft.IndexStore.dataFrame(s, d, "pq_codebooks",
         "embeddings", persistWhenUnmanaged = false) {
         val built = trainPqCodebooks(s, d)
@@ -1383,7 +1301,7 @@ object Similarity {
         rows.filter(_.getInt(0) == m).sortBy(_.getInt(1))
           .map(r => (r.getInt(2), r.getSeq[Int](3).toSeq)).toSeq
       }
-    })
+    }
 
   private def trainPqCodebooks(s: SparkSession,
       d: String): Seq[Seq[(Int, Seq[Int])]] = {
@@ -1412,12 +1330,12 @@ object Similarity {
   private def pqAdc(s: SparkSession, d: String): (DataFrame, DataFrame) = {
     val q8 = quantized(s, d)
     val codebooks = pqCodebooksFor(s, d)
-    graft.SessionCaches.track(s)
-    val enc = encCache.getOrElseUpdate((s, d),
+    val enc = encCache.get(s, d) {
       graft.IndexStore.dataFrame(s, d, "pq_codes", "embeddings",
         eagerWhenUnmanaged = true) {
         q8.select(col("vec_id"), pqEncode(col("q"), codebooks).as("codes"))
-      })
+      }
+    }
     def il2(a: Seq[Int], b: Seq[Int]): Long =
       a.zip(b).map { case (x, y) => (x - y).toLong * (x - y) }.sum
     val qs = q8.filter(col("vec_id") < 10).collect()

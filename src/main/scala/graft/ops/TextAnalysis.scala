@@ -54,9 +54,8 @@ object TextAnalysis {
   // per-call persist leaked one corpus-sized copy per invocation for
   // the session lifetime — the ss09 quantized-leak class). DISK_ONLY
   // because the bigram table scales with the corpus and pinning it in
-  // executor memory is what breaks at 100 TB. Race/empty/evict rules
-  // live in DfMemo.
-  private val bigramMemo = new graft.DfMemo[String]
+  // executor memory is what breaks at 100 TB.
+  private val bigramMemo = graft.SessionMemo.frames[String]
 
   private def bigramPairs(s: SparkSession, d: String): DataFrame =
     bigramMemo.get(s, d) {
@@ -647,23 +646,16 @@ object TextAnalysis {
   // (session, corpus, n) — the memo holds the merge list plus the
   // final localCheckpointed vocab-sized symbol table (11 tiny pinned
   // tables per corpus). Same immutable-corpus assumption as every
-  // other (session, dir) memo (Tables.dfCache); evicted with the
-  // session per the SessionCaches contract.
-  private val bpeCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Int),
-      (Seq[(Int, String, String, String, Long)], DataFrame)]
-  graft.SessionCaches.registerEvictor(s =>
-    bpeCache.keys.filter(_._1 eq s).foreach(bpeCache.remove))
+  // other (session, dir) memo (Tables.dfCache).
+  private val bpeCache = new graft.SessionMemo[(String, Int),
+    (Seq[(Int, String, String, String, Long)], DataFrame)]
 
   /** The shared BPE trainer: returns the merge list and the final
     * word-symbol table (freq, s). See tx17's registry comment for the
     * scale/determinism analysis. */
   private def bpeTrain(s: SparkSession, d: String, nMerges: Int)
       : (Seq[(Int, String, String, String, Long)], DataFrame) =
-    bpeCache.getOrElseUpdate((s, d, nMerges), {
-      graft.SessionCaches.track(s)
-      bpeTrainUncached(s, d, nMerges)
-    })
+    bpeCache.get(s, (d, nMerges))(bpeTrainUncached(s, d, nMerges))
 
   /** The initial word-symbol table: corpus-wide word frequencies with
     * each word exploded into its character symbols. The ONE corpus

@@ -22,16 +22,13 @@ object Events {
   // ev08f's derived session carrying the GraftExtensions injection
   // (parser + resolution rule + strategy), memoized per base session
   // so bench reps and repeated invocations don't accumulate sessions.
-  private val sqlSessCache = scala.collection.concurrent.TrieMap
-    .empty[SparkSession, SparkSession]
-  graft.SessionCaches.registerEvictor(s => { sqlSessCache.remove(s); () })
+  private val sqlSessCache = new graft.SessionMemo[Unit, SparkSession]
 
   private def asofSqlSession(s: SparkSession): SparkSession =
-    sqlSessCache.getOrElseUpdate(s, {
-      graft.SessionCaches.track(s)
+    sqlSessCache.get(s, ()) {
       org.apache.spark.sql.graft.PlanBridge.sessionWithExtensions(
         s, new graft.plans.GraftExtensions()(_))
-    })
+    }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Tumbling 1-hour windows per event type.

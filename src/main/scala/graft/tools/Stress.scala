@@ -75,7 +75,7 @@ object Stress {
     }
     val emb = amplify(spark.read.parquet(s"$sfDir/embeddings.parquet")
       .select(col("vec_id"), col("embedding")), Seq("vec_id"), 10000000L)
-    val centroids = graft.ops.KMeans.fit(spark,
+    val centroids = graft.ops.KMeans.fit(
       spark.read.parquet(s"$sfDir/embeddings.parquet")
         .select(col("vec_id"), col("embedding")),
       "vec_id", "embedding", k = 20, iters = 1)

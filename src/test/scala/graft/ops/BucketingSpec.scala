@@ -112,4 +112,23 @@ class BucketingSpec extends SparkSpec {
     assert(pruned > 0 && pruned < all,
       s"no pruning: scanned $pruned of $all files")
   }
+
+  test("bk01 over an empty corpus is NOT cached: data arriving later is seen") {
+    // a bucketed pair built while orders/lineitem were empty must not
+    // freeze bk01 at empty for the rest of the session
+    val dir = java.nio.file.Files.createTempDirectory("graft_bk_late").toString
+    val tables = Seq("orders", "lineitem")
+    tables.foreach(t => spark.read.parquet(s"$sf/$t.parquet").limit(0)
+      .write.mode("overwrite").parquet(s"$dir/$t.parquet"))
+    assert(Bucketing.queries("bk01_bucketed_cojoin")(spark, dir).count() == 0)
+    tables.foreach { t =>
+      spark.read.parquet(s"$sf/$t.parquet")
+        .write.mode("overwrite").parquet(s"$dir/$t.parquet")
+      // refreshByPath is the documented user step after an external
+      // writer changes a path; what must NOT survive it is bk01's memo
+      spark.catalog.refreshByPath(s"$dir/$t.parquet")
+    }
+    assert(Bucketing.queries("bk01_bucketed_cojoin")(spark, dir).count() > 0,
+      "bk01 still empty after data arrived — empty bucketed pair was memoized")
+  }
 }
