@@ -247,15 +247,15 @@ object Similarity {
     new graft.SessionMemo[String, DataFrame](release = graft.SessionMemo.unpersist)
 
   /** ss05's symmetric int8 grid appended to an arbitrary
-    * (…, embedding) frame as `q` — the stateless kernel shared by the
-    * session memo below and IvfIndex's build/append/probe quantization
-    * (per-row scale, so any subset quantizes identically to the whole). */
+    * (…, embedding) frame as `scale` and `q` — the stateless kernel
+    * shared by ss05/ss06, the session memo below and IvfIndex's
+    * build/append/probe quantization (per-row scale, so any subset
+    * quantizes identically to the whole). */
   private[ops] def quantize(df: DataFrame): DataFrame = {
     val xd = transform(col("embedding"), x => x.cast("double"))
     val maxabs = array_max(transform(col("embedding"), x => abs(x.cast("double"))))
     df.withColumn("scale", maxabs / 127.0)
       .withColumn("q", transform(xd, x => round(x / col("scale")).cast("int")))
-      .drop("scale")
   }
 
   /** Integer L2 distance² from a q8 row's `q` column to an in-plan
@@ -305,7 +305,10 @@ object Similarity {
 
   private def quantized(s: SparkSession, d: String): DataFrame =
     q8Cache.get(s, d) {
-      quantize(emb(s, d)).select(col("vec_id"), col("q"))
+      // the drop keeps this plan distinct from ss06's identical
+      // quantize-and-select, so the cache manager does not swap ss06's
+      // scan for this DISK_ONLY frame whenever another query built it
+      quantize(emb(s, d)).drop("scale").select(col("vec_id"), col("q"))
         .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
     }
 
@@ -567,11 +570,7 @@ object Similarity {
     // vector is serialized to a canonical CSV string so the result is
     // exactly comparable across engines.
     "ss05_quantize_int8" -> { (s, d) =>
-      val xd = transform(col("embedding"), x => x.cast("double"))
-      val maxabs = array_max(transform(col("embedding"), x => abs(x.cast("double"))))
-      emb(s, d)
-        .withColumn("scale", maxabs / 127.0)
-        .withColumn("q", transform(xd, x => round(x / col("scale")).cast("int")))
+      quantize(emb(s, d))
         .select(col("vec_id"), col("scale"),
           array_join(transform(col("q"), _.cast("string")), ",").as("q_str"))
     },
@@ -763,12 +762,7 @@ object Similarity {
     // for a quantized ANN tier that float math can't give you. Shape:
     // same broadcast-queries scan as ss01; quantization is map-only.
     "ss06_int8_topk" -> { (s, d) =>
-      val xd = transform(col("embedding"), x => x.cast("double"))
-      val maxabs = array_max(transform(col("embedding"), x => abs(x.cast("double"))))
-      val q8 = emb(s, d)
-        .withColumn("scale", maxabs / 127.0)
-        .withColumn("q", transform(xd, x => round(x / col("scale")).cast("int")))
-        .select(col("vec_id"), col("q"))
+      val q8 = quantize(emb(s, d)).select(col("vec_id"), col("q"))
       val qs = broadcast(q8.filter(col("vec_id") < 10)
         .select(col("vec_id").as("q_id"), col("q").as("q_q")))
       val w = Window.partitionBy(col("q_id"))

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.PlanBridge
@@ -28,21 +27,14 @@ object AsofStress {
   def main(args: Array[String]): Unit = {
     val users = args.headOption.map(_.toLong).getOrElse(200000L)
     val k = args.drop(1).headOption.map(_.toLong).getOrElse(150L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // the config-injected extensions carry the AQE skew-split rule
-      // (OptimizeSkewedGraftJoin) the skew scenario measures
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // local[32] skew tuning: the hot partition (~20% of 60M rows)
-      // must read as skewed against the ~2.5%-of-rows median (factor 5
-      // catches it) and split to ~advisory-sized slices
-      .config("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "16m")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16m")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the session's extensions carry the AQE skew-split rule
+    // (OptimizeSkewedGraftJoin) the skew scenario measures. local[32]
+    // skew tuning: the hot partition (~20% of 60M rows) must read as
+    // skewed against the ~2.5%-of-rows median (factor 5 catches it) and
+    // split to ~advisory-sized slices
+    val spark = graft.GraftSession(
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "16m",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16m")
     // the residual-form baselines below must stay STOCK joins even if
     // this JVM's session carries the graft extensions — the whole
     // point is measuring the operator against what Spark does without it
@@ -196,7 +188,7 @@ object AsofStress {
       Seq("p_key" -> "d_key"), "p_us", "d_us", "merge")
     def saltedJoin = graft.plans.AsofSkew.asofJoinSalted(skewProbes, dim,
       "p_key", "d_key", "p_us", "d_us", detected,
-      salts = cpus.toInt, hint = "merge")
+      salts = graft.GraftSession.cpus, hint = "merge")
     val u1 = skewGates(unsaltedJoin); val u2 = skewGates(unsaltedJoin)
     val s1 = skewGates(saltedJoin); val s2 = skewGates(saltedJoin)
     assert(u2._1 == s2._1, s"skew gates diverge: ${u2._1} vs ${s2._1}")

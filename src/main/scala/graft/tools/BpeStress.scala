@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Batched-BPE stress driver: trains a PRODUCTION-SIZED vocabulary
@@ -50,13 +49,7 @@ object BpeStress {
     val docLen = args.drop(3).headOption.map(_.toInt).getOrElse(200)
     val lexicon = args.drop(4).headOption.map(_.toInt).getOrElse(20000)
     val batchedCap = args.drop(5).headOption.map(_.toInt).getOrElse(nMerges)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
 
     // deterministic zipf corpus: token j of doc i draws rank
     // floor(V^u) with u = hash(i, j) mapped to [0,1); the word for

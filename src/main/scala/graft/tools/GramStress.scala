@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Gram-pipeline stress driver (the CcStress pattern applied to the
@@ -25,13 +24,7 @@ object GramStress {
   def main(args: Array[String]): Unit = {
     val nDocs = args.headOption.map(_.toLong).getOrElse(500000L)
     val W = 100 // soup tokens per doc
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
 
     // doc-unique soup: word i of doc d = 6 hex chars of md5(d || '_' || i);
     // boilerplate: 30 fixed words every 10th doc, same for all of them

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Graph-analytics stress driver (the GramStress/SketchStress pattern
@@ -32,13 +31,7 @@ object GraphStress {
     val nTree = args.headOption.map(_.toLong).getOrElse(20000000L)
     val noiseSide = args.drop(1).headOption.map(_.toLong).getOrElse(1000L)
     val iters = 4
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
 
     def timed[A](f: => A): (A, Double) = {
       val t0 = System.nanoTime()

@@ -47,16 +47,9 @@ object IndexBuild {
     require(args.length >= 2,
       "usage: IndexBuild <corpusDir> <indexRoot> [--rebuild]")
     val (dir, root) = (args(0), args(1))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config(graft.IndexStore.RootKey, root)
-      .config(graft.IndexStore.IfStaleKey,
-        if (args.contains("--rebuild")) "rebuild" else "error")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession(
+      graft.IndexStore.RootKey -> root,
+      graft.IndexStore.IfStaleKey -> (if (args.contains("--rebuild")) "rebuild" else "error"))
 
     for ((name, build) <- builders) {
       val t0 = System.nanoTime()

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** MinHash-LSH stress driver (the GramStress pattern applied to dd03's
@@ -43,13 +42,7 @@ object LshStress {
     val nDocs = args.headOption.map(_.toLong).getOrElse(499800L)
     require(nDocs % 300 == 0, s"nDocs must be a multiple of 300, got $nDocs")
     val W = 64
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
 
     // doc-unique soup: token i of doc d = 6 hex chars of md5(d '_' i)
     def soup(docId: org.apache.spark.sql.Column, from: Int, until: Int) =

@@ -1,7 +1,8 @@
 package graft.tools
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Per-query stage-level profiler (round 16): for each named query, after
   * a warmup rep, times one rep and prints per-stage task counts, summed
@@ -14,17 +15,7 @@ object QProf {
     val sfDir = args(0)
     val names = args(1).split(",").map(_.trim).filter(_.nonEmpty)
     val reps = if (args.length > 2) args(2).toInt else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession()
 
     final case class St(name: String, var tasks: Int = 0,
       var taskMs: Long = 0, var maxMs: Long = 0, var gcMs: Long = 0,
@@ -65,7 +56,7 @@ object QProf {
     names.foreach { name =>
       val fn = graft.SparkEntry.queries(name)
       // warmup at sf0.001 (codegen) then at sfDir (memos, broadcasts warm)
-      try mat(fn(spark, "/root/testdata/sf0.001")) catch { case _: Throwable => }
+      try mat(fn(spark, "/root/testdata/sf0.001")) catch { case NonFatal(_) => }
       mat(fn(spark, sfDir))
       (1 to reps).foreach { rep =>
         stages.clear(); jobs = 0

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Sketch-aggregate stress driver (the GramStress pattern applied to
@@ -34,13 +33,7 @@ object SketchStress {
     val nRows = args.headOption.map(_.toLong).getOrElse(60000000L)
     val nDistinct = args.drop(1).headOption.map(_.toLong).getOrElse(100000L)
     val heavyEvery = 100L // every 100th row remaps to key 0
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
 
     val keys = spark.range(nRows).select(
       when(col("id") % heavyEvery === 0, lit(0L))

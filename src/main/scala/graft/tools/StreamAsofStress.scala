@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Stream-stream as-of/band state-boundedness stress — the empirical
@@ -41,17 +41,11 @@ object StreamAsofStress {
   def main(args: Array[String]): Unit = {
     val nBatches = args.headOption.map(_.toInt).getOrElse(40)
     val rowsPer = args.lift(1).map(_.toInt).getOrElse(25000)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "8") // state stores = partitions
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.GraftSession(
+      "spark.sql.shuffle.partitions" -> "8", // state stores = partitions
       // recentProgress must span every trigger of a leg (the emitted
       // count sums sink rows across it); default retention is 100
-      .config("spark.sql.streaming.numRecentProgressUpdates", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      "spark.sql.streaming.numRecentProgressUpdates" -> "10000")
     import spark.implicits._
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream

@@ -10,19 +10,16 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
+  /** The engine's session ([[GraftSession]]): what Bench and Verify run. */
+  lazy val session: SparkSession = GraftSession(
     // local[4,2]: allow one task retry so retry-semantics tests (e.g.
     // idempotent JDBC staging) can exercise Spark's real re-execution
-    val s = SparkSession.builder()
-      .master("local[4,2]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+    "spark.master" -> "local[4,2]",
+    "spark.sql.warehouse.dir" -> java.nio.file.Files.createTempDirectory("graft_wh").toString)
+
+  /** The same context WITHOUT the engine's extensions, for reference
+    * forms that must plan as stock Spark: under the band rewrite a
+    * residual join would become the operator it is compared against. */
+  lazy val plainSession: SparkSession =
+    org.apache.spark.sql.graft.PlanBridge.sessionWithExtensions(session, _ => ())
 }

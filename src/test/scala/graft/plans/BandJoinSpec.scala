@@ -45,33 +45,39 @@ class BandJoinSpec extends SparkSpec {
 
   test("randomized parity with the equi-join + range residual, " +
       "symmetric and asymmetric bands") {
-    import spark.implicits._
     val rnd = new scala.util.Random(13)
-    val probe = (0 until 500).map(i =>
+    val probeRows = (0 until 500).map(i =>
       (i.toLong, rnd.nextInt(8).toLong, rnd.nextInt(200).toLong))
-      .toDF("id", "k", "t")
-    val build = (0 until 300).map(j =>
+    val buildRows = (0 until 300).map(j =>
       (rnd.nextInt(10).toLong, rnd.nextInt(200).toLong, 1000L + j))
-      .toDF("bk", "bt", "bid")
+    def frames(s: org.apache.spark.sql.SparkSession) = {
+      import s.implicits._
+      (probeRows.toDF("id", "k", "t"), buildRows.toDF("bk", "bt", "bid"))
+    }
+    val (probe, build) = frames(spark)
+    val (stockProbe, stockBuild) = frames(SparkSpec.plainSession)
     for ((lo, hi) <- Seq((-25L, 0L), (-15L, 15L), (5L, 40L))) {
       val native = band(probe, build, lo, hi)
         .select("id", "bid").collect()
         .map(r => (r.getLong(0), Option(r.get(1)).map(_.asInstanceOf[Long])))
         .sorted.toSeq
-      val residual = probe.join(build,
+      val residualDf = stockProbe.join(stockBuild,
           col("k") === col("bk") &&
             col("bt") >= col("t") + lo && col("bt") <= col("t") + hi,
           "left_outer")
-        .select("id", "bid").collect()
+        .select("id", "bid")
+      val residual = residualDf.collect()
         .map(r => (r.getLong(0), Option(r.get(1)).map(_.asInstanceOf[Long])))
         .sorted.toSeq
+      assert(!residualDf.queryExecution.executedPlan.toString.contains("BandJoin"))
       assert(native == residual, s"band [$lo,$hi] diverged")
     }
   }
 
   test("ev07b native band == ev07 residual form, row for row") {
-    val a = graft.queries.Events.queries("ev07_interval_join")(spark, sf)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    val ev07 = graft.queries.Events.queries("ev07_interval_join")(SparkSpec.plainSession, sf)
+    val a = ev07.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    assert(!ev07.queryExecution.executedPlan.toString.contains("BandJoin"))
     val b = graft.queries.Events.queries("ev07b_interval_native")(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     assert(a.nonEmpty && a == b)
