@@ -27,15 +27,20 @@ object Main {
       archive: Boolean = false, configPath: String = null,
       jdbcUrl: String = null, template: String = null, schemaMap: String = null)
 
+  private val usage =
+    "usage: graft.Main -file <path> -model <name> -table <table> " +
+      "[--template <xlsx>] [--schema-map <json>] [--export-dir <dir>] " +
+      "[--jdbc] [--archive] [--config <path>] [--jdbc-url <url>]"
+
   def main(argv: Array[String]): Unit = {
-    val args = parse(argv)
-    if (args.file == null || args.model == null || args.table == null) {
-      // all three flags are required, as in main.go:44-50
-      System.err.println(
-        "usage: graft.Main -file <path> -model <name> -table <table> " +
-          "[--template <xlsx>] [--schema-map <json>] [--export-dir <dir>] " +
-          "[--jdbc] [--archive] [--config <path>]")
-      sys.exit(2)
+    val args = parse(argv) match {
+      case Right(a) => a
+      case Left(err) =>
+        // like Go's flag package in the reference (main.go:40-50): a bad
+        // command line prints the error and the usage, and exits 2
+        System.err.println(s"[graft] $err")
+        System.err.println(usage)
+        sys.exit(2)
     }
     val spark = GraftSession()
     try {
@@ -112,24 +117,35 @@ object Main {
   def detectFileType(path: String): String =
     path.substring(path.lastIndexOf('.') + 1).toLowerCase
 
-  private def parse(argv: Array[String]): Args = {
-    var a = Args()
-    var i = 0
-    while (i < argv.length) {
-      argv(i) match {
-        case "-file" => a = a.copy(file = argv(i + 1)); i += 2
-        case "-model" => a = a.copy(model = argv(i + 1)); i += 2
-        case "-table" => a = a.copy(table = argv(i + 1)); i += 2
-        case "--export-dir" => a = a.copy(exportDir = argv(i + 1)); i += 2
-        case "--config" => a = a.copy(configPath = argv(i + 1)); i += 2
-        case "--template" => a = a.copy(template = argv(i + 1)); i += 2
-        case "--schema-map" => a = a.copy(schemaMap = argv(i + 1)); i += 2
-        case "--jdbc-url" => a = a.copy(jdbcUrl = argv(i + 1)); i += 2
-        case "--jdbc" => a = a.copy(jdbc = true); i += 1
-        case "--archive" => a = a.copy(archive = true); i += 1
-        case other => System.err.println(s"[graft] unknown flag: $other"); i += 1
-      }
+  private val valueFlags: Map[String, (Args, String) => Args] = Map(
+    "-file" -> ((a, v) => a.copy(file = v)),
+    "-model" -> ((a, v) => a.copy(model = v)),
+    "-table" -> ((a, v) => a.copy(table = v)),
+    "--export-dir" -> ((a, v) => a.copy(exportDir = v)),
+    "--config" -> ((a, v) => a.copy(configPath = v)),
+    "--template" -> ((a, v) => a.copy(template = v)),
+    "--schema-map" -> ((a, v) => a.copy(schemaMap = v)),
+    "--jdbc-url" -> ((a, v) => a.copy(jdbcUrl = v)))
+
+  private val switchFlags: Map[String, Args => Args] = Map(
+    "--jdbc" -> (_.copy(jdbc = true)),
+    "--archive" -> (_.copy(archive = true)))
+
+  /** Parses the command line; Left(error) on an unknown flag, a value
+    * flag given no value, or a missing required flag. */
+  private[graft] def parse(argv: Array[String]): Either[String, Args] = {
+    @scala.annotation.tailrec
+    def go(rest: List[String], a: Args): Either[String, Args] = rest match {
+      case Nil =>
+        // all three flags are required, as in main.go:44-50
+        if (a.file == null || a.model == null || a.table == null)
+          Left("-file, -model and -table are required")
+        else Right(a)
+      case f :: tail if switchFlags.contains(f) => go(tail, switchFlags(f)(a))
+      case f :: v :: tail if valueFlags.contains(f) => go(tail, valueFlags(f)(a, v))
+      case f :: _ if valueFlags.contains(f) => Left(s"flag needs an argument: $f")
+      case f :: _ => Left(s"flag provided but not defined: $f")
     }
-    a
+    go(argv.toList, Args())
   }
 }

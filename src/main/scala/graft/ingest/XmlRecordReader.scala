@@ -28,6 +28,12 @@ import org.apache.spark.sql.types.StructType
   */
 object XmlRecordReader {
 
+  // Main reads through binaryFiles (readDirect), not the DataSource V2
+  // source: routing `read` through XmlDataSource was measured slower on
+  // perfbench's ingest_files workload (`--seconds 10`, 5 alternating
+  // pairs on seeds 3001-3005, 4 cores) — pass_cpu_s median 8.24 s
+  // (8.04-8.45) → 9.52 s (9.16-9.97), every pair worse, every run
+  // correct.
   def read(spark: SparkSession, path: String, rowTag: String,
       schema: StructType): DataFrame =
     readDirect(spark, path, rowTag, schema)

@@ -2,7 +2,7 @@ package graft.ingest.xml
 
 import java.util
 import scala.jdk.CollectionConverters._
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileSystem, Path, PathFilter}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -98,9 +98,12 @@ final class XmlScan(required: StructType, path: String, rowTag: String,
     val conf = spark.sparkContext.hadoopConfiguration
     val p = new Path(path)
     val fs = p.getFileSystem(conf)
+    // skip names starting with `_` or `.` (`_SUCCESS`, `.crc`), as
+    // Hadoop's FileInputFormat does for the binaryFiles readers
+    val visible: PathFilter = f => !f.getName.startsWith("_") && !f.getName.startsWith(".")
     val files =
       if (fs.getFileStatus(p).isDirectory)
-        fs.listStatus(p).filter(_.isFile).map(_.getPath.toString)
+        fs.listStatus(p, visible).filter(_.isFile).map(_.getPath.toString)
       else Array(path)
     files.sorted.map(f => XmlInputPartition(f): InputPartition)
   }

@@ -258,12 +258,6 @@ object Similarity {
       .withColumn("q", transform(xd, x => round(x / col("scale")).cast("int")))
   }
 
-  /** Integer L2 distance² from a q8 row's `q` column to an in-plan
-    * literal center — emb10's kernel, shared with qa09's assignment. */
-  private def sqDist(c: Seq[Int]): Column =
-    expr(s"aggregate(zip_with(q, array(${c.mkString(",")}), " +
-      "(a, b) -> CAST(a - b AS BIGINT) * (a - b)), 0L, (acc, x) -> acc + x)")
-
   /** emb10's farthest-point traversal (Gonzalez greedy) over any
     * (vec_id, q) integer-vector frame — shared by the query and
     * tools.SelectStress. K bounded driver rounds; each round is one
@@ -285,7 +279,7 @@ object Similarity {
       var r = 2
       var exhausted = false
       while (r <= k && !exhausted) {
-        val mind = array_min(array(centers.map(sqDist): _*))
+        val mind = array_min(array(centers.map(int8SqDist): _*))
         val next = q8
           .filter(!col("vec_id").isin(picked.map(_._2): _*))
           .withColumn("mind", mind)
@@ -320,7 +314,10 @@ object Similarity {
   private def intL2(a: Seq[Int], b: Seq[Int]): Long =
     a.zip(b).map { case (x, y) => (x - y).toLong * (x - y) }.sum
 
-  private def int8SqDist(c: Seq[Int]): org.apache.spark.sql.Column =
+  /** Integer L2 distance² from a q8 row's `q` column to an in-plan
+    * literal center — the one kernel behind emb03/emb10/qa09 and the
+    * IVF assignment. */
+  private def int8SqDist(c: Seq[Int]): Column =
     expr(s"aggregate(zip_with(q, array(${c.mkString(",")}), " +
       "(a, b) -> CAST(a - b AS BIGINT) * (a - b)), 0L, (acc, x) -> acc + x)")
 
@@ -878,43 +875,19 @@ object Similarity {
     // ten cheap k×dim round trips, never a corpus-sized one.
     "emb03_kmeans_int" -> { (s, d) =>
       val q8 = quantized(s, d)
-
-      def sqDist(c: Seq[Int]): org.apache.spark.sql.Column =
-        expr(s"aggregate(zip_with(q, array(${c.mkString(",")}), " +
-          "(a, b) -> CAST(a - b AS BIGINT) * (a - b)), 0L, (acc, x) -> acc + x)")
-      def assign(cs: Seq[(Int, Seq[Int])]): org.apache.spark.sql.Column =
-        array_min(array(cs.map { case (cid, c) =>
-          struct(sqDist(c).as("dist"), lit(cid).as("cid")) }: _*))
-
-      val seeds = q8
-        .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
-        .limit(8).collect()
-        .map(r => r.getSeq[Int](r.fieldIndex("q")))
-        .zipWithIndex.map { case (c, i) => (i, c) }.toSeq
-
-      // empty corpus => no seeds => assign() would be a malformed
+      // one Lloyd round over hash-ordered seeds (int8LloydTrain), then
+      // the final re-assign; empty clusters are DROPPED (the oracle
+      // replays exactly that)
+      val cents = int8LloydTrain(q8, 8)
+      // empty corpus => no centroids => int8Assign would be a malformed
       // zero-arm array_min; k-means of nothing is the empty assignment
-      if (seeds.isEmpty)
+      if (cents.isEmpty)
         q8.select(col("vec_id"), lit(0).as("c_id"),
           lit(0L).as("dist")).limit(0)
-      else {
-        // Lloyd scaffolding shared with KMeans.fit (ops.Lloyd); this
-        // kernel: integer squared-L2 argmin, truncating integer mean
-        // ((s - s % n) / n divides exactly, so every division operator
-        // agrees cross-engine), empty clusters DROPPED (the oracle
-        // replays exactly that)
-        val newc = Lloyd.iterate[Int](q8, "q", seeds, rounds = 1,
-          assignId = (_, cs) => assign(cs).getField("cid"),
-          meanExpr = ((sum(col("v").cast("long")) -
-            (sum(col("v").cast("long")) % count(lit(1)))) / count(lit(1)))
-            .cast("int"),
-          decode = _.getInt(2),
-          fillEmpty = false)
-
-        q8.withColumn("a", assign(newc))
+      else
+        q8.withColumn("a", int8Assign(cents))
           .select(col("vec_id"), col("a.cid").as("c_id"),
             col("a.dist").as("dist"))
-      }
     },
 
     // emb05: PCA projection — the dimensionality-reduction primitive
@@ -1127,7 +1100,7 @@ object Similarity {
             r.getSeq[Int](r.fieldIndex("q")))
           .sortBy(_._1)
         val best = array_min(array(cents.map { case (cid, v) =>
-          struct(sqDist(v).as("d2"), lit(cid).as("cid")) }: _*))
+          struct(int8SqDist(v).as("d2"), lit(cid).as("cid")) }: _*))
         q8.select(best.getField("d2").as("d2"), best.getField("cid").as("cid"))
           .groupBy(col("cid"))
           .agg(count(lit(1)).as("n_vecs"),

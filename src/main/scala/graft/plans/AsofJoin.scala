@@ -75,22 +75,6 @@ object AsofJoinPlan {
   def steerHint(probeIsStreaming: Boolean, hint: String): String =
     if (probeIsStreaming && hint != "merge") "broadcast" else hint
 
-  /** Wrap an operator's output iterator with the `numOutputRows`
-    * SQLMetric — the one observability hook every production Spark
-    * operator exposes (UI / AQE runtime stats read it). One virtual
-    * call + one long add per row, same as the built-in joins. */
-  private[plans] def counted(
-      it: Iterator[org.apache.spark.sql.catalyst.InternalRow],
-      m: org.apache.spark.sql.execution.metric.SQLMetric)
-      : Iterator[org.apache.spark.sql.catalyst.InternalRow] =
-    new Iterator[org.apache.spark.sql.catalyst.InternalRow] {
-      override def hasNext: Boolean = it.hasNext
-      override def next(): org.apache.spark.sql.catalyst.InternalRow = {
-        m += 1
-        it.next()
-      }
-    }
-
   /** Time-column types the merge/broadcast operators accept: BIGINT
     * micros, or either timestamp type — both are PHYSICALLY long
     * micros in InternalRow, and micros order IS the semantic order
@@ -112,28 +96,24 @@ object AsofJoinPlan {
 object AsofJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case AsofJoinPlan(l, r, lk, rk, lt, rt, hint, dir, tol) =>
-      val thresh = org.apache.spark.sql.internal.SQLConf.get.autoBroadcastJoinThreshold
-      val broadcast = hint match {
-        case "broadcast" => true
-        case "merge" => false
-        case _ => thresh > 0 && r.stats.sizeInBytes <= thresh
-      }
-      if (broadcast)
+      if (broadcast(hint, r))
         BroadcastAsofJoinExec(planLater(l), planLater(r), lk, rk, lt, rt, dir, tol) :: Nil
       else
         AsofJoinExec(planLater(l), planLater(r), lk, rk, lt, rt, dir, tol) :: Nil
     case BandJoinPlan(l, r, lk, rk, lt, rt, lo, hi, hint) =>
-      val thresh = org.apache.spark.sql.internal.SQLConf.get.autoBroadcastJoinThreshold
-      val broadcast = hint match {
-        case "broadcast" => true
-        case "merge" => false
-        case _ => thresh > 0 && r.stats.sizeInBytes <= thresh
-      }
-      if (broadcast)
+      if (broadcast(hint, r))
         BroadcastBandJoinExec(planLater(l), planLater(r), lk, rk, lt, rt, lo, hi) :: Nil
       else
         BandJoinExec(planLater(l), planLater(r), lk, rk, lt, rt, lo, hi) :: Nil
     case _ => Nil
+  }
+
+  private def broadcast(hint: String, build: LogicalPlan): Boolean = hint match {
+    case "broadcast" => true
+    case "merge" => false
+    case _ =>
+      val thresh = org.apache.spark.sql.internal.SQLConf.get.autoBroadcastJoinThreshold
+      thresh > 0 && build.stats.sizeInBytes <= thresh
   }
 }
 

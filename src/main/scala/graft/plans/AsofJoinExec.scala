@@ -1,13 +1,11 @@
 package graft.plans
 
-import org.apache.spark.rdd.RDD
+import graft.plans.TimeJoinExec.{Join, RowClass}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute,
-  GenericInternalRow, JoinedRow, RowOrdering, SortOrder, UnsafeProjection,
-  UnsafeRow}
-import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution,
-  Distribution, Partitioning}
-import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
+import org.apache.spark.sql.catalyst.expressions.{Attribute,
+  GenericInternalRow, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.types.LongType
 
 /** The compiled per-partition merge state behind both the iterator and
@@ -195,9 +193,9 @@ final class AsofScanner(
   *
   * Whole-stage codegen: the probe loop runs inside the generated stage
   * (SortMergeJoin arrangement — the build side stays an iterator
-  * behind [[AsofScanner]], which also backs the iterator fallback).
+  * behind [[AsofScanner]], which also backs the iterator path).
   * One output row per probe, so the loop is trivially
-  * shouldStop()-safe. Kill switch: `spark.graft.asof.codegen=false`.
+  * shouldStop()-safe.
   */
 case class AsofJoinExec(
     left: SparkPlan,
@@ -208,153 +206,47 @@ case class AsofJoinExec(
     rightTime: Attribute,
     direction: String = "backward",
     toleranceUs: Long = -1L,
-    isSkewJoin: Boolean = false) extends SparkPlan with BinaryExecNode
-    with org.apache.spark.sql.execution.CodegenSupport {
+    isSkewJoin: Boolean = false) extends MergeTimeJoinExec[AsofScanner] {
 
-  require(leftKeys.nonEmpty && leftKeys.size == rightKeys.size,
-    "asof join needs matching non-empty key lists")
-  require(leftKeys.map(_.dataType) == rightKeys.map(_.dataType),
-    s"asof key types differ: ${leftKeys.map(_.dataType)} vs ${rightKeys.map(_.dataType)}")
-  require(AsofJoinPlan.timeTypeOk(leftTime.dataType) &&
-      AsofJoinPlan.timeTypeOk(rightTime.dataType),
-    "asof time columns must be BIGINT micros or a timestamp type")
   require(direction == "backward" || direction == "forward",
     s"asof direction must be backward|forward, got '$direction'")
 
-  override def output: Seq[Attribute] =
-    left.output ++ right.output.map(_.withNullability(true))
+  protected def kind: String = "asof"
 
-  override def outputPartitioning: Partitioning = left.outputPartitioning
+  protected def scannerClass: Class[AsofScanner] = classOf[AsofScanner]
 
-  // isSkewJoin: the AQE skew rule replaced the children's shuffle reads
-  // with per-partition splits (probe sliced by mapper ranges, build
-  // partition replicated per slice) — the 1:1 reducer alignment it
-  // builds IS the clustering, but no Partitioning object describes it,
-  // so requirements switch off exactly as SortMergeJoinExec's do
-  override def requiredChildDistribution: Seq[Distribution] =
-    if (isSkewJoin)
-      org.apache.spark.sql.catalyst.plans.physical.UnspecifiedDistribution ::
-        org.apache.spark.sql.catalyst.plans.physical.UnspecifiedDistribution :: Nil
-    else
-      ClusteredDistribution(leftKeys) :: ClusteredDistribution(rightKeys) :: Nil
-
-  override def requiredChildOrdering: Seq[Seq[SortOrder]] = Seq(
-    (leftKeys :+ leftTime).map(SortOrder(_, Ascending)),
-    (rightKeys :+ rightTime).map(SortOrder(_, Ascending)))
-
-  override def stringArgs: Iterator[Any] =
-    super.stringArgs.toSeq.dropRight(1).iterator ++
-      (if (isSkewJoin) Iterator("isSkewJoin=true") else Iterator.empty)
-
-  override def outputOrdering: Seq[SortOrder] = requiredChildOrdering.head
-
-
-  override lazy val metrics: Map[String, org.apache.spark.sql.execution.metric.SQLMetric] =
-    Map("numOutputRows" -> org.apache.spark.sql.execution.metric.SQLMetrics
-      .createMetric(sparkContext, "number of output rows"))
-
-  private def lTimeIdx = {
-    val i = left.output.indexWhere(_.exprId == leftTime.exprId)
-    require(i >= 0, "probe time attribute not in child output"); i
-  }
-  private def rTimeIdx = {
-    val i = right.output.indexWhere(_.exprId == rightTime.exprId)
-    require(i >= 0, "build time attribute not in child output"); i
-  }
-
-  /** Per-partition scanner factory — serialized into the task (and,
-    * on the codegen path, into the generated class's references); the
-    * projections/ordering are created fresh per partition inside it. */
-  private def scannerFactory: Iterator[InternalRow] => AsofScanner = {
-    val lOut = left.output
-    val rOut = right.output
-    val lKeyExprs = leftKeys
-    val rKeyExprs = rightKeys
-    val keyTypes = leftKeys.map(_.dataType)
+  protected def newScanner: (Iterator[InternalRow], UnsafeProjection,
+      UnsafeProjection, Ordering[InternalRow]) => AsofScanner = {
     val (lIdx, rIdx) = (lTimeIdx, rTimeIdx)
-    val nRight = rOut.size
+    val (nRight, nKeys) = (right.output.size, rightKeys.size)
     val fwd = direction == "forward"
     val tol = toleranceUs
     // single-Long-key fast path (the dominant shape: user_id, doc_id)
-    val fastLongKey = keyTypes == Seq(LongType)
-    val lKeyIdx =
-      if (fastLongKey) lOut.indexWhere(_.exprId == leftKeys.head.exprId) else -1
-    val rKeyIdx =
-      if (fastLongKey) rOut.indexWhere(_.exprId == rightKeys.head.exprId) else -1
-    rIter => new AsofScanner(rIter,
-      UnsafeProjection.create(lKeyExprs, lOut),
-      UnsafeProjection.create(rKeyExprs, rOut),
-      RowOrdering.createNaturalAscendingOrdering(keyTypes),
-      lKeyIdx, rKeyIdx, lIdx, rIdx, nRight, rKeyExprs.size, fwd, tol)
+    val fastLongKey = leftKeys.map(_.dataType) == Seq(LongType)
+    val lKeyIdx = if (fastLongKey)
+      left.output.indexWhere(_.exprId == leftKeys.head.exprId) else -1
+    val rKeyIdx = if (fastLongKey)
+      right.output.indexWhere(_.exprId == rightKeys.head.exprId) else -1
+    (rIter, lKeyProj, rKeyProj, keyOrd) => new AsofScanner(rIter, lKeyProj,
+      rKeyProj, keyOrd, lKeyIdx, rKeyIdx, lIdx, rIdx, nRight, nKeys, fwd, tol)
   }
 
-  override protected def doExecute(): RDD[InternalRow] = {
-    val numOut = longMetric("numOutputRows")
-    val lOut = left.output
-    val rOut = right.output
-    val allOut = output
-    val mkScanner = scannerFactory
+  protected def emitRows: (Iterator[InternalRow], AsofScanner, Join) =>
+      Iterator[InternalRow] = (lIter, scanner, join) =>
+    lIter.map(l => join(l, scanner.feed(l)))
 
-    left.execute().zipPartitions(right.execute()) { (lIter, rIter) =>
-      // bind against the NULLABLE right schema — binding against the
-      // child's raw attributes would compile away the null checks and
-      // read zeros out of the all-null unmatched row
-      val resultProj = UnsafeProjection.create(allOut,
-        lOut ++ rOut.map(_.withNullability(true)))
-      val joined = new JoinedRow
-      val scanner = mkScanner(rIter)
-      AsofJoinPlan.counted(lIter.map(l =>
-        resultProj(joined(l, scanner.feed(l)))), numOut)
-    }
-  }
-
-  // ---- whole-stage codegen (see class doc) ----
-
-  override def supportCodegen: Boolean =
-    org.apache.spark.sql.internal.SQLConf.get
-      .getConfString("spark.graft.asof.codegen", "true").toBoolean
-
-  override def inputRDDs(): Seq[RDD[InternalRow]] =
-    left.execute() :: right.execute() :: Nil
-
-  override def needCopyResult: Boolean = true
-
-  override protected def doProduce(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext)
-      : String = {
-    import org.apache.spark.sql.catalyst.expressions.BoundReference
-    val leftInput = ctx.addMutableState("scala.collection.Iterator",
-      "asofLeftInput", v => s"$v = inputs[0];")
-    val scannerCls = classOf[AsofScanner].getName
-    val factory = ctx.addReferenceObj("asofScannerFactory", scannerFactory,
-      "scala.Function1")
-    val scanner = ctx.addMutableState(scannerCls, "asofScanner",
-      v => s"$v = ($scannerCls) $factory.apply(inputs[1]);")
-    val row = "org.apache.spark.sql.catalyst.InternalRow"
-    val leftRow = ctx.addMutableState(row, "asofLeftRow")
-    val rightRow = ctx.addMutableState(row, "asofRightRow")
-    val numOutput = metricTerm(ctx, "numOutputRows")
-
-    ctx.currentVars = null
-    ctx.INPUT_ROW = leftRow
-    val leftVars = left.output.zipWithIndex.map { case (a, i) =>
-      BoundReference(i, a.dataType, a.nullable).genCode(ctx)
-    }
-    ctx.INPUT_ROW = rightRow
-    val rightVars = right.output.zipWithIndex.map { case (a, i) =>
-      BoundReference(i, a.dataType, nullable = true).genCode(ctx)
-    }
-
-    s"""
-       |while ($leftInput.hasNext()) {
-       |  $leftRow = ($row) $leftInput.next();
-       |  $rightRow = ($row) $scanner.feed($leftRow);
-       |  $numOutput.add(1);
-       |  ${consume(ctx, leftVars ++ rightVars)}
-       |  if (shouldStop()) return;
-       |}
-     """.stripMargin
-  }
+  protected def probeLoop(ctx: CodegenContext, leftInput: String,
+      scanner: String): (String, String, String, String) => String =
+    (leftRow, rightRow, numOutput, consumed) =>
+      s"""
+         |while ($leftInput.hasNext()) {
+         |  $leftRow = ($RowClass) $leftInput.next();
+         |  $rightRow = ($RowClass) $scanner.feed($leftRow);
+         |  $numOutput.add(1);
+         |  $consumed
+         |  if (shouldStop()) return;
+         |}
+       """.stripMargin
 
   override protected def withNewChildrenInternal(
       newLeft: SparkPlan, newRight: SparkPlan): AsofJoinExec =

@@ -1,15 +1,12 @@
 package graft.plans
 
-import org.apache.spark.rdd.RDD
+import graft.plans.TimeJoinExec.{Join, RowClass}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute,
-  GenericInternalRow, JoinedRow, RowOrdering, SortOrder, UnsafeProjection,
-  UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{Attribute,
+  GenericInternalRow, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
-import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution,
-  Distribution, Partitioning}
-import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.execution.SparkPlan
 
 /** Banded (interval) join as a native operator — [[AsofJoinExec]]
   * generalized from "the single latest build row" to "every build row
@@ -144,190 +141,87 @@ case class BandJoinExec(
     rightTime: Attribute,
     lowUs: Long,
     highUs: Long,
-    isSkewJoin: Boolean = false) extends SparkPlan with BinaryExecNode
-    with org.apache.spark.sql.execution.CodegenSupport {
+    isSkewJoin: Boolean = false) extends MergeTimeJoinExec[BandScanner] {
 
-  require(leftKeys.nonEmpty && leftKeys.size == rightKeys.size,
-    "band join needs matching non-empty key lists")
-  require(leftKeys.map(_.dataType) == rightKeys.map(_.dataType),
-    s"band key types differ: ${leftKeys.map(_.dataType)} vs ${rightKeys.map(_.dataType)}")
-  require(AsofJoinPlan.timeTypeOk(leftTime.dataType) &&
-      AsofJoinPlan.timeTypeOk(rightTime.dataType),
-    "band time columns must be BIGINT micros or a timestamp type")
   require(lowUs <= highUs, s"band bounds inverted: [$lowUs, $highUs]")
 
-  override def output: Seq[Attribute] =
-    left.output ++ right.output.map(_.withNullability(true))
+  protected def kind: String = "band"
 
-  override def outputPartitioning: Partitioning = left.outputPartitioning
+  protected def scannerClass: Class[BandScanner] = classOf[BandScanner]
 
-  // isSkewJoin: see AsofJoinExec — the AQE skew rule's per-partition
-  // reads are 1:1 aligned but carry no Partitioning, so requirements
-  // switch off exactly as SortMergeJoinExec's do
-  override def requiredChildDistribution: Seq[Distribution] =
-    if (isSkewJoin)
-      org.apache.spark.sql.catalyst.plans.physical.UnspecifiedDistribution ::
-        org.apache.spark.sql.catalyst.plans.physical.UnspecifiedDistribution :: Nil
-    else
-      ClusteredDistribution(leftKeys) :: ClusteredDistribution(rightKeys) :: Nil
-
-  override def requiredChildOrdering: Seq[Seq[SortOrder]] = Seq(
-    (leftKeys :+ leftTime).map(SortOrder(_, Ascending)),
-    (rightKeys :+ rightTime).map(SortOrder(_, Ascending)))
-
-  override def outputOrdering: Seq[SortOrder] = requiredChildOrdering.head
-
-  override def stringArgs: Iterator[Any] =
-    super.stringArgs.toSeq.dropRight(1).iterator ++
-      (if (isSkewJoin) Iterator("isSkewJoin=true") else Iterator.empty)
-
-
-  override lazy val metrics: Map[String, org.apache.spark.sql.execution.metric.SQLMetric] =
-    Map("numOutputRows" -> org.apache.spark.sql.execution.metric.SQLMetrics
-      .createMetric(sparkContext, "number of output rows"))
-
-  private def lTimeIdx = {
-    val i = left.output.indexWhere(_.exprId == leftTime.exprId)
-    require(i >= 0, "probe time attribute not in child output"); i
-  }
-  private def rTimeIdx = {
-    val i = right.output.indexWhere(_.exprId == rightTime.exprId)
-    require(i >= 0, "build time attribute not in child output"); i
-  }
-
-  /** Per-partition scanner factory — serialized into the task (and,
-    * on the codegen path, into the generated class's references); the
-    * projections/ordering are created fresh per partition inside it. */
-  private def scannerFactory: Iterator[InternalRow] => BandScanner = {
-    val lOut = left.output
-    val rOut = right.output
-    val lKeyExprs = leftKeys
-    val rKeyExprs = rightKeys
-    val keyTypes = leftKeys.map(_.dataType)
+  protected def newScanner: (Iterator[InternalRow], UnsafeProjection,
+      UnsafeProjection, Ordering[InternalRow]) => BandScanner = {
     val (lIdx, rIdx) = (lTimeIdx, rTimeIdx)
-    val nRight = rOut.size
+    val (nRight, nKeys) = (right.output.size, rightKeys.size)
     val (lo, hi) = (lowUs, highUs)
-    rIter => new BandScanner(rIter,
-      UnsafeProjection.create(lKeyExprs, lOut),
-      UnsafeProjection.create(rKeyExprs, rOut),
-      RowOrdering.createNaturalAscendingOrdering(keyTypes),
-      lIdx, rIdx, nRight, rKeyExprs.size, lo, hi)
+    (rIter, lKeyProj, rKeyProj, keyOrd) => new BandScanner(rIter, lKeyProj,
+      rKeyProj, keyOrd, lIdx, rIdx, nRight, nKeys, lo, hi)
   }
 
-  override protected def doExecute(): RDD[InternalRow] = {
-    val numOut = longMetric("numOutputRows")
-    val lOut = left.output
-    val rOut = right.output
-    val allOut = output
-    val lSize = lOut.size
-    val rIdx = rTimeIdx
-    val mkScanner = scannerFactory
+  protected def emitRows: (Iterator[InternalRow], BandScanner, Join) =>
+      Iterator[InternalRow] = {
+    val lSize = left.output.size
+    (lIter, scanner, join) => new Iterator[InternalRow] {
+      // probe row pinned across its multi-row emission (sorter rows
+      // are valid only until the next lIter.next())
+      private val lBuf = {
+        val r = new UnsafeRow(lSize)
+        r.pointTo(new Array[Byte](64), 64); r
+      }
+      private var emitLeft: InternalRow = _
+      private var emit: java.util.Iterator[InternalRow] = _
 
-    left.execute().zipPartitions(right.execute()) { (lIter, rIter) =>
-      val resultProj = UnsafeProjection.create(allOut,
-        lOut ++ rOut.map(_.withNullability(true)))
-      val joined = new JoinedRow
-      val scanner = mkScanner(rIter)
+      override def hasNext: Boolean =
+        (emit != null && emit.hasNext) || lIter.hasNext
 
-      AsofJoinPlan.counted(new Iterator[InternalRow] {
-        // probe row pinned across its multi-row emission (sorter rows
-        // are valid only until the next lIter.next())
-        private val lBuf = {
-          val r = new UnsafeRow(lSize)
-          r.pointTo(new Array[Byte](64), 64); r
+      override def next(): InternalRow = {
+        if (emit != null && emit.hasNext)
+          return join(emitLeft, emit.next())
+        // pull the next probe and rebuild its band
+        val l = lIter.next()
+        val matches = scanner.feed(l)
+        l match {
+          case u: UnsafeRow => lBuf.copyFrom(u); emitLeft = lBuf
+          case other => emitLeft = other.copy()
         }
-        private var emitLeft: InternalRow = _
-        private var emit: java.util.Iterator[InternalRow] = _
-
-        override def hasNext: Boolean =
-          (emit != null && emit.hasNext) || lIter.hasNext
-
-        override def next(): InternalRow = {
-          if (emit != null && emit.hasNext)
-            return resultProj(joined(emitLeft, emit.next()))
-          // pull the next probe and rebuild its band
-          val l = lIter.next()
-          val matches = scanner.feed(l)
-          l match {
-            case u: UnsafeRow => lBuf.copyFrom(u); emitLeft = lBuf
-            case other => emitLeft = other.copy()
-          }
-          if (!matches.hasNext) {
-            emit = null
-            resultProj(joined(emitLeft, scanner.nullRow))
-          } else {
-            emit = matches
-            resultProj(joined(emitLeft, emit.next()))
-          }
+        if (!matches.hasNext) {
+          emit = null
+          join(emitLeft, scanner.nullRow)
+        } else {
+          emit = matches
+          join(emitLeft, emit.next())
         }
-      }, numOut)
+      }
     }
   }
 
-  // ---- whole-stage codegen: the probe loop runs inside the stage ----
-  // (build side stays an iterator behind the compiled BandScanner —
-  // the SortMergeJoin arrangement). One output row per generated-loop
-  // iteration so shouldStop() can return with all state in fields.
-  // Kill switch: spark.graft.band.codegen=false falls back to the
-  // iterator doExecute above; both paths share BandScanner.
-
-  override def supportCodegen: Boolean =
-    org.apache.spark.sql.internal.SQLConf.get
-      .getConfString("spark.graft.band.codegen", "true").toBoolean
-
-  override def inputRDDs(): Seq[RDD[InternalRow]] =
-    left.execute() :: right.execute() :: Nil
-
-  override def needCopyResult: Boolean = true
-
-  override protected def doProduce(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext)
-      : String = {
-    import org.apache.spark.sql.catalyst.expressions.BoundReference
-    val leftInput = ctx.addMutableState("scala.collection.Iterator",
-      "bandLeftInput", v => s"$v = inputs[0];")
-    val scannerCls = classOf[BandScanner].getName
-    val factory = ctx.addReferenceObj("bandScannerFactory", scannerFactory,
-      "scala.Function1")
-    val scanner = ctx.addMutableState(scannerCls, "bandScanner",
-      v => s"$v = ($scannerCls) $factory.apply(inputs[1]);")
+  // One output row per generated-loop iteration so shouldStop() can
+  // return with all state in fields.
+  protected def probeLoop(ctx: CodegenContext, leftInput: String,
+      scanner: String): (String, String, String, String) => String = {
     val matchIter = ctx.addMutableState("java.util.Iterator", "bandMatches")
-    val row = "org.apache.spark.sql.catalyst.InternalRow"
-    val leftRow = ctx.addMutableState(row, "bandLeftRow")
-    val rightRow = ctx.addMutableState(row, "bandRightRow")
-    val numOutput = metricTerm(ctx, "numOutputRows")
-
-    ctx.currentVars = null
-    ctx.INPUT_ROW = leftRow
-    val leftVars = left.output.zipWithIndex.map { case (a, i) =>
-      BoundReference(i, a.dataType, a.nullable).genCode(ctx)
-    }
-    ctx.INPUT_ROW = rightRow
-    val rightVars = right.output.zipWithIndex.map { case (a, i) =>
-      BoundReference(i, a.dataType, nullable = true).genCode(ctx)
-    }
-
-    s"""
-       |while (true) {
-       |  if ($matchIter != null && $matchIter.hasNext()) {
-       |    $rightRow = ($row) $matchIter.next();
-       |  } else if ($leftInput.hasNext()) {
-       |    $leftRow = ($row) $leftInput.next();
-       |    $matchIter = $scanner.feed($leftRow);
-       |    if ($matchIter.hasNext()) {
-       |      $rightRow = ($row) $matchIter.next();
-       |    } else {
-       |      $matchIter = null;
-       |      $rightRow = $scanner.nullRow();
-       |    }
-       |  } else {
-       |    break;
-       |  }
-       |  $numOutput.add(1);
-       |  ${consume(ctx, leftVars ++ rightVars)}
-       |  if (shouldStop()) return;
-       |}
-     """.stripMargin
+    (leftRow, rightRow, numOutput, consumed) =>
+      s"""
+         |while (true) {
+         |  if ($matchIter != null && $matchIter.hasNext()) {
+         |    $rightRow = ($RowClass) $matchIter.next();
+         |  } else if ($leftInput.hasNext()) {
+         |    $leftRow = ($RowClass) $leftInput.next();
+         |    $matchIter = $scanner.feed($leftRow);
+         |    if ($matchIter.hasNext()) {
+         |      $rightRow = ($RowClass) $matchIter.next();
+         |    } else {
+         |      $matchIter = null;
+         |      $rightRow = $scanner.nullRow();
+         |    }
+         |  } else {
+         |    break;
+         |  }
+         |  $numOutput.add(1);
+         |  $consumed
+         |  if (shouldStop()) return;
+         |}
+       """.stripMargin
   }
 
   override protected def withNewChildrenInternal(

@@ -1,13 +1,11 @@
 package graft.plans
 
-import org.apache.spark.rdd.RDD
+import graft.plans.TimeJoinExec.Join
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, GenericInternalRow,
-  JoinedRow, SortOrder, UnsafeProjection}
-import org.apache.spark.sql.catalyst.plans.physical.{BroadcastDistribution,
-  Distribution, IdentityBroadcastMode, Partitioning, UnspecifiedDistribution}
-import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
-import org.apache.spark.sql.types.LongType
+  UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
+import org.apache.spark.sql.execution.SparkPlan
 
 /** Broadcast as-of join: the small build side ships to every executor
   * and the PROBE SIDE IS NEVER SHUFFLED OR SORTED — the plan the merge
@@ -35,152 +33,35 @@ case class BroadcastAsofJoinExec(
     leftTime: Attribute,
     rightTime: Attribute,
     direction: String = "backward",
-    toleranceUs: Long = -1L) extends SparkPlan with BinaryExecNode
-    with org.apache.spark.sql.execution.CodegenSupport {
+    toleranceUs: Long = -1L) extends BroadcastTimeJoinExec[BroadcastAsofProbe] {
 
-  require(leftKeys.nonEmpty && leftKeys.size == rightKeys.size,
-    "asof join needs matching non-empty key lists")
-  require(leftKeys.map(_.dataType) == rightKeys.map(_.dataType),
-    s"asof key types differ: ${leftKeys.map(_.dataType)} vs ${rightKeys.map(_.dataType)}")
-  require(AsofJoinPlan.timeTypeOk(leftTime.dataType) &&
-      AsofJoinPlan.timeTypeOk(rightTime.dataType),
-    "asof time columns must be BIGINT micros or a timestamp type")
   require(direction == "backward" || direction == "forward",
     s"asof direction must be backward|forward, got '$direction'")
 
-  override def output: Seq[Attribute] =
-    left.output ++ right.output.map(_.withNullability(true))
+  protected def kind: String = "asof"
 
-  override def outputPartitioning: Partitioning = left.outputPartitioning
+  protected def probeClass: Class[BroadcastAsofProbe] = classOf[BroadcastAsofProbe]
 
-  override def outputOrdering: Seq[SortOrder] = left.outputOrdering
-
-  override def requiredChildDistribution: Seq[Distribution] =
-    UnspecifiedDistribution :: BroadcastDistribution(IdentityBroadcastMode) :: Nil
-
-
-  override lazy val metrics: Map[String, org.apache.spark.sql.execution.metric.SQLMetric] =
-    Map("numOutputRows" -> org.apache.spark.sql.execution.metric.SQLMetrics
-      .createMetric(sparkContext, "number of output rows"))
-
-  override protected def doExecute(): RDD[InternalRow] = {
-    val numOut = longMetric("numOutputRows")
-    val lOut = left.output
-    val rOut = right.output
-    val lKeyExprs = leftKeys
-    val rKeyExprs = rightKeys
-    val lTimeIdx = lOut.indexWhere(_.exprId == leftTime.exprId)
-    val rTimeIdx = rOut.indexWhere(_.exprId == rightTime.exprId)
-    require(lTimeIdx >= 0 && rTimeIdx >= 0, "time attribute not in child output")
-    val allOut = output
-    val nRight = rOut.size
-    val bcast = right.executeBroadcast[Array[InternalRow]]()
-
-    // The memo key must capture everything the built index depends on:
-    // ReuseExchange can share one IdentityBroadcastMode exchange between
-    // two as-of joins over the same build subplan but with different key
-    // or time bindings, and a bare broadcast-id key would then serve the
-    // first operator's index to the second.
-    val memoKey = (bcast.id, rKeyExprs.map(_.exprId.id), rTimeIdx)
-
-    val fwd = direction == "forward"
-    val tol = toleranceUs
-    left.execute().mapPartitions { lIter =>
-      val probe = new BroadcastAsofProbe(
-        BroadcastAsofJoinExec.indexFor(memoKey,
-          BroadcastAsofJoinExec.buildIndex(bcast.value,
-            UnsafeProjection.create(rKeyExprs, rOut), rTimeIdx)),
-        nRight, fwd, tol)
-      val lKeyProj = UnsafeProjection.create(lKeyExprs, lOut)
-      val resultProj = UnsafeProjection.create(allOut,
-        lOut ++ rOut.map(_.withNullability(true)))
-      val joined = new JoinedRow
-
-      AsofJoinPlan.counted(lIter.map { l =>
-        resultProj(joined(l, probe.lookup(lKeyProj(l), l.getLong(lTimeIdx))))
-      }, numOut)
-    }
+  protected def newProbe: BroadcastAsofJoinExec.Index => BroadcastAsofProbe = {
+    val (nRight, fwd, tol) = (right.output.size, direction == "forward", toleranceUs)
+    index => new BroadcastAsofProbe(index, nRight, fwd, tol)
   }
 
-  // ---- whole-stage codegen: the BroadcastHashJoin arrangement — the
-  // probe side PARTICIPATES in the stage (scan → asof-probe → downstream
-  // fuse with no iterator boundary); the build side arrives via
-  // executeBroadcast and the memoized index. One output row per probe.
-  // Kill switch shared with the merge: spark.graft.asof.codegen=false.
+  protected def emitRows: (Iterator[InternalRow], BroadcastAsofProbe,
+      InternalRow => InternalRow, Int, Join) => Iterator[InternalRow] =
+    (lIter, probe, key, lTimeIdx, join) =>
+      lIter.map(l => join(l, probe.lookup(key(l), l.getLong(lTimeIdx))))
 
-  override def supportCodegen: Boolean =
-    left.isInstanceOf[org.apache.spark.sql.execution.CodegenSupport] &&
-      org.apache.spark.sql.internal.SQLConf.get
-        .getConfString("spark.graft.asof.codegen", "true").toBoolean
-
-  override def inputRDDs(): Seq[RDD[InternalRow]] =
-    left.asInstanceOf[org.apache.spark.sql.execution.CodegenSupport].inputRDDs()
-
-  override def needCopyResult: Boolean = true
-
-  override protected def doProduce(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext)
-      : String =
-    left.asInstanceOf[org.apache.spark.sql.execution.CodegenSupport]
-      .produce(ctx, this)
-
-  override def doConsume(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      input: Seq[org.apache.spark.sql.catalyst.expressions.codegen.ExprCode],
-      row: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : String = {
-    import org.apache.spark.sql.catalyst.expressions.{BindReferences, BoundReference}
-    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
-    val rTimeIdxV = right.output.indexWhere(_.exprId == rightTime.exprId)
-    require(rTimeIdxV >= 0, "build time attribute not in child output")
-    val bcast = right.executeBroadcast[Array[InternalRow]]()
-    val memoKey = (bcast.id, rightKeys.map(_.exprId.id), rTimeIdxV)
-    val rOut = right.output
-    val rKeyExprs = rightKeys
-    val nRight = rOut.size
-    val fwd = direction == "forward"
-    val tol = toleranceUs
-    val mkProbe: () => BroadcastAsofProbe = () => new BroadcastAsofProbe(
-      BroadcastAsofJoinExec.indexFor(memoKey,
-        BroadcastAsofJoinExec.buildIndex(bcast.value,
-          UnsafeProjection.create(rKeyExprs, rOut), rTimeIdxV)),
-      nRight, fwd, tol)
-    val probeCls = classOf[BroadcastAsofProbe].getName
-    val factory = ctx.addReferenceObj("asofProbeFactory", mkProbe,
-      "scala.Function0")
-    val probe = ctx.addMutableState(probeCls, "asofProbe",
-      v => s"$v = ($probeCls) $factory.apply();")
-
-    // probe key as an UnsafeRow with the same layout the index keys use
-    ctx.currentVars = input
-    val keyEv = GenerateUnsafeProjection.createCode(ctx,
-      leftKeys.map(k => BindReferences.bindReference(
-        k: org.apache.spark.sql.catalyst.expressions.Expression, left.output)))
-    val timeEv = BindReferences.bindReference(
-      leftTime.asInstanceOf[org.apache.spark.sql.catalyst.expressions.Expression],
-      left.output).genCode(ctx)
-    val rowT = "org.apache.spark.sql.catalyst.InternalRow"
-    val matched = ctx.addMutableState(rowT, "asofMatchedRow")
-    val numOutput = metricTerm(ctx, "numOutputRows")
-
-    // build-side columns read from the matched (possibly all-null) row
-    ctx.currentVars = null
-    ctx.INPUT_ROW = matched
-    val rightVars = rOut.zipWithIndex.map { case (a, i) =>
-      BoundReference(i, a.dataType, nullable = true).genCode(ctx)
-    }
-    // null time reads as 0 — the documented natural-ordering semantics
-    val timeVal = if (leftTime.nullable)
-      s"(${timeEv.isNull} ? 0L : ${timeEv.value})" else timeEv.value
-
+  // one output row per probe
+  protected def probeCode(ctx: CodegenContext, probe: String,
+      prelude: String, key: String, time: String, matched: String,
+      numOutput: String, consumed: => String): String =
     s"""
-       |${keyEv.code}
-       |${timeEv.code}
-       |$matched = $probe.lookup(${keyEv.value}, $timeVal);
+       |$prelude
+       |$matched = $probe.lookup($key, $time);
        |$numOutput.add(1);
-       |${consume(ctx, input ++ rightVars)}
+       |$consumed
      """.stripMargin
-  }
 
   override protected def withNewChildrenInternal(
       newLeft: SparkPlan, newRight: SparkPlan): BroadcastAsofJoinExec =
@@ -196,6 +77,9 @@ object BroadcastAsofJoinExec {
   // memory — each entry is small by the broadcast threshold's own
   // definition.
   private type MemoKey = (Long, Seq[Long], Int)
+  /** key → (sorted times, rows) over one broadcast. */
+  type Index = java.util.HashMap[InternalRow, (Array[Long], Array[InternalRow])]
+
   private val indexes = new java.util.LinkedHashMap[MemoKey, AnyRef](16, 0.75f, true) {
     override def removeEldestEntry(e: java.util.Map.Entry[MemoKey, AnyRef]): Boolean =
       size() > 8
@@ -203,8 +87,7 @@ object BroadcastAsofJoinExec {
 
   private[plans] def indexFor(
       id: MemoKey,
-      build: => java.util.HashMap[InternalRow, (Array[Long], Array[InternalRow])])
-      : java.util.HashMap[InternalRow, (Array[Long], Array[InternalRow])] =
+      build: => Index): Index =
     indexes.synchronized {
       indexes.get(id) match {
         case null =>
@@ -212,7 +95,7 @@ object BroadcastAsofJoinExec {
           indexes.put(id, built)
           built
         case hit =>
-          hit.asInstanceOf[java.util.HashMap[InternalRow, (Array[Long], Array[InternalRow])]]
+          hit.asInstanceOf[Index]
       }
     }
 
@@ -220,7 +103,7 @@ object BroadcastAsofJoinExec {
     * (and both their execution paths) build from the broadcast rows. */
   private[plans] def buildIndex(
       rows: Array[InternalRow], rKeyProj: UnsafeProjection, rTimeIdx: Int)
-      : java.util.HashMap[InternalRow, (Array[Long], Array[InternalRow])] = {
+      : Index = {
     val grouped = new java.util.HashMap[InternalRow,
       scala.collection.mutable.ArrayBuffer[(Long, InternalRow)]]()
     rows.foreach { r =>
@@ -232,8 +115,7 @@ object BroadcastAsofJoinExec {
       }
       buf += ((r.getLong(rTimeIdx), r))
     }
-    val out = new java.util.HashMap[InternalRow, (Array[Long], Array[InternalRow])](
-      grouped.size * 2)
+    val out = new Index(grouped.size * 2)
     grouped.forEach { (k, buf) =>
       val sorted = buf.sortBy(_._1)
       out.put(k, (sorted.map(_._1).toArray, sorted.map(_._2).toArray))
@@ -247,7 +129,7 @@ object BroadcastAsofJoinExec {
   * answers one probe at a time. Public because generated Java
   * instantiates and calls it by name. */
 final class BroadcastAsofProbe(
-    index: java.util.HashMap[InternalRow, (Array[Long], Array[InternalRow])],
+    index: BroadcastAsofJoinExec.Index,
     nRightCols: Int, fwd: Boolean, tol: Long) {
 
   val nullRow: InternalRow = new GenericInternalRow(nRightCols)
@@ -282,7 +164,7 @@ final class BroadcastAsofProbe(
   * [[nullRow]]); `row(i)` reads the slice without allocating an
   * iterator per probe. */
 final class BroadcastBandProbe(
-    index: java.util.HashMap[InternalRow, (Array[Long], Array[InternalRow])],
+    index: BroadcastAsofJoinExec.Index,
     nRightCols: Int, lo: Long, hi: Long) {
 
   val nullRow: InternalRow = new GenericInternalRow(nRightCols)

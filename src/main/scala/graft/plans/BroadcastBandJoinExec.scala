@@ -1,13 +1,10 @@
 package graft.plans
 
-import org.apache.spark.rdd.RDD
+import graft.plans.TimeJoinExec.Join
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, GenericInternalRow,
-  JoinedRow, SortOrder, UnsafeProjection}
-import org.apache.spark.sql.catalyst.plans.physical.{BroadcastDistribution,
-  Distribution, IdentityBroadcastMode, Partitioning, UnspecifiedDistribution}
-import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
+import org.apache.spark.sql.execution.SparkPlan
 
 /** Broadcast band join: [[BandJoinExec]]'s semantics with
   * [[BroadcastAsofJoinExec]]'s plan shape — the small build side ships
@@ -25,167 +22,62 @@ case class BroadcastBandJoinExec(
     leftTime: Attribute,
     rightTime: Attribute,
     lowUs: Long,
-    highUs: Long) extends SparkPlan with BinaryExecNode
-    with org.apache.spark.sql.execution.CodegenSupport {
+    highUs: Long) extends BroadcastTimeJoinExec[BroadcastBandProbe] {
 
-  require(leftKeys.nonEmpty && leftKeys.size == rightKeys.size,
-    "band join needs matching non-empty key lists")
-  require(leftKeys.map(_.dataType) == rightKeys.map(_.dataType),
-    s"band key types differ: ${leftKeys.map(_.dataType)} vs ${rightKeys.map(_.dataType)}")
-  require(AsofJoinPlan.timeTypeOk(leftTime.dataType) &&
-      AsofJoinPlan.timeTypeOk(rightTime.dataType),
-    "band time columns must be BIGINT micros or a timestamp type")
   require(lowUs <= highUs, s"band bounds inverted: [$lowUs, $highUs]")
 
-  override def output: Seq[Attribute] =
-    left.output ++ right.output.map(_.withNullability(true))
+  protected def kind: String = "band"
 
-  override def outputPartitioning: Partitioning = left.outputPartitioning
+  protected def probeClass: Class[BroadcastBandProbe] = classOf[BroadcastBandProbe]
 
-  override def outputOrdering: Seq[SortOrder] = left.outputOrdering
-
-  override def requiredChildDistribution: Seq[Distribution] =
-    UnspecifiedDistribution :: BroadcastDistribution(IdentityBroadcastMode) :: Nil
-
-
-  override lazy val metrics: Map[String, org.apache.spark.sql.execution.metric.SQLMetric] =
-    Map("numOutputRows" -> org.apache.spark.sql.execution.metric.SQLMetrics
-      .createMetric(sparkContext, "number of output rows"))
-
-  override protected def doExecute(): RDD[InternalRow] = {
-    val numOut = longMetric("numOutputRows")
-    val lOut = left.output
-    val rOut = right.output
-    val lKeyExprs = leftKeys
-    val rKeyExprs = rightKeys
-    val lTimeIdx = lOut.indexWhere(_.exprId == leftTime.exprId)
-    val rTimeIdx = rOut.indexWhere(_.exprId == rightTime.exprId)
-    require(lTimeIdx >= 0 && rTimeIdx >= 0, "time attribute not in child output")
-    val allOut = output
-    val nRight = rOut.size
-    val lo = lowUs
-    val hi = highUs
-    val bcast = right.executeBroadcast[Array[InternalRow]]()
-    val memoKey = (bcast.id, rKeyExprs.map(_.exprId.id), rTimeIdx)
-
-    left.execute().mapPartitions { lIter =>
-      val probe = new BroadcastBandProbe(
-        BroadcastAsofJoinExec.indexFor(memoKey,
-          BroadcastAsofJoinExec.buildIndex(bcast.value,
-            UnsafeProjection.create(rKeyExprs, rOut), rTimeIdx)),
-        nRight, lo, hi)
-      val lKeyProj = UnsafeProjection.create(lKeyExprs, lOut)
-      val resultProj = UnsafeProjection.create(allOut,
-        lOut ++ rOut.map(_.withNullability(true)))
-      val joined = new JoinedRow
-
-      AsofJoinPlan.counted(new Iterator[InternalRow] {
-        // the probe row stays valid until the next lIter.next(), and
-        // its whole band emits before that — no copies anywhere
-        private var l: InternalRow = _
-        private var idx = 0
-        private var end = 0
-
-        override def hasNext: Boolean = idx < end || lIter.hasNext
-
-        override def next(): InternalRow = {
-          if (idx < end) {
-            val r = probe.row(idx); idx += 1
-            return resultProj(joined(l, r))
-          }
-          l = lIter.next()
-          val n = probe.find(lKeyProj(l), l.getLong(lTimeIdx))
-          if (n == 0) resultProj(joined(l, probe.nullRow))
-          else {
-            idx = 1; end = n
-            resultProj(joined(l, probe.row(0)))
-          }
-        }
-      }, numOut)
-    }
+  protected def newProbe: BroadcastAsofJoinExec.Index => BroadcastBandProbe = {
+    val (nRight, lo, hi) = (right.output.size, lowUs, highUs)
+    index => new BroadcastBandProbe(index, nRight, lo, hi)
   }
 
-  // ---- whole-stage codegen: the BroadcastHashJoin arrangement (see
-  // BroadcastAsofJoinExec) — scan → band-probe → downstream fuse with
-  // no iterator boundary; the band slice emits through a do/while so
-  // the consume body is generated ONCE. Kill switch shared with the
-  // merge: spark.graft.band.codegen=false.
+  protected def emitRows: (Iterator[InternalRow], BroadcastBandProbe,
+      InternalRow => InternalRow, Int, Join) => Iterator[InternalRow] =
+    (lIter, probe, key, lTimeIdx, join) => new Iterator[InternalRow] {
+      // the probe row stays valid until the next lIter.next(), and
+      // its whole band emits before that — no copies anywhere
+      private var l: InternalRow = _
+      private var idx = 0
+      private var end = 0
 
-  override def supportCodegen: Boolean =
-    left.isInstanceOf[org.apache.spark.sql.execution.CodegenSupport] &&
-      org.apache.spark.sql.internal.SQLConf.get
-        .getConfString("spark.graft.band.codegen", "true").toBoolean
+      override def hasNext: Boolean = idx < end || lIter.hasNext
 
-  override def inputRDDs(): Seq[RDD[InternalRow]] =
-    left.asInstanceOf[org.apache.spark.sql.execution.CodegenSupport].inputRDDs()
-
-  override def needCopyResult: Boolean = true
-
-  override protected def doProduce(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext)
-      : String =
-    left.asInstanceOf[org.apache.spark.sql.execution.CodegenSupport]
-      .produce(ctx, this)
-
-  override def doConsume(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      input: Seq[org.apache.spark.sql.catalyst.expressions.codegen.ExprCode],
-      row: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : String = {
-    import org.apache.spark.sql.catalyst.expressions.{BindReferences, BoundReference}
-    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
-    val rTimeIdxV = right.output.indexWhere(_.exprId == rightTime.exprId)
-    require(rTimeIdxV >= 0, "build time attribute not in child output")
-    val bcast = right.executeBroadcast[Array[InternalRow]]()
-    val memoKey = (bcast.id, rightKeys.map(_.exprId.id), rTimeIdxV)
-    val rOut = right.output
-    val rKeyExprs = rightKeys
-    val nRight = rOut.size
-    val (lo, hi) = (lowUs, highUs)
-    val mkProbe: () => BroadcastBandProbe = () => new BroadcastBandProbe(
-      BroadcastAsofJoinExec.indexFor(memoKey,
-        BroadcastAsofJoinExec.buildIndex(bcast.value,
-          UnsafeProjection.create(rKeyExprs, rOut), rTimeIdxV)),
-      nRight, lo, hi)
-    val probeCls = classOf[BroadcastBandProbe].getName
-    val factory = ctx.addReferenceObj("bandProbeFactory", mkProbe,
-      "scala.Function0")
-    val probe = ctx.addMutableState(probeCls, "bandProbe",
-      v => s"$v = ($probeCls) $factory.apply();")
-
-    ctx.currentVars = input
-    val keyEv = GenerateUnsafeProjection.createCode(ctx,
-      leftKeys.map(k => BindReferences.bindReference(
-        k: org.apache.spark.sql.catalyst.expressions.Expression, left.output)))
-    val timeEv = BindReferences.bindReference(
-      leftTime.asInstanceOf[org.apache.spark.sql.catalyst.expressions.Expression],
-      left.output).genCode(ctx)
-    val rowT = "org.apache.spark.sql.catalyst.InternalRow"
-    val matched = ctx.addMutableState(rowT, "bandMatchedRow")
-    val numOutput = metricTerm(ctx, "numOutputRows")
-
-    ctx.currentVars = null
-    ctx.INPUT_ROW = matched
-    val rightVars = rOut.zipWithIndex.map { case (a, i) =>
-      BoundReference(i, a.dataType, nullable = true).genCode(ctx)
+      override def next(): InternalRow = {
+        if (idx < end) {
+          val r = probe.row(idx); idx += 1
+          return join(l, r)
+        }
+        l = lIter.next()
+        val n = probe.find(key(l), l.getLong(lTimeIdx))
+        if (n == 0) join(l, probe.nullRow)
+        else {
+          idx = 1; end = n
+          join(l, probe.row(0))
+        }
+      }
     }
-    val timeVal = if (leftTime.nullable)
-      s"(${timeEv.isNull} ? 0L : ${timeEv.value})" else timeEv.value
+
+  // the band slice emits through a do/while so the consume body is
+  // generated ONCE: n == 0 ⇒ it runs once with the null row
+  // (left-outer); otherwise it walks the slice
+  protected def probeCode(ctx: CodegenContext, probe: String,
+      prelude: String, key: String, time: String, matched: String,
+      numOutput: String, consumed: => String): String = {
     val n = ctx.freshName("bandN")
     val i = ctx.freshName("bandI")
-
-    // n == 0 ⇒ the do/while runs once with the null row (left-outer);
-    // otherwise it walks the slice — ONE consume body either way
     s"""
-       |${keyEv.code}
-       |${timeEv.code}
-       |int $n = $probe.find(${keyEv.value}, $timeVal);
+       |$prelude
+       |int $n = $probe.find($key, $time);
        |int $i = 0;
        |do {
        |  $matched = ($n == 0) ? $probe.nullRow() : $probe.row($i);
        |  $i++;
        |  $numOutput.add(1);
-       |  ${consume(ctx, input ++ rightVars)}
+       |  $consumed
        |} while ($i < $n);
      """.stripMargin
   }

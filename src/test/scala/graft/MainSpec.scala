@@ -63,4 +63,24 @@ class MainSpec extends SparkSpec {
     assert(IngestSchema.mappingFromJson(
       "/root/reference/data-schema.json", "NoSuchModel").isEmpty)
   }
+
+  test("parse: a full command line sets every field") {
+    val got = Main.parse(Array("-file", "in.xml", "-model", "Record",
+      "-table", "t", "--export-dir", "out", "--config", "c.yaml",
+      "--template", "db.xlsx", "--schema-map", "m.json",
+      "--jdbc-url", "jdbc:derby:x", "--jdbc", "--archive"))
+    assert(got == Right(Main.Args(file = "in.xml", model = "Record",
+      table = "t", exportDir = "out", jdbc = true, archive = true,
+      configPath = "c.yaml", jdbcUrl = "jdbc:derby:x", template = "db.xlsx",
+      schemaMap = "m.json")))
+  }
+
+  test("parse: an unknown flag, a value flag with no value and a missing " +
+      "required flag are errors") {
+    assert(Main.parse(Array("-file", "in.xml", "-table", "t", "--jbdc")) ==
+      Left("flag provided but not defined: --jbdc"))
+    assert(Main.parse(Array("-table", "t", "-file")) ==
+      Left("flag needs an argument: -file"))
+    assert(Main.parse(Array("-file", "in.xml")).isLeft)
+  }
 }

@@ -13,8 +13,9 @@ class ScaleTechniquesSpec extends SparkSpec {
     val big = (1 to 2000).map(i => (if (i % 10 == 0) i.toLong else 1L, i)).toDF("k", "v")
     val small = Seq((1L, "hot"), (20L, "cold"), (30L, "cold")).toDF("k", "name")
     val plain = big.join(small, Seq("k")).collect().map(_.toSeq).toSet
-    val salted = Skew.saltedJoin(big, small, Seq("k"), saltFactor = 8)
-      .select(big.columns.map(col) ++ Seq(col("name")): _*)
+    val salted = graft.ops.Skew.saltedJoin(big, small, big("k") === small("k"),
+        saltBy = col("v"), salts = 8)
+      .select(big("k"), big("v"), small("name"))
       .collect().map(_.toSeq).toSet
     assert(salted == plain)
   }

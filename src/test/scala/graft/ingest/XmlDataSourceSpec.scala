@@ -71,4 +71,29 @@ class XmlDataSourceSpec extends SparkSpec {
     assert(df.rdd.getNumPartitions == 2)
     assert(df.count() == 16)
   }
+
+  test("directory input skips hidden and marker files (_SUCCESS, .crc)") {
+    val dir = java.nio.file.Files.createTempDirectory("xmlv2hidden")
+    // written the way a Spark job leaves a directory: Hadoop's local
+    // file system adds a binary `.<name>.crc` next to every file
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(
+      spark.sparkContext.hadoopConfiguration)
+    def write(name: String, body: String): Unit = {
+      val out = fs.create(new org.apache.hadoop.fs.Path(dir.resolve(name).toString))
+      try out.write(body.getBytes("UTF-8")) finally out.close()
+    }
+    def doc(n: Int, from: Int) = (from until from + n)
+      .map(i => s"<Record><user>u$i</user><status>ok</status></Record>")
+      .mkString("<Data>", "", "</Data>")
+    write("a.xml", doc(3, 0))
+    write("b.xml", doc(2, 3))
+    write("_SUCCESS", "")
+    assert(java.nio.file.Files.size(dir.resolve(".a.xml.crc")) > 0)
+    val df = v2(dir.toString)
+    assert(df.rdd.getNumPartitions == 2)
+    assert(df.count() == 5)
+    // the same files the binaryFiles reader sees
+    assert(XmlRecordReader.read(spark, dir.toString, "Record", IngestSchema.raw)
+      .count() == 5)
+  }
 }

@@ -48,7 +48,7 @@ class AsofPlanSpec extends SparkSpec {
   }
 
   test("whole-stage codegen wraps the broadcast probe INTO the scan " +
-      "stage (no iterator boundary); kill switch falls back, same rows") {
+      "stage (no iterator boundary); the iterator path gives the same rows") {
     import spark.implicits._
     val probe = (0 until 200).map(i =>
       (i.toLong, (i % 7).toLong, (i * 3).toLong)).toDF("id", "k", "t")
@@ -62,14 +62,14 @@ class AsofPlanSpec extends SparkSpec {
       .split("== Initial Plan ==").head
     assert("\\*\\(\\d+\\) BroadcastAsofJoin".r.findFirstIn(plan).isDefined,
       s"BroadcastAsofJoinExec not inside WholeStageCodegen:\n$plan")
-    spark.conf.set("spark.graft.asof.codegen", "false")
+    spark.conf.set("spark.sql.codegen.wholeStage", "false")
     try {
       val off = run()
       val got = off.collect().map(_.toString).sorted.toSeq
       assert(!"\\*\\(\\d+\\) BroadcastAsofJoin".r.findFirstIn(
         off.queryExecution.executedPlan.toString).isDefined)
       assert(got == want)
-    } finally spark.conf.set("spark.graft.asof.codegen", "true")
+    } finally spark.conf.set("spark.sql.codegen.wholeStage", "true")
     // band twin: multi-row emission through the do/while consume
     def runBand() = PlanBridge.bandJoin(probe, build,
       Seq("k" -> "bk"), "t", "bt", -30L, 0L, hint = "broadcast")
@@ -77,13 +77,13 @@ class AsofPlanSpec extends SparkSpec {
     val bandWant = bandOn.collect().map(_.toString).sorted.toSeq
     assert("\\*\\(\\d+\\) BroadcastBandJoin".r.findFirstIn(
       bandOn.queryExecution.executedPlan.toString).isDefined)
-    spark.conf.set("spark.graft.band.codegen", "false")
+    spark.conf.set("spark.sql.codegen.wholeStage", "false")
     try assert(runBand().collect().map(_.toString).sorted.toSeq == bandWant)
-    finally spark.conf.set("spark.graft.band.codegen", "true")
+    finally spark.conf.set("spark.sql.codegen.wholeStage", "true")
   }
 
-  test("whole-stage codegen wraps the merge; the kill switch falls " +
-      "back to the iterator path with identical rows") {
+  test("whole-stage codegen wraps the merge; with whole-stage codegen " +
+      "off the iterator path gives identical rows") {
     def run() = Events.queries("ev08b_asof_native")(spark, sf)
     val on = run()
     val want = on.collect().map(_.toString).sorted.toSeq
@@ -91,7 +91,7 @@ class AsofPlanSpec extends SparkSpec {
       .split("== Initial Plan ==").head
     assert("\\*\\(\\d+\\) AsofJoin".r.findFirstIn(plan).isDefined,
       s"AsofJoinExec not inside WholeStageCodegen:\n$plan")
-    spark.conf.set("spark.graft.asof.codegen", "false")
+    spark.conf.set("spark.sql.codegen.wholeStage", "false")
     try {
       val off = run()
       val got = off.collect().map(_.toString).sorted.toSeq
@@ -100,7 +100,7 @@ class AsofPlanSpec extends SparkSpec {
       assert(!"\\*\\(\\d+\\) AsofJoin".r.findFirstIn(offPlan).isDefined,
         s"codegen fired with the conf off:\n$offPlan")
       assert(got == want)
-    } finally spark.conf.set("spark.graft.asof.codegen", "true")
+    } finally spark.conf.set("spark.sql.codegen.wholeStage", "true")
   }
 
   test("edge semantics: latest-at-or-before, equal-ts match, no-view null, " +

@@ -134,12 +134,12 @@ class BandJoinSpec extends SparkSpec {
     val withAgg = exchanges(merged()
       .groupBy(col("k")).agg(count(lit(1))))
     assert(withAgg == base, s"per-key agg added an exchange: $base -> $withAgg")
-    // whole-stage codegen wraps the merge (the `*(n)` prefix); the
-    // kill switch falls back to the iterator path with identical rows
+    // whole-stage codegen wraps the merge (the `*(n)` prefix); with
+    // whole-stage codegen off the iterator path gives identical rows
     assert("\\*\\(\\d+\\) BandJoin".r.findFirstIn(plan).isDefined,
       s"BandJoinExec not inside WholeStageCodegen:\n$plan")
     val want = merged().collect().map(_.toString).sorted.toSeq
-    spark.conf.set("spark.graft.band.codegen", "false")
+    spark.conf.set("spark.sql.codegen.wholeStage", "false")
     try {
       val off = merged()
       off.collect()
@@ -148,6 +148,6 @@ class BandJoinSpec extends SparkSpec {
       assert(!"\\*\\(\\d+\\) BandJoin".r.findFirstIn(offPlan).isDefined,
         s"codegen fired with the conf off:\n$offPlan")
       assert(off.collect().map(_.toString).sorted.toSeq == want)
-    } finally spark.conf.set("spark.graft.band.codegen", "true")
+    } finally spark.conf.set("spark.sql.codegen.wholeStage", "true")
   }
 }

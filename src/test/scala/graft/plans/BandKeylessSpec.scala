@@ -61,23 +61,33 @@ class BandKeylessSpec extends SparkSpec {
 
   test("randomized parity with the stock nested-loop plan, " +
       "several band shapes, times spanning zero") {
-    import sql.implicits._
     val rnd = new scala.util.Random(29)
-    val probe = (0 until 400).map(i =>
-      (i.toLong, rnd.nextInt(400).toLong - 200L)).toDF("id", "t")
-    val build = (0 until 250).map(j =>
-      (rnd.nextInt(400).toLong - 200L, 1000L + j)).toDF("bt", "bid")
+    val probeRows = (0 until 400).map(i =>
+      (i.toLong, rnd.nextInt(400).toLong - 200L))
+    val buildRows = (0 until 250).map(j =>
+      (rnd.nextInt(400).toLong - 200L, 1000L + j))
+    def frames(s: org.apache.spark.sql.SparkSession) = {
+      import s.implicits._
+      (probeRows.toDF("id", "t"), buildRows.toDF("bt", "bid"))
+    }
+    val (probe, build) = frames(sql)
+    // the reference runs with no extensions: on `sql` the band rewrite
+    // would plan it as the operator under test
+    val (stockProbe, stockBuild) = frames(SparkSpec.plainSession)
     for ((lo, hi) <- Seq((-15L, 0L), (-7L, 7L), (3L, 30L), (0L, 0L))) {
       val native = PlanBridge.bandJoinKeyless(probe, build, "t", "bt", lo, hi)
         .select("id", "bid").collect()
         .map(r => (r.getLong(0), Option(r.get(1)).map(_.asInstanceOf[Long])))
         .sorted.toSeq
-      val stock = probe.join(build,
-          build("bt") >= probe("t") + lo && build("bt") <= probe("t") + hi,
+      val stockDf = stockProbe.join(stockBuild,
+          stockBuild("bt") >= stockProbe("t") + lo &&
+            stockBuild("bt") <= stockProbe("t") + hi,
           "left_outer")
-        .select("id", "bid").collect()
+        .select("id", "bid")
+      val stock = stockDf.collect()
         .map(r => (r.getLong(0), Option(r.get(1)).map(_.asInstanceOf[Long])))
         .sorted.toSeq
+      assert(!stockDf.queryExecution.executedPlan.toString.contains("BandJoin"))
       assert(native == stock, s"band [$lo,$hi] diverged")
       assert(native.nonEmpty)
     }
