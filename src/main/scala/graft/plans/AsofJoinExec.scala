@@ -208,8 +208,7 @@ case class AsofJoinExec(
     toleranceUs: Long = -1L,
     isSkewJoin: Boolean = false) extends MergeTimeJoinExec[AsofScanner] {
 
-  require(direction == "backward" || direction == "forward",
-    s"asof direction must be backward|forward, got '$direction'")
+  private val forward = Asof.isForward(direction)
 
   protected def kind: String = "asof"
 
@@ -219,7 +218,7 @@ case class AsofJoinExec(
       UnsafeProjection, Ordering[InternalRow]) => AsofScanner = {
     val (lIdx, rIdx) = (lTimeIdx, rTimeIdx)
     val (nRight, nKeys) = (right.output.size, rightKeys.size)
-    val fwd = direction == "forward"
+    val fwd = forward
     val tol = toleranceUs
     // single-Long-key fast path (the dominant shape: user_id, doc_id)
     val fastLongKey = leftKeys.map(_.dataType) == Seq(LongType)

@@ -15,7 +15,7 @@ import org.apache.spark.sql.graft.PlanBridge
   *     division; no replication — unlike the band's bucketization, an
   *     as-of match can reach arbitrarily far back, so reachback is
   *     handled by a carry table instead of copying build rows).
-  *  2. A keyed [[AsofJoinPlan]] merge on the BUCKET resolves every
+  *  2. A keyed [[TimeJoinPlan]] as-of merge on the BUCKET resolves every
   *     probe whose own bucket contains a candidate — both sides
   *     shuffle-partition by time range, the IEJoin layout.
   *  3. Probes with an empty in-bucket result fall back to the
@@ -89,28 +89,30 @@ object AsofKeyless {
     * shuffles) with an explicit "merge" honored — a build too large to
     * broadcast shuffles the microbatch, a legal stateless per-trigger
     * exchange. The carry fallback join is ALWAYS broadcast: the carry
-    * table is bucket-count-sized by construction. */
+    * table is bucket-count-sized by construction.
+    * STREAM-STATIC: a streaming probe side works — the in-bucket join
+    * switches to the broadcast as-of (stateless per microbatch, probe
+    * never shuffles) and the carry table is a bucket-count-sized
+    * STATIC aggregate broadcast the same way. A streaming BUILD side
+    * has no bounded-state formulation here (the carry is a global
+    * running extremum) and is refused by [[PlanBridge.timeJoin]]. */
   def asofJoinKeyless(left: DataFrame, right: DataFrame,
       leftTime: String, rightTime: String,
       direction: String = "backward", toleranceUs: Long = -1L,
-      hint: String = "auto"): DataFrame = {
-    require(direction == "backward" || direction == "forward",
-      s"direction must be backward|forward, got '$direction'")
-    require(AsofJoinPlan.hints(hint),
-      s"hint must be one of ${AsofJoinPlan.hints.mkString("/")}, got '$hint'")
-    // STREAM-STATIC: a streaming probe side works — the in-bucket join
-    // switches to the broadcast as-of (stateless per microbatch, probe
-    // never shuffles) and the carry table is a bucket-count-sized
-    // STATIC aggregate broadcast the same way. A streaming BUILD side
-    // has no bounded-state formulation here (the carry is a global
-    // running extremum) — refuse loudly.
-    require(!right.isStreaming,
-      "keyless as-of build side must be static (stream-static " +
-        "enrichment only; a streaming build side would need an " +
-        "unbounded global carry)")
+      hint: String = "auto"): DataFrame =
+    PlanBridge.timeJoin(left, right,
+      TimeJoin.keyless(leftTime, rightTime, Asof(direction, toleranceUs), hint))
+
+  /** The composition behind a keyless as-of — [[PlanBridge.timeJoin]]'s
+    * lowering, reached after it has checked `join` and both sides. */
+  def composed(left: DataFrame, right: DataFrame, join: TimeJoin,
+      asof: Asof): DataFrame = {
+    val (leftTime, rightTime, hint) = (join.leftTime, join.rightTime, join.hint)
+    val (fwd, toleranceUs) = (asof.forward, asof.toleranceUs)
+    // both inner joins match without tolerance; it applies at the end
+    val untolerant = asof.copy(toleranceUs = -1L)
     val streaming = left.isStreaming
     val spark = left.sparkSession
-    val fwd = direction == "forward"
     val rCols = right.columns.toSeq
 
     def nullExtended(df: DataFrame): DataFrame =
@@ -149,11 +151,11 @@ object AsofKeyless {
     // partitioned; streaming probe: broadcast — the static build side
     // ships to executors and each microbatch probes it statelessly)
     val inBucketHint =
-      if (streaming) AsofJoinPlan.steerHint(probeIsStreaming = true, hint)
+      if (streaming) TimeJoinPlan.steerHint(probeIsStreaming = true, hint)
       else { if (hint == "broadcast") "broadcast" else "merge" }
-    val inBucket = PlanBridge.asofJoin(l2, r2,
-      Seq("__graft_ab_l" -> "__graft_ab_r"), leftTime, rightTime,
-      hint = inBucketHint, direction = direction, toleranceUs = -1L)
+    val inBucket = PlanBridge.timeJoin(l2, r2, TimeJoin(
+      Seq("__graft_ab_l" -> "__graft_ab_r"), leftTime, rightTime, untolerant,
+      inBucketHint))
 
     // 3) per-bucket extremum, then the running carry INCLUDING the own
     // bucket (probed at bucket ∓ 1, so an empty probe bucket still
@@ -179,12 +181,12 @@ object AsofKeyless {
     // deterministic, so every instance agrees).
     val probeBucket = if (fwd) col("__graft_ab_l") + w
       else col("__graft_ab_l") - w
-    val joined = PlanBridge.asofJoin(
+    val joined = PlanBridge.timeJoin(
       inBucket.withColumn("__graft_k1", lit(1L))
         .withColumn("__graft_fb", probeBucket),
       carry.withColumn("__graft_k2", lit(1L)),
-      Seq("__graft_k1" -> "__graft_k2"), "__graft_fb", "__graft_pb",
-      hint = "broadcast", direction = direction, toleranceUs = -1L)
+      TimeJoin(Seq("__graft_k1" -> "__graft_k2"), "__graft_fb", "__graft_pb",
+        untolerant, "broadcast"))
 
     val inMatched = col(rightTime).isNotNull
     val matchTime = when(inMatched, col(rightTime))

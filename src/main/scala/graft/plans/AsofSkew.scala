@@ -31,8 +31,8 @@ import org.apache.spark.sql.graft.PlanBridge
   * detected tuples — a few literal comparisons per row, broadcast-free
   * and codegen-friendly. Null key components never test hot (SQL
   * equality semantics), which is correct: null keys never match in
-  * the join either, so their layout is irrelevant. The single-Long
-  * entry points below delegate to the generic tier.
+  * the join either, so their layout is irrelevant. Both tiers take the
+  * join as one [[TimeJoin]] descriptor, as-of and band alike.
   */
 object AsofSkew {
 
@@ -41,7 +41,9 @@ object AsofSkew {
     * Bounded by construction: at most 1/minShare tuples can exceed
     * the share, and only that many rows are collected. Two vocab-free
     * jobs over the sample — the sk02 detection shape, usable as a
-    * pre-pass at any scale. */
+    * pre-pass at any scale. A tuple with a null component is never
+    * returned: it can never match in the join, so routing or salting
+    * it would only add a branch that yields nothing. */
   def detectHotKeyTuples(probe: DataFrame, keys: Seq[String],
       sampleFraction: Double = 0.01, minShare: Double = 0.05)
       : Seq[Seq[Any]] = {
@@ -53,25 +55,13 @@ object AsofSkew {
       val totalRow = counts.agg(sum(col("__graft_n"))).head
       val total = if (totalRow.isNullAt(0)) 0L else totalRow.getLong(0)
       if (total == 0L) Seq.empty
-      else counts.filter(col("__graft_n") >= lit(total * minShare))
+      else counts.filter(col("__graft_n") >= lit(total * minShare) &&
+          keys.map(col(_).isNotNull).reduce(_ && _))
         .orderBy(col("__graft_n").desc)
         .limit((1.0 / minShare).toInt + 1)
         .collect().map(r => keys.indices.map(r.get).toSeq).toSeq
     } finally { counts.unpersist(); () }
   }
-
-  /** Single-column convenience over [[detectHotKeyTuples]], kept for
-    * the dominant one-Long-key shape. Fails loudly on a non-Long key
-    * column — silently returning no hot keys would turn the skew
-    * mitigation into a no-op. */
-  def detectHotKeys(probe: DataFrame, key: String,
-      sampleFraction: Double = 0.01, minShare: Double = 0.05): Seq[Long] =
-    detectHotKeyTuples(probe, Seq(key), sampleFraction, minShare).map {
-      case Seq(v: Long) => v
-      case other => throw new IllegalArgumentException(
-        s"detectHotKeys needs a LongType key column; '$key' yielded " +
-          s"$other — use detectHotKeyTuples for generic keys")
-    }
 
   /** OR-of-conjunct-equalities membership test: does this row's key
     * tuple equal any hot tuple? Null components compare to null (never
@@ -81,91 +71,34 @@ object AsofSkew {
       if (v == null) lit(false) else col(c) === lit(v)
     }.reduce(_ && _)).reduce(_ || _)
 
-  private def salted(left: DataFrame, right: DataFrame,
-      keys: Seq[(String, String)], leftTime: String,
-      hot: Seq[Seq[Any]], salts: Int): (DataFrame, DataFrame) = {
+  /** The join with the hot key tuples salted `salts` ways. Results are
+    * row-identical to the unsalted join (AsofSkewSpec pins it, including
+    * string and two-column keys); only the partition layout changes.
+    * The replication argument holds for both kinds: a probe's as-of
+    * match and its band are both functions of its key's COMPLETE build
+    * rows, so replicating the hot keys' build rows to every salt and
+    * routing each probe to one salt preserves every probe's match set
+    * exactly, with no duplicate and no reconciliation (each probe sees
+    * exactly one salt's full copy). */
+  def salted(left: DataFrame, right: DataFrame, join: TimeJoin,
+      hotKeys: Seq[Seq[Any]], salts: Int = 16): DataFrame = {
+    require(salts > 1, s"salts must be > 1, got $salts")
+    require(!join.keyless, "salting needs the join's key pairs")
+    if (hotKeys.isEmpty) return PlanBridge.timeJoin(left, right, join)
     val l2 = left.withColumn("__graft_salt_l",
-      when(isHot(keys.map(_._1), hot),
-        pmod(hash(col(leftTime)), lit(salts)).cast("long"))
+      when(isHot(join.leftKeys, hotKeys),
+        pmod(hash(col(join.leftTime)), lit(salts)).cast("long"))
         .otherwise(lit(0L)))
     val r2 = right.withColumn("__graft_salt_r",
-      explode(when(isHot(keys.map(_._2), hot),
+      explode(when(isHot(join.rightKeys, hotKeys),
         sequence(lit(0L), lit(salts - 1L)))
         .otherwise(array(lit(0L)))))
-    (l2, r2)
-  }
-
-  /** As-of join with the hot key tuples salted `salts` ways. Results
-    * are row-identical to the unsalted join (AsofSkewSpec pins it,
-    * including string and two-column keys); only the partition layout
-    * changes. */
-  def asofJoinSaltedKeys(left: DataFrame, right: DataFrame,
-      keys: Seq[(String, String)],
-      leftTime: String, rightTime: String,
-      hotKeys: Seq[Seq[Any]], salts: Int = 16,
-      hint: String = "merge", direction: String = "backward",
-      toleranceUs: Long = -1L): DataFrame = {
-    require(salts > 1, s"salts must be > 1, got $salts")
-    require(keys.nonEmpty, "at least one key pair")
-    if (hotKeys.isEmpty)
-      return PlanBridge.asofJoin(left, right, keys, leftTime, rightTime,
-        hint, direction, toleranceUs)
-    val (l2, r2) = salted(left, right, keys, leftTime, hotKeys, salts)
     // noAutoRoute: this call IS a skew treatment — the buildKeys=auto
     // detection pre-pass must not fire inside it
-    PlanBridge.noAutoRoute(PlanBridge.asofJoin(l2, r2,
-        keys :+ ("__graft_salt_l" -> "__graft_salt_r"),
-        leftTime, rightTime, hint, direction, toleranceUs))
+    PlanBridge.noAutoRoute(PlanBridge.timeJoin(l2, r2, join.copy(
+        keys = join.keys :+ ("__graft_salt_l" -> "__graft_salt_r"))))
       .drop("__graft_salt_l", "__graft_salt_r")
   }
-
-  /** Single-Long-key convenience over [[asofJoinSaltedKeys]]. */
-  def asofJoinSalted(left: DataFrame, right: DataFrame,
-      leftKey: String, rightKey: String,
-      leftTime: String, rightTime: String,
-      hotKeys: Seq[Long], salts: Int = 16,
-      hint: String = "merge", direction: String = "backward",
-      toleranceUs: Long = -1L): DataFrame =
-    asofJoinSaltedKeys(left, right, Seq(leftKey -> rightKey),
-      leftTime, rightTime, hotKeys.map(Seq(_: Any)), salts,
-      hint, direction, toleranceUs)
-
-  /** Band join with the hot key tuples salted `salts` ways — the
-    * identical replication argument as [[asofJoinSaltedKeys]]: a
-    * probe's band is a function of its key's COMPLETE build rows, so
-    * replicating the hot keys' build rows to every salt and routing
-    * each probe to one salt preserves every probe's match set exactly,
-    * with no duplicate and no reconciliation (each probe sees exactly
-    * one salt's full copy). Completes the skew tier across the
-    * operator family. */
-  def bandJoinSaltedKeys(left: DataFrame, right: DataFrame,
-      keys: Seq[(String, String)],
-      leftTime: String, rightTime: String,
-      lowUs: Long, highUs: Long,
-      hotKeys: Seq[Seq[Any]], salts: Int = 16,
-      hint: String = "merge"): DataFrame = {
-    require(salts > 1, s"salts must be > 1, got $salts")
-    require(keys.nonEmpty, "at least one key pair")
-    if (hotKeys.isEmpty)
-      return PlanBridge.bandJoin(left, right, keys, leftTime, rightTime,
-        lowUs, highUs, hint)
-    val (l2, r2) = salted(left, right, keys, leftTime, hotKeys, salts)
-    PlanBridge.noAutoRoute(PlanBridge.bandJoin(l2, r2, // see asof sibling
-        keys :+ ("__graft_salt_l" -> "__graft_salt_r"),
-        leftTime, rightTime, lowUs, highUs, hint))
-      .drop("__graft_salt_l", "__graft_salt_r")
-  }
-
-  /** Single-Long-key convenience over [[bandJoinSaltedKeys]]. */
-  def bandJoinSalted(left: DataFrame, right: DataFrame,
-      leftKey: String, rightKey: String,
-      leftTime: String, rightTime: String,
-      lowUs: Long, highUs: Long,
-      hotKeys: Seq[Long], salts: Int = 16,
-      hint: String = "merge"): DataFrame =
-    bandJoinSaltedKeys(left, right, Seq(leftKey -> rightKey),
-      leftTime, rightTime, lowUs, highUs,
-      hotKeys.map(Seq(_: Any)), salts, hint)
 
   // ---- BUILD-side hot keys: the opposite skew quadrant --------------
   //
@@ -201,106 +134,47 @@ object AsofSkew {
     * genuinely hot keys route, or persist the inputs themselves before
     * calling so the per-branch rescans hit storage once. */
   private val BranchWarnThreshold = 8
-  private def warnManyBranches(op: String, n: Int): Unit =
+  private def warnManyBranches(n: Int): Unit =
     if (n > BranchWarnThreshold)
-      System.err.println(s"[graft] $op: routing $n hot build-key " +
-        s"tuples — one keyless branch (and one scan of each input) per " +
-        "tuple; plans and IO grow linearly with the tuple count. Raise " +
+      System.err.println(s"[graft] AsofSkew.buildSkewed: routing $n hot " +
+        "build-key tuples — one keyless branch (and one scan of each " +
+        "input) per tuple; plans and IO grow linearly with the tuple count. Raise " +
         "minShare so only genuinely hot keys route, or persist the " +
         "inputs before calling.")
 
-  /** As-of join with hot BUILD key tuples routed through the keyless
-    * bucket+carry composition (one branch per hot tuple, cold keys
-    * through the plain keyed merge). Row-identical to the plain join;
-    * only the layout of the hot keys' build history changes. Plans and
-    * input scans grow linearly with `hotKeys.size` — see
+  /** The join with hot BUILD key tuples routed through the keyless
+    * composition of its kind — bucket+carry for as-of, the bucketized
+    * band for a band — one branch per hot tuple, cold keys through the
+    * plain keyed merge. Row-identical to the plain join; only the
+    * layout of the hot keys' build history changes. Plans and input
+    * scans grow linearly with `hotKeys.size` — see
     * [[warnManyBranches]]; pass only genuinely hot tuples. */
-  def asofJoinBuildSkewedKeys(left: DataFrame, right: DataFrame,
-      keys: Seq[(String, String)],
-      leftTime: String, rightTime: String,
-      hotKeys: Seq[Seq[Any]],
-      hint: String = "merge", direction: String = "backward",
-      toleranceUs: Long = -1L): DataFrame = PlanBridge.noAutoRoute {
-    require(keys.nonEmpty, "at least one key pair")
+  def buildSkewed(left: DataFrame, right: DataFrame, join: TimeJoin,
+      hotKeys: Seq[Seq[Any]]): DataFrame = PlanBridge.noAutoRoute {
+    require(!join.keyless, "build-skew routing needs the join's key pairs")
     // one branch per DISTINCT tuple: a duplicated hot key (two
     // detection passes concatenated) would silently duplicate every
     // matched row for it — the salted sibling's membership test is
     // naturally duplicate-tolerant, this union is not
     val hot = hotKeys.distinct
-    if (hot.isEmpty)
-      PlanBridge.asofJoin(left, right, keys, leftTime, rightTime,
-        hint, direction, toleranceUs)
+    if (hot.isEmpty) PlanBridge.timeJoin(left, right, join)
     else {
-      warnManyBranches("asofJoinBuildSkewedKeys", hot.size)
-      val cold = PlanBridge.asofJoin(
-        left.filter(!isHotNullSafe(keys.map(_._1), hot)),
-        right.filter(!isHotNullSafe(keys.map(_._2), hot)),
-        keys, leftTime, rightTime, hint, direction, toleranceUs)
+      warnManyBranches(hot.size)
+      val cold = PlanBridge.timeJoin(
+        left.filter(!isHotNullSafe(join.leftKeys, hot)),
+        right.filter(!isHotNullSafe(join.rightKeys, hot)), join)
+      // the caller's hint steers the hot branches too (the partitions
+      // they are most likely tuning) — the keyless compositions accept
+      // the same hint vocabulary
+      val keyless = TimeJoin.keyless(join.leftTime, join.rightTime,
+        join.kind, join.hint)
+      def keyEq(cols: Seq[String], t: Seq[Any]): Column =
+        cols.zip(t).map { case (c, v) => col(c) === lit(v) }.reduce(_ && _)
       val hotBranches = hot.map { t =>
-        val pEq = keys.map(_._1).zip(t)
-          .map { case (c, v) => col(c) === lit(v) }.reduce(_ && _)
-        val bEq = keys.map(_._2).zip(t)
-          .map { case (c, v) => col(c) === lit(v) }.reduce(_ && _)
-        // the caller's hint steers the hot branches too (the partitions
-        // they are most likely tuning) — the keyless composition accepts
-        // the same hint vocabulary
-        AsofKeyless.asofJoinKeyless(left.filter(pEq), right.filter(bEq),
-          leftTime, rightTime, direction, toleranceUs, hint)
+        PlanBridge.timeJoin(left.filter(keyEq(join.leftKeys, t)),
+          right.filter(keyEq(join.rightKeys, t)), keyless)
       }
       hotBranches.foldLeft(cold)(_.unionByName(_))
     }
   }
-
-  /** Single-Long-key convenience over [[asofJoinBuildSkewedKeys]]. */
-  def asofJoinBuildSkewed(left: DataFrame, right: DataFrame,
-      leftKey: String, rightKey: String,
-      leftTime: String, rightTime: String,
-      hotKeys: Seq[Long],
-      hint: String = "merge", direction: String = "backward",
-      toleranceUs: Long = -1L): DataFrame =
-    asofJoinBuildSkewedKeys(left, right, Seq(leftKey -> rightKey),
-      leftTime, rightTime, hotKeys.map(Seq(_: Any)),
-      hint, direction, toleranceUs)
-
-  /** Band join with hot BUILD key tuples routed through the keyless
-    * bucketized band — same exactness argument (and same linear
-    * plan-growth caveat) as [[asofJoinBuildSkewedKeys]]. */
-  def bandJoinBuildSkewedKeys(left: DataFrame, right: DataFrame,
-      keys: Seq[(String, String)],
-      leftTime: String, rightTime: String,
-      lowUs: Long, highUs: Long,
-      hotKeys: Seq[Seq[Any]],
-      hint: String = "merge"): DataFrame = PlanBridge.noAutoRoute {
-    require(keys.nonEmpty, "at least one key pair")
-    val hot = hotKeys.distinct // see asofJoinBuildSkewedKeys
-    if (hot.isEmpty)
-      PlanBridge.bandJoin(left, right, keys, leftTime, rightTime,
-        lowUs, highUs, hint)
-    else {
-      warnManyBranches("bandJoinBuildSkewedKeys", hot.size)
-      val cold = PlanBridge.bandJoin(
-        left.filter(!isHotNullSafe(keys.map(_._1), hot)),
-        right.filter(!isHotNullSafe(keys.map(_._2), hot)),
-        keys, leftTime, rightTime, lowUs, highUs, hint)
-      val hotBranches = hot.map { t =>
-        val pEq = keys.map(_._1).zip(t)
-          .map { case (c, v) => col(c) === lit(v) }.reduce(_ && _)
-        val bEq = keys.map(_._2).zip(t)
-          .map { case (c, v) => col(c) === lit(v) }.reduce(_ && _)
-        PlanBridge.bandJoinKeyless(left.filter(pEq), right.filter(bEq),
-          leftTime, rightTime, lowUs, highUs, hint)
-      }
-      hotBranches.foldLeft(cold)(_.unionByName(_))
-    }
-  }
-
-  /** Single-Long-key convenience over [[bandJoinBuildSkewedKeys]]. */
-  def bandJoinBuildSkewed(left: DataFrame, right: DataFrame,
-      leftKey: String, rightKey: String,
-      leftTime: String, rightTime: String,
-      lowUs: Long, highUs: Long,
-      hotKeys: Seq[Long],
-      hint: String = "merge"): DataFrame =
-    bandJoinBuildSkewedKeys(left, right, Seq(leftKey -> rightKey),
-      leftTime, rightTime, lowUs, highUs, hotKeys.map(Seq(_: Any)), hint)
 }

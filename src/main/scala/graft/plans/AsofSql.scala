@@ -9,9 +9,10 @@ import org.apache.spark.sql.catalyst.plans.LeftOuter
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, Filter, Join,
   LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.DataFrame
 
 /** `ASOF JOIN` SQL syntax for the as-of operator family — the
-  * `injectParser` tier that makes [[AsofJoinPlan]] reachable from pure
+  * `injectParser` tier that makes [[TimeJoinPlan]] reachable from pure
   * SQL, completing the extension surface (DuckDB, the oracle engine,
   * has the clause natively):
   *
@@ -32,7 +33,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
   *    dropped); `ASOF LEFT JOIN` keeps them with null build columns.
   *  - Key/time operands must be bare columns; time columns BIGINT
   *    micros or either timestamp type (physically long micros — see
-  *    [[AsofJoinPlan.timeTypeOk]]).
+  *    [[TimeJoin.timeTypeOk]]).
   *  - The text rewrite is quote-aware: `ASOF JOIN`, `BAND JOIN`, and
   *    `TOLERANCE n` token sequences inside string literals or
   *    backquoted identifiers are never touched (the same quote scan
@@ -48,7 +49,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * resolution rule) finishes the lowering once both children are
   * resolved: it resolves the condition against the child outputs,
   * classifies conjuncts into equi-keys and the single time
-  * inequality, and emits [[AsofJoinPlan]] (wrapped in a null-filter
+  * inequality, and emits [[TimeJoinPlan]] (wrapped in a null-filter
   * for the inner variant).
   */
 class AsofSqlParser(delegate: ParserInterface) extends ParserInterface {
@@ -309,7 +310,7 @@ case class UnresolvedBandJoin(
     copy(left = newLeft, right = newRight)
 }
 
-/** Lowers [[UnresolvedAsofJoin]] to [[AsofJoinPlan]] once both
+/** Lowers [[UnresolvedAsofJoin]] to an as-of [[TimeJoinPlan]] once both
   * children are resolved: resolves the ON attributes against the child
   * outputs, classifies each conjunct as a cross-side key equality or
   * THE time inequality (>= backward, <= forward, either operand
@@ -382,33 +383,10 @@ object ResolveAsofJoin extends Rule[LogicalPlan] {
               "BAND JOIN: single-side conjuncts are not allowed in ON — " +
                 "move them to WHERE or a subquery")
             if (p.lKeys.nonEmpty) nativeJoin
-            else {
-              val spark = org.apache.spark.sql.SparkSession.active
-              val lNames = u.left.output.indices.map(i => s"__graft_ssb_l$i")
-              val rNames = u.right.output.indices.map(i => s"__graft_ssb_r$i")
-              val lProj = Project(u.left.output.zip(lNames).map {
-                case (a, n) => Alias(a, n)() }, u.left)
-              val rProj = Project(u.right.output.zip(rNames).map {
-                case (a, n) => Alias(a, n)() }, u.right)
-              val ltName =
-                lNames(u.left.output.indexWhere(_.exprId == p.lTime.exprId))
-              val rtName =
-                rNames(u.right.output.indexWhere(_.exprId == p.rTime.exprId))
-              val composed = graft.streaming.StreamAsof.bandAppendKeyless(
-                org.apache.spark.sql.graft.PlanBridge.dataFrame(spark, lProj),
-                org.apache.spark.sql.graft.PlanBridge.dataFrame(spark, rProj),
-                ltName, rtName, p.lowUs, p.highUs)
-              val cPlan = composed.queryExecution.analyzed
-              val expected = u.left.output ++
-                u.right.output.map(_.withNullability(true))
-              val aliased = Project(expected.zipWithIndex.map { case (exp, i) =>
-                Alias(cPlan.output(i), exp.name)(exprId = exp.exprId)
-              }, cPlan)
-              if (u.keepUnmatched) aliased
-              else Filter(IsNotNull(aliased.output(
-                u.left.output.size +
-                  u.right.output.indexWhere(_.exprId == p.rTime.exprId))),
-                aliased)
+            else composeOver(u.left, u.right, "ssb", p.rTime, u.keepUnmatched) {
+              (l, r, lName, rName) =>
+                graft.streaming.StreamAsof.bandAppendKeyless(l, r,
+                  lName(p.lTime), rName(p.rTime), p.lowUs, p.highUs)
             }
           case None if !hasCrossEq =>
             throw new IllegalArgumentException(
@@ -511,34 +489,12 @@ object ResolveAsofJoin extends Rule[LogicalPlan] {
             "per probe row, so FULLY-duplicate probe rows collapse to " +
             "one output row — keep a unique column (an event id) on " +
             "the probe side.")
-        val spark = org.apache.spark.sql.SparkSession.active
-        val lNames = u.left.output.indices.map(i => s"__graft_ss_l$i")
-        val rNames = u.right.output.indices.map(i => s"__graft_ss_r$i")
-        val lProj = Project(u.left.output.zip(lNames).map {
-          case (a, n) => Alias(a, n)() }, u.left)
-        val rProj = Project(u.right.output.zip(rNames).map {
-          case (a, n) => Alias(a, n)() }, u.right)
-        val keyPairs = lKeys.zip(rKeys).map { case (lk, rk) =>
-          lNames(u.left.output.indexWhere(_.exprId == lk.exprId)) ->
-            rNames(u.right.output.indexWhere(_.exprId == rk.exprId))
+        composeOver(u.left, u.right, "ss", rt, u.keepUnmatched) {
+          (l, r, lName, rName) =>
+            graft.streaming.StreamAsof.asofToleranceAppend(l, r,
+              lKeys.map(lName).zip(rKeys.map(rName)), lName(lt), rName(rt),
+              u.toleranceUs, dir)
         }
-        val ltName = lNames(u.left.output.indexWhere(_.exprId == lt.exprId))
-        val rtName = rNames(u.right.output.indexWhere(_.exprId == rt.exprId))
-        val composed = graft.streaming.StreamAsof.asofToleranceAppend(
-          org.apache.spark.sql.graft.PlanBridge.dataFrame(spark, lProj),
-          org.apache.spark.sql.graft.PlanBridge.dataFrame(spark, rProj),
-          keyPairs, ltName, rtName, u.toleranceUs, dir)
-        val cPlan = composed.queryExecution.analyzed
-        // composed output = renamed left ++ renamed right, in order
-        val expected = u.left.output ++
-          u.right.output.map(_.withNullability(true))
-        val aliased = Project(expected.zipWithIndex.map { case (exp, i) =>
-          Alias(cPlan.output(i), exp.name)(exprId = exp.exprId)
-        }, cPlan)
-        if (u.keepUnmatched) aliased
-        else Filter(IsNotNull(aliased.output(
-          u.left.output.size +
-            u.right.output.indexWhere(_.exprId == rt.exprId))), aliased)
       } else if (lKeys.isEmpty && u.left.isStreaming && u.right.isStreaming) {
         // KEYLESS STREAM-STREAM as-of: Spark cannot plan a
         // stream-stream join without an equality predicate, so the
@@ -555,29 +511,11 @@ object ResolveAsofJoin extends Rule[LogicalPlan] {
             "per probe row, so FULLY-duplicate probe rows collapse to " +
             "one output row — keep a unique column (an event id) on " +
             "the probe side.")
-        val spark = org.apache.spark.sql.SparkSession.active
-        val lNames = u.left.output.indices.map(i => s"__graft_ssk_l$i")
-        val rNames = u.right.output.indices.map(i => s"__graft_ssk_r$i")
-        val lProj = Project(u.left.output.zip(lNames).map {
-          case (a, n) => Alias(a, n)() }, u.left)
-        val rProj = Project(u.right.output.zip(rNames).map {
-          case (a, n) => Alias(a, n)() }, u.right)
-        val ltName = lNames(u.left.output.indexWhere(_.exprId == lt.exprId))
-        val rtName = rNames(u.right.output.indexWhere(_.exprId == rt.exprId))
-        val composed = graft.streaming.StreamAsof.asofToleranceAppendKeyless(
-          org.apache.spark.sql.graft.PlanBridge.dataFrame(spark, lProj),
-          org.apache.spark.sql.graft.PlanBridge.dataFrame(spark, rProj),
-          ltName, rtName, u.toleranceUs, dir)
-        val cPlan = composed.queryExecution.analyzed
-        val expected = u.left.output ++
-          u.right.output.map(_.withNullability(true))
-        val aliased = Project(expected.zipWithIndex.map { case (exp, i) =>
-          Alias(cPlan.output(i), exp.name)(exprId = exp.exprId)
-        }, cPlan)
-        if (u.keepUnmatched) aliased
-        else Filter(IsNotNull(aliased.output(
-          u.left.output.size +
-            u.right.output.indexWhere(_.exprId == rt.exprId))), aliased)
+        composeOver(u.left, u.right, "ssk", rt, u.keepUnmatched) {
+          (l, r, lName, rName) =>
+            graft.streaming.StreamAsof.asofToleranceAppendKeyless(l, r,
+              lName(lt), rName(rt), u.toleranceUs, dir)
+        }
       } else if (lKeys.isEmpty) {
         // KEYLESS asof — DuckDB supports the clause without equality
         // keys; lowered via AsofKeyless's bucket+carry composition
@@ -589,40 +527,13 @@ object ResolveAsofJoin extends Rule[LogicalPlan] {
         // stream-static works (the composition switches its in-bucket
         // join to the broadcast as-of and computes the width eagerly
         // from the static build); a streaming BUILD side has no bounded
-        // carry and is refused inside asofJoinKeyless
-        require(!u.right.isStreaming,
-          "keyless ASOF JOIN build side must be static " +
-            "(stream-static enrichment only)")
-        val spark = org.apache.spark.sql.SparkSession.active
-        // unique names per side: SQL join sides may share column names,
-        // while the composition works by name
-        val lNames = u.left.output.indices.map(i => s"__graft_kl_l$i")
-        val rNames = u.right.output.indices.map(i => s"__graft_kl_r$i")
-        val lShadow = "__graft_kl_lt"
-        val rShadow = "__graft_kl_rt"
-        val lProj = Project(u.left.output.zip(lNames).map {
-          case (a, n) => Alias(a, n)() } :+
-          Alias(BandConds.microsOf(lt), lShadow)(), u.left)
-        val rProj = Project(u.right.output.zip(rNames).map {
-          case (a, n) => Alias(a, n)() } :+
-          Alias(BandConds.microsOf(rt), rShadow)(), u.right)
-        val composed = AsofKeyless.asofJoinKeyless(
-          org.apache.spark.sql.graft.PlanBridge.dataFrame(spark, lProj),
-          org.apache.spark.sql.graft.PlanBridge.dataFrame(spark, rProj),
-          lShadow, rShadow, dir, u.toleranceUs, u.hint)
-        val cPlan = composed.queryExecution.analyzed
-        // composed output = renamed left ++ [lShadow] ++ renamed right
-        // ++ [rShadow] — map expected attrs around the shadows
-        val n = u.left.output.size
-        val expected = u.left.output ++ u.right.output.map(_.withNullability(true))
-        val aliased = Project(expected.zipWithIndex.map { case (exp, i) =>
-          val act = if (i < n) cPlan.output(i) else cPlan.output(i + 1)
-          Alias(act, exp.name)(exprId = exp.exprId)
-        }, cPlan)
-        if (u.keepUnmatched) aliased
-        else Filter(IsNotNull(aliased.output(
-          u.left.output.size +
-            u.right.output.indexWhere(_.exprId == rt.exprId))), aliased)
+        // carry and is refused by PlanBridge.timeJoin
+        composeOver(u.left, u.right, "kl", rt, u.keepUnmatched,
+            shadowTimes = Some((lt, rt))) {
+          (l, r, lName, rName) =>
+            AsofKeyless.asofJoinKeyless(l, r, lName(lt), rName(rt), dir,
+              u.toleranceUs, u.hint)
+        }
       } else {
         // SQL semantics, not the Column API's documented raw-operator
         // semantics: null keys/times never match (DuckDB's ASOF JOIN
@@ -631,9 +542,55 @@ object ResolveAsofJoin extends Rule[LogicalPlan] {
         // IsNotNull(build time) output filter
         BandConds.withNullHygiene(u.left, u.right, rKeys, rt, lt,
           u.keepUnmatched)((probe, build) =>
-          AsofJoinPlan(probe, build, lKeys, rKeys, lt, rt,
-            AsofJoinPlan.steerHint(u.left.isStreaming, u.hint), dir,
-            u.toleranceUs))
+          TimeJoinPlan(probe, build, lKeys, rKeys, lt, rt,
+            Asof(dir, u.toleranceUs),
+            TimeJoinPlan.steerHint(u.left.isStreaming, u.hint)))
       }
+  }
+
+  /** Lowers a clause through a DataFrame-level composition built around
+    * the clause's child plans, and re-aliases the composition's output
+    * onto this node's expected attribute ids. SQL join sides may share
+    * column names while the compositions work by name, so each side's
+    * columns are first renamed to `__graft_<tag>_l<i>` / `_r<i>`;
+    * `compose` receives the renamed sides and each side's old-attribute
+    * → new-name map. `shadowTimes` appends each side's time as exact
+    * physical micros (BandConds.microsOf, the longs the keyed exec
+    * merges on) under `__graft_<tag>_lt` / `_rt`, which the name maps
+    * then return for the time attributes, so the original columns keep
+    * their types. The inner variant keeps rows with a non-null build
+    * time (`rt`). */
+  private def composeOver(left: LogicalPlan, right: LogicalPlan, tag: String,
+      rt: Attribute, keepUnmatched: Boolean,
+      shadowTimes: Option[(Attribute, Attribute)] = None)(
+      compose: (DataFrame, DataFrame, Attribute => String,
+        Attribute => String) => DataFrame): LogicalPlan = {
+    val spark = org.apache.spark.sql.SparkSession.active
+    def renamed(plan: LogicalPlan, side: String,
+        shadow: Option[Attribute]): (DataFrame, Attribute => String) = {
+      val names = plan.output.indices.map(i => s"__graft_${tag}_$side$i")
+      val shadowName = s"__graft_${tag}_${side}t"
+      val proj = Project(plan.output.zip(names).map {
+        case (a, n) => Alias(a, n)() } ++
+        shadow.map(t => Alias(BandConds.microsOf(t), shadowName)()), plan)
+      (org.apache.spark.sql.graft.PlanBridge.dataFrame(spark, proj),
+        a => if (shadow.exists(_.exprId == a.exprId)) shadowName
+          else names(plan.output.indexWhere(_.exprId == a.exprId)))
+    }
+    val (l, lName) = renamed(left, "l", shadowTimes.map(_._1))
+    val (r, rName) = renamed(right, "r", shadowTimes.map(_._2))
+    val cPlan = compose(l, r, lName, rName).queryExecution.analyzed
+    // composed output = renamed left ++ [left shadow] ++ renamed right
+    // ++ [right shadow]: map the expected attributes around the shadows
+    val n = left.output.size
+    val skip = if (shadowTimes.isDefined) 1 else 0
+    val expected = left.output ++ right.output.map(_.withNullability(true))
+    val aliased = Project(expected.zipWithIndex.map { case (exp, i) =>
+      Alias(cPlan.output(if (i < n) i else i + skip), exp.name)(
+        exprId = exp.exprId)
+    }, cPlan)
+    if (keepUnmatched) aliased
+    else Filter(IsNotNull(aliased.output(
+      n + right.output.indexWhere(_.exprId == rt.exprId))), aliased)
   }
 }

@@ -5,53 +5,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute,
   GenericInternalRow, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext
-import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
 import org.apache.spark.sql.execution.SparkPlan
-
-/** Banded (interval) join as a native operator — [[AsofJoinExec]]
-  * generalized from "the single latest build row" to "every build row
-  * within [probeTime + lowUs, probeTime + highUs]", left-outer (a
-  * probe with no band match emits one null-build row).
-  *
-  * Why: expressed relationally (ev07's shape) a band predicate rides
-  * an equi-join as a residual filter, which executes as a per-key
-  * candidate PRODUCT — every probe × every build row of that key,
-  * filtered after the fact. Fine when keys are small; quadratic the
-  * moment one key carries volume. The native merge is O(input +
-  * output): both sides arrive (key, time)-sorted and co-partitioned
-  * (the as-of contract), a ring buffer holds exactly the build rows
-  * inside the current probe's band — rows evict from the front as the
-  * band's lower edge passes them and append at the back as the upper
-  * edge reaches them, each build row entering and leaving ONCE per
-  * key. State is band occupancy (width × arrival rate), never the
-  * key's full history. Probe partitioning and ordering survive, as
-  * with the as-of operator.
-  */
-case class BandJoinPlan(
-    left: LogicalPlan,
-    right: LogicalPlan,
-    leftKeys: Seq[Attribute],
-    rightKeys: Seq[Attribute],
-    leftTime: Attribute,
-    rightTime: Attribute,
-    lowUs: Long,
-    highUs: Long,
-    hint: String = "auto") extends BinaryNode {
-
-  require(lowUs <= highUs, s"band bounds inverted: [$lowUs, $highUs]")
-  require(AsofJoinPlan.hints(hint), s"band hint must be one of " +
-    s"${AsofJoinPlan.hints.mkString("/")}, got '$hint'")
-  // see AsofJoinPlan: a streaming build would lose cross-batch matches
-  require(!right.isStreaming,
-    "band build side must be static (stream-static enrichment only)")
-
-  override def output: Seq[Attribute] =
-    left.output ++ right.output.map(_.withNullability(true))
-
-  override protected def withNewChildrenInternal(
-      newLeft: LogicalPlan, newRight: LogicalPlan): BandJoinPlan =
-    copy(left = newLeft, right = newRight)
-}
 
 /** The compiled per-partition state machine behind both the iterator
   * and the whole-stage-codegen paths of [[BandJoinExec]]: holds the
@@ -132,6 +86,25 @@ final class BandScanner(
   }
 }
 
+/** Banded (interval) join as a native operator — [[AsofJoinExec]]
+  * generalized from "the single latest build row" to "every build row
+  * within [probeTime + lowUs, probeTime + highUs]", left-outer (a
+  * probe with no band match emits one null-build row).
+  *
+  * Why: expressed relationally (ev07's shape) a band predicate rides
+  * an equi-join as a residual filter, which executes as a per-key
+  * candidate PRODUCT — every probe × every build row of that key,
+  * filtered after the fact. Fine when keys are small; quadratic the
+  * moment one key carries volume. The native merge is O(input +
+  * output): both sides arrive (key, time)-sorted and co-partitioned
+  * (the as-of contract), a ring buffer holds exactly the build rows
+  * inside the current probe's band — rows evict from the front as the
+  * band's lower edge passes them and append at the back as the upper
+  * edge reaches them, each build row entering and leaving ONCE per
+  * key. State is band occupancy (width × arrival rate), never the
+  * key's full history. Probe partitioning and ordering survive, as
+  * with the as-of operator.
+  */
 case class BandJoinExec(
     left: SparkPlan,
     right: SparkPlan,

@@ -151,7 +151,7 @@ object BandConds {
           if ok && lt1.exprId == lt2.exprId && rt1.exprId == rt2.exprId &&
             lo <= hi &&
             lt1.dataType == rt1.dataType &&
-            AsofJoinPlan.timeTypeOk(lt1.dataType) =>
+            TimeJoin.timeTypeOk(lt1.dataType) =>
         // keys may be EMPTY — the keyless range-join shape; callers
         // dispatch to lowerBandKeyless (bucketized) for that case
         Some(Parts(lKeys, rKeys, lt1, rt1, lo, hi, probeOnly, buildOnly))
@@ -200,7 +200,7 @@ object BandConds {
     }
   }
 
-  /** Lower a classified band join to [[BandJoinPlan]] with the null
+  /** Lower a classified band join to a band [[TimeJoinPlan]] with the null
     * hygiene above. `probeOnly`/`buildOnly` extras are the caller's
     * to apply — they are semantically different per join type. */
   def lowerBand(left: LogicalPlan, right: LogicalPlan, p: Parts,
@@ -212,10 +212,10 @@ object BandConds {
     require(!right.isStreaming,
       "band build side must be static (stream-static enrichment only; " +
         "stream-stream bands need watermarked state)")
-    val physHint = AsofJoinPlan.steerHint(left.isStreaming, hint)
+    val physHint = TimeJoinPlan.steerHint(left.isStreaming, hint)
     withNullHygiene(left, right, p.rKeys, p.rTime, p.lTime, keepUnmatched)(
-      (probe, build) => BandJoinPlan(probe, build,
-        p.lKeys, p.rKeys, p.lTime, p.rTime, p.lowUs, p.highUs, physHint))
+      (probe, build) => TimeJoinPlan(probe, build,
+        p.lKeys, p.rKeys, p.lTime, p.rTime, Band(p.lowUs, p.highUs), physHint))
   }
 
   /** Exact floor division `e div w` for LongType `e` and positive `w` —
@@ -255,7 +255,7 @@ object BandConds {
     *    `floor((rt − hi) / w) .. floor((rt − lo) / w)` — at most
     *    `(hi − lo)/w + 2 ≤ 3` copies, so build inflation is bounded by
     *    a small constant;
-    *  - the keyed [[BandJoinPlan]] then runs with the bucket as its
+    *  - the keyed band [[TimeJoinPlan]] then runs with the bucket as its
     *    equi-key: a matching pair `rt ∈ [lt+lo, lt+hi]` co-buckets in
     *    exactly the probe's bucket (monotone floors bound the probe's
     *    bucket between the build row's replication endpoints), and the
@@ -287,7 +287,7 @@ object BandConds {
     require(!right.isStreaming,
       "keyless band build side must be static (stream-static " +
         "enrichment only; stream-stream bands need watermarked state)")
-    val physHint = AsofJoinPlan.steerHint(left.isStreaming, hint)
+    val physHint = TimeJoinPlan.steerHint(left.isStreaming, hint)
     val w = math.max(p.highUs - p.lowUs, 1L)
     withNullHygiene(left, right, Nil, p.rTime, p.lTime, keepUnmatched) {
       (probe, build) =>
@@ -305,8 +305,8 @@ object BandConds {
         val rb = AttributeReference("__graft_bucket_r", LongType,
           nullable = gen.elementSchema.head.nullable)()
         val build2 = Generate(gen, Nil, outer = false, None, Seq(rb), build)
-        val band = BandJoinPlan(probe2, build2, Seq(lb), Seq(rb),
-          p.lTime, p.rTime, p.lowUs, p.highUs, physHint)
+        val band = TimeJoinPlan(probe2, build2, Seq(lb), Seq(rb),
+          p.lTime, p.rTime, Band(p.lowUs, p.highUs), physHint)
         Project(band.output.filterNot(a =>
           a.exprId == lb.exprId || a.exprId == rb.exprId), band)
     }
@@ -316,7 +316,7 @@ object BandConds {
 /** Plain-SQL (or DataFrame-API) interval joins silently get the native
   * band operator: an inner/left-outer equi-join whose residual is a
   * two-sided time band `r.t ∈ [l.t + lo, l.t + hi]` (LongType, the
-  * `BETWEEN`-arithmetic shape) is rewritten to [[BandJoinPlan]] — the
+  * `BETWEEN`-arithmetic shape) is rewritten to a band [[TimeJoinPlan]] — the
   * sliding-band merge that is O(input + output) where the stock plan
   * materializes every per-key candidate pair and filters after. This
   * is how engines with native range joins (DuckDB's IEJoin) treat the

@@ -35,15 +35,14 @@ case class BroadcastAsofJoinExec(
     direction: String = "backward",
     toleranceUs: Long = -1L) extends BroadcastTimeJoinExec[BroadcastAsofProbe] {
 
-  require(direction == "backward" || direction == "forward",
-    s"asof direction must be backward|forward, got '$direction'")
+  private val forward = Asof.isForward(direction)
 
   protected def kind: String = "asof"
 
   protected def probeClass: Class[BroadcastAsofProbe] = classOf[BroadcastAsofProbe]
 
   protected def newProbe: BroadcastAsofJoinExec.Index => BroadcastAsofProbe = {
-    val (nRight, fwd, tol) = (right.output.size, direction == "forward", toleranceUs)
+    val (nRight, fwd, tol) = (right.output.size, forward, toleranceUs)
     index => new BroadcastAsofProbe(index, nRight, fwd, tol)
   }
 

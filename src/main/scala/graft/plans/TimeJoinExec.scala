@@ -34,8 +34,8 @@ trait TimeJoinExec extends BinaryExecNode with CodegenSupport {
     s"$kind join needs matching non-empty key lists")
   require(leftKeys.map(_.dataType) == rightKeys.map(_.dataType),
     s"$kind key types differ: ${leftKeys.map(_.dataType)} vs ${rightKeys.map(_.dataType)}")
-  require(AsofJoinPlan.timeTypeOk(leftTime.dataType) &&
-      AsofJoinPlan.timeTypeOk(rightTime.dataType),
+  require(TimeJoin.timeTypeOk(leftTime.dataType) &&
+      TimeJoin.timeTypeOk(rightTime.dataType),
     s"$kind time columns must be BIGINT micros or a timestamp type")
 
   override def output: Seq[Attribute] =

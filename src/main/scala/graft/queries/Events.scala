@@ -187,7 +187,7 @@ object Events {
     },
 
     // ev07's semantics through the NATIVE band operator (graft.plans:
-    // BandJoinPlan → AsofJoinStrategy → BandJoinExec — AsofJoinExec
+    // TimeJoinPlan(Band) → AsofJoinStrategy → BandJoinExec — AsofJoinExec
     // generalized to a sliding band of build rows). ev07's equi-join +
     // range residual executes as a per-user candidate product (every
     // error × every purchase of that user, filtered after), which is
@@ -250,7 +250,7 @@ object Events {
 
     // And with NO graft syntax at all: a STOCK plain-SQL LEFT JOIN
     // whose ON is an equality + a BETWEEN time band, silently rewritten
-    // to BandJoinPlan by the injected BandJoinAutoRewrite optimizer
+    // to a band TimeJoinPlan by the injected BandJoinAutoRewrite optimizer
     // rule (how DuckDB treats the same text with its IEJoin). The user
     // writes standard SQL; the engine picks the O(input + output)
     // operator. BandSqlSpec pins that the rewrite actually fires on
@@ -360,7 +360,7 @@ object Events {
     },
 
     // ev08's semantics through the NATIVE as-of operator (graft.plans:
-    // AsofJoinPlan → AsofJoinStrategy → AsofJoinExec, the SURVEY §2.5
+    // TimeJoinPlan(Asof) → AsofJoinStrategy → AsofJoinExec, the SURVEY §2.5
     // custom-operator tier (c)): same oracle, same one-exchange-one-
     // sort-per-side profile, but the merge is a streaming O(1)-state
     // pass instead of a window over the union, and the purchase side's

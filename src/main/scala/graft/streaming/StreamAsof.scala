@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.plans.{Asof, Band, TimeJoin}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark
 import org.apache.spark.sql.functions._
@@ -55,6 +56,36 @@ object StreamAsof {
   private def hasWatermark(df: DataFrame): Boolean =
     df.queryExecution.logical.exists(_.isInstanceOf[EventTimeWatermark])
 
+  /** The preconditions every stream-stream entry point shares, checked
+    * at composition time: both sides streaming (`op` names the entry
+    * point, `staticTwin` the stream-static one to use instead),
+    * disjoint column names, TimestampType times (the watermark rides
+    * the timestamp; batch's BIGINT-micros option has no streaming
+    * equivalent) and a watermark on each side (the join state cannot
+    * be bounded without one). */
+  private def requireStreamStream(left: DataFrame, right: DataFrame,
+      join: TimeJoin, op: String, staticTwin: String): Unit = {
+    require(left.isStreaming && right.isStreaming,
+      s"$op is the STREAM-STREAM operator; for a static build side use " +
+        staticTwin)
+    val shared = left.columns.toSet.intersect(right.columns.toSet)
+    require(shared.isEmpty,
+      s"sides must have disjoint column names; shared: $shared")
+    require(left.schema(join.leftTime).dataType == TimestampType &&
+      right.schema(join.rightTime).dataType == TimestampType,
+      "stream-stream time joins need TimestampType time columns on both " +
+        "sides (the watermark rides the timestamp)")
+    require(hasWatermark(left) && hasWatermark(right),
+      "both sides must carry a watermark (df.withWatermark(timeCol, " +
+        "delay)) — the join state cannot be bounded without one")
+  }
+
+  /** `df` with every column of `right` appended as a typed null — the
+    * row a null-time probe emits (SQL LEFT JOIN shape). */
+  private def nullExtended(df: DataFrame, right: DataFrame): DataFrame =
+    right.columns.foldLeft(df)((d, c) =>
+      d.withColumn(c, lit(null).cast(right.schema(c).dataType)))
+
   // The unique-probe-row contract, surfaced LOUDLY once per JVM at
   // composition time (round-15 ADVICE): the as-of extremum aggregates
   // per probe row with every left column as the group key, so two
@@ -86,28 +117,23 @@ object StreamAsof {
       keys: Seq[(String, String)], leftTime: String, rightTime: String,
       toleranceUs: Long, direction: String = "backward",
       emitWindow: String = "1 hour"): DataFrame = {
+    val asof = Asof(direction, toleranceUs)
+    val join = TimeJoin(keys, leftTime, rightTime, asof)
     require(toleranceUs >= 0L,
       "stream-stream as-of requires a tolerance >= 0: unbounded " +
         "lookback has no bounded-state formulation (state would hold " +
         "every build row forever)")
-    require(direction == "backward" || direction == "forward",
-      s"direction must be backward|forward, got '$direction'")
-    require(keys.nonEmpty, "at least one key pair")
-    require(left.isStreaming && right.isStreaming,
-      "asofToleranceAppend is the STREAM-STREAM operator; for a static " +
-        "build side use PlanBridge.asofJoin (stream-static)")
-    val shared = left.columns.toSet.intersect(right.columns.toSet)
-    require(shared.isEmpty,
-      s"sides must have disjoint column names; shared: $shared")
-    require(left.schema(leftTime).dataType == TimestampType &&
-      right.schema(rightTime).dataType == TimestampType,
-      "stream-stream as-of needs TimestampType time columns on both " +
-        "sides (the watermark rides the timestamp)")
-    require(hasWatermark(left) && hasWatermark(right),
-      "both sides must carry a watermark (df.withWatermark(timeCol, " +
-        "delay)) — the join state cannot be bounded without one")
+    requireStreamStream(left, right, join, "asofToleranceAppend",
+      "PlanBridge.asofJoin (stream-static)")
+    appendAsof(left, right, join, asof, emitWindow)
+  }
+
+  /** [[asofToleranceAppend]]'s composition, after its checks. */
+  private def appendAsof(left: DataFrame, right: DataFrame, join: TimeJoin,
+      asof: Asof, emitWindow: String): DataFrame = {
     noteProbeRowContract()
-    val fwd = direction == "forward"
+    val (leftTime, rightTime) = (join.leftTime, join.rightTime)
+    val (fwd, toleranceUs) = (asof.forward, asof.toleranceUs)
 
     // null-time probes can never match and would hang in a null emit
     // window: route them around, null-extended (SQL LEFT JOIN shape)
@@ -115,7 +141,7 @@ object StreamAsof {
     val lNull = left.filter(col(leftTime).isNull)
 
     val tolIv = expr(s"INTERVAL $toleranceUs MICROSECOND")
-    val keyEq = keys.map { case (lk, rk) => col(lk) === col(rk) }
+    val keyEq = join.keys.map { case (lk, rk) => col(lk) === col(rk) }
       .reduce(_ && _)
     val band =
       if (fwd) col(rightTime) >= col(leftTime) &&
@@ -145,11 +171,7 @@ object StreamAsof {
       col("__m").getField(f).as(c)
     }
 
-    def nullExtended(df: DataFrame): DataFrame =
-      rCols.foldLeft(df)((d, c) =>
-        d.withColumn(c, lit(null).cast(right.schema(c).dataType)))
-
-    agg.select(outCols: _*).unionByName(nullExtended(lNull))
+    agg.select(outCols: _*).unionByName(nullExtended(lNull, right))
   }
 
   /** KEYLESS stream-stream as-of with tolerance — "match every probe
@@ -175,25 +197,15 @@ object StreamAsof {
       leftTime: String, rightTime: String, toleranceUs: Long,
       direction: String = "backward",
       emitWindow: String = "1 hour"): DataFrame = {
+    val asof = Asof(direction, toleranceUs)
     require(toleranceUs > 0L,
       "keyless stream-stream as-of requires a tolerance > 0: the " +
         "tolerance IS the bucket width that manufactures the equality " +
         "key Spark's stream-stream join needs")
-    require(direction == "backward" || direction == "forward",
-      s"direction must be backward|forward, got '$direction'")
-    require(left.isStreaming && right.isStreaming,
-      "asofToleranceAppendKeyless is the STREAM-STREAM operator; for a " +
-        "static build side use AsofKeyless.asofJoinKeyless")
-    val shared = left.columns.toSet.intersect(right.columns.toSet)
-    require(shared.isEmpty,
-      s"sides must have disjoint column names; shared: $shared")
-    require(left.schema(leftTime).dataType == TimestampType &&
-      right.schema(rightTime).dataType == TimestampType,
-      "stream-stream as-of needs TimestampType time columns on both sides")
-    require(hasWatermark(left) && hasWatermark(right),
-      "both sides must carry a watermark (df.withWatermark(timeCol, " +
-        "delay)) — the join state cannot be bounded without one")
-    val fwd = direction == "forward"
+    requireStreamStream(left, right,
+      TimeJoin.keyless(leftTime, rightTime, asof),
+      "asofToleranceAppendKeyless", "AsofKeyless.asofJoinKeyless")
+    val fwd = asof.forward
     val w = toleranceUs
     // probe bucket: floor of the physical micros; build rows replicate
     // to the two buckets whose probes can reach them
@@ -204,9 +216,8 @@ object StreamAsof {
         floorDiv(unix_micros(col(rightTime)), w),
         if (fwd) floorDiv(unix_micros(col(rightTime)), w) - 1
         else floorDiv(unix_micros(col(rightTime)), w) + 1)))
-    asofToleranceAppend(lB, rB,
-      Seq("__graft_sb_l" -> "__graft_sb_r"), leftTime, rightTime,
-      toleranceUs, direction, emitWindow)
+    appendAsof(lB, rB, TimeJoin(Seq("__graft_sb_l" -> "__graft_sb_r"),
+        leftTime, rightTime, asof), asof, emitWindow)
       .drop("__graft_sb_l", "__graft_sb_r")
   }
 
@@ -225,19 +236,9 @@ object StreamAsof {
   def bandAppendKeyless(left: DataFrame, right: DataFrame,
       leftTime: String, rightTime: String,
       lowUs: Long, highUs: Long): DataFrame = {
-    require(lowUs <= highUs, s"band [$lowUs, $highUs] is empty")
-    require(left.isStreaming && right.isStreaming,
-      "bandAppendKeyless is the STREAM-STREAM operator; for a static " +
-        "build side use PlanBridge.bandJoinKeyless")
-    val shared = left.columns.toSet.intersect(right.columns.toSet)
-    require(shared.isEmpty,
-      s"sides must have disjoint column names; shared: $shared")
-    require(left.schema(leftTime).dataType == TimestampType &&
-      right.schema(rightTime).dataType == TimestampType,
-      "stream-stream band needs TimestampType time columns on both sides")
-    require(hasWatermark(left) && hasWatermark(right),
-      "both sides must carry a watermark (df.withWatermark(timeCol, " +
-        "delay)) — the join state cannot be bounded without one")
+    requireStreamStream(left, right,
+      TimeJoin.keyless(leftTime, rightTime, Band(lowUs, highUs)),
+      "bandAppendKeyless", "PlanBridge.bandJoinKeyless")
     val w = math.max(highUs - lowUs, 1L)
     // a build row at t_v serves probes in [t_v - highUs, t_v - lowUs]:
     // replicate it to that range's buckets (span <= 2 widths + 1)
@@ -254,14 +255,9 @@ object StreamAsof {
     val cond = col("__graft_bb_l") === col("__graft_bb_r") &&
       col(rightTime) >= col(leftTime) + loIv &&
       col(rightTime) <= col(leftTime) + hiIv
-    val rCols = right.columns.toSeq
-    def nullExtended(df: DataFrame): DataFrame =
-      rCols.foldLeft(df)((d, c) =>
-        d.withColumn(c, lit(null).cast(right.schema(c).dataType)))
-    lOk.join(rB, cond, "left_outer")
-      .select((left.columns.toSeq ++ rCols).map(col): _*)
-      .unionByName(nullExtended(lNull)
-        .select((left.columns.toSeq ++ rCols).map(col): _*))
+    val outCols = (left.columns.toSeq ++ right.columns).map(col)
+    lOk.join(rB, cond, "left_outer").select(outCols: _*)
+      .unionByName(nullExtended(lNull, right).select(outCols: _*))
   }
 
   // floor division in pure long arithmetic (pmod >= 0 gives floor

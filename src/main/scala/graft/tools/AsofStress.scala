@@ -170,9 +170,9 @@ object AsofStress {
         .otherwise(col("id") % dimKeys).as("p_key"),
       (col("id") % 10000).as("p_us"),
       col("id").as("p_id"))
-    val detected = graft.plans.AsofSkew.detectHotKeys(
-      skewProbes, "p_key", sampleFraction = 0.001, minShare = 0.05)
-    assert(detected == Seq(hotKey),
+    val detected = graft.plans.AsofSkew.detectHotKeyTuples(
+      skewProbes, Seq("p_key"), sampleFraction = 0.001, minShare = 0.05)
+    assert(detected == Seq(Seq(hotKey)),
       s"hot-key detection found $detected, expected Seq($hotKey)")
     def skewGates(join: => org.apache.spark.sql.DataFrame) = timed {
       val out = join
@@ -186,9 +186,10 @@ object AsofStress {
     }
     def unsaltedJoin = PlanBridge.asofJoin(skewProbes, dim,
       Seq("p_key" -> "d_key"), "p_us", "d_us", "merge")
-    def saltedJoin = graft.plans.AsofSkew.asofJoinSalted(skewProbes, dim,
-      "p_key", "d_key", "p_us", "d_us", detected,
-      salts = graft.GraftSession.cpus, hint = "merge")
+    def saltedJoin = graft.plans.AsofSkew.salted(skewProbes, dim,
+      graft.plans.TimeJoin(Seq("p_key" -> "d_key"), "p_us", "d_us",
+        graft.plans.Asof(), hint = "merge"),
+      detected, salts = graft.GraftSession.cpus)
     val u1 = skewGates(unsaltedJoin); val u2 = skewGates(unsaltedJoin)
     val s1 = skewGates(saltedJoin); val s2 = skewGates(saltedJoin)
     assert(u2._1 == s2._1, s"skew gates diverge: ${u2._1} vs ${s2._1}")
@@ -216,7 +217,7 @@ object AsofStress {
     // probe-slice can't either (each slice would re-sort the full hot
     // build partition: b_i >> p_i, the rule's warn-and-leave case), so
     // the fix measured here is the manual keyless-bucketed routing
-    // (AsofSkew.asofJoinBuildSkewed) against a BALANCED control of the
+    // (AsofSkew.buildSkewed) against a BALANCED control of the
     // same total size. Closed form: balanced build = 1000 keys × 24000
     // rows at times 0..23999 (b_id = key*24000 + t); the hot variant
     // ADDS 6M rows on key 7 at times 24000.. — unreachable by any
@@ -248,13 +249,14 @@ object AsofStress {
     def hbJoin(build: org.apache.spark.sql.DataFrame) =
       PlanBridge.asofJoin(hbProbes, build,
         Seq("p_key" -> "d_key"), "p_us", "d_us", "merge")
-    val hbDetected = graft.plans.AsofSkew.detectHotKeys(
-      hotBuild, "d_key", sampleFraction = 0.001, minShare = 0.1)
-    assert(hbDetected == Seq(hotKey),
+    val hbDetected = graft.plans.AsofSkew.detectHotKeyTuples(
+      hotBuild, Seq("d_key"), sampleFraction = 0.001, minShare = 0.1)
+    assert(hbDetected == Seq(Seq(hotKey)),
       s"hot BUILD key detection found $hbDetected, expected Seq($hotKey)")
-    def hbBucketed = graft.plans.AsofSkew.asofJoinBuildSkewed(
-      hbProbes, hotBuild, "p_key", "d_key", "p_us", "d_us",
-      hotKeys = hbDetected, hint = "merge")
+    def hbBucketed = graft.plans.AsofSkew.buildSkewed(hbProbes, hotBuild,
+      graft.plans.TimeJoin(Seq("p_key" -> "d_key"), "p_us", "d_us",
+        graft.plans.Asof(), hint = "merge"),
+      hotKeys = hbDetected)
     val hbBal1 = hotBuildGates(hbJoin(balancedBuild))
     val hbBal2 = hotBuildGates(hbJoin(balancedBuild))
     val hbStock1 = hotBuildGates(hbJoin(hotBuild))

@@ -35,7 +35,7 @@ import graft.plans.{AsofJoinExec, BandJoinExec}
   * (a full build re-sort per slice) pins the wall, so the rule warns
   * loudly and leaves it alone — the exact fix for that quadrant is the
   * logical time-bucket decomposition,
-  * [[graft.plans.AsofSkew.asofJoinBuildSkewedKeys]], which spreads a
+  * [[graft.plans.AsofSkew.buildSkewed]], which spreads a
   * hot key's build history across bucket partitions so its sort
   * distributes.
   *
@@ -151,7 +151,7 @@ case class OptimizeSkewedGraftJoin() extends Rule[SparkPlan] {
       // build-sized (wall drops from sort(p)+sort(b) toward sort(b)).
       // With build >> probe the split would burn k× CPU for no
       // wall-clock gain: warn loudly instead and point at the exact
-      // logical fix (AsofSkew.asofJoinBuildSkewedKeys, which buckets
+      // logical fix (AsofSkew.buildSkewed, which buckets
       // the hot key's build history by time so its sort distributes).
       val buildSkewed = bSizes(i) > bThreshold
       val buildSplit = buildSkewed && pSizes(i) >= bSizes(i)
@@ -175,7 +175,7 @@ case class OptimizeSkewedGraftJoin() extends Rule[SparkPlan] {
               "still re-sorts the full build partition)"
             else "; this partition's merge stays serialized") +
             ". For a known hot build key use " +
-            "AsofSkew.asofJoinBuildSkewedKeys / bandJoinBuildSkewedKeys " +
+            "AsofSkew.buildSkewed " +
             s"(or set ${OptimizeSkewedGraftJoin.BuildKeysConfKey}=auto " +
             "to detect and route automatically).")
       }

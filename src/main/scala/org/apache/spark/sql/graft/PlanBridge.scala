@@ -1,9 +1,9 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession, classic}
-import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import graft.plans.{AsofJoinPlan, AsofJoinStrategy}
+import graft.plans.{Asof, AsofJoinStrategy, AsofKeyless, AsofSkew, Band,
+  BandConds, TimeJoin, TimeJoinPlan}
 
 /** The one `private[sql]`-visibility seam the graft planner extension
   * needs: constructing a DataFrame from a custom logical node
@@ -21,29 +21,29 @@ object PlanBridge {
   // probe-slice rule cannot (every slice re-sorts the whole hot build
   // partition): run AsofSkew.detectHotKeyTuples on the BUILD side (the
   // bounded two-job sample pre-pass) and, when tuples are found, route
-  // through the logical bucket+carry tier (asofJoinBuildSkewedKeys /
-  // bandJoinBuildSkewedKeys — row-identical by construction, pinned by
-  // AsofSkewSpec). Costs two bounded jobs at PLAN-BUILD time per stock
-  // call, which is why it is opt-in. Suppressed (a) re-entrantly, so
-  // the routed composition's own internal joins don't re-detect, and
-  // (b) for internal "__graft_"-prefixed keys (salt/bucket columns the
-  // salted and keyless tiers append) — those calls are already inside
-  // a skew-treated composition.
+  // through the logical bucket+carry tier (AsofSkew.buildSkewed —
+  // row-identical by construction, pinned by AsofSkewSpec). Costs two
+  // bounded jobs at PLAN-BUILD time per stock call, which is why it is
+  // opt-in. Suppressed (a) re-entrantly, so the routed composition's
+  // own internal joins don't re-detect, and (b) for internal
+  // "__graft_"-prefixed keys (salt/bucket columns the salted and
+  // keyless tiers append) — those calls are already inside a
+  // skew-treated composition.
   private val suppressAutoRoute: ThreadLocal[java.lang.Boolean] =
     ThreadLocal.withInitial(() => java.lang.Boolean.FALSE)
 
   /** Run `f` with automatic build-skew routing suppressed — for
-    * compositions that call [[asofJoin]]/[[bandJoin]] as internal
-    * building blocks of an already-skew-treated plan. */
+    * compositions that call [[timeJoin]] as an internal building block
+    * of an already-skew-treated plan. */
   def noAutoRoute[T](f: => T): T = {
     val prev = suppressAutoRoute.get()
     suppressAutoRoute.set(true)
     try f finally suppressAutoRoute.set(prev)
   }
 
-  private def autoRouteHotBuild(left: DataFrame, right: DataFrame,
-      keys: Seq[(String, String)]): Option[Seq[Seq[Any]]] = {
-    val conf = left.sparkSession.conf
+  private def autoRouteHotBuild(right: DataFrame,
+      join: TimeJoin): Option[Seq[Seq[Any]]] = {
+    val conf = right.sparkSession.conf
     val auto = conf.getOption(OptimizeSkewedGraftJoin.BuildKeysConfKey)
       .contains("auto")
     // streaming PROBE is covered too (round-16): detection samples only
@@ -54,10 +54,10 @@ object PlanBridge {
     // (which switches its in-bucket joins to the stateless broadcast
     // as-of for a streaming probe), and a union of streaming
     // DataFrames. AsofSkewSpec pins microbatch-vs-batch row parity.
-    // A streaming BUILD side never reaches here — asofJoin/bandJoin
-    // refuse it before routing.
-    if (!auto || suppressAutoRoute.get() || keys.isEmpty ||
-        keys.exists(_._1.startsWith("__graft_")))
+    // A streaming BUILD side never reaches here — timeJoin refuses it
+    // before routing.
+    if (!auto || suppressAutoRoute.get() || join.keyless ||
+        join.leftKeys.exists(_.startsWith("__graft_")))
       None
     else {
       val frac = conf
@@ -66,7 +66,7 @@ object PlanBridge {
       val minShare = conf
         .getOption(OptimizeSkewedGraftJoin.BuildKeysMinShareKey)
         .map(_.toDouble).getOrElse(0.05)
-      Some(graft.plans.AsofSkew.detectHotKeyTuples(right, keys.map(_._2),
+      Some(AsofSkew.detectHotKeyTuples(right, join.rightKeys,
         sampleFraction = frac, minShare = minShare)).filter(_.nonEmpty)
     }
   }
@@ -129,30 +129,23 @@ object PlanBridge {
       spark: SparkSession): Seq[org.apache.spark.sql.execution.SparkStrategy] =
     ext.buildPlannerStrategies(spark)
 
-  /** As-of join `left` (probe) to `right` (build): for each left row,
-    * the right row with equal keys and the greatest `rightTime` at or
-    * before `leftTime`, or nulls. Column names must be disjoint across
-    * sides (alias before calling — also what keeps a self-join's
-    * expression ids distinct). Time columns must be LongType micros or
-    * either timestamp type (physically long micros; tolerance stays a
-    * micro count either way — see AsofJoinPlan.timeTypeOk).
-    * `hint`: "merge" forces the sorted-merge operator, "broadcast" the
-    * broadcast operator (probe side untouched), "auto" (default) picks
-    * by the build side's statistics vs autoBroadcastJoinThreshold.
-    * `direction`: "backward" (default, greatest rightTime <= leftTime)
-    * or "forward" (smallest rightTime >= leftTime), pandas
-    * merge_asof-style. `toleranceUs >= 0` nulls out a directional
-    * match farther than that many micros from the probe time (pandas
-    * tolerance); negative disables.
-    * With `spark.graft.skewJoin.buildKeys=auto`, a bounded detection
-    * pre-pass samples the build side and routes detected hot build
-    * keys through [[graft.plans.AsofSkew.asofJoinBuildSkewedKeys]]
-    * (row-identical; two extra bounded jobs at plan-build time).
-    */
-  def asofJoin(left: DataFrame, right: DataFrame,
-      keys: Seq[(String, String)], leftTime: String, rightTime: String,
-      hint: String = "auto", direction: String = "backward",
-      toleranceUs: Long = -1L): DataFrame = {
+  /** Time join `left` (probe) to `right` (build) as `join` describes
+    * it — the one DataFrame entry of the as-of/band tier. Checks, in
+    * order and before any job runs: the descriptor (its constructor),
+    * disjoint column names across sides (alias before calling — also
+    * what keeps a self-join's expression ids distinct), and a static
+    * build side. Time columns must be LongType micros or either
+    * timestamp type (physically long micros; tolerances and bounds stay
+    * micro counts either way — see [[TimeJoin.timeTypeOk]]).
+    * A keyed join plans as one [[TimeJoinPlan]]; with
+    * `spark.graft.skewJoin.buildKeys=auto`, a bounded detection
+    * pre-pass samples the build side first and routes detected hot
+    * build keys through [[graft.plans.AsofSkew.buildSkewed]]
+    * (row-identical; two extra bounded jobs at plan-build time). A
+    * keyless join runs as its range-bucketed composition:
+    * [[graft.plans.AsofKeyless]] for as-of,
+    * [[graft.plans.BandConds.lowerBandKeyless]] for a band. */
+  def timeJoin(left: DataFrame, right: DataFrame, join: TimeJoin): DataFrame = {
     val spark = left.sparkSession.asInstanceOf[classic.SparkSession]
     ensureStrategy(spark)
     val lPlan = left.queryExecution.analyzed
@@ -160,71 +153,52 @@ object PlanBridge {
     val shared = lPlan.output.map(_.name).toSet
       .intersect(rPlan.output.map(_.name).toSet)
     require(shared.isEmpty,
-      s"asofJoin sides must have disjoint column names; shared: $shared")
+      s"time join sides must have disjoint column names; shared: $shared")
     // streaming BUILD has no bounded-state formulation here: each
     // microbatch would join against only that batch's build rows and
     // silently drop every cross-batch match. Streaming PROBE is the
-    // supported stream-static shape (pass hint="broadcast").
+    // supported stream-static shape.
     require(!right.isStreaming,
-      "asofJoin build side must be static (stream-static enrichment only)")
-
-    autoRouteHotBuild(left, right, keys) match {
-      case Some(hot) =>
-        graft.plans.AsofSkew.asofJoinBuildSkewedKeys(
-          left, right, keys, leftTime, rightTime, hot, hint, direction,
-          toleranceUs)
-      case None =>
-        def resolve(plan: LogicalPlan, name: String): Attribute =
-          plan.output.find(_.name == name).getOrElse(
-            throw new IllegalArgumentException(
-              s"column '$name' not in [${plan.output.map(_.name).mkString(", ")}]"))
-
-        classic.Dataset.ofRows(spark, AsofJoinPlan(lPlan, rPlan,
-          keys.map(k => resolve(lPlan, k._1)), keys.map(k => resolve(rPlan, k._2)),
-          resolve(lPlan, leftTime), resolve(rPlan, rightTime),
-          AsofJoinPlan.steerHint(lPlan.isStreaming, hint), direction,
-          toleranceUs))
+      "time join build side must be static (stream-static enrichment only)")
+    (join.kind, autoRouteHotBuild(right, join)) match {
+      case (_, Some(hot)) => AsofSkew.buildSkewed(left, right, join, hot)
+      case (asof: Asof, None) if join.keyless =>
+        AsofKeyless.composed(left, right, join, asof)
+      case (band: Band, None) if join.keyless =>
+        val parts = BandConds.Parts(Nil, Nil,
+          TimeJoin.resolve(lPlan, join.leftTime),
+          TimeJoin.resolve(rPlan, join.rightTime), band.lowUs, band.highUs,
+          Nil, Nil)
+        classic.Dataset.ofRows(spark, BandConds.lowerBandKeyless(
+          lPlan, rPlan, parts, join.hint, keepUnmatched = true))
+      case _ => classic.Dataset.ofRows(spark, TimeJoinPlan(lPlan, rPlan, join))
     }
   }
+
+  /** As-of join `left` (probe) to `right` (build): for each left row,
+    * the right row with equal keys and the greatest `rightTime` at or
+    * before `leftTime` ("backward", the default), or the smallest at or
+    * after it ("forward"), or nulls. Contracts, `hint` and
+    * `toleranceUs` as [[TimeJoin]] and [[Asof]] describe them. */
+  def asofJoin(left: DataFrame, right: DataFrame,
+      keys: Seq[(String, String)], leftTime: String, rightTime: String,
+      hint: String = "auto", direction: String = "backward",
+      toleranceUs: Long = -1L): DataFrame =
+    timeJoin(left, right,
+      TimeJoin(keys, leftTime, rightTime, Asof(direction, toleranceUs), hint))
 
   /** Banded (interval) join `left` (probe) to `right` (build): every
     * right row with equal keys and `rightTime` within
     * [leftTime + lowUs, leftTime + highUs], left-outer (no-match
-    * probes emit one null-build row). Same contracts as [[asofJoin]]
-    * (disjoint column names, LongType micro times); the physical
-    * operator is the [[graft.plans.BandJoinExec]] sliding-band merge —
-    * O(input + output) instead of the equi-join's per-key candidate
-    * product. */
+    * probes emit one null-build row). Same contracts as [[asofJoin]];
+    * the physical operator is the [[graft.plans.BandJoinExec]]
+    * sliding-band merge — O(input + output) instead of the equi-join's
+    * per-key candidate product. */
   def bandJoin(left: DataFrame, right: DataFrame,
       keys: Seq[(String, String)], leftTime: String, rightTime: String,
-      lowUs: Long, highUs: Long, hint: String = "auto"): DataFrame = {
-    val spark = left.sparkSession.asInstanceOf[classic.SparkSession]
-    ensureStrategy(spark)
-    val lPlan = left.queryExecution.analyzed
-    val rPlan = right.queryExecution.analyzed
-    val shared = lPlan.output.map(_.name).toSet
-      .intersect(rPlan.output.map(_.name).toSet)
-    require(shared.isEmpty,
-      s"bandJoin sides must have disjoint column names; shared: $shared")
-    require(!right.isStreaming, // see asofJoin — cross-batch matches lost
-      "bandJoin build side must be static (stream-static enrichment only)")
-
-    autoRouteHotBuild(left, right, keys) match {
-      case Some(hot) =>
-        graft.plans.AsofSkew.bandJoinBuildSkewedKeys(
-          left, right, keys, leftTime, rightTime, lowUs, highUs, hot, hint)
-      case None =>
-        def resolve(plan: LogicalPlan, name: String): Attribute =
-          plan.output.find(_.name == name).getOrElse(
-            throw new IllegalArgumentException(
-              s"column '$name' not in [${plan.output.map(_.name).mkString(", ")}]"))
-
-        classic.Dataset.ofRows(spark, graft.plans.BandJoinPlan(lPlan, rPlan,
-          keys.map(k => resolve(lPlan, k._1)), keys.map(k => resolve(rPlan, k._2)),
-          resolve(lPlan, leftTime), resolve(rPlan, rightTime), lowUs, highUs,
-          AsofJoinPlan.steerHint(lPlan.isStreaming, hint)))
-    }
-  }
+      lowUs: Long, highUs: Long, hint: String = "auto"): DataFrame =
+    timeJoin(left, right,
+      TimeJoin(keys, leftTime, rightTime, Band(lowUs, highUs), hint))
 
   /** KEYLESS banded join — every (left, right) pair with `rightTime`
     * within [leftTime + lowUs, leftTime + highUs], no equi-key at all
@@ -240,26 +214,7 @@ object PlanBridge {
     * never match; null-time probes emit the null-extended row). */
   def bandJoinKeyless(left: DataFrame, right: DataFrame,
       leftTime: String, rightTime: String,
-      lowUs: Long, highUs: Long, hint: String = "auto"): DataFrame = {
-    require(lowUs <= highUs, s"band [$lowUs, $highUs] is empty")
-    val spark = left.sparkSession.asInstanceOf[classic.SparkSession]
-    ensureStrategy(spark)
-    val lPlan = left.queryExecution.analyzed
-    val rPlan = right.queryExecution.analyzed
-    val shared = lPlan.output.map(_.name).toSet
-      .intersect(rPlan.output.map(_.name).toSet)
-    require(shared.isEmpty,
-      s"bandJoinKeyless sides must have disjoint column names; shared: $shared")
-
-    def resolve(plan: LogicalPlan, name: String): Attribute =
-      plan.output.find(_.name == name).getOrElse(
-        throw new IllegalArgumentException(
-          s"column '$name' not in [${plan.output.map(_.name).mkString(", ")}]"))
-
-    val parts = graft.plans.BandConds.Parts(Nil, Nil,
-      resolve(lPlan, leftTime), resolve(rPlan, rightTime), lowUs, highUs,
-      Nil, Nil)
-    classic.Dataset.ofRows(spark, graft.plans.BandConds.lowerBandKeyless(
-      lPlan, rPlan, parts, hint, keepUnmatched = true))
-  }
+      lowUs: Long, highUs: Long, hint: String = "auto"): DataFrame =
+    timeJoin(left, right,
+      TimeJoin.keyless(leftTime, rightTime, Band(lowUs, highUs), hint))
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.PlanBridge
 
-/** Gates for the native as-of operator (AsofJoinPlan/Strategy/Exec):
+/** Gates for the native as-of operator (TimeJoinPlan/Strategy/Exec):
   * result parity with ev08's union+window form, the promised physical
   * shape (one exchange per side, partitioning survives the operator),
   * hand-checked edge semantics, and the SparkSessionExtensions wiring.

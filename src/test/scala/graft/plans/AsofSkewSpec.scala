@@ -38,9 +38,10 @@ class AsofSkewSpec extends SparkSpec {
     for (dir <- Seq("backward", "forward"); tol <- Seq(-1L, 10L)) {
       val plain = rows(PlanBridge.asofJoin(probe, build,
         Seq("user_id" -> "b_key"), "us", "b_us", "merge", dir, tol))
-      val salted = rows(AsofSkew.asofJoinSalted(probe, build,
-        "user_id", "b_key", "us", "b_us",
-        hotKeys = Seq(1L), salts = 8, direction = dir, toleranceUs = tol))
+      val salted = rows(AsofSkew.salted(probe, build,
+        TimeJoin(Seq("user_id" -> "b_key"), "us", "b_us", Asof(dir, tol),
+          hint = "merge"),
+        hotKeys = Seq(Seq(1L)), salts = 8))
       assert(salted == plain, s"dir=$dir tol=$tol diverged")
       assert(plain.size == 200)
     }
@@ -49,17 +50,20 @@ class AsofSkewSpec extends SparkSpec {
   test("multiple hot keys and the broadcast hint also match") {
     val plain = rows(PlanBridge.asofJoin(probe, build,
       Seq("user_id" -> "b_key"), "us", "b_us"))
-    val salted = rows(AsofSkew.asofJoinSalted(probe, build,
-      "user_id", "b_key", "us", "b_us",
-      hotKeys = Seq(1L, 2L), salts = 4, hint = "broadcast"))
+    val salted = rows(AsofSkew.salted(probe, build,
+      TimeJoin(Seq("user_id" -> "b_key"), "us", "b_us", Asof(),
+        hint = "broadcast"),
+      hotKeys = Seq(Seq(1L), Seq(2L)), salts = 4))
     assert(salted == plain)
   }
 
   test("empty hot-key list degrades to the plain join") {
     val plain = rows(PlanBridge.asofJoin(probe, build,
       Seq("user_id" -> "b_key"), "us", "b_us"))
-    val salted = rows(AsofSkew.asofJoinSalted(probe, build,
-      "user_id", "b_key", "us", "b_us", hotKeys = Seq.empty, salts = 8))
+    val salted = rows(AsofSkew.salted(probe, build,
+      TimeJoin(Seq("user_id" -> "b_key"), "us", "b_us", Asof(),
+        hint = "merge"),
+      hotKeys = Seq.empty, salts = 8))
     assert(salted == plain)
   }
 
@@ -76,9 +80,10 @@ class AsofSkewSpec extends SparkSpec {
          hint <- Seq("merge", "broadcast")) {
       val plain = bandRows(PlanBridge.bandJoin(probe, build,
         Seq("user_id" -> "b_key"), "us", "b_us", lo, hi, hint = "merge"))
-      val salted = bandRows(AsofSkew.bandJoinSalted(probe, build,
-        "user_id", "b_key", "us", "b_us", lo, hi,
-        hotKeys = Seq(1L), salts = 8, hint = hint))
+      val salted = bandRows(AsofSkew.salted(probe, build,
+        TimeJoin(Seq("user_id" -> "b_key"), "us", "b_us", Band(lo, hi),
+          hint = hint),
+        hotKeys = Seq(Seq(1L)), salts = 8))
       assert(salted == plain, s"band [$lo,$hi] hint=$hint diverged")
     }
   }
@@ -86,18 +91,19 @@ class AsofSkewSpec extends SparkSpec {
   test("band salted: empty hot-key list degrades to the plain join") {
     val plain = bandRows(PlanBridge.bandJoin(probe, build,
       Seq("user_id" -> "b_key"), "us", "b_us", -10L, 0L))
-    val salted = bandRows(AsofSkew.bandJoinSalted(probe, build,
-      "user_id", "b_key", "us", "b_us", -10L, 0L,
+    val salted = bandRows(AsofSkew.salted(probe, build,
+      TimeJoin(Seq("user_id" -> "b_key"), "us", "b_us", Band(-10L, 0L),
+        hint = "merge"),
       hotKeys = Seq.empty, salts = 8))
     assert(salted == plain)
   }
 
   test("detectHotKeys finds the dominant key and nothing else") {
-    val hot = AsofSkew.detectHotKeys(probe, "user_id",
+    val hot = AsofSkew.detectHotKeyTuples(probe, Seq("user_id"),
       sampleFraction = 1.0, minShare = 0.25)
-    assert(hot == Seq(1L), s"got $hot")
+    assert(hot == Seq(Seq(1L)), s"got $hot")
     // empty probe side detects nothing
-    assert(AsofSkew.detectHotKeys(probe.limit(0), "user_id",
+    assert(AsofSkew.detectHotKeyTuples(probe.limit(0), Seq("user_id"),
       sampleFraction = 1.0).isEmpty)
   }
 
@@ -124,22 +130,25 @@ class AsofSkewSpec extends SparkSpec {
       "as-of and band") {
     val keys = Seq("tenant" -> "b_tenant", "shard" -> "b_shard")
     val plain = rows(PlanBridge.asofJoin(sProbe, sBuild, keys, "us", "b_us"))
-    val salted = rows(AsofSkew.asofJoinSaltedKeys(sProbe, sBuild, keys,
-      "us", "b_us", hotKeys = Seq(Seq("hot", 0)), salts = 8))
+    val salted = rows(AsofSkew.salted(sProbe, sBuild,
+      TimeJoin(keys, "us", "b_us", Asof(), hint = "merge"),
+      hotKeys = Seq(Seq("hot", 0)), salts = 8))
     assert(salted == plain)
     assert(plain.size == 200)
     val bPlain = bandRows(PlanBridge.bandJoin(sProbe, sBuild, keys,
       "us", "b_us", -10L, 10L))
-    val bSalted = bandRows(AsofSkew.bandJoinSaltedKeys(sProbe, sBuild, keys,
-      "us", "b_us", -10L, 10L, hotKeys = Seq(Seq("hot", 0)), salts = 8))
+    val bSalted = bandRows(AsofSkew.salted(sProbe, sBuild,
+      TimeJoin(keys, "us", "b_us", Band(-10L, 10L), hint = "merge"),
+      hotKeys = Seq(Seq("hot", 0)), salts = 8))
     assert(bSalted == bPlain)
   }
 
   test("generic keys: single string key salted == unsalted") {
     val keys = Seq("tenant" -> "b_tenant")
     val plain = rows(PlanBridge.asofJoin(sProbe, sBuild, keys, "us", "b_us"))
-    val salted = rows(AsofSkew.asofJoinSaltedKeys(sProbe, sBuild, keys,
-      "us", "b_us", hotKeys = Seq(Seq("hot")), salts = 4))
+    val salted = rows(AsofSkew.salted(sProbe, sBuild,
+      TimeJoin(keys, "us", "b_us", Asof(), hint = "merge"),
+      hotKeys = Seq(Seq("hot")), salts = 4))
     assert(salted == plain)
   }
 
@@ -149,6 +158,36 @@ class AsofSkewSpec extends SparkSpec {
     assert(hot == Seq(Seq("hot", 0)), s"got $hot")
     assert(AsofSkew.detectHotKeyTuples(sProbe.limit(0),
       Seq("tenant", "shard"), sampleFraction = 1.0).isEmpty)
+  }
+
+  test("a null key is never hot: 50% null build keys and no other hot " +
+      "key detect nothing, and buildKeys=auto leaves the join unrouted") {
+    import org.apache.spark.sql.graft.OptimizeSkewedGraftJoin
+    import org.apache.spark.sql.catalyst.plans.logical.Union
+    // 40 build rows: every other key null, the rest spread over ten
+    // keys at 5% each — only the null tuple reaches minShare
+    def nullBuildOn(s: org.apache.spark.sql.SparkSession) = {
+      import s.implicits._
+      (0 until 40).map { j =>
+        (1000L + j, if (j % 2 == 0) None else Some((j % 20) / 2 + 1L),
+          (j * 7 % 100).toLong)
+      }.toDF("b_id", "b_key", "b_us")
+    }
+    assert(AsofSkew.detectHotKeyTuples(nullBuildOn(spark), Seq("b_key"),
+      sampleFraction = 1.0, minShare = 0.25).isEmpty)
+    val autoS = PlanBridge.sessionWithExtensions(spark, new GraftExtensions()(_))
+    autoS.conf.set(OptimizeSkewedGraftJoin.BuildKeysConfKey, "auto")
+    autoS.conf.set(OptimizeSkewedGraftJoin.BuildKeysSampleFractionKey, "1.0")
+    autoS.conf.set(OptimizeSkewedGraftJoin.BuildKeysMinShareKey, "0.25")
+    val keys = Seq("user_id" -> "b_key")
+    val routed = PlanBridge.asofJoin(corpusOn(autoS)._1, nullBuildOn(autoS),
+      keys, "us", "b_us")
+    assert(routed.queryExecution.analyzed.collectFirst {
+      case u: Union => u }.isEmpty,
+      "a null build key was routed through the build-skew composition")
+    val stock = rows(PlanBridge.asofJoin(probe, nullBuildOn(spark),
+      keys, "us", "b_us"))
+    assert(rows(routed) == stock && stock.exists(_._2.isDefined))
   }
 
   // ---- AQE runtime skew split (OptimizeSkewedGraftJoin) -------------
@@ -348,28 +387,34 @@ class AsofSkewSpec extends SparkSpec {
     for (dir <- Seq("backward", "forward"); tol <- Seq(-1L, 10L)) {
       val plain = rows(PlanBridge.asofJoin(probe, build,
         Seq("user_id" -> "b_key"), "us", "b_us", "merge", dir, tol))
-      val bucketed = rows(AsofSkew.asofJoinBuildSkewed(probe, build,
-        "user_id", "b_key", "us", "b_us",
-        hotKeys = Seq(1L), direction = dir, toleranceUs = tol))
+      val bucketed = rows(AsofSkew.buildSkewed(probe, build,
+        TimeJoin(Seq("user_id" -> "b_key"), "us", "b_us", Asof(dir, tol),
+          hint = "merge"),
+        hotKeys = Seq(Seq(1L))))
       assert(bucketed == plain, s"dir=$dir tol=$tol diverged")
       assert(plain.size == 200)
     }
     for ((lo, hi) <- Seq((-10L, 0L), (-25L, 25L), (0L, 15L))) {
       val plain = bandRows(PlanBridge.bandJoin(probe, build,
         Seq("user_id" -> "b_key"), "us", "b_us", lo, hi, hint = "merge"))
-      val bucketed = bandRows(AsofSkew.bandJoinBuildSkewed(probe, build,
-        "user_id", "b_key", "us", "b_us", lo, hi, hotKeys = Seq(1L)))
+      val bucketed = bandRows(AsofSkew.buildSkewed(probe, build,
+        TimeJoin(Seq("user_id" -> "b_key"), "us", "b_us", Band(lo, hi),
+          hint = "merge"),
+        hotKeys = Seq(Seq(1L))))
       assert(bucketed == plain, s"band [$lo,$hi] diverged")
     }
     // multiple hot keys, generic composite keys, and the empty
     // degenerate
     val keys = Seq("tenant" -> "b_tenant", "shard" -> "b_shard")
     val plainG = rows(PlanBridge.asofJoin(sProbe, sBuild, keys, "us", "b_us"))
-    val bucketedG = rows(AsofSkew.asofJoinBuildSkewedKeys(sProbe, sBuild,
-      keys, "us", "b_us", hotKeys = Seq(Seq("hot", 0), Seq("cold", 1))))
+    val bucketedG = rows(AsofSkew.buildSkewed(sProbe, sBuild,
+      TimeJoin(keys, "us", "b_us", Asof(), hint = "merge"),
+      hotKeys = Seq(Seq("hot", 0), Seq("cold", 1))))
     assert(bucketedG == plainG)
-    val degenerate = rows(AsofSkew.asofJoinBuildSkewed(probe, build,
-      "user_id", "b_key", "us", "b_us", hotKeys = Seq.empty))
+    val degenerate = rows(AsofSkew.buildSkewed(probe, build,
+      TimeJoin(Seq("user_id" -> "b_key"), "us", "b_us", Asof(),
+        hint = "merge"),
+      hotKeys = Seq.empty))
     assert(degenerate == rows(PlanBridge.asofJoin(probe, build,
       Seq("user_id" -> "b_key"), "us", "b_us")))
   }
@@ -452,9 +497,10 @@ class AsofSkewSpec extends SparkSpec {
     // the salted tier's internal join must NOT re-detect on the flag
     // session (its salt keys are __graft_-prefixed and it runs under
     // noAutoRoute): identical rows, and its plan keeps the single
-    // salted AsofJoinPlan (one Union would mean the build-skew tier
+    // salted TimeJoinPlan (one Union would mean the build-skew tier
     // fired inside the salted one)
-    val salted = AsofSkew.asofJoinSaltedKeys(p2, b2, keys, "us", "b_us",
+    val salted = AsofSkew.salted(p2, b2,
+      TimeJoin(keys, "us", "b_us", Asof(), hint = "merge"),
       hotKeys = Seq(Seq(1L)), salts = 4)
     assert(salted.queryExecution.analyzed.collectFirst {
       case u: Union => u }.isEmpty,

@@ -1,0 +1,82 @@
+package graft.plans
+
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import graft.SparkSpec
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graft.{OptimizeSkewedGraftJoin, PlanBridge}
+
+/** The [[TimeJoin]] descriptor is the one place a time join's arguments
+  * are checked, and every entry point checks them before it plans or
+  * runs anything. */
+class TimeJoinSpec extends SparkSpec {
+
+  /** Spark jobs started by `f` on this thread. Listener events arrive
+    * asynchronously but in order, so once a marker job submitted after
+    * `f` is seen, every job `f` started has been counted. */
+  private def jobsDuring(s: SparkSession)(f: => Unit): Int = {
+    val sc = s.sparkContext
+    val group = s"time-join-args-${System.nanoTime}"
+    val marker = s"$group-marker"
+    val started = new AtomicInteger(0)
+    val markerSeen = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => started.incrementAndGet()
+          case Some(`marker`) => markerSeen.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "time join argument checks")
+      try f finally sc.clearJobGroup()
+      sc.setJobGroup(marker, "listener flush")
+      try s.range(1).count() finally sc.clearJobGroup()
+      assert(markerSeen.await(60, TimeUnit.SECONDS),
+        "the listener never saw the marker job")
+      started.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("the descriptor rejects a bad direction, hint, band or key list") {
+    intercept[IllegalArgumentException](Asof("backwards"))
+    intercept[IllegalArgumentException](Band(10L, -10L))
+    intercept[IllegalArgumentException](
+      TimeJoin(Seq("k" -> "bk"), "t", "bt", Asof(), hint = "hash"))
+    intercept[IllegalArgumentException](TimeJoin(Nil, "t", "bt", Asof()))
+    intercept[IllegalArgumentException](
+      TimeJoin(Seq("k" -> "bk"), "t", "bt", Asof(), keyless = true))
+    assert(Asof("forward").forward && !Asof().forward)
+    assert(TimeJoin.keyless("t", "bt", Band(-1L, 1L)).keys.isEmpty)
+  }
+
+  test("bad arguments throw at the call with zero Spark jobs, also " +
+      "under buildKeys=auto, whose detection pre-pass runs jobs") {
+    val s = PlanBridge.sessionWithExtensions(spark, new GraftExtensions()(_))
+    s.conf.set(OptimizeSkewedGraftJoin.BuildKeysConfKey, "auto")
+    s.conf.set(OptimizeSkewedGraftJoin.BuildKeysSampleFractionKey, "1.0")
+    s.conf.set(OptimizeSkewedGraftJoin.BuildKeysMinShareKey, "0.5")
+    import s.implicits._
+    val l = Seq((1L, 1L, 10L), (2L, 1L, 20L), (3L, 2L, 30L))
+      .toDF("id", "k", "t")
+    val r = Seq((1L, 5L, 100L), (1L, 15L, 101L), (2L, 25L, 102L))
+      .toDF("bk", "bt", "b_id")
+    // the harness sees the detection pre-pass of a valid call
+    assert(jobsDuring(s)(PlanBridge.asofJoin(l, r, Seq("k" -> "bk"),
+      "t", "bt")) > 0, "a valid auto-routed call started no job")
+    val calls = Seq[(String, () => Any)](
+      "inverted band" -> (() => PlanBridge.bandJoin(l, r,
+        Seq("k" -> "bk"), "t", "bt", lowUs = 10L, highUs = -10L)),
+      "unknown direction" -> (() => PlanBridge.asofJoin(l, r,
+        Seq("k" -> "bk"), "t", "bt", direction = "backwards")),
+      "empty key list" -> (() => PlanBridge.asofJoin(l, r, Nil, "t", "bt")))
+    for ((what, call) <- calls) {
+      val jobs = jobsDuring(s)(intercept[IllegalArgumentException](call()))
+      assert(jobs == 0, s"$what: $jobs job(s) ran before the rejection")
+    }
+  }
+}

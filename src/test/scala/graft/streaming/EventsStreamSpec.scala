@@ -444,10 +444,12 @@ class EventsStreamSpec extends SparkSpec {
       .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("us"))
     def asofHint(df: org.apache.spark.sql.DataFrame): String =
       df.queryExecution.analyzed.collectFirst {
-        case a: graft.plans.AsofJoinPlan => a.hint }.get
+        case a @ graft.plans.TimeJoinPlan(_, _, _, _, _, _,
+            _: graft.plans.Asof, _) => a.hint }.get
     def bandHint(df: org.apache.spark.sql.DataFrame): String =
       df.queryExecution.analyzed.collectFirst {
-        case b: graft.plans.BandJoinPlan => b.hint }.get
+        case b @ graft.plans.TimeJoinPlan(_, _, _, _, _, _,
+            _: graft.plans.Band, _) => b.hint }.get
     // the physical strategy can't see streaming-ness (per-microbatch
     // replanning replaces the leaf), so the default must be decided at
     // analysis time — pin it on each entry point

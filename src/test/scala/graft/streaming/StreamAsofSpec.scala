@@ -126,6 +126,29 @@ class StreamAsofSpec extends SparkSpec {
         val batch = asTuples(batchEv08e)
         assert(streamed == batch && batch.nonEmpty,
           s"SQL streamed ${streamed.size} rows vs batch ${batch.size}")
+        // INNER variant (`ASOF JOIN` without LEFT): unmatched probes
+        // drop — the lowering's IsNotNull(build-time) filter on the
+        // re-aliased output — so the stream must equal the batch
+        // MATCHED rows exactly
+        val outI = s.sql(
+          s"""SELECT p_event_id AS event_id, p_user_id AS user_id,
+             |  unix_micros(p_ts) AS us, unix_micros(v_ts) AS matched_us,
+             |  v_event_id AS matched_event_id
+             |FROM ss_purchases ASOF JOIN ss_views
+             |ON p_user_id = v_user_id AND p_ts >= v_ts
+             |TOLERANCE $tolUs""".stripMargin)
+        assert(outI.isStreaming)
+        val qI = outI.writeStream.format("memory").queryName("ssasofsqli")
+          .outputMode("append").start()
+        try {
+          qI.processAllAvailable()
+          val streamedI = asTuples(s.table("ssasofsqli")
+            .filter(col("user_id") >= 0L))
+          val batchI = batch.filter(_._4.isDefined)
+          assert(streamedI == batchI && batchI.nonEmpty &&
+            batchI.size < batch.size,
+            s"SQL inner streamed ${streamedI.size} rows vs batch ${batchI.size}")
+        } finally qI.stop()
       } finally q.stop()
     } finally {
       s.catalog.dropTempView("ss_purchases")
@@ -306,6 +329,24 @@ class StreamAsofSpec extends SparkSpec {
           assert(viaSql == batch,
             s"SQL keyless streamed ${viaSql.size} vs batch ${batch.size}")
         } finally q2.stop()
+        // INNER keyless variant: only the matched rows survive
+        val sqlInner = s.sql(
+          s"""SELECT p_event_id, p_user_id, unix_micros(p_ts) AS us,
+             |  unix_micros(v_ts) AS m_us, v_event_id AS m_id
+             |FROM sskl_p ASOF JOIN sskl_v ON p_ts >= v_ts
+             |TOLERANCE $tolUs""".stripMargin)
+        assert(sqlInner.isStreaming)
+        val q3 = sqlInner.writeStream.format("memory").queryName("ssklsqli")
+          .outputMode("append").start()
+        try {
+          q3.processAllAvailable()
+          val viaSqlI = asTuples(s.table("ssklsqli")
+            .filter(col("p_user_id") >= 0L))
+          val batchI = batch.filter(_._4.isDefined)
+          assert(viaSqlI == batchI && batchI.nonEmpty &&
+            batchI.size < batch.size,
+            s"SQL keyless inner streamed ${viaSqlI.size} vs batch ${batchI.size}")
+        } finally q3.stop()
       } finally {
         s.catalog.dropTempView("sskl_p")
         s.catalog.dropTempView("sskl_v")
