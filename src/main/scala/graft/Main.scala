@@ -3,7 +3,8 @@ package graft
 import java.util.Properties
 import org.apache.logging.log4j.LogManager
 import org.apache.logging.log4j.message.StringMapMessage
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 import graft.ingest._
 
 /** CLI entry point mirroring the reference pipeline (main.go:24-151):
@@ -15,6 +16,12 @@ import graft.ingest._
   * Pipeline: detect format by extension (fileloader.go:246-253) → typed
   * read → flatten → whitelist projection → optional file sinks →
   * optional atomic JDBC load → archive input.
+  *
+  * Each sink is one pass over the file, as the reference reads each
+  * record once. The row count is observed on the first sink's job
+  * (`Dataset.observe`), not counted by a job of its own; only a run with
+  * no sink counts separately. With every sink that is 4 Spark jobs per
+  * file: CSV, JSON, xlsx and the JDBC load.
   */
 object Main {
 
@@ -73,10 +80,11 @@ object Main {
     val flat = JsonIngest.applyMapping(Flatten(raw), mapping)
     val projected = JsonIngest.projectWhitelist(flat, whitelist,
       IngestSchema.flattened.fields.map(f => f.name -> f.dataType).toMap)
-    val n = projected.count()
+    val rows = Observation()
+    lazy val observed = projected.observe(rows, count(lit(1)).as("n"))
 
     if (args.exportDir != null) {
-      Sinks.csv(projected, s"${args.exportDir}/csv")
+      Sinks.csv(observed, s"${args.exportDir}/csv")
       Sinks.json(projected, s"${args.exportDir}/json")
       Sinks.xlsx(projected, s"${args.exportDir}/export.xlsx")
     }
@@ -94,7 +102,8 @@ object Main {
         props.setProperty("password", cfg.database.password)
         (cfg.database.jdbcUrl, cfg.runtime.fileDestination)
       }
-      val res = JdbcTransactionalSink.write(projected, url, props, args.table)
+      val res = JdbcTransactionalSink.write(
+        if (args.exportDir == null) observed else projected, url, props, args.table)
       // the reference logs total/succeeded/errors at main.go:132-138
       log.info(new StringMapMessage()
         .`with`("event", "ingest_complete")
@@ -110,6 +119,9 @@ object Main {
       if (args.archive && res.committed)
         Archive.moveInputFile(args.file, fileDest)
     }
+    val n =
+      if (args.exportDir != null || args.jdbc) rows.get("n").asInstanceOf[Long]
+      else projected.count()
     (projected, n)
   }
 

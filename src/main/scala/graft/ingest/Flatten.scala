@@ -1,6 +1,6 @@
 package graft.ingest
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, StructType}
 
@@ -17,10 +17,16 @@ import org.apache.spark.sql.types.{ArrayType, StructType}
   *   - multiple distinct repeated keys → UNION of per-array expansions,
   *     NOT a cross product (:316-344).
   *
-  * Spark-first: each expansion is `filter(size>0) + explode` (narrow,
-  * codegen'd, no shuffle); the all-empty base case is a disjoint filter;
-  * the union is a zero-cost plan union. Catalyst prunes unused columns
-  * through the explode.
+  * Spark-first: one generator pass over each record, like the
+  * reference's single read. Every array's elements are `transform`ed into
+  * rows of the full output schema (element field, else base column, else
+  * a typed null), the arrays are `concat`enated, a record whose arrays
+  * are all empty gets its base row instead, and ONE `explode` emits the
+  * rows in record order. The plan scans the source once and has no
+  * `Union`. The output columns are the union-by-name of the per-array
+  * expansions: each expansion's unshadowed base columns, then its element
+  * fields, first appearance wins. Spark's type widening of the `concat`
+  * gives each column the type and nullability that union would.
   */
 object Flatten {
 
@@ -28,26 +34,31 @@ object Flatten {
     val arrayFields = df.schema.fields.filter(_.dataType.isInstanceOf[ArrayType])
     if (arrayFields.isEmpty) return df
     val arrayNames = arrayFields.map(_.name).toSet
-    val baseCols = df.schema.fieldNames.filterNot(arrayNames.contains)
+    val baseCols = df.schema.fieldNames.filterNot(arrayNames.contains).toSeq
 
-    val expansions = arrayFields.map { f =>
-      val nonEmpty = df.filter(coalesce(size(col(f.name)), lit(0)) > 0)
-        .select(baseCols.map(col) :+ explode(col(f.name)).as("_elem"): _*)
+    // per array: the columns its elements write (a primitive element
+    // writes the array's own name) and whether the element is a struct
+    val arrays = arrayFields.toSeq.map { f =>
       f.dataType.asInstanceOf[ArrayType].elementType match {
-        case st: StructType =>
-          val nested = st.fieldNames
-          // overwrite-on-collision: keep base cols not shadowed by nested
-          val kept = baseCols.filterNot(nested.contains)
-          nonEmpty.select(kept.map(col) ++ nested.map(n => col(s"_elem.$n").as(n)): _*)
-        case _ =>
-          nonEmpty.withColumnRenamed("_elem", f.name)
+        case st: StructType => (f.name, st.fieldNames.toSeq, true)
+        case _ => (f.name, Seq(f.name), false)
       }
     }
+    val out = (arrays.flatMap { case (_, own, _) =>
+      baseCols.filterNot(own.contains) ++ own } ++ baseCols).distinct
 
+    def baseValue(c: String): Column = if (baseCols.contains(c)) col(c) else lit(null)
+    def row(value: String => Column): Column = struct(out.map(c => value(c).as(c)): _*)
+
+    val expansions = arrays.map { case (name, own, isStruct) =>
+      coalesce(transform(col(name), x => row { c =>
+        if (!own.contains(c)) baseValue(c) else if (isStruct) x.getField(c) else x
+      }), array())
+    }
     val allEmpty = arrayFields.map(f => coalesce(size(col(f.name)), lit(0)) <= 0)
       .reduce(_ && _)
-    val baseRows = df.filter(allEmpty).select(baseCols.map(col): _*)
-
-    (expansions :+ baseRows).reduce(_.unionByName(_, allowMissingColumns = true))
+    df.select(explode(when(allEmpty, array(row(baseValue)))
+      .otherwise(concat(expansions: _*))).as("_r"))
+      .select("_r.*")
   }
 }

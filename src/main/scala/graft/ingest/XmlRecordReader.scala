@@ -46,7 +46,11 @@ object XmlRecordReader {
     * documents. */
   def readDirect(spark: SparkSession, path: String, rowTag: String,
       schema: StructType): DataFrame = {
-    val rows = spark.sparkContext.binaryFiles(path)
+    val files = spark.sparkContext.binaryFiles(path)
+    // list the input now: a missing path fails at the read, as Spark's
+    // own file readers do, not inside the first sink (or a cache) later
+    files.partitions
+    val rows = files
       .flatMap { case (_, pds) =>
         treeIterator(pds.open(), rowTag).map(t => treeToRow(t, schema))
       }

@@ -19,7 +19,7 @@ class EmptyCorpusSpec extends SparkSpec {
   }
 
   private def sweep(n: Int): Unit = {
-    val d = java.nio.file.Files.createTempDirectory(s"graft_deg$n").toString
+    val d = tempDir(s"graft_deg$n").toString
     try {
       Tables.all.foreach { t =>
         spark.read.parquet(s"$sf/$t.parquet").limit(n)

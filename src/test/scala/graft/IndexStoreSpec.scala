@@ -30,7 +30,7 @@ class IndexStoreSpec extends SparkSpec {
 
   test("a second session answers dd08/dd12/ss03/ss09/dd11 by loading " +
     "the persisted indexes, bit-identically, without rebuilding") {
-    val root = java.nio.file.Files.createTempDirectory("graft_idxroot").toString
+    val root = tempDir("graft_idxroot").toString
     val names = Seq("lsh_pairs", "cluster_map", "span_table",
       "pq_codebooks", "ivf8", "standing_bloom")
     def runAll(s: SparkSession): Map[String, Seq[String]] = Map(
@@ -73,7 +73,7 @@ class IndexStoreSpec extends SparkSpec {
 
   test("a second session answers gr01/gr03 by loading the persisted " +
     "trade-edge graph (multi-table fingerprint)") {
-    val root = java.nio.file.Files.createTempDirectory("graft_idxroot3").toString
+    val root = tempDir("graft_idxroot3").toString
     def runBoth(s: SparkSession): Map[String, Seq[String]] = Map(
       "gr01" -> sortedRows(ops.Graph.queries("gr01_pagerank")(s, sf)),
       "gr03" -> sortedRows(ops.Graph.queries("gr03_bfs_hops")(s, sf)))
@@ -104,7 +104,7 @@ class IndexStoreSpec extends SparkSpec {
   }
 
   test("a second session answers bk02 by loading the persisted z-order layout") {
-    val root = java.nio.file.Files.createTempDirectory("graft_idxroot4").toString
+    val root = tempDir("graft_idxroot4").toString
     IndexStore.lastAction.clear()
     val first = sortedRows(ops.Bucketing.queries("bk02_zorder_prune")(managed(root), sf))
     assert(IndexStore.lastAction.get((sf, "zorder_lineitem")).contains("built"))
@@ -118,8 +118,8 @@ class IndexStoreSpec extends SparkSpec {
 
   test("a stale index (mutated corpus) fails loudly on load; " +
     "ifStale=rebuild rebuilds in place") {
-    val root = java.nio.file.Files.createTempDirectory("graft_idxroot2").toString
-    val corpus = java.nio.file.Files.createTempDirectory("graft_corpus").toString
+    val root = tempDir("graft_idxroot2").toString
+    val corpus = tempDir("graft_corpus").toString
     val base = SparkSpec.session.read.parquet(sf + "/documents.parquet")
     base.write.mode("overwrite").parquet(corpus + "/documents.parquet")
 
@@ -151,12 +151,12 @@ class IndexStoreSpec extends SparkSpec {
 
   test("the fingerprint sees appends, deletes, re-ids, and in-place " +
     "content edits of sampled rows") {
-    val corpus = java.nio.file.Files.createTempDirectory("graft_corpus2").toString
+    val corpus = tempDir("graft_corpus2").toString
     val base = SparkSpec.session.read.parquet(sf + "/documents.parquet")
     base.write.mode("overwrite").parquet(corpus + "/documents.parquet")
 
     def fpOf(mutate: DataFrame => DataFrame): String = {
-      val d = java.nio.file.Files.createTempDirectory("graft_corpus_m").toString
+      val d = tempDir("graft_corpus_m").toString
       mutate(base).write.mode("overwrite").parquet(d + "/documents.parquet")
       IndexStore.fingerprint(SparkSpec.session.newSession(), d, "documents")
     }
@@ -186,8 +186,8 @@ class IndexStoreSpec extends SparkSpec {
 
   test("an in-place edit of a NON-sampled row (invisible to the content " +
     "scan) still flips freshness and fails the load loudly") {
-    val root = java.nio.file.Files.createTempDirectory("graft_idxroot5").toString
-    val corpus = java.nio.file.Files.createTempDirectory("graft_corpus5").toString
+    val root = tempDir("graft_idxroot5").toString
+    val corpus = tempDir("graft_corpus5").toString
     val base = SparkSpec.session.read.parquet(sf + "/documents.parquet")
     base.write.mode("overwrite").parquet(corpus + "/documents.parquet")
 
@@ -212,8 +212,8 @@ class IndexStoreSpec extends SparkSpec {
 
   test("a corpus mutated in the SAME session is re-fingerprinted on the " +
     "next resolve — never served against the first-touch fingerprint") {
-    val root = java.nio.file.Files.createTempDirectory("graft_idxroot6").toString
-    val corpus = java.nio.file.Files.createTempDirectory("graft_corpus6").toString
+    val root = tempDir("graft_idxroot6").toString
+    val corpus = tempDir("graft_corpus6").toString
     val base = SparkSpec.session.read.parquet(sf + "/documents.parquet")
     base.write.mode("overwrite").parquet(corpus + "/documents.parquet")
 
@@ -244,8 +244,8 @@ class IndexStoreSpec extends SparkSpec {
 
   test("two concurrent builders on one index: the second fails loudly " +
     "on the build lock; commit releases it") {
-    val root = java.nio.file.Files.createTempDirectory("graft_idxroot7").toString
-    val corpus = java.nio.file.Files.createTempDirectory("graft_corpus7").toString
+    val root = tempDir("graft_idxroot7").toString
+    val corpus = tempDir("graft_corpus7").toString
     SparkSpec.session.read.parquet(sf + "/documents.parquet")
       .write.mode("overwrite").parquet(corpus + "/documents.parquet")
 
@@ -289,8 +289,8 @@ class IndexStoreSpec extends SparkSpec {
 
   test("a dead builder's lock is reclaimed past the staleness threshold; " +
       "a live heartbeating builder still excludes") {
-    val root = java.nio.file.Files.createTempDirectory("graft_idxroot8").toString
-    val corpus = java.nio.file.Files.createTempDirectory("graft_corpus8").toString
+    val root = tempDir("graft_idxroot8").toString
+    val corpus = tempDir("graft_corpus8").toString
     SparkSpec.session.read.parquet(sf + "/documents.parquet")
       .write.mode("overwrite").parquet(corpus + "/documents.parquet")
     val s1 = managed(root)
@@ -332,8 +332,8 @@ class IndexStoreSpec extends SparkSpec {
 
   test("a build whose lock was taken over mid-build refuses to publish " +
       "(ownership token guard)") {
-    val root = java.nio.file.Files.createTempDirectory("graft_idxroot9").toString
-    val corpus = java.nio.file.Files.createTempDirectory("graft_corpus9").toString
+    val root = tempDir("graft_idxroot9").toString
+    val corpus = tempDir("graft_corpus9").toString
     SparkSpec.session.read.parquet(sf + "/documents.parquet")
       .write.mode("overwrite").parquet(corpus + "/documents.parquet")
     val s1 = managed(root)

@@ -23,8 +23,7 @@ class MainSpec extends SparkSpec {
 
   test("editing the template changes the projection with no code change") {
     import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("tmpl")
-      .resolve("template.xlsx").toString
+    val path = tempDir("tmpl").resolve("template.xlsx").toString
     // reference template shape: row 1 display names, row 2
     // REQUIRED/OPTIONAL, row 3 DB column names (the row Main reads)
     Sinks.xlsx(
@@ -39,7 +38,7 @@ class MainSpec extends SparkSpec {
 
   test("-model Record applies the data-schema.json rename map end-to-end") {
     // source-named fixture per the mapping's FROM side
-    val f = java.nio.file.Files.createTempFile("src", ".json")
+    val f = tempDir("src").resolve("src.json")
     java.nio.file.Files.writeString(f,
       """{"Records": [
         |  {"user": "u1", "dateCreated": 1700000001, "dateSubmitted": 1700000002,

@@ -1,12 +1,61 @@
 package graft
 
+import java.nio.file.{Files, Path}
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.commons.io.FileUtils
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session base: one local SparkSession per suite. */
-trait SparkSpec extends AnyFunSuite {
+trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   val sf: String = "/root/testdata/sf0.001"
+
+  private val tempDirs = new ConcurrentLinkedQueue[Path]()
+
+  /** A new directory under the system temp dir. It is deleted, with
+    * everything written into it, when the suite ends. */
+  def tempDir(prefix: String): Path = {
+    val dir = Files.createTempDirectory(prefix)
+    tempDirs.add(dir)
+    dir
+  }
+
+  /** Spark jobs started by `f` on this thread. Listener events arrive
+    * asynchronously but in order, so once a marker job submitted after
+    * `f` is seen, every job `f` started has been counted. */
+  def jobsDuring(s: SparkSession)(f: => Unit): Int = {
+    val sc = s.sparkContext
+    val group = s"jobs-during-${System.nanoTime}"
+    val marker = s"$group-marker"
+    val started = new AtomicInteger(0)
+    val markerSeen = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => started.incrementAndGet()
+          case Some(`marker`) => markerSeen.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted jobs")
+      try f finally sc.clearJobGroup()
+      sc.setJobGroup(marker, "listener flush")
+      try s.range(1).count() finally sc.clearJobGroup()
+      assert(markerSeen.await(60, TimeUnit.SECONDS),
+        "the listener never saw the marker job")
+      started.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  override protected def afterAll(): Unit =
+    try super.afterAll()
+    finally tempDirs.forEach(dir => FileUtils.deleteQuietly(dir.toFile))
 }
 
 object SparkSpec {

@@ -41,7 +41,7 @@ class StorageLayoutSpec extends SparkSpec {
   }
 
   test("lang-partitioned corpus write prunes partitions at the scan") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_part").toString
+    val dir = tempDir("graft_part").toString
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     docs.write.mode("overwrite").partitionBy("lang").parquet(dir)
     val back = spark.read.parquet(dir).filter(col("lang") === "en")

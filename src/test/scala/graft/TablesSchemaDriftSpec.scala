@@ -16,7 +16,7 @@ class TablesSchemaDriftSpec extends SparkSpec {
 
   private def writeVariants(): (String, String) = {
     import scala.jdk.CollectionConverters._
-    val base = java.nio.file.Files.createTempDirectory("ts_drift")
+    val base = tempDir("ts_drift")
     val micros = Seq(0L, 1700000000000000L, 1700000000123456L, 1700003600999999L)
     val rows = micros.zipWithIndex.map { case (us, i) =>
       Row(i.toLong, us, i.toLong % 2, "view", 1.5 * i, "{}")

@@ -81,7 +81,7 @@ class IngestSpec extends SparkSpec {
 
   test("columnsFromXlsx resolves the NAMED sheet in a multi-sheet workbook") {
     import java.util.zip.{ZipEntry, ZipOutputStream}
-    val p = java.nio.file.Files.createTempFile("multi", ".xlsx")
+    val p = tempDir("multi").resolve("multi.xlsx")
     val zos = new ZipOutputStream(java.nio.file.Files.newOutputStream(p))
     def put(name: String, content: String): Unit = {
       zos.putNextEntry(new ZipEntry(name)); zos.write(content.getBytes("UTF-8")); zos.closeEntry()
@@ -112,7 +112,7 @@ class IngestSpec extends SparkSpec {
     val env = pipeline(JsonIngest.read(spark, jsonFixture)).cache()
     // rewrite the fixture's records as JSON-Lines
     val lines = JsonIngest.read(spark, jsonFixture).toJSON.collect()
-    val f = java.nio.file.Files.createTempFile("recs", ".jsonl")
+    val f = tempDir("recs").resolve("recs.jsonl")
     java.nio.file.Files.writeString(f, lines.mkString("\n"))
     val jl = pipeline(JsonIngest.readJsonl(spark, f.toString))
     assert(jl.collect().map(_.toString).sorted.toSeq ==
@@ -122,7 +122,7 @@ class IngestSpec extends SparkSpec {
   test("xlsx writer round-trips through the xlsx reader") {
     import spark.implicits._
     val df = Seq(("a", 1L), ("b", 2L)).toDF("name", "v")
-    val path = java.nio.file.Files.createTempDirectory("xlsx").resolve("out.xlsx").toString
+    val path = tempDir("xlsx").resolve("out.xlsx").toString
     Sinks.xlsx(df, path)
     // row 1 = header per our writer; read it back
     val cols = IngestSchema.columnsFromXlsx(path, line = 1)

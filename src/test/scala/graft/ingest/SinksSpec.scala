@@ -9,7 +9,7 @@ class SinksSpec extends SparkSpec {
   import spark.implicits._
 
   test("csv sink: header row, empty string for missing values (reference rule)") {
-    val dir = Files.createTempDirectory("csv_sink").resolve("out").toString
+    val dir = tempDir("csv_sink").resolve("out").toString
     Seq(("a", Some("x")), ("b", None)).toDF("k", "v")
       .select(col("k"), col("v")).coalesce(1).createOrReplaceTempView("t")
     Sinks.csv(spark.table("t").coalesce(1), dir)
@@ -22,7 +22,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("json sink round-trips through spark.read.json") {
-    val dir = Files.createTempDirectory("json_sink").resolve("out").toString
+    val dir = tempDir("json_sink").resolve("out").toString
     val df = Seq(("a", 1L), ("b", 2L)).toDF("k", "v")
     Sinks.json(df, dir)
     val back = spark.read.json(dir)
@@ -31,9 +31,9 @@ class SinksSpec extends SparkSpec {
   }
 
   test("archive move: creates destination dirs, removes the source") {
-    val src = Files.createTempFile("arch", ".txt")
+    val src = tempDir("arch").resolve("arch.txt")
     Files.writeString(src, "payload")
-    val destRoot = Files.createTempDirectory("arch_dest").resolve("a/b/c")
+    val destRoot = tempDir("arch_dest").resolve("a/b/c")
     val moved = Archive.moveInputFile(src.toString, destRoot.toString)
     assert(!Files.exists(src))
     assert(Files.exists(moved))
@@ -41,9 +41,9 @@ class SinksSpec extends SparkSpec {
   }
 
   test("archive move replaces an existing file at the destination") {
-    val src = Files.createTempFile("arch2", ".txt")
+    val src = tempDir("arch2").resolve("arch2.txt")
     Files.writeString(src, "new")
-    val destRoot = Files.createTempDirectory("arch_dest2")
+    val destRoot = tempDir("arch_dest2")
     val existing = destRoot.resolve(src.getFileName.toString)
     Files.writeString(existing, "old")
     val moved = Archive.moveInputFile(src.toString, destRoot.toString)

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 class StreamingIngestSpec extends SparkSpec {
 
   test("drop-dir json stream flattens to 20 rows and archives the input") {
-    val root = Files.createTempDirectory("stream_ingest")
+    val root = tempDir("stream_ingest")
     val in = Files.createDirectories(root.resolve("in"))
     val out = root.resolve("out").toString
     val ckpt = root.resolve("ckpt").toString
@@ -45,7 +45,7 @@ class StreamingIngestSpec extends SparkSpec {
   }
 
   test("second file appends incrementally (exactly-once checkpointing)") {
-    val root = Files.createTempDirectory("stream_ingest2")
+    val root = tempDir("stream_ingest2")
     val in = Files.createDirectories(root.resolve("in"))
     val out = root.resolve("out").toString
     val ckpt = root.resolve("ckpt").toString
@@ -73,7 +73,7 @@ class StreamingIngestSpec extends SparkSpec {
       c.createStatement().execute(s"CREATE TABLE stream_tgt (${cols.mkString(", ")})")
     } finally c.close()
 
-    val root = Files.createTempDirectory("stream_jdbc")
+    val root = tempDir("stream_jdbc")
     val in = Files.createDirectories(root.resolve("in"))
     Files.copy(Paths.get("/root/reference/test-loader.json"), in.resolve("a.json"))
     val df = StreamingIngest.jsonStream(spark, in.toString)
@@ -139,7 +139,7 @@ class StreamingIngestSpec extends SparkSpec {
       c.createStatement().execute(s"CREATE TABLE crash_tgt (${cols.mkString(", ")})")
     } finally c.close()
 
-    val root = Files.createTempDirectory("stream_crash")
+    val root = tempDir("stream_crash")
     val in = Files.createDirectories(root.resolve("in"))
     val ckpt = root.resolve("ckpt")
     Files.copy(Paths.get("/root/reference/test-loader.json"), in.resolve("a.json"))

@@ -64,7 +64,7 @@ class XmlDataSourceSpec extends SparkSpec {
   }
 
   test("directory input: one partition per file") {
-    val dir = java.nio.file.Files.createTempDirectory("xmlv2")
+    val dir = tempDir("xmlv2")
     java.nio.file.Files.copy(java.nio.file.Paths.get(fixture), dir.resolve("a.xml"))
     java.nio.file.Files.copy(java.nio.file.Paths.get(fixture), dir.resolve("b.xml"))
     val df = v2(dir.toString)
@@ -73,7 +73,7 @@ class XmlDataSourceSpec extends SparkSpec {
   }
 
   test("directory input skips hidden and marker files (_SUCCESS, .crc)") {
-    val dir = java.nio.file.Files.createTempDirectory("xmlv2hidden")
+    val dir = tempDir("xmlv2hidden")
     // written the way a Spark job leaves a directory: Hadoop's local
     // file system adds a binary `.<name>.crc` next to every file
     val fs = org.apache.hadoop.fs.FileSystem.getLocal(

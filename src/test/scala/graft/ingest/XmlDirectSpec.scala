@@ -25,7 +25,7 @@ class XmlDirectSpec extends SparkSpec {
   }
 
   test("edge cases: bad numbers, missing fields, type mismatches → null in both") {
-    val f = Files.createTempFile("direct", ".xml")
+    val f = tempDir("direct").resolve("direct.xml")
     Files.writeString(f,
       """<Data>
         |<Record><user>u1</user><dt_created>notanumber</dt_created></Record>
@@ -40,7 +40,7 @@ class XmlDirectSpec extends SparkSpec {
 
   test("randomized documents: both paths agree") {
     val rnd = new scala.util.Random(11)
-    val f = Files.createTempFile("direct_rand", ".xml")
+    val f = tempDir("direct_rand").resolve("direct_rand.xml")
     val sb = new StringBuilder("<Data>")
     (1 to 200).foreach { i =>
       sb.append("<Record>")

@@ -10,7 +10,7 @@ import org.apache.spark.sql.types._
 class XmlEdgeSpec extends SparkSpec {
 
   private def writeXml(content: String): String = {
-    val f = Files.createTempFile("xml_edge", ".xml")
+    val f = tempDir("xml_edge").resolve("xml_edge.xml")
     Files.writeString(f, content)
     f.toString
   }

@@ -7,7 +7,7 @@ import graft.SparkSpec
 class XmlSplittableSpec extends SparkSpec {
 
   private lazy val bigXml: String = {
-    val f = java.nio.file.Files.createTempFile("split", ".xml")
+    val f = tempDir("split").resolve("split.xml")
     val sb = new StringBuilder("<Data>")
     (1 to 2000).foreach { i =>
       sb.append(s"""<Record><user>user$i</user><dt_created>${1698412800L + i}</dt_created>""")

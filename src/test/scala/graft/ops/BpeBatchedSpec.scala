@@ -99,7 +99,7 @@ class BpeBatchedSpec extends SparkSpec {
 
   test("run-heavy corpus (the oooo trap): batched == sequential") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_bpe_runs").toString
+    val dir = tempDir("graft_bpe_runs").toString
     val text = Seq.fill(7)("oooo ooo oo zq").mkString(" ") + " oooooo zq oo"
     Seq((0L, text)).toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -169,7 +169,7 @@ class BpeBatchedSpec extends SparkSpec {
       Seq.fill(12)(words(rnd.nextInt(words.size))).mkString(" ")
     }
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_bpe_adv").toString
+    val dir = tempDir("graft_bpe_adv").toString
     text.zipWithIndex.map { case (t, i) => (i.toLong, t) }
       .toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")

@@ -116,7 +116,7 @@ class BucketingSpec extends SparkSpec {
   test("bk01 over an empty corpus is NOT cached: data arriving later is seen") {
     // a bucketed pair built while orders/lineitem were empty must not
     // freeze bk01 at empty for the rest of the session
-    val dir = java.nio.file.Files.createTempDirectory("graft_bk_late").toString
+    val dir = tempDir("graft_bk_late").toString
     val tables = Seq("orders", "lineitem")
     tables.foreach(t => spark.read.parquet(s"$sf/$t.parquet").limit(0)
       .write.mode("overwrite").parquet(s"$dir/$t.parquet"))

@@ -243,7 +243,7 @@ class GraphSpec extends SparkSpec {
     import spark.implicits._
     val sc = spark.sparkContext
     assert(sc.getCheckpointDir.isEmpty, "test session unexpectedly has a dir")
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
+    val dir = tempDir("graft_ckpt").toString
     sc.setCheckpointDir(dir)
     // on a local master truncate auto-selects LOCAL checkpoints (same
     // durability, half the cost); force the reliable path to test it
@@ -267,11 +267,6 @@ class GraphSpec extends SparkSpec {
       f.setAccessible(true)
       f.set(sc, None)
       assert(sc.getCheckpointDir.isEmpty)
-      // don't leave frontier copies in /tmp across CI runs
-      val rm = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-      try rm.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => java.nio.file.Files.deleteIfExists(p))
-      finally rm.close()
     }
   }
 

@@ -52,7 +52,7 @@ class IvfIndexSpec extends SparkSpec {
   }
 
   test("append adds new vectors to their cells without rebuilding; probes see them") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_append").toString
+    val dir = tempDir("graft_ivf_append").toString
     val first = emb.filter(col("vec_id") % 2 === 0)
     val second = emb.filter(col("vec_id") % 2 === 1)
     val index = IvfIndex.build(spark, first, dir)
@@ -92,7 +92,7 @@ class IvfIndexSpec extends SparkSpec {
     val standing = (0L until 2000L)
       .map(i => (i, member(standCenters((i % 16).toInt), 5, i)))
       .toDF("vec_id", "embedding")
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_drift").toString
+    val dir = tempDir("graft_ivf_drift").toString
     val idx = IvfIndex.build(spark, standing, dir)
     val hole = Array.tabulate(64)(j => standCenters.map(_(j)).sum / 16)
     val drift = (0L until 600L)
@@ -122,7 +122,7 @@ class IvfIndexSpec extends SparkSpec {
     val cBatch = (0L until 200L)
       .map(i => (20000L + i, member(cents16((i % 16).toInt), 5, 7000L + i)))
       .toDF("vec_id", "embedding")
-    val dir2 = java.nio.file.Files.createTempDirectory("graft_ivf_nodrift").toString
+    val dir2 = tempDir("graft_ivf_nodrift").toString
     val idx2 = IvfIndex.build(spark, cStanding, dir2)
     IvfIndex.append(spark, idx2, cBatch)
     val all2 = cStanding.unionByName(cBatch)
@@ -146,10 +146,8 @@ class IvfIndexSpec extends SparkSpec {
       "the pointer atomically, standing currentFor readers pick up the " +
       "rebuild with no re-plumbing, and a FAILED republish leaves the " +
       "old index serving") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_ivf_root").toString
-    val corpusDir = java.nio.file.Files
-      .createTempDirectory("graft_ivf_corpus").toString
+    val root = tempDir("graft_ivf_root").toString
+    val corpusDir = tempDir("graft_ivf_corpus").toString
     emb.write.mode("overwrite").parquet(corpusDir + "/embeddings.parquet")
     // per-session conf (the IndexStoreSpec discipline): suites may run
     // in parallel in this JVM, and setting the root on the SHARED
@@ -214,8 +212,7 @@ class IvfIndexSpec extends SparkSpec {
       "session-scoped alias currentFor serves") {
     // no index root: republish lands in a temp dir and the pointer is
     // the session-scoped cache (the unmanaged contract)
-    val corpusDir = java.nio.file.Files
-      .createTempDirectory("graft_ivf_um").toString
+    val corpusDir = tempDir("graft_ivf_um").toString
     emb.write.mode("overwrite").parquet(corpusDir + "/embeddings.parquet")
     val idx0 = IvfIndex.currentFor(spark, corpusDir) // standing fallback
     val rebuilt = IvfIndex.republishDrifted(spark, corpusDir, emb)
@@ -237,8 +234,7 @@ class IvfIndexSpec extends SparkSpec {
     val standing = (0L until 2000L)
       .map(i => (i, mkMember(centers((i % 16).toInt), 5, i)))
       .toDF("vec_id", "embedding")
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_ivf_audit").toString
+    val dir = tempDir("graft_ivf_audit").toString
     val idx = IvfIndex.build(spark, standing, dir)
     val auditor = new IvfIndex.AppendAuditor(spark, idx, every = 2,
       floor = 0.9)

@@ -35,7 +35,7 @@ class JlWhitenSpec extends SparkSpec {
       (i.toLong, v.toSeq)
     }
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_jl_pin").toString
+    val dir = tempDir("graft_jl_pin").toString
     rows.toDF("vec_id", "embedding")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
 
@@ -111,7 +111,7 @@ class JlWhitenSpec extends SparkSpec {
   }
 
   test("empty corpus yields empty frames with the full schemas") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_jl_empty").toString
+    val dir = tempDir("graft_jl_empty").toString
     import spark.implicits._
     Seq.empty[(Long, Seq[Float])].toDF("vec_id", "embedding")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")

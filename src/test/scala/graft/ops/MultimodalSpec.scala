@@ -19,7 +19,7 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("binaryFile ingestion: a directory of PNGs decodes to real dimensions") {
-    val dir = java.nio.file.Files.createTempDirectory("png_ingest")
+    val dir = tempDir("png_ingest")
     java.nio.file.Files.write(dir.resolve("a.png"), png(33, 21))
     java.nio.file.Files.write(dir.resolve("b.png"), png(48, 12))
     java.nio.file.Files.write(dir.resolve("ignore.txt"), "not an image".getBytes)

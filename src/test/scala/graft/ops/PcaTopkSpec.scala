@@ -32,7 +32,7 @@ class PcaTopkSpec extends SparkSpec {
       (i.toLong, v.toSeq)
     }
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_pca_plant").toString
+    val dir = tempDir("graft_pca_plant").toString
     rows.toDF("vec_id", "embedding")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
 
@@ -67,7 +67,7 @@ class PcaTopkSpec extends SparkSpec {
   }
 
   test("empty corpus yields an empty 9-column frame") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_pca_empty").toString
+    val dir = tempDir("graft_pca_empty").toString
     import spark.implicits._
     Seq.empty[(Long, Seq[Float])].toDF("vec_id", "embedding")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
@@ -81,7 +81,7 @@ class PcaTopkSpec extends SparkSpec {
     // the scatterSolve memo must only pin the Some case — a query
     // issued before the corpus lands must not freeze "empty" for the
     // rest of the session (the pcaSolve / ivfInt8Centroids rule)
-    val dir = java.nio.file.Files.createTempDirectory("graft_pca_late").toString
+    val dir = tempDir("graft_pca_late").toString
     import spark.implicits._
     Seq.empty[(Long, Seq[Float])].toDF("vec_id", "embedding")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")

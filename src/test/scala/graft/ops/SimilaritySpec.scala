@@ -272,44 +272,38 @@ class SimilaritySpec extends SparkSpec {
         (t * u(j) + ((i * 31 + j * 17) % 7 - 3)).toFloat)
       (i.toLong, emb, 0)
     }
-    val d = java.nio.file.Files.createTempDirectory("graft_pca").toString
-    try {
-      rows.toDF("vec_id", "embedding", "label")
-        .write.mode("overwrite").parquet(s"$d/embeddings.parquet")
-      val out = Similarity.queries("emb05_pca_project")(spark, d).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(out.size == 400)
-      val ts = rows.map(r => if (r._1 % 2 == 0) 200.0 else -200.0)
-      val ps = rows.map(r => out(r._1).toDouble)
-      def corr(a: Seq[Double], b: Seq[Double]): Double = {
-        val (ma, mb) = (a.sum / a.size, b.sum / b.size)
-        val cov = a.zip(b).map { case (x, y) => (x - ma) * (y - mb) }.sum
-        val (va, vb) = (a.map(x => (x - ma) * (x - ma)).sum,
-          b.map(x => (x - mb) * (x - mb)).sum)
-        cov / math.sqrt(va * vb)
-      }
-      val c = corr(ts, ps)
-      assert(math.abs(c) > 0.99, s"pc1 lost the planted axis: corr $c")
-      // reproducibility: the projection is a pure function of the corpus
-      val again = Similarity.queries("emb05_pca_project")(spark, d).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(again == out, "emb05 not deterministic across invocations")
-
-      // emb06 on the same corpus: a planted 1-D structure means pc1
-      // captures nearly all the variance (λ₁/trace ≈ 1), and λ₁ can
-      // never exceed the trace of a PSD scatter
-      val v6 = Similarity.queries("emb06_pca_variance")(spark, d).head
-      assert(v6.getLong(0) == 400)
-      val (trace, lamE4, ratioE6) = (v6.getLong(1), v6.getLong(2), v6.getLong(3))
-      assert(trace > 0)
-      assert(lamE4 <= trace * 10000L, s"lambda $lamE4 exceeds trace $trace")
-      assert(ratioE6 > 900000L,
-        s"planted 1-D corpus but pc1 explains only $ratioE6 / 1e6 of variance")
-    } finally {
-      val root = java.nio.file.Paths.get(d)
-      java.nio.file.Files.walk(root).sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => java.nio.file.Files.deleteIfExists(f))
+    val d = tempDir("graft_pca").toString
+    rows.toDF("vec_id", "embedding", "label")
+      .write.mode("overwrite").parquet(s"$d/embeddings.parquet")
+    val out = Similarity.queries("emb05_pca_project")(spark, d).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(out.size == 400)
+    val ts = rows.map(r => if (r._1 % 2 == 0) 200.0 else -200.0)
+    val ps = rows.map(r => out(r._1).toDouble)
+    def corr(a: Seq[Double], b: Seq[Double]): Double = {
+      val (ma, mb) = (a.sum / a.size, b.sum / b.size)
+      val cov = a.zip(b).map { case (x, y) => (x - ma) * (y - mb) }.sum
+      val (va, vb) = (a.map(x => (x - ma) * (x - ma)).sum,
+        b.map(x => (x - mb) * (x - mb)).sum)
+      cov / math.sqrt(va * vb)
     }
+    val c = corr(ts, ps)
+    assert(math.abs(c) > 0.99, s"pc1 lost the planted axis: corr $c")
+    // reproducibility: the projection is a pure function of the corpus
+    val again = Similarity.queries("emb05_pca_project")(spark, d).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(again == out, "emb05 not deterministic across invocations")
+
+    // emb06 on the same corpus: a planted 1-D structure means pc1
+    // captures nearly all the variance (λ₁/trace ≈ 1), and λ₁ can
+    // never exceed the trace of a PSD scatter
+    val v6 = Similarity.queries("emb06_pca_variance")(spark, d).head
+    assert(v6.getLong(0) == 400)
+    val (trace, lamE4, ratioE6) = (v6.getLong(1), v6.getLong(2), v6.getLong(3))
+    assert(trace > 0)
+    assert(lamE4 <= trace * 10000L, s"lambda $lamE4 exceeds trace $trace")
+    assert(ratioE6 > 900000L,
+      s"planted 1-D corpus but pc1 explains only $ratioE6 / 1e6 of variance")
   }
 
   test("emb10 k-center: matches a driver-side farthest-point replay, " +

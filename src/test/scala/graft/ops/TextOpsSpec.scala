@@ -159,28 +159,22 @@ class TextOpsSpec extends SparkSpec {
   test("tx17 BPE: overlapping-run merges are left-to-right non-overlapping") {
     // 'oo'-heavy corpus forces an l = r merge; "oooo" must become
     // [oo][oo] and "ooo" [oo][o] — the Sennrich scan, not a re-merge
-    val d = java.nio.file.Files.createTempDirectory("graft_bpe").toString
-    try {
-      import spark.implicits._
-      val texts = Seq("oooo oooo ooo zq", "oooo ooo oo zq", "oooo oooo oo")
-      texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
-        .toDF("doc_id", "text")
-        .coalesce(1).write.parquet(s"$d/documents.parquet")
-      val got = TextAnalysis.queries("tx17_bpe_train")(spark, d).collect()
-        .map(r => (r.getInt(0), r.getString(1), r.getString(2),
-          r.getString(3), r.getLong(4))).sortBy(_._1).toSeq
-      val want = refBpe(texts, 10)
-      assert(got == want, s"got $got\nwant $want")
-      // the winning first merge is (o,o); its count is adjacency
-      // occurrences (3 in "oooo", overlaps included, as in Sennrich's
-      // get_stats) while the APPLIED merge is non-overlapping — the
-      // reference's mergeWord asserts that distinction above
-      assert(got.head._2 == "o" && got.head._3 == "o")
-    } finally {
-      val root = java.nio.file.Paths.get(d)
-      java.nio.file.Files.walk(root).sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => java.nio.file.Files.deleteIfExists(f))
-    }
+    val d = tempDir("graft_bpe").toString
+    import spark.implicits._
+    val texts = Seq("oooo oooo ooo zq", "oooo ooo oo zq", "oooo oooo oo")
+    texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+      .toDF("doc_id", "text")
+      .coalesce(1).write.parquet(s"$d/documents.parquet")
+    val got = TextAnalysis.queries("tx17_bpe_train")(spark, d).collect()
+      .map(r => (r.getInt(0), r.getString(1), r.getString(2),
+        r.getString(3), r.getLong(4))).sortBy(_._1).toSeq
+    val want = refBpe(texts, 10)
+    assert(got == want, s"got $got\nwant $want")
+    // the winning first merge is (o,o); its count is adjacency
+    // occurrences (3 in "oooo", overlaps included, as in Sennrich's
+    // get_stats) while the APPLIED merge is non-overlapping — the
+    // reference's mergeWord asserts that distinction above
+    assert(got.head._2 == "o" && got.head._3 == "o")
   }
 
   test("tx21 Kneser–Ney: proper distribution per head, scores ≤ 0, " +

@@ -114,7 +114,7 @@ class AsofKeylessSpec extends SparkSpec {
   test("a plan built over an EMPTY build side is the REAL composition " +
       "at a default width, not a frozen all-null projection") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_ka_late").toString
+    val dir = tempDir("graft_ka_late").toString
     Seq.empty[(Long, Long)].toDF("bt", "b_id")
       .write.mode("overwrite").parquet(s"$dir/build.parquet")
     val probe = Seq((1L, 25L), (2L, 5L)).toDF("id", "t")

@@ -1,46 +1,12 @@
 package graft.plans
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-
 import graft.SparkSpec
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.graft.{OptimizeSkewedGraftJoin, PlanBridge}
 
 /** The [[TimeJoin]] descriptor is the one place a time join's arguments
   * are checked, and every entry point checks them before it plans or
   * runs anything. */
 class TimeJoinSpec extends SparkSpec {
-
-  /** Spark jobs started by `f` on this thread. Listener events arrive
-    * asynchronously but in order, so once a marker job submitted after
-    * `f` is seen, every job `f` started has been counted. */
-  private def jobsDuring(s: SparkSession)(f: => Unit): Int = {
-    val sc = s.sparkContext
-    val group = s"time-join-args-${System.nanoTime}"
-    val marker = s"$group-marker"
-    val started = new AtomicInteger(0)
-    val markerSeen = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => started.incrementAndGet()
-          case Some(`marker`) => markerSeen.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "time join argument checks")
-      try f finally sc.clearJobGroup()
-      sc.setJobGroup(marker, "listener flush")
-      try s.range(1).count() finally sc.clearJobGroup()
-      assert(markerSeen.await(60, TimeUnit.SECONDS),
-        "the listener never saw the marker job")
-      started.get
-    } finally sc.removeSparkListener(listener)
-  }
 
   test("the descriptor rejects a bad direction, hint, band or key list") {
     intercept[IllegalArgumentException](Asof("backwards"))

@@ -15,7 +15,7 @@ class DedupStreamSpec extends SparkSpec {
     .select(col("doc_id"), col("fp"))
 
   test("streaming keep-first equals batch keep-first on the same corpus") {
-    val dir = java.nio.file.Files.createTempDirectory("docs_stream")
+    val dir = tempDir("docs_stream")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/documents.parquet"),
       dir.resolve("documents.parquet"))
@@ -45,7 +45,7 @@ class DedupStreamSpec extends SparkSpec {
 
   test("cross-trigger duplicates are dropped (first trigger wins)") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("docs_stream2")
+    val dir = tempDir("docs_stream2")
     // trigger 1: ids 1-3; trigger 2 (same texts, higher ids) must vanish
     Seq((1L, "alpha beta"), (2L, "gamma delta"), (3L, "epsilon zeta"))
       .toDF("doc_id", "text").coalesce(1)
@@ -71,7 +71,7 @@ class DedupStreamSpec extends SparkSpec {
     import spark.implicits._
     val standing = Seq((1L, "alpha beta"), (2L, "gamma delta"))
       .toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("docs_standing")
+    val dir = tempDir("docs_standing")
     // trigger 1: a standing dup (alpha), a new doc, and its in-trigger twin
     Seq((100L, "ALPHA  beta"), (101L, "new one"), (102L, "new one"))
       .toDF("doc_id", "text").coalesce(1).write.parquet(s"$dir/b0")
@@ -99,7 +99,7 @@ class DedupStreamSpec extends SparkSpec {
     val docs = graft.Tables.load(spark, sf, "documents")
       .select(col("doc_id"), col("text"))
     val standing = docs.filter(col("doc_id") % 5 =!= 0)
-    val dir = java.nio.file.Files.createTempDirectory("docs_standing_sf")
+    val dir = tempDir("docs_standing_sf")
     docs.filter(col("doc_id") % 5 === 0)
       .coalesce(1).write.parquet(s"$dir/batch")
     val q = DedupStream.dedupWithStanding(spark,
@@ -163,7 +163,7 @@ class DedupStreamSpec extends SparkSpec {
     // fingerprint — the streaming answer is the FIRST-TRIGGER keeper
     // (10), where batch over the union would keep min doc_id (1). This
     // pins the divergence explicitly instead of leaving it implicit.
-    val dir = java.nio.file.Files.createTempDirectory("docs_stream3")
+    val dir = tempDir("docs_stream3")
     Seq((10L, "alpha beta"), (20L, "gamma delta"))
       .toDF("doc_id", "text").coalesce(1)
       .write.parquet(s"$dir/b0")

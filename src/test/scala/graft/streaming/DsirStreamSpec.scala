@@ -31,45 +31,36 @@ class DsirStreamSpec extends SparkSpec {
 
     // streaming form: drop the corpus into a watched directory in two
     // files (two triggers) — stateless scoring is trigger-invariant
-    val dir = java.nio.file.Files.createTempDirectory("dsir_stream")
-    val q = try {
-      // FileStreamSource discovers FLAT files, not nested write dirs:
-      // stage each half, then move its part file into the watched dir
-      val docs = spark.read.parquet(s"$sf/documents.parquet")
-        .select("doc_id", "text", "lang").cache()
-      Seq("0" -> "drop1", "1" -> "drop2").foreach { case (par, name) =>
-        val stage = s"$dir/stage_$name"
-        docs.filter(s"doc_id % 2 = $par").coalesce(1).write.parquet(stage)
-        val part = new java.io.File(stage).listFiles()
-          .find(_.getName.endsWith(".parquet")).get
-        java.nio.file.Files.move(part.toPath,
-          dir.resolve(s"$name.parquet"))
-      }
-      // the cache only spans the two staging writes; the shared
-      // session outlives this suite
-      docs.unpersist()
-      val schema = StructType(Seq(
-        StructField("doc_id", LongType),
-        StructField("text", StringType),
-        StructField("lang", StringType)))
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(dir.toString)
-      Pipeline.dsirScore(stream, lam, mean)
-        .writeStream.format("memory").queryName("dsir_stream")
-        .outputMode("append").start()
-    } catch { case e: Throwable => cleanup(dir); throw e }
+    val dir = tempDir("dsir_stream")
+    // FileStreamSource discovers FLAT files, not nested write dirs:
+    // stage each half, then move its part file into the watched dir
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+      .select("doc_id", "text", "lang").cache()
+    Seq("0" -> "drop1", "1" -> "drop2").foreach { case (par, name) =>
+      val stage = s"$dir/stage_$name"
+      docs.filter(s"doc_id % 2 = $par").coalesce(1).write.parquet(stage)
+      val part = new java.io.File(stage).listFiles()
+        .find(_.getName.endsWith(".parquet")).get
+      java.nio.file.Files.move(part.toPath,
+        dir.resolve(s"$name.parquet"))
+    }
+    // the cache only spans the two staging writes; the shared
+    // session outlives this suite
+    docs.unpersist()
+    val schema = StructType(Seq(
+      StructField("doc_id", LongType),
+      StructField("text", StringType),
+      StructField("lang", StringType)))
+    val stream = spark.readStream.schema(schema)
+      .option("maxFilesPerTrigger", 1)
+      .parquet(dir.toString)
+    val q = Pipeline.dsirScore(stream, lam, mean)
+      .writeStream.format("memory").queryName("dsir_stream")
+      .outputMode("append").start()
     try {
       q.processAllAvailable()
       val streamed = asTuples(spark.table("dsir_stream").collect())
       assert(streamed == want, "streaming scorer diverged from pp15")
-    } finally { q.stop(); cleanup(dir) }
-  }
-
-  private def cleanup(dir: java.nio.file.Path): Unit = {
-    val s = java.nio.file.Files.walk(dir)
-    try s.sorted(java.util.Comparator.reverseOrder())
-      .forEach(f => java.nio.file.Files.deleteIfExists(f))
-    finally s.close()
+    } finally q.stop()
   }
 }

@@ -10,7 +10,7 @@ class EventsStreamSpec extends SparkSpec {
   /** File stream sources consume directories (files get dropped in over
     * time) — stage the single events parquet into one. */
   private lazy val eventsDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("events_stream")
+    val dir = tempDir("events_stream")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"),
       dir.resolve("events.parquet"))
@@ -68,7 +68,7 @@ class EventsStreamSpec extends SparkSpec {
     // the class-doc pattern: the stream is declared before any file
     // exists; the footer probe cannot infer a schema and must fall back
     // to the current-generation NTZ layout instead of throwing
-    val dir = java.nio.file.Files.createTempDirectory("events_empty")
+    val dir = tempDir("events_empty")
     val stream = EventsStream.readEvents(spark, dir.toString, maxFilesPerTrigger = 100)
     val q = stream.writeStream.format("memory").queryName("late_start")
       .outputMode("append").start()
@@ -94,7 +94,7 @@ class EventsStreamSpec extends SparkSpec {
 
   test("streaming exact dedup: dropDuplicates with watermark removes replayed events") {
     // duplicate the events file in the drop dir → every event arrives twice
-    val dir = java.nio.file.Files.createTempDirectory("events_dup")
+    val dir = tempDir("events_dup")
     java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sf/events.parquet"),
       dir.resolve("a.parquet"))
     java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sf/events.parquet"),
@@ -406,7 +406,7 @@ class EventsStreamSpec extends SparkSpec {
 
   test("STREAMING corpus semantic decontamination matches the " +
       "oracle-gated batch dc04 (stateless fold per microbatch)") {
-    val dir = java.nio.file.Files.createTempDirectory("emb_stream")
+    val dir = tempDir("emb_stream")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/embeddings.parquet"),
       dir.resolve("embeddings.parquet"))

@@ -24,7 +24,7 @@ class SketchStreamSpec extends SparkSpec {
   }
 
   test("streamed CMS cells equal the batch aggregate after all triggers") {
-    val dir = java.nio.file.Files.createTempDirectory("events_cms")
+    val dir = tempDir("events_cms")
     // two triggers: split the corpus so cross-trigger accumulation is
     // actually exercised (file 1 lands, then file 2)
     val ev = graft.Tables.load(spark, sf, "events")
@@ -49,7 +49,7 @@ class SketchStreamSpec extends SparkSpec {
   }
 
   test("mid-stream cells equal the batch aggregate over the prefix seen so far") {
-    val dir = java.nio.file.Files.createTempDirectory("events_cms2")
+    val dir = tempDir("events_cms2")
     val ev = graft.Tables.load(spark, sf, "events")
     val firstHalf = ev.filter(col("event_id") % 2 === 0)
     firstHalf.coalesce(1).write.parquet(dir.resolve("drop").toString)
@@ -74,7 +74,7 @@ class SketchStreamSpec extends SparkSpec {
   }
 
   test("streamed histogram bins equal the batch aggregate after cross-trigger accumulation") {
-    val dir = java.nio.file.Files.createTempDirectory("li_hist")
+    val dir = tempDir("li_hist")
     val li = graft.Tables.load(spark, sf, "lineitem")
       .select((col("l_extendedprice").cast("decimal(18,2)") * 100)
         .cast("long").as("x"), col("l_orderkey"))
@@ -107,7 +107,7 @@ class SketchStreamSpec extends SparkSpec {
   }
 
   test("keyed HLL registers equal the per-month batch sketches — the q08e streaming feed") {
-    val dir = java.nio.file.Files.createTempDirectory("li_hllk")
+    val dir = tempDir("li_hllk")
     val li = graft.Tables.load(spark, sf, "lineitem")
       .select(date_format(trunc(col("l_shipdate"), "month"), "yyyy-MM").as("k"),
         concat_ws("_", col("l_partkey"), col("l_suppkey")).as("key"),
@@ -144,7 +144,7 @@ class SketchStreamSpec extends SparkSpec {
   }
 
   test("streamed HLL registers equal the batch aggregate, and a replayed file changes nothing") {
-    val dir = java.nio.file.Files.createTempDirectory("docs_hll")
+    val dir = tempDir("docs_hll")
     val docs = graft.Tables.load(spark, sf, "documents")
       .select(col("doc_id").cast("string").as("key"))
     docs.coalesce(1).write.parquet(dir.resolve("drop").toString)
@@ -184,7 +184,7 @@ class SketchStreamSpec extends SparkSpec {
     // the seq column) is actually exercised
     val vecs = Seq.fill(300)(Array.fill(dim)(rnd.nextInt(101) - 50))
     val (first, second) = vecs.splitAt(150)
-    val dir = java.nio.file.Files.createTempDirectory("scatter_stream")
+    val dir = tempDir("scatter_stream")
     first.map(Tuple1(_)).toDF("c").coalesce(1)
       .write.parquet(dir.resolve("in").toString)
     val src = spark.readStream

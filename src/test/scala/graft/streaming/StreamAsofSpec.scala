@@ -19,10 +19,10 @@ class StreamAsofSpec extends SparkSpec {
   /** purchases file, then views file, then the watermark-push sentinels
     * — one file per trigger (maxFilesPerTrigger = 1). */
   private lazy val stagedDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("stream_asof")
+    val dir = tempDir("stream_asof")
     val ev = graft.Tables.load(spark, sf, "events")
     def stage(df: DataFrame, name: String, mtime: Long): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory(s"stage_$name")
+      val tmp = tempDir(s"stage_$name")
       df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val part = java.nio.file.Files.list(tmp).toArray.map(_.toString)
         .filter(p => p.endsWith(".parquet") && !p.contains("_SUCCESS"))
@@ -162,7 +162,7 @@ class StreamAsofSpec extends SparkSpec {
     // columns) only matters on (key, time) ties — stage the views
     // PRE-DEDUPED per (user, ts) to max event_id so batch and stream
     // agree without sharing a tie rule, then compare exactly
-    val dir = java.nio.file.Files.createTempDirectory("stream_asof_fwd")
+    val dir = tempDir("stream_asof_fwd")
     val ev = graft.Tables.load(spark, sf, "events")
     val dedupViews = ev.filter(col("event_type") === "view")
       .groupBy(col("user_id"), col("ts"))
@@ -172,7 +172,7 @@ class StreamAsofSpec extends SparkSpec {
         lit(null).cast("string").as("props"))
     val purchases = ev.filter(col("event_type") === "purchase")
     def stage(df: DataFrame, name: String, mtime: Long): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory(s"stg_$name")
+      val tmp = tempDir(s"stg_$name")
       df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val part = java.nio.file.Files.list(tmp).toArray.map(_.toString)
         .filter(p => p.endsWith(".parquet") && !p.contains("_SUCCESS"))
@@ -238,7 +238,7 @@ class StreamAsofSpec extends SparkSpec {
     // user within tolerance. Build side pre-reduced to one row per ts
     // (the batch keyless determinism contract) so batch and stream
     // need no shared tie rule.
-    val dir = java.nio.file.Files.createTempDirectory("stream_asof_kl")
+    val dir = tempDir("stream_asof_kl")
     val ev = graft.Tables.load(spark, sf, "events")
     val dedupViews = ev.filter(col("event_type") === "view")
       .groupBy(col("ts"))
@@ -247,7 +247,7 @@ class StreamAsofSpec extends SparkSpec {
         col("m.user_id").as("user_id"), lit("view").as("event_type"),
         lit(0.0).as("value"), lit(null).cast("string").as("props"))
     def stage(df: DataFrame, name: String, mtime: Long): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory(s"stgk_$name")
+      val tmp = tempDir(s"stgk_$name")
       df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val part = java.nio.file.Files.list(tmp).toArray.map(_.toString)
         .filter(p => p.endsWith(".parquet") && !p.contains("_SUCCESS"))
