@@ -17,11 +17,17 @@ import graft.ingest._
   * read → flatten → whitelist projection → optional file sinks →
   * optional atomic JDBC load → archive input.
   *
-  * Each sink is one pass over the file, as the reference reads each
-  * record once. The row count is observed on the first sink's job
-  * (`Dataset.observe`), not counted by a job of its own; only a run with
-  * no sink counts separately. With every sink that is 4 Spark jobs per
-  * file: CSV, JSON, xlsx and the JDBC load.
+  * The file is read, parsed and flattened once, as the reference reads
+  * each record once and fans it out to its sinks. With `--export-dir`
+  * the run makes two or more passes, so the projected rows are persisted
+  * (`MEMORY_AND_DISK`): the first sink's job parses, flattens and caches
+  * them, every later sink reads the cache, and the cache is released
+  * after the sinks, also when one throws. A run with one sink or none
+  * reads the file in that one pass and caches nothing. The row count is
+  * observed on the first sink's job (`Dataset.observe`), not counted by
+  * a job of its own; only a run with no sink counts separately. With
+  * every sink that is 4 Spark jobs per file: CSV, JSON, xlsx and the
+  * JDBC load.
   */
 object Main {
 
@@ -80,49 +86,59 @@ object Main {
     val flat = JsonIngest.applyMapping(Flatten(raw), mapping)
     val projected = JsonIngest.projectWhitelist(flat, whitelist,
       IngestSchema.flattened.fields.map(f => f.name -> f.dataType).toMap)
+    // the exports (and the JDBC load after them) are two or more passes:
+    // they share one persisted copy; one pass would only pay for the cache
+    val exports = args.exportDir != null
+    if (exports) projected.persist()
     val rows = Observation()
     lazy val observed = projected.observe(rows, count(lit(1)).as("n"))
-
-    if (args.exportDir != null) {
-      Sinks.csv(observed, s"${args.exportDir}/csv")
-      Sinks.json(projected, s"${args.exportDir}/json")
-      Sinks.xlsx(projected, s"${args.exportDir}/export.xlsx")
-    }
-    if (args.jdbc) {
-      // --jdbc-url overrides the config-derived DSN (e.g. embedded Derby
-      // for local runs); otherwise config.yaml assembles the URL exactly
-      // like the reference (main.go:162)
-      val props = new Properties()
-      val (url, fileDest) = if (args.jdbcUrl != null) {
-        (args.jdbcUrl, "/tmp/graft-archive")
-      } else {
-        val cfgPath = Option(args.configPath).getOrElse(IngestConfig.discover())
-        val cfg = IngestConfig.load(cfgPath)
-        props.setProperty("user", cfg.database.user)
-        props.setProperty("password", cfg.database.password)
-        (cfg.database.jdbcUrl, cfg.runtime.fileDestination)
+    try {
+      if (exports) {
+        Sinks.csv(observed, s"${args.exportDir}/csv")
+        Sinks.json(projected, s"${args.exportDir}/json")
+        Sinks.xlsx(projected, s"${args.exportDir}/export.xlsx")
       }
-      val res = JdbcTransactionalSink.write(
-        if (args.exportDir == null) observed else projected, url, props, args.table)
-      // the reference logs total/succeeded/errors at main.go:132-138
-      log.info(new StringMapMessage()
-        .`with`("event", "ingest_complete")
-        .`with`("file", args.file)
-        .`with`("model", args.model)
-        .`with`("table", args.table)
-        .`with`("total", res.total.toString)
-        .`with`("succeeded", res.succeeded.toString)
-        .`with`("errors", res.errors.toString)
-        .`with`("committed", res.committed.toString))
-      println(s"[graft] table=${args.table} total=${res.total} " +
-        s"succeeded=${res.succeeded} errors=${res.errors} committed=${res.committed}")
-      if (args.archive && res.committed)
-        Archive.moveInputFile(args.file, fileDest)
-    }
+      if (args.jdbc) load(args, if (exports) projected else observed)
+    } finally if (exports) projected.unpersist(blocking = true)
     val n =
-      if (args.exportDir != null || args.jdbc) rows.get("n").asInstanceOf[Long]
+      if (exports || args.jdbc) rows.get("n").asInstanceOf[Long]
       else projected.count()
     (projected, n)
+  }
+
+  /** The atomic JDBC load, then the archive move if it committed.
+    * `--jdbc-url` overrides the config-derived DSN (e.g. embedded Derby
+    * for local runs); otherwise config.yaml assembles the URL exactly
+    * like the reference (main.go:162). The archive goes to the config's
+    * FILE_DESTINATION whenever `--config` is given, as in the reference;
+    * with `--jdbc-url` and no `--config` it goes to /tmp/graft-archive. */
+  private def load(args: Args, df: DataFrame): Unit = {
+    val props = new Properties()
+    val cfg = Option(args.configPath)
+      .orElse(Option.when(args.jdbcUrl == null)(IngestConfig.discover()))
+      .map(IngestConfig.load(_))
+    val url = Option(args.jdbcUrl).getOrElse {
+      val db = cfg.get.database // loaded: there is no --jdbc-url
+      props.setProperty("user", db.user)
+      props.setProperty("password", db.password)
+      db.jdbcUrl
+    }
+    val res = JdbcTransactionalSink.write(df, url, props, args.table)
+    // the reference logs total/succeeded/errors at main.go:132-138
+    log.info(new StringMapMessage()
+      .`with`("event", "ingest_complete")
+      .`with`("file", args.file)
+      .`with`("model", args.model)
+      .`with`("table", args.table)
+      .`with`("total", res.total.toString)
+      .`with`("succeeded", res.succeeded.toString)
+      .`with`("errors", res.errors.toString)
+      .`with`("committed", res.committed.toString))
+    println(s"[graft] table=${args.table} total=${res.total} " +
+      s"succeeded=${res.succeeded} errors=${res.errors} committed=${res.committed}")
+    if (args.archive && res.committed)
+      Archive.moveInputFile(args.file,
+        cfg.fold("/tmp/graft-archive")(_.runtime.fileDestination))
   }
 
   /** Extension-based format dispatch (fileloader.go:246-253). */

@@ -2,6 +2,8 @@ package graft.ingest
 
 import java.io.{BufferedOutputStream, FileOutputStream}
 import java.util.zip.{ZipEntry, ZipOutputStream}
+import org.apache.logging.log4j.LogManager
+import org.apache.logging.log4j.message.StringMapMessage
 import org.apache.spark.sql.DataFrame
 
 /** File sinks: CSV / JSON (stock Spark writers, fixed column order —
@@ -28,7 +30,8 @@ object Sinks {
     * driver never materializes the full dataset (the reference's Excel
     * export is whole-file in memory; this is the bounded-memory form).
     * xlsx is a driver-side exchange format, not a data-scale sink —
-    * capped at `maxRows` to keep it honest. */
+    * capped at `maxRows` to keep it honest; a cap that drops rows warns
+    * (`event=xlsx_truncated`). */
   def xlsx(df: DataFrame, path: String, sheet: String = "Sheet1",
       maxRows: Int = 1000000): Unit = {
     val cols = df.columns
@@ -78,6 +81,14 @@ object Sinks {
       val r = it.next()
       row(cols.indices.map(i => if (r.isNullAt(i)) "" else String.valueOf(r.get(i))))
       n += 1
+    }
+    if (it.hasNext) {
+      // rows past the cap are dropped: say so, never silently
+      LogManager.getLogger("graft.ingest").warn(new StringMapMessage()
+        .`with`("event", "xlsx_truncated")
+        .`with`("path", path)
+        .`with`("rows", n.toString))
+      System.err.println(s"[ingest] xlsx export truncated at $n rows: $path")
     }
     w("</sheetData></worksheet>")
     zos.closeEntry()

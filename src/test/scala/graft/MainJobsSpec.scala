@@ -7,11 +7,17 @@ import scala.concurrent.ExecutionContext.Implicits.global
 import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 import scala.util.Try
+import org.apache.spark.scheduler.{SparkListenerBlockUpdated, SparkListenerJobEnd,
+  SparkListenerJobStart}
+import org.apache.spark.sql.graft.CacheProbe
 import graft.ingest.IngestSchema
 
-/** `Main.run` makes one pass over the file per sink: with every sink it
-  * runs exactly 4 Spark jobs (CSV, JSON, xlsx, JDBC), and the row count
-  * it returns is observed on the first sink's job. */
+/** `Main.run` reads and flattens the file once: with two or more passes
+  * (`--export-dir`, maybe with `--jdbc`) the first sink's job persists
+  * the projected rows, the later sinks read them, and they are released
+  * after the sinks, also when a sink throws. With every sink it runs
+  * exactly 4 Spark jobs (CSV, JSON, xlsx, JDBC), and the row count it
+  * returns is observed on the first sink's job. */
 class MainJobsSpec extends SparkSpec {
 
   private val url = "jdbc:derby:memory:graft_main_jobs;create=true"
@@ -67,6 +73,14 @@ class MainJobsSpec extends SparkSpec {
     } finally c.close()
   }
 
+  /** Persisted RDDs and cache-manager entries of the shared session. */
+  private def cacheState(): (Set[Int], Int) =
+    (spark.sparkContext.getPersistentRDDs.keySet.toSet, CacheProbe.entries(spark))
+
+  /** `Main.run` left no persisted RDD and no cache entry behind. */
+  private def assertReleased(before: (Set[Int], Int)): Unit =
+    assert(cacheState() == before, s"cache state before the run: $before")
+
   /** Data lines of the CSV export: every part file has its own header. */
   private def csvDataLines(dir: Path): Long =
     Files.list(dir.resolve("csv")).iterator().asScala
@@ -81,12 +95,14 @@ class MainJobsSpec extends SparkSpec {
       val out = tempDir(s"main_jobs_out_$kind")
       val stdout = new java.io.ByteArrayOutputStream()
       var n = -1L
+      val cache = cacheState()
       val jobs = jobsDuring(spark) {
         n = Console.withOut(stdout) {
           Main.run(spark, Main.Args(file = file().toString, table = table,
             exportDir = out.toString, jdbc = true, jdbcUrl = url))._2
         }
       }
+      assertReleased(cache)
       assert(jobs == 4, s"Main.run ran $jobs Spark jobs")
       val expected = if (kind == "xml") 4L else 6L
       assert(n == expected)
@@ -102,10 +118,12 @@ class MainJobsSpec extends SparkSpec {
     val table = "main_jobs_jdbc_only"
     createTarget(table)
     var n = -1L
+    val cache = cacheState()
     val jobs = jobsDuring(spark) {
       n = Main.run(spark, Main.Args(file = jsonFile.toString, table = table,
         jdbc = true, jdbcUrl = url))._2
     }
+    assertReleased(cache)
     assert(jobs == 1, s"Main.run ran $jobs Spark jobs")
     assert(n == 6 && derbyRows(table) == 6)
   }
@@ -121,9 +139,11 @@ class MainJobsSpec extends SparkSpec {
       val f = tempDir("main_jobs_empty").resolve(name)
       Files.writeString(f, content)
       val out = tempDir("main_jobs_out_empty")
+      val cache = cacheState()
       val run = Future(Main.run(spark, Main.Args(file = f.toString, table = "t",
         exportDir = out.toString))._2)
       assert(Await.result(run, 2.minutes) == 0, name)
+      assertReleased(cache)
     }
   }
 
@@ -131,8 +151,34 @@ class MainJobsSpec extends SparkSpec {
       "for the row count") {
     val notADir = tempDir("main_jobs_bad").resolve("plain-file")
     Files.writeString(notADir, "not a directory")
+    val cache = cacheState()
     val run = Future(Try(Main.run(spark, Main.Args(file = xmlFile.toString,
       table = "t", exportDir = notADir.toString))))
     assert(Await.result(run, 2.minutes).isFailure)
+    assertReleased(cache)
+  }
+
+  test("the persisted rows are built in the first sink's job only") {
+    val table = "main_jobs_once"
+    createTarget(table)
+    val out = tempDir("main_jobs_out_once")
+    // bus order: "start"/"end" of each job, "block" for each RDD block
+    // stored (a removal reports an invalid storage level)
+    val events = scala.collection.mutable.ArrayBuffer[String]()
+    eventsDuring(spark) {
+      case _: SparkListenerJobStart => events += "start"
+      case _: SparkListenerJobEnd => events += "end"
+      case e: SparkListenerBlockUpdated if e.blockUpdatedInfo.blockId.isRDD &&
+          e.blockUpdatedInfo.storageLevel.isValid => events += "block"
+    } {
+      Console.withOut(new java.io.ByteArrayOutputStream()) {
+        Main.run(spark, Main.Args(file = xmlFile.toString, table = table,
+          exportDir = out.toString, jdbc = true, jdbcUrl = url))
+      }
+    }
+    val firstJob = events.slice(0, events.indexOf("end") + 1)
+    assert(events.count(_ == "start") == 4, events)
+    assert(firstJob.head == "start" && firstJob.contains("block"), events)
+    assert(events.count(_ == "block") == firstJob.count(_ == "block"), events)
   }
 }

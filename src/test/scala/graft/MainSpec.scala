@@ -63,6 +63,27 @@ class MainSpec extends SparkSpec {
       "/root/reference/data-schema.json", "NoSuchModel").isEmpty)
   }
 
+  test("--config names the archive destination also when --jdbc-url is given") {
+    val url = "jdbc:derby:memory:graft_main_archive;create=true"
+    val c = java.sql.DriverManager.getConnection(url)
+    try c.createStatement().execute("CREATE TABLE archived (" +
+      IngestSchema.sinkColumns.map(n =>
+        s""""$n" ${if (n.startsWith("dt_")) "BIGINT" else "VARCHAR(255)"}""").mkString(", ") + ")")
+    finally c.close()
+    val dir = tempDir("main_archive")
+    val in = dir.resolve("in.json")
+    java.nio.file.Files.writeString(in, """{"Records": [{"user": "u1"}]}""")
+    val dest = dir.resolve("archived")
+    val cfg = dir.resolve("config.yaml")
+    java.nio.file.Files.writeString(cfg, s"RUNTIME:\n  FILE_DESTINATION: $dest\n")
+    Console.withOut(new java.io.ByteArrayOutputStream()) {
+      Main.run(spark, Main.Args(file = in.toString, table = "archived", jdbc = true,
+        archive = true, jdbcUrl = url, configPath = cfg.toString))
+    }
+    assert(!java.nio.file.Files.exists(in))
+    assert(java.nio.file.Files.exists(dest.resolve("in.json")))
+  }
+
   test("parse: a full command line sets every field") {
     val got = Main.parse(Array("-file", "in.xml", "-model", "Record",
       "-table", "t", "--export-dir", "out", "--config", "c.yaml",

@@ -21,10 +21,12 @@ class FlattenSpec extends SparkSpec {
       FlattenRec(2, "b", Seq.empty),
       FlattenRec(3, "c", Seq(FlattenNested("f3", "t3"))))
     val out = Flatten(recs.toDF()).cache()
-    assert(out.count() == 2 + 1 + 1)
-    // k=0 record survives with null nested fields
-    val r2 = out.filter(col("id") === 2).collect()
-    assert(r2.length == 1 && r2(0).isNullAt(r2(0).fieldIndex("fnumber")))
+    try {
+      assert(out.count() == 2 + 1 + 1)
+      // k=0 record survives with null nested fields
+      val r2 = out.filter(col("id") === 2).collect()
+      assert(r2.length == 1 && r2(0).isNullAt(r2(0).fieldIndex("fnumber")))
+    } finally out.unpersist()
   }
 
   test("null array behaves like empty (1 base row)") {
@@ -51,9 +53,11 @@ class FlattenSpec extends SparkSpec {
   test("multiple distinct repeated keys: union of expansions, not cross product") {
     val df = Seq(TwoArrRec(1L, Seq(TwoArrA("a1"), TwoArrA("a2")), Seq(TwoArrB("b1")))).toDF()
     val out = Flatten(df).cache()
-    // 2 rows from `as` + 1 row from `bs` = 3 (cross product would be 2)
-    assert(out.count() == 3)
-    assert(out.filter(col("x").isNotNull && col("y").isNotNull).count() == 0)
+    try {
+      // 2 rows from `as` + 1 row from `bs` = 3 (cross product would be 2)
+      assert(out.count() == 3)
+      assert(out.filter(col("x").isNotNull && col("y").isNotNull).count() == 0)
+    } finally out.unpersist()
   }
 
   test("no array columns → identity") {

@@ -17,11 +17,13 @@ class IngestSpec extends SparkSpec {
 
   test("JSON fixture flattens to 20 golden rows with duplicated base fields") {
     val df = pipeline(JsonIngest.read(spark, jsonFixture)).cache()
-    assert(df.count() == 20)
-    assert(df.columns.toSeq == IngestSchema.sinkColumns)
-    // each record has 2 fnumbers → base fields duplicated across siblings
-    val g = df.groupBy(col("json_hash")).count().collect()
-    assert(g.forall(_.getLong(1) % 2 == 0))
+    try {
+      assert(df.count() == 20)
+      assert(df.columns.toSeq == IngestSchema.sinkColumns)
+      // each record has 2 fnumbers → base fields duplicated across siblings
+      val g = df.groupBy(col("json_hash")).count().collect()
+      assert(g.forall(_.getLong(1) % 2 == 0))
+    } finally df.unpersist()
   }
 
   test("JSON nulls survive: ast_name/local_id nullable per fixture") {
@@ -38,9 +40,11 @@ class IngestSpec extends SparkSpec {
 
   test("XML fixture flattens to 16 golden rows via the StAX reader") {
     val df = pipeline(XmlRecordReader.read(spark, xmlFixture, "Record", IngestSchema.raw)).cache()
-    assert(df.count() == 16)
-    assert(df.filter(col("fnumber").startsWith("FN")).count() == 16)
-    assert(df.schema("dt_created").dataType == LongType)
+    try {
+      assert(df.count() == 16)
+      assert(df.filter(col("fnumber").startsWith("FN")).count() == 16)
+      assert(df.schema("dt_created").dataType == LongType)
+    } finally df.unpersist()
   }
 
   test("XML repeated-tag promotion produces the fnumbers array") {
@@ -110,13 +114,15 @@ class IngestSpec extends SparkSpec {
 
   test("JSONL path: envelope records re-written as lines parse identically") {
     val env = pipeline(JsonIngest.read(spark, jsonFixture)).cache()
-    // rewrite the fixture's records as JSON-Lines
-    val lines = JsonIngest.read(spark, jsonFixture).toJSON.collect()
-    val f = tempDir("recs").resolve("recs.jsonl")
-    java.nio.file.Files.writeString(f, lines.mkString("\n"))
-    val jl = pipeline(JsonIngest.readJsonl(spark, f.toString))
-    assert(jl.collect().map(_.toString).sorted.toSeq ==
-      env.collect().map(_.toString).sorted.toSeq)
+    try {
+      // rewrite the fixture's records as JSON-Lines
+      val lines = JsonIngest.read(spark, jsonFixture).toJSON.collect()
+      val f = tempDir("recs").resolve("recs.jsonl")
+      java.nio.file.Files.writeString(f, lines.mkString("\n"))
+      val jl = pipeline(JsonIngest.readJsonl(spark, f.toString))
+      assert(jl.collect().map(_.toString).sorted.toSeq ==
+        env.collect().map(_.toString).sorted.toSeq)
+    } finally env.unpersist()
   }
 
   test("xlsx writer round-trips through the xlsx reader") {

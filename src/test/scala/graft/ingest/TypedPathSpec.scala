@@ -11,15 +11,17 @@ class TypedPathSpec extends SparkSpec {
   test("typed JSON path flattens the fixture to the same 20 rows as the DataFrame path") {
     val typed = TypedPath.flatten(
       TypedPath.readJson(spark, "/root/reference/test-loader.json")).cache()
-    assert(typed.count() == 20)
-    val dfPath = JsonIngest.projectWhitelist(
-      Flatten(JsonIngest.read(spark, "/root/reference/test-loader.json")),
-      IngestSchema.sinkColumns,
-      IngestSchema.flattened.fields.map(f => f.name -> f.dataType).toMap)
-    val a = typed.toDF().select(dfPath.columns.map(col): _*).collect()
-      .map(_.toSeq).toSet
-    val b = dfPath.collect().map(_.toSeq).toSet
-    assert(a == b, "typed and DataFrame paths must agree row-for-row")
+    try {
+      assert(typed.count() == 20)
+      val dfPath = JsonIngest.projectWhitelist(
+        Flatten(JsonIngest.read(spark, "/root/reference/test-loader.json")),
+        IngestSchema.sinkColumns,
+        IngestSchema.flattened.fields.map(f => f.name -> f.dataType).toMap)
+      val a = typed.toDF().select(dfPath.columns.map(col): _*).collect()
+        .map(_.toSeq).toSet
+      val b = dfPath.collect().map(_.toSeq).toSet
+      assert(a == b, "typed and DataFrame paths must agree row-for-row")
+    } finally typed.unpersist()
   }
 
   test("typed XML path flattens to 16 rows") {
@@ -35,12 +37,14 @@ class TypedPathSpec extends SparkSpec {
 
   test("sample-record generator: deterministic, typed flatten obeys Σ max(1,k)") {
     val ds = SampleData.generate(spark, 30).cache()
-    assert(ds.count() == 30)
-    val expected = ds.collect().map(r => math.max(1, r.fnumbers.size).toLong).sum
-    assert(TypedPath.flatten(ds).count() == expected)
-    // determinism
-    val again = SampleData.generate(spark, 30).collect().toSeq
-    assert(again == ds.collect().toSeq)
+    try {
+      assert(ds.count() == 30)
+      val expected = ds.collect().map(r => math.max(1, r.fnumbers.size).toLong).sum
+      assert(TypedPath.flatten(ds).count() == expected)
+      // determinism
+      val again = SampleData.generate(spark, 30).collect().toSeq
+      assert(again == ds.collect().toSeq)
+    } finally ds.unpersist()
   }
 
   test("jdbc sink honors numWriters (worker-count parity)") {
