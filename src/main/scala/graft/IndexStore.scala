@@ -81,6 +81,25 @@ object IndexStore {
 
   def dataPath(base: String): String = base + "/data"
 
+  // the temp directories unmanaged builds write to; each is deleted
+  // when the session memo entry that owns it is released
+  private val unmanagedDirs =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
+  /** A new temp directory for an [[Unmanaged]] build. Session-scoped by
+    * design: the memo holding the build calls [[releaseUnmanaged]] when
+    * it drops the entry (session end, a lost race, a replacement). */
+  def unmanagedDir(prefix: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toString
+    unmanagedDirs.add(dir)
+    dir
+  }
+
+  /** Delete `dir` if [[unmanagedDir]] made it; a store path is kept. */
+  def releaseUnmanaged(dir: String): Unit =
+    if (unmanagedDirs.remove(dir))
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+
   /** Last store decision per (corpus dir, index name):
     * "built" | "loaded" | "rebuilt". For specs and ops visibility. */
   private[graft] val lastAction =

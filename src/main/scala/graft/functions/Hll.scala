@@ -106,7 +106,7 @@ object Hll {
 
   /** Integer register sum Σ 2^(33−M_j) over a collected register
     * array — exact in a BIGINT (≤ m·2^33); zero registers contribute
-    * 2^33. The single definition q08d/q08e/SketchStress share. */
+    * 2^33. The single definition q08d/q08e/the sketch gate share. */
   private[graft] def regSum(regs: Seq[Int]): Long =
     regs.foldLeft(0L)((a, m) => a + (1L << (33 - m)))
 
@@ -217,7 +217,7 @@ object Hll {
   }
 
   /** Scalar form of [[rawEstimate]] — same operations in the same
-    * order, for driver-side audits (SketchStress). */
+    * order, for driver-side audits (the sketch scale gate). */
   private[graft] def rawEstimate(regSum: Long, m: Int): Double =
     0.7213 / (1.0 + 1.079 / m.toDouble) *
       (m.toDouble * m.toDouble * 8589934592.0) / regSum.toDouble

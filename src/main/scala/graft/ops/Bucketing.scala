@@ -93,9 +93,11 @@ object Bucketing {
   // 1/64 of the key space touches ~4 of 256 partitions instead of
   // scanning the table.
   // Only a built layout is memoized: the None (empty corpus) verdict
-  // re-runs the cheap maxima probe until a layout exists.
+  // re-runs the cheap maxima probe until a layout exists. Releasing an
+  // entry deletes an unmanaged layout's temp directory.
   private val zBuilt = new graft.SessionMemo[String,
-    Option[(String, Long, Long, Long, Long)]](keep = _.isDefined)
+    Option[(String, Long, Long, Long, Long)]](keep = _.isDefined,
+    release = _.foreach(z => graft.IndexStore.releaseUnmanaged(z._1)))
 
   // analyzed-plan memo of the layout read-back (see bk02): keyed by the
   // layout path, which zBuilt/IndexStore already scope per corpus
@@ -136,9 +138,9 @@ object Bucketing {
           // corpus raced overwrite-vs-read on the same directory.
           // Cross-SESSION layout reuse is the managed (IndexStore)
           // path's job; unmanaged is session-scoped by design, and the
-          // zBuilt memo already makes it write-once per session.
-          val p = java.nio.file.Files.createTempDirectory(
-            s"graft_zorder_${dirSfx(d)}_").toString
+          // zBuilt memo already makes it write-once per session and
+          // deletes the directory when the session's entry goes.
+          val p = graft.IndexStore.unmanagedDir(s"graft_zorder_${dirSfx(d)}_")
           writeTo(p)
           p
         case graft.IndexStore.Fresh(base) =>

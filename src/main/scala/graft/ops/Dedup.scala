@@ -60,7 +60,7 @@ object Dedup {
     graft.functions.MinHash.minhashSig(sh)
 
   // The dd03 MinHash+LSH pipeline in its three stages, factored so the
-  // registered query and the 100x stress driver (tools.LshStress) run
+  // registered query and the 100x scale gate (tools.Scale lsh) run
   // the SAME code: signatures → band-bucket candidates → exact-Jaccard
   // verification. Every hash is md5-derived, so the DuckDB oracle
   // replays the whole pipeline (dd03's registry comment).
@@ -92,8 +92,8 @@ object Dedup {
     * them — same shuffle (16 bytes vs 8 per band row), zero band-hash
     * collisions, and trivially engine-portable for the oracle. This
     * join is the scale story: candidates are pairs sharing a band
-    * BUCKET, never an all-pairs product (LshStress gates the candidate
-    * count at 100x scale). */
+    * BUCKET, never an all-pairs product (the lsh scale gate bounds the
+    * candidate count at 100x scale). */
   private[graft] def lshCandidates(base: DataFrame): DataFrame = {
     val bands = base.select(col("doc_id"),
         posexplode(transform(sequence(lit(0), lit(31)),
@@ -112,7 +112,7 @@ object Dedup {
     * jaccard is EXACT set Jaccard over the shingle hashes (a fused
     * sorted-merge intersect), so the only approximation in the whole
     * pipeline is the candidate RECALL — which banding theory bounds
-    * and LshStress measures against planted pairs. */
+    * and the lsh scale gate measures against planted pairs. */
   private[graft] def lshVerify(base: DataFrame, cand: DataFrame,
       minJaccard: Double): DataFrame =
     cand
@@ -153,7 +153,7 @@ object Dedup {
     }
 
   /** dd12's span pipeline over an arbitrary (doc_id, text) corpus —
-    * also the entry tools.GramStress drives at 100x scale. With
+    * also the entry the gram scale gate drives at 100x scale. With
     * `spareOne` the globally minimal (doc_id, pos) occurrence of each
     * duplicated gram is NOT a duplicate start — Lee et al. 2022 §4.1's
     * actual "remove all but one occurrence" rule (dd13b), under which
@@ -249,8 +249,8 @@ object Dedup {
   }
 
   /** qa05's two-stage novelty aggregate over an arbitrary (doc_id,
-    * source, text) corpus — also the entry tools.GramStress drives at
-    * 100x scale. See qa05's registry comment for the shuffle shape. */
+    * source, text) corpus — also the entry the gram scale gate drives
+    * at 100x scale. See qa05's registry comment for the shuffle shape. */
   private[graft] def noveltyReport(docsIn: DataFrame, K: Int): DataFrame = {
     // The gram explode + per-gram md5 below fuse into the scan stage,
     // which on a single-row-group corpus runs on ONE core (measured: a
@@ -321,7 +321,7 @@ object Dedup {
 
   /** As [[connectedComponents]], additionally returning the number of
     * label-propagation rounds run (for scale diagnostics — see
-    * graft.tools.CcStress and docs/ROUND6.md). */
+    * the cc gate of graft.tools.Scale and docs/ROUND6.md). */
   def connectedComponentsWithStats(edges: DataFrame): (DataFrame, Int) = {
     val disk = org.apache.spark.storage.StorageLevel.DISK_ONLY
     val parts = edges.sparkSession.sessionState.conf.numShufflePartitions
@@ -341,9 +341,17 @@ object Dedup {
     // round 5 at 1M nodes). checkpoint() is also the 100 TB-honest
     // form: "write this round's label table, read it back".
     val ss = edges.sparkSession
-    if (ss.sparkContext.getCheckpointDir.isEmpty)
-      ss.sparkContext.setCheckpointDir(
-        java.nio.file.Files.createTempDirectory("graft_cc_ckpt").toString)
+    if (ss.sparkContext.getCheckpointDir.isEmpty) {
+      val dir = java.nio.file.Files.createTempDirectory("graft_cc_ckpt").toFile
+      ss.sparkContext.setCheckpointDir(dir.toString)
+      // the directory is the context's, shared by every session on it,
+      // so it goes when the application ends, not with one session
+      ss.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+        override def onApplicationEnd(
+            e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
+          org.apache.commons.io.FileUtils.deleteQuietly(dir)
+      })
+    }
     var labels = sym.select(col("src").as("node")).distinct()
       .select(col("node"), col("node").as("label"))
       .persist(disk)

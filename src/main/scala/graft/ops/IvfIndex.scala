@@ -41,14 +41,17 @@ object IvfIndex {
   }
 
   // one build per (session, source dir) — probes (bench reps, repeated
-  // query construction) reuse the materialized index
-  private val indexCache = new graft.SessionMemo[String, Index]
+  // query construction) reuse the materialized index. Releasing an
+  // entry (or a current pointer below) deletes an unmanaged build's
+  // temp directory.
+  private def releaseDir(idx: Index): Unit = graft.IndexStore.releaseUnmanaged(idx.dir)
+  private val indexCache = new graft.SessionMemo[String, Index](release = releaseDir)
 
   // unmanaged-mode "current" pointer: with no index root there is no
   // pointer FILE, so a drift rebuild publishes its handle here and
   // currentFor serves it session-scoped (the unmanaged contract — all
   // unmanaged state is session-scoped)
-  private val currentCache = new graft.SessionMemo[String, Index]
+  private val currentCache = new graft.SessionMemo[String, Index](release = releaseDir)
 
   // Posting read-back memo (round 16 — the bk02 z-layout lesson):
   // `s.read.parquet(index.dir)` re-LISTS the index's cell partition
@@ -113,8 +116,7 @@ object IvfIndex {
       tmpPrefix: String)(buildShared: String => Index): Index =
     graft.IndexStore.resolve(s, d, store, "embeddings") match {
       case graft.IndexStore.Unmanaged =>
-        buildShared(
-          java.nio.file.Files.createTempDirectory(tmpPrefix).toString)
+        buildShared(graft.IndexStore.unmanagedDir(tmpPrefix))
       case graft.IndexStore.Fresh(base) => loadIndex(s, base)
       case graft.IndexStore.Build(base, commit) =>
         try {

@@ -260,7 +260,7 @@ object Similarity {
 
   /** emb10's farthest-point traversal (Gonzalez greedy) over any
     * (vec_id, q) integer-vector frame — shared by the query and
-    * tools.SelectStress. K bounded driver rounds; each round is one
+    * the `select` scale gate. K bounded driver rounds; each round is one
     * map-only scan against ≤K in-plan literal centers topped by
     * orderBy+limit(1) (TakeOrderedAndProject — top-1 per partition, one
     * row per partition to the driver, no shuffle). Returns (round,

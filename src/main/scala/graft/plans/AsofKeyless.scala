@@ -115,10 +115,6 @@ object AsofKeyless {
     val spark = left.sparkSession
     val rCols = right.columns.toSeq
 
-    def nullExtended(df: DataFrame): DataFrame =
-      rCols.foldLeft(df)((d, c) =>
-        d.withColumn(c, lit(null).cast(right.schema(c).dataType)))
-
     val build = right.filter(col(rightTime).isNotNull)
     // Bucket width as a LAZY scalar subquery over the build side — no
     // job at plan-build time (EXPLAIN and re-analysis stay free); the
@@ -200,6 +196,6 @@ object AsofKeyless {
         .when(tolOk && !inMatched, col(s"__graft_c_$c")).as(c)
     }
     joined.select(outCols: _*)
-      .unionByName(nullExtended(lNull))
+      .unionByName(TimeJoin.nullExtended(lNull, right))
   }
 }

@@ -116,8 +116,6 @@ case class BandJoinExec(
     highUs: Long,
     isSkewJoin: Boolean = false) extends MergeTimeJoinExec[BandScanner] {
 
-  require(lowUs <= highUs, s"band bounds inverted: [$lowUs, $highUs]")
-
   protected def kind: String = "band"
 
   protected def scannerClass: Class[BandScanner] = classOf[BandScanner]

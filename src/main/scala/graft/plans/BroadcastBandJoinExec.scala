@@ -24,8 +24,6 @@ case class BroadcastBandJoinExec(
     lowUs: Long,
     highUs: Long) extends BroadcastTimeJoinExec[BroadcastBandProbe] {
 
-  require(lowUs <= highUs, s"band bounds inverted: [$lowUs, $highUs]")
-
   protected def kind: String = "band"
 
   protected def probeClass: Class[BroadcastBandProbe] = classOf[BroadcastBandProbe]

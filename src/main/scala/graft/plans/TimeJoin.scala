@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{DataFrame, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
@@ -86,6 +86,14 @@ object TimeJoin {
     dt == org.apache.spark.sql.types.LongType ||
       dt == org.apache.spark.sql.types.TimestampType ||
       dt == org.apache.spark.sql.types.TimestampNTZType
+
+  /** `df` with every column of `right` appended as a typed null — the
+    * row a probe that cannot match emits (SQL LEFT JOIN shape). The
+    * keyless and streaming compositions union it onto their matches. */
+  def nullExtended(df: DataFrame, right: DataFrame): DataFrame =
+    right.columns.foldLeft(df)((d, c) =>
+      d.withColumn(c, org.apache.spark.sql.functions.lit(null)
+        .cast(right.schema(c).dataType)))
 }
 
 /** The time join as a native Catalyst extension — the SURVEY §2.5

@@ -193,7 +193,8 @@ object Events {
     // error × every purchase of that user, filtered after), which is
     // quadratic in any one key's volume; the band merge is O(input +
     // output) with state bounded by the 30-minute band's occupancy.
-    // Same oracle as ev07; BandStress carries the 60M-event gate.
+    // Same oracle as ev07; the asof scale gate carries the 60M-event
+    // band legs.
     "ev07b_interval_native" -> { (s, d) =>
       val ev = Tables.load(s, d, "events").withColumn("us", unix_micros(col("ts")))
       // Null hygiene at the call site: the raw PlanBridge path keeps the

@@ -80,12 +80,6 @@ object StreamAsof {
         "delay)) — the join state cannot be bounded without one")
   }
 
-  /** `df` with every column of `right` appended as a typed null — the
-    * row a null-time probe emits (SQL LEFT JOIN shape). */
-  private def nullExtended(df: DataFrame, right: DataFrame): DataFrame =
-    right.columns.foldLeft(df)((d, c) =>
-      d.withColumn(c, lit(null).cast(right.schema(c).dataType)))
-
   // The unique-probe-row contract, surfaced LOUDLY once per JVM at
   // composition time (round-15 ADVICE): the as-of extremum aggregates
   // per probe row with every left column as the group key, so two
@@ -171,7 +165,7 @@ object StreamAsof {
       col("__m").getField(f).as(c)
     }
 
-    agg.select(outCols: _*).unionByName(nullExtended(lNull, right))
+    agg.select(outCols: _*).unionByName(TimeJoin.nullExtended(lNull, right))
   }
 
   /** KEYLESS stream-stream as-of with tolerance — "match every probe
@@ -257,7 +251,7 @@ object StreamAsof {
       col(rightTime) <= col(leftTime) + hiIv
     val outCols = (left.columns.toSeq ++ right.columns).map(col)
     lOk.join(rB, cond, "left_outer").select(outCols: _*)
-      .unionByName(nullExtended(lNull, right).select(outCols: _*))
+      .unionByName(TimeJoin.nullExtended(lNull, right).select(outCols: _*))
   }
 
   // floor division in pure long arithmetic (pmod >= 0 gives floor

@@ -1,24 +1,21 @@
 package graft.tools
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Connected-components stress driver: one giant low-diameter component
+/** Connected-components gate: one giant low-diameter component
   * (hub-and-spoke over 90% of the nodes) plus one LONG CHAIN over the
   * remaining 10% — the chain is the adversarial case for label
   * propagation, because the min label must traverse the full path and
   * only pointer jumping keeps the round count logarithmic (a 1M-node
   * chain must converge in ~log2(1M) ≈ 20 rounds, not 1M).
   *
-  * Prints one JSON line: node/edge counts, rounds, wall seconds,
-  * component count (must be exactly 2). Run:
-  *   tools/run.sh graft.tools.CcStress [nNodes]
+  * Size = nodes (default 10M); the component count must be exactly 2.
   * Results are recorded in docs/ROUND6.md.
   */
-object CcStress {
-  def main(args: Array[String]): Unit = {
-    val n = args.headOption.map(_.toLong).getOrElse(10000000L)
-    val spark = graft.GraftSession()
+private[tools] object CcGate {
 
+  def run(spark: SparkSession, n: Long): Scale.Measures = {
     val giantN = n / 10 * 9
     val hubs = 1024L
     // giant component: every node points at one of 1024 hubs; hubs form a
@@ -32,14 +29,11 @@ object CcStress {
       .select(col("id").as("a"), (col("id") + 1).as("b"))
     val edges = spokes.union(ring).union(chain)
 
-    val t0 = System.nanoTime()
     val (labels, rounds) = graft.ops.Dedup.connectedComponentsWithStats(edges)
     val comps = labels.select(col("cluster_rep")).distinct().count()
     val nodes = labels.count()
-    val wall = (System.nanoTime() - t0) / 1e9
-    println(s"""{"nodes":$nodes,"chain_nodes":${n - giantN},"rounds":$rounds,""" +
-      s""""wall_sec":$wall,"n_components":$comps}""")
     require(comps == 2, s"expected exactly 2 components, got $comps")
-    spark.stop()
+    Seq("nodes" -> nodes, "chain_nodes" -> (n - giantN), "rounds" -> rounds,
+      "n_components" -> comps)
   }
 }

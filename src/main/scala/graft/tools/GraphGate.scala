@@ -1,10 +1,12 @@
 package graft.tools
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.tools.Scale.timed
 
-/** Graph-analytics stress driver (the GramStress/SketchStress pattern
-  * applied to the graph family): synthetic graphs ~35-70x sf0.1's
-  * trade-graph edge count, generated map-side from spark.range, with
+/** Graph-analytics gate (the gram/sketch gate pattern applied to the
+  * graph family): synthetic graphs ~35-70x sf0.1's trade-graph edge
+  * count at the default size, generated map-side from spark.range, with
   * planted structure whose exact answers are known in closed form.
   *
   *  - BFS: a complete binary tree on `nTree` nodes (node i's parent is
@@ -22,22 +24,15 @@ import org.apache.spark.sql.functions._
   *    at any noise scale. Certifies the degree-orientation bound does
   *    its job where it matters.
   *
-  * Prints one JSON line. Run: tools/run.sh graft.tools.GraphStress
-  * [nTree] [noiseSide] (default 20000000 1000). Results in
-  * docs/ROUND9.md.
+  * Size = nTree (default 20M); the noise grid's side is
+  * sqrt(nTree/20) (1000), and HITS's block sides are 4, 3, 2 and 1
+  * times that side. Results in docs/ROUND9.md.
   */
-object GraphStress {
-  def main(args: Array[String]): Unit = {
-    val nTree = args.headOption.map(_.toLong).getOrElse(20000000L)
-    val noiseSide = args.drop(1).headOption.map(_.toLong).getOrElse(1000L)
-    val iters = 4
-    val spark = graft.GraftSession()
+private[tools] object GraphGate {
 
-    def timed[A](f: => A): (A, Double) = {
-      val t0 = System.nanoTime()
-      val r = f
-      (r, (System.nanoTime() - t0) / 1e9)
-    }
+  def run(spark: SparkSession, nTree: Long): Scale.Measures = {
+    val noiseSide = math.sqrt(nTree / 20.0).toLong
+    val iters = 4
 
     // ---- BFS on the symmetrized complete binary tree ----
     val child = spark.range(2, nTree + 1)
@@ -53,7 +48,6 @@ object GraphStress {
     // level within `iters` is truncated), the rest unreached
     val expected = (0 to iters).map(d => d -> (1L << d)).toMap +
       (-1 -> (nTree - ((1L << (iters + 1)) - 1)))
-    val bfsOk = bfsCounts == expected
 
     // ---- triangles: K30 clique + complete-bipartite hub noise ----
     val k = 30L
@@ -71,18 +65,17 @@ object GraphStress {
       graft.ops.Graph.triangleCount(und).collect()(0).getLong(0)
     }
     val triExpected = k * (k - 1) * (k - 2) / 6
-    val triOk = nTri == triExpected
 
     // ---- HITS on two planted complete-bipartite blocks ----
     // Block A: 4000 customers × 3000 suppliers (12M edges); block B:
-    // 2000 × 1000 (2M) — ~40x sf0.1's trade graph. Disconnected
+    // 2000 × 1000 (2M) at the default size — ~40x sf0.1's trade graph. Disconnected
     // blocks + complete bipartite inside each ⇒ the recurrence
     // collapses to FOUR scalars (per-block hub/authority), so the
     // exact integer fixed point is computable in closed form and every
     // node's score is asserted EXACTLY; the denser block must top both
     // rankings. Certifies: per-half-step state stays node-sized
     // (10k rows against 14M edges), the truncation keeps rounds flat.
-    val (cA, sA, cB, sB) = (4000L, 3000L, 2000L, 1000L)
+    val (cA, sA, cB, sB) = (4 * noiseSide, 3 * noiseSide, 2 * noiseSide, noiseSide)
     val blockA = spark.range(cA * sA).select(
       (col("id") % cA).as("src"),
       (lit(10000000L) + expr(s"id div $cA")).as("dst"))
@@ -116,15 +109,14 @@ object GraphStress {
       aMap.forall { case (n, v) => v == (if (n >= 20000000L) aB else aA) } &&
       hMap.forall { case (n, v) => v == (if (n >= 100000L) hB else hA) }
 
-    val ok = bfsOk && triOk && hitsOk
-    println(s"""{"nTree":$nTree,"noiseEdges":${noiseSide * noiseSide},""" +
-      s""""bfs_sec":$bfsSec,"tri_sec":$triSec,""" +
-      s""""bfs_counts":${bfsCounts.toSeq.sorted.map(p => s"[${p._1},${p._2}]").mkString("[", ",", "]")},""" +
-      s""""n_triangles":$nTri,"tri_expected":$triExpected,""" +
-      s""""hits_edges":${cA * sA + cB * sB},"hits_sec":$hitsSec,""" +
-      s""""hits_scores":[$aA,$aB,$hA,$hB],"ok":$ok}""")
-    assert(ok, s"graph stress bound violated: bfs=$bfsCounts tri=$nTri " +
-      s"hits=($aA,$aB,$hA,$hB)")
-    spark.stop()
+    assert(bfsCounts == expected && nTri == triExpected && hitsOk,
+      s"graph gate bound violated: bfs=$bfsCounts tri=$nTri " +
+        s"hits=($aA,$aB,$hA,$hB)")
+    Seq("nTree" -> nTree, "noiseEdges" -> noiseSide * noiseSide,
+      "bfs_sec" -> bfsSec, "tri_sec" -> triSec,
+      "bfs_counts" -> bfsCounts.toSeq.sorted.map(p => Seq(p._1, p._2)),
+      "n_triangles" -> nTri, "tri_expected" -> triExpected,
+      "hits_edges" -> (cA * sA + cB * sB), "hits_sec" -> hitsSec,
+      "hits_scores" -> Seq(aA, aB, hA, hB))
   }
 }

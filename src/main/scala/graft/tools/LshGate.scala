@@ -1,12 +1,14 @@
 package graft.tools
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.tools.Scale.timed
 
-/** MinHash-LSH stress driver (the GramStress pattern applied to dd03's
-  * band pipeline — the highest-volume production dedup path): a
-  * synthetic corpus ~100x sf0.1's document count, generated ENTIRELY
-  * map-side from spark.range, with planted near-dup pairs at KNOWN
-  * exact Jaccard levels so the gates are closed-form:
+/** MinHash-LSH gate (the gram gate's pattern applied to dd03's band
+  * pipeline — the highest-volume production dedup path): a synthetic
+  * corpus ~100x sf0.1's document count at the default size, generated
+  * ENTIRELY map-side from spark.range, with planted near-dup pairs at
+  * KNOWN exact Jaccard levels so the gates are closed-form:
   *
   *   - every doc is W = 64 tokens of doc-unique md5 word soup (no
   *     accidental cross-doc shingle repeats at any realistic scale),
@@ -33,16 +35,15 @@ import org.apache.spark.sql.functions._
   *     below the 0.4 verification threshold — deterministic), and no
   *     unplanted pair ever appears (exact Jaccard 0).
   *
-  * Prints one JSON line. Run: tools/run.sh graft.tools.LshStress
-  * [nDocs] (default 499800 ≈ 100x sf0.1's 5000 docs). Results recorded
-  * in docs/ROUND10.md.
+  * Size = nDocs, rounded down to the multiple of 300 the three equal
+  * tiers need (default 499800 ≈ 100x sf0.1's 5000 docs). Results
+  * recorded in docs/ROUND10.md.
   */
-object LshStress {
-  def main(args: Array[String]): Unit = {
-    val nDocs = args.headOption.map(_.toLong).getOrElse(499800L)
-    require(nDocs % 300 == 0, s"nDocs must be a multiple of 300, got $nDocs")
+private[tools] object LshGate {
+
+  def run(spark: SparkSession, size: Long): Scale.Measures = {
+    val nDocs = size / 300 * 300
     val W = 64
-    val spark = graft.GraftSession()
 
     // doc-unique soup: token i of doc d = 6 hex chars of md5(d '_' i)
     def soup(docId: org.apache.spark.sql.Column, from: Int, until: Int) =
@@ -65,16 +66,9 @@ object LshStress {
         array_join(concat(
           slice(soup(col("id"), 0, W), lit(1), col("p")),
           slice(soup(col("id") + nDocs, 0, W), lit(1), lit(W) - col("p"))),
-          " ").as("text"),
-        col("id").as("partner_of"), col("p"))
+          " ").as("text"))
 
-    val docs = base.unionByName(
-      partners.select(col("doc_id"), col("text")))
-
-    def timed[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f
-      (r, (System.nanoTime() - t0) / 1e9)
-    }
+    val docs = base.unionByName(partners)
 
     val (sigs, sigWall) = timed(graft.ops.Dedup.lshSignatures(docs))
     val ((nCand, pairs), lshWall) = timed {
@@ -83,6 +77,7 @@ object LshStress {
       val n = cand.count()
       val p = graft.ops.Dedup.lshVerify(sigs, cand, minJaccard = 0.4)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      cand.unpersist()
       (n, p)
     }
 
@@ -122,10 +117,8 @@ object LshStress {
       s"unplanted pairs appeared (exact Jaccard of disjoint soups is 0): " +
         unplanted.take(3).mkString(", "))
 
-    println(s"""{"tool":"LshStress","n_docs":${nDocs + nPlanted},""" +
-      s""""n_candidates":$nCand,"n_planted":$nPlanted,""" +
-      s""""strong_found":${strong.size},"medium_recall":$mediumRecall,""" +
-      s""""sig_sec":${f"$sigWall%.1f"},"lsh_sec":${f"$lshWall%.1f"}}""")
-    spark.stop()
+    Seq("n_docs" -> (nDocs + nPlanted), "n_candidates" -> nCand,
+      "n_planted" -> nPlanted, "strong_found" -> strong.size,
+      "medium_recall" -> mediumRecall, "sig_sec" -> sigWall, "lsh_sec" -> lshWall)
   }
 }

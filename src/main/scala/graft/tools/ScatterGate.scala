@@ -1,11 +1,13 @@
 package graft.tools
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.tools.Scale.timed
 
-/** ScatterAggregate stress driver (the SketchStress pattern applied to
-  * emb05's second-moment aggregate): a synthetic vector stream ~100×
-  * sf0.1's embedding count × its dim budget, generated map-side from
-  * spark.range, with a CLOSED-FORM exact answer:
+/** ScatterAggregate gate (the sketch gate's pattern applied to emb05's
+  * second-moment aggregate): a synthetic vector stream ~100× sf0.1's
+  * embedding count × its dim budget at the default size, generated
+  * map-side from spark.range, with a CLOSED-FORM exact answer:
   *
   *   vector i has components c_ij = ((i + j) mod 7) − 3, so
   *   S[a][b] = Σ_r n_r · f((r+a) mod 7) · f((r+b) mod 7) where
@@ -20,23 +22,19 @@ import org.apache.spark.sql.functions._
   *     state scaled with data);
   *   - single-pass wall time for the O(n·d²) irreducible work.
   *
-  * Prints one JSON line. Run: tools/run.sh graft.tools.ScatterStress
-  * [nRows] [dim] (default 60000000 16). Results in docs/ROUND10.md.
+  * Size = nRows (default 60M) vectors of dim 16. Results in
+  * docs/ROUND10.md.
   */
-object ScatterStress {
-  def main(args: Array[String]): Unit = {
-    val nRows = args.headOption.map(_.toLong).getOrElse(60000000L)
-    val dim = args.drop(1).headOption.map(_.toInt).getOrElse(16)
-    val spark = graft.GraftSession()
+private[tools] object ScatterGate {
 
+  def run(spark: SparkSession, nRows: Long): Scale.Measures = {
+    val dim = 16
     val vecs = spark.range(nRows).select(
       expr(s"transform(sequence(0, ${dim - 1}), " +
         "j -> CAST((id + j) % 7 - 3 AS INT))").as("c"))
 
-    val t0 = System.nanoTime()
-    val got = vecs.agg(graft.functions.Scatter.scatterMatrix(col("c"), dim))
-      .head.getSeq[scala.collection.Seq[Long]](0)
-    val sec = (System.nanoTime() - t0) / 1e9
+    val (got, sec) = timed(vecs.agg(graft.functions.Scatter.scatterMatrix(col("c"), dim))
+      .head().getSeq[scala.collection.Seq[Long]](0))
 
     // closed form over the 7 residue classes
     val nr = Array.tabulate(7)(r => nRows / 7 + (if (r < nRows % 7) 1L else 0L))
@@ -50,9 +48,7 @@ object ScatterStress {
     }
     require(bad == 0, s"$bad scatter cells diverged from the closed form")
 
-    println(s"""{"tool":"ScatterStress","n_rows":$nRows,"dim":$dim,""" +
-      s""""cells_exact":true,"outer_products":${nRows * dim.toLong * (dim + 1) / 2},""" +
-      s""""sec":${math.round(sec * 10) / 10.0}}""")
-    spark.stop()
+    Seq("n_rows" -> nRows, "dim" -> dim, "cells_exact" -> true,
+      "outer_products" -> nRows * dim.toLong * (dim + 1) / 2, "sec" -> sec)
   }
 }

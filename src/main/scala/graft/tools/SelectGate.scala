@@ -1,11 +1,13 @@
 package graft.tools
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.tools.Scale.timed
 
-/** Data-selection stress driver (the GraphStress pattern applied to the
-  * round-13 selection family): synthetic corpora far above sf0.1,
-  * generated map-side from spark.range, with planted structure whose
-  * qualitative answers are known in closed form.
+/** Data-selection gate (the graph gate's pattern applied to the
+  * round-13 selection family): synthetic corpora far above sf0.1 at
+  * the default size, generated map-side from spark.range, with planted
+  * structure whose qualitative answers are known in closed form.
   *
   *  - DSIR kernel (pp15's exact shape, including the per-token md5):
   *    `nDocs` docs × 20 tokens; lang = en for doc_id % 5 == 0; en docs
@@ -26,21 +28,13 @@ import org.apache.spark.sql.functions._
   *    range (no shuffle), so regeneration per round is cheaper than
   *    pinning ~nVecs·16 ints in storage.
   *
-  * Prints one JSON line. Run: tools/run.sh graft.tools.SelectStress
-  * [nDocs] [nVecs] (default 5000000 2000000). Results in
+  * Size = nDocs (default 5M); nVecs = 2/5 nDocs (2M). Results in
   * docs/ROUND13.md.
   */
-object SelectStress {
-  def main(args: Array[String]): Unit = {
-    val nDocs = args.headOption.map(_.toLong).getOrElse(5000000L)
-    val nVecs = args.drop(1).headOption.map(_.toLong).getOrElse(2000000L)
-    val spark = graft.GraftSession()
+private[tools] object SelectGate {
 
-    def timed[A](f: => A): (A, Double) = {
-      val t0 = System.nanoTime()
-      val r = f
-      (r, (System.nanoTime() - t0) / 1e9)
-    }
+  def run(spark: SparkSession, nDocs: Long): Scale.Measures = {
+    val nVecs = nDocs * 2 / 5
 
     // ---- DSIR at nDocs × 20 tokens ----
     val v = 40000L
@@ -69,6 +63,7 @@ object SelectStress {
         .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap,
         lam.count())
     }
+    feats.unpersist()
     assert(nLam <= graft.queries.Pipeline.DsirB,
       s"lambda table outgrew the fixed feature space: $nLam")
     val enMean = byLang("en")
@@ -76,7 +71,6 @@ object SelectStress {
       assert(enMean > m,
         s"DSIR failed to separate the target slice: en $enMean vs $l $m")
     }
-    feats.unpersist()
 
     // ---- k-center greedy at nVecs ----
     val q8 = spark.range(nVecs).selectExpr("id AS vec_id",
@@ -91,15 +85,12 @@ object SelectStress {
     assert(clusters.size == 8,
       s"traversal missed planted clusters: ${clusters.toSeq.sorted}")
     val radii = centers.sortBy(_._1).map(_._3)
-    radii.drop(1).sliding(2).foreach { w =>
-      if (w.length == 2) assert(w(1) <= w(0), "radius grew")
-    }
+    assert(radii.drop(1).zip(radii.drop(2)).forall { case (a, b) => b <= a }, "radius grew")
     assert(radii.drop(1).forall(_ >= 5L * 100 * 100),
       s"a center was picked inside a planted cluster: ${radii.toSeq}")
 
-    println(s"""{"metric":"select_stress","n_docs":$nDocs,"n_vecs":$nVecs,""" +
-      s""""dsir_feats_s":$tFeats,"dsir_weights_s":$tWeights,""" +
-      s""""lam_rows":$nLam,"en_mean":$enMean,"kcenter_8rounds_s":$tKc}""")
-    spark.stop()
+    Seq("n_docs" -> nDocs, "n_vecs" -> nVecs,
+      "dsir_feats_s" -> tFeats, "dsir_weights_s" -> tWeights,
+      "lam_rows" -> nLam, "en_mean" -> enMean, "kcenter_8rounds_s" -> tKc)
   }
 }

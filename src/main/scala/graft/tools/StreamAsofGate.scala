@@ -1,9 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.tools.Scale.timed
 
-/** Stream-stream as-of/band state-boundedness stress — the empirical
+/** Stream-stream as-of/band state-boundedness gate — the empirical
   * check behind the operator family's central scale claim ("state is
   * bounded by tolerance + watermark, never by key lifetime or
   * history", StreamAsof.scala): feed a long synthetic event history
@@ -34,18 +34,24 @@ import org.apache.spark.sql.functions._
   * build rows replicate to <= 3 buckets: the state plateau also
   * verifies the replication constant does not compound over time).
   *
-  * Prints one JSON line. Run: tools/run.sh graft.tools.StreamAsofStress
-  * [batches] [rowsPerBatch] (default 40 x 25000 = 1M probe events/leg).
+  * Size = probe events per leg (default 1M): size/25000 batches,
+  * clamped to [10, 40] (the as-of state plateaus by the fifth batch,
+  * so the second quarter of 10 already sees it), of size/batches probe
+  * rows each, over one state-store partition per 3125 rows of a batch
+  * (at most 8) — 40 x 25000 over 8 partitions by default. Results in
+  * docs/ROUND16.md.
   */
-object StreamAsofStress {
-  def main(args: Array[String]): Unit = {
-    val nBatches = args.headOption.map(_.toInt).getOrElse(40)
-    val rowsPer = args.lift(1).map(_.toInt).getOrElse(25000)
-    val spark = graft.GraftSession(
-      "spark.sql.shuffle.partitions" -> "8", // state stores = partitions
-      // recentProgress must span every trigger of a leg (the emitted
-      // count sums sink rows across it); default retention is 100
-      "spark.sql.streaming.numRecentProgressUpdates" -> "10000")
+private[tools] object StreamAsofGate {
+
+  def run(spark: SparkSession, size: Long): Scale.Measures = {
+    val nBatches = math.min(40L, math.max(10L, size / 25000)).toInt
+    val rowsPer = (size / nBatches).toInt
+    // state stores = partitions
+    spark.conf.set("spark.sql.shuffle.partitions",
+      math.min(8, math.max(1, rowsPer / 3125)).toString)
+    // recentProgress must span every trigger of a leg (the emitted
+    // count sums sink rows across it); default retention is 100
+    spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", "10000")
     import spark.implicits._
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -54,11 +60,6 @@ object StreamAsofStress {
     val stepUs = 600L * 1000000L          // each batch advances 10 min
     val t0 = 1700000000L * 1000000L       // fixed epoch base (determinism)
     val users = 512L
-
-    def timed[A](f: => A): (A, Double) = {
-      val v0 = System.nanoTime(); val r = f
-      (r, (System.nanoTime() - v0) / 1e9)
-    }
 
     /** Drive `out` batch by batch; returns (state rows per trigger,
       * emitted rows, wall seconds). Each batch lands `rowsPer` probe
@@ -73,30 +74,30 @@ object StreamAsofStress {
         .withWatermark("p_ts", "5 minutes")
       val build = bIn.toDF().toDF("b_id", "b_ts", "b_user")
         .withWatermark("b_ts", "5 minutes")
-      val out = mk(probe, build)
-      val q = out.writeStream.format("noop")
+      val q = mk(probe, build).writeStream.format("noop")
         .queryName(name).outputMode("append").start()
       val states = scala.collection.mutable.ArrayBuffer[Long]()
-      val (_, secs) = timed {
-        var id = 0L
-        (0 until nBatches).foreach { b =>
-          val base = t0 + b * stepUs
-          def ts(i: Int, n: Int) =
-            new java.sql.Timestamp((base + i.toLong * stepUs / n) / 1000L)
-          pIn.addData((0 until rowsPer).map { i =>
-            id += 1; (id, ts(i, rowsPer), i % users)
-          })
-          bIn.addData((0 until rowsPer / 4).map { i =>
-            id += 1; (id, ts(i, rowsPer / 4), i % users)
-          })
-          q.processAllAvailable()
-          val p = q.lastProgress
-          if (p != null && p.stateOperators.nonEmpty)
-            states += p.stateOperators.map(_.numRowsTotal).sum
-        }
-      }
-      // emitted rows: re-run the sink side effect through a counter —
-      // noop discards rows, so count via recentProgress sink numbers
+      val (_, secs) =
+        try timed {
+          var id = 0L
+          (0 until nBatches).foreach { b =>
+            val base = t0 + b * stepUs
+            def ts(i: Int, n: Int) =
+              new java.sql.Timestamp((base + i.toLong * stepUs / n) / 1000L)
+            pIn.addData((0 until rowsPer).map { i =>
+              id += 1; (id, ts(i, rowsPer), i % users)
+            })
+            bIn.addData((0 until rowsPer / 4).map { i =>
+              id += 1; (id, ts(i, rowsPer / 4), i % users)
+            })
+            q.processAllAvailable()
+            val p = q.lastProgress
+            if (p != null && p.stateOperators.nonEmpty)
+              states += p.stateOperators.map(_.numRowsTotal).sum
+          }
+        } catch { case t: Throwable => q.stop(); throw t }
+      // noop discards rows, so count emitted rows via the
+      // recentProgress sink numbers
       val emitted = q.recentProgress.map(_.sink.numOutputRows)
         .filter(_ >= 0).sum
       q.stop()
@@ -139,7 +140,6 @@ object StreamAsofStress {
     // the interval bound, here the 30-min tolerance = 3 batches
     // (measured total lag ~4.3 batches) — so require the windows
     // through nBatches-7 closed, with the rest still in flight.
-    require(nBatches >= 10, s"need >= 10 batches for the gates, got $nBatches")
     val minEmitted = (nBatches - 7).toLong * rowsPer
     assert(emittedA >= minEmitted && emittedA <= totalProbe,
       s"keyed as-of emitted $emittedA of $totalProbe probe rows " +
@@ -156,15 +156,11 @@ object StreamAsofStress {
     val (earlyB, lateB) = gates("keyless band", stB, perBatch)
     assert(emittedB > 0, "keyless band emitted nothing")
 
-    val thrA = (totalIn / secA).toLong
-    val thrB = (totalIn / secB).toLong
-    println(s"""{"tool":"StreamAsofStress","batches":$nBatches,""" +
-      s""""rows_per_batch":$rowsPer,"total_rows":$totalIn,""" +
-      s""""asof_state_early":$earlyA,"asof_state_late":$lateA,""" +
-      s""""asof_emitted":$emittedA,"asof_rows_per_sec":$thrA,""" +
-      s""""band_state_early":$earlyB,"band_state_late":$lateB,""" +
-      s""""band_emitted":$emittedB,"band_rows_per_sec":$thrB,""" +
-      s""""state_bounded":true}""")
-    spark.stop()
+    Seq("batches" -> nBatches, "rows_per_batch" -> rowsPer, "total_rows" -> totalIn,
+      "asof_state_early" -> earlyA, "asof_state_late" -> lateA,
+      "asof_emitted" -> emittedA, "asof_rows_per_sec" -> (totalIn / secA).toLong,
+      "band_state_early" -> earlyB, "band_state_late" -> lateB,
+      "band_emitted" -> emittedB, "band_rows_per_sec" -> (totalIn / secB).toLong,
+      "state_bounded" -> true)
   }
 }

@@ -79,9 +79,9 @@ class IvfIndexSpec extends SparkSpec {
     // true neighbors (frozen recall 0.64, measured). At THIS corpus
     // size the retrained quantizer restores recall to 1.0 (600
     // members' neighborhoods fit inside the retrained hole cells); at
-    // stress scale the same blob is unrecoverable (its centroid is
+    // gate scale the same blob is unrecoverable (its centroid is
     // direction-degenerate) and the recoverable plant is a DIRECTIONAL
-    // cluster at the cell junction — IvfStress carries that scenario.
+    // cluster at the cell junction — the `ivf` scale gate carries it.
     val rnd = new scala.util.Random(7)
     def center() = Array.fill(64)(rnd.nextInt(201) - 100)
     def member(c: Array[Double], jit: Int, seed: Long): Seq[Float] = {
