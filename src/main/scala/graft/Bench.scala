@@ -38,14 +38,18 @@ object Bench {
     // never sets it, so the full suite always runs in the per-round artifact
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).toSet).getOrElse(Set.empty[String])
-    SparkEntry.queries
+    // a query that fails its warmup is counted in both JSON lines
+    // (`warmup_errors`), not only on stderr: its first timed rep then
+    // also pays the compilation the warmup exists to absorb
+    val warmupErrors = SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-      try materialize(fn(spark, warmupDir))
-      catch { case NonFatal(e) =>
-        System.err.println(s"[bench] $name warmup failed: ${e.getMessage}")
+      .count { case (name, fn) =>
+        try { materialize(fn(spark, warmupDir)); false }
+        catch { case NonFatal(e) =>
+          System.err.println(s"[bench] $name warmup failed: ${e.getMessage}")
+          true
+        }
       }
-    }
 
     // Multiple reps per query: single-run numbers proved unusable for
     // regression judgment (controlled r2-vs-r3 experiment showed 4-14x
@@ -219,17 +223,20 @@ object Bench {
     // clobbered by whichever run happened LAST, and in round 16 the
     // driver's 8-core scaling run overwrote the 32-core artifact with
     // nothing in the file saying so.
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","metric_version":$metricVersion,"policy":$policy,"cpus":$cpus,"cold_s":$coldTotal,"min_s":$minTotal,$coldOnly"reps":$reps,"rep_order":$repOrder,"queries":$qs,"queries_min":$mins,"queries_cold":$colds,"queries_runs":$runs,"memo_backed":$memoJson,"errors":$errs,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","metric_version":$metricVersion,"policy":$policy,"cpus":$cpus,"cold_s":$coldTotal,"min_s":$minTotal,$coldOnly"reps":$reps,"warmup_errors":$warmupErrors,"rep_order":$repOrder,"queries":$qs,"queries_min":$mins,"queries_cold":$colds,"queries_runs":$runs,"memo_backed":$memoJson,"errors":$errs,"sf":"$sfDir"}"""
     println(line)
     // the driver's per-round artifact keeps only a ~2KB tail of stdout,
     // which has repeatedly made cross-round per-query comparison
     // impossible — persist the FULL line in the repo as well. Only for
     // FULL runs: a SPARK_GRAFT_BENCH_ONLY iteration must never clobber
     // the durable full-suite artifact with a partial line.
+    // A failed write is reported on stderr; stdout remains the contract.
     if (only.isEmpty)
       try java.nio.file.Files.writeString(
         java.nio.file.Paths.get("BENCH_FULL.json"), line + "\n")
-      catch { case _: Throwable => () } // stdout remains the contract
+      catch { case NonFatal(e) =>
+        System.err.println(s"[bench] BENCH_FULL.json not written: $e")
+      }
     // The driver's artifact keeps only the LAST ~2000 bytes of stdout and
     // tries to parse a JSON line out of that window. The full line above
     // is ~27KB, so its start is always outside the window and every
@@ -263,7 +270,7 @@ object Bench {
       val slowMins = slowNames.flatMap { case (k, _) =>
         minByName.get(k).map(mn => "\"" + k + "\":" + fmt(mn)) }
         .mkString("{", ",", "}")
-      s"""{"metric":"total","value":$total,"unit":"sec","metric_version":$metricVersion,"policy":$policy,"cpus":$cpus,"cold_s":$coldTotal,"min_s":$minTotal,$coldOnly"reps":$reps,"n":${results.size},"errors":$errs,"queries":$slowQs,"queries_min":$slowMins,"sf":"$sfDir","compact":true,"full":"BENCH_FULL.json"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","metric_version":$metricVersion,"policy":$policy,"cpus":$cpus,"cold_s":$coldTotal,"min_s":$minTotal,$coldOnly"reps":$reps,"warmup_errors":$warmupErrors,"n":${results.size},"errors":$errs,"queries":$slowQs,"queries_min":$slowMins,"sf":"$sfDir","compact":true,"full":"BENCH_FULL.json"}"""
     }
     // the compact line exists to fit the driver's ~2KB stdout tail
     // window; when it does not (e.g. a long errors array), shed query

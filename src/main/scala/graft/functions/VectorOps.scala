@@ -4,8 +4,9 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
 /** Dot product of two numeric arrays (float or double elements), computed
@@ -182,6 +183,272 @@ case class PqEncode(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
+/** The loops behind the int8 grid: ss05's symmetric quantizer
+  * (scale = max|x| / 127, q_i = round(x_i / scale)) and the element-wise
+  * difference. [[Int8Scale]], [[Int8Quantize]] and [[Int8Sub]] call them
+  * from both their interpreted and their generated path, so the two
+  * cannot drift apart.
+  *
+  * Each reproduces, case by case, the lambda expression it replaced:
+  *   - scale: `array_max(transform(x, v -> abs(double(v)))) / 127.0`.
+  *     Null elements are skipped, NaN orders above every number (so one
+  *     NaN makes the scale NaN), and no non-null element gives null;
+  *   - q: `transform(x, v -> CAST(round(double(v) / scale) AS INT))`.
+  *     A null element stays null. A zero scale (an all-zero vector) is
+  *     `DIVIDE_BY_ZERO` under ANSI and a null element without it.
+  *     ROUND is half away from zero, NaN and ±Inf pass through it, and
+  *     the cast of a NaN quotient (a NaN or ±Inf element) is
+  *     `CAST_OVERFLOW` under ANSI and 0 without it;
+  *   - difference: `zip_with(a, b, (x, y) -> x - y)`, padded with nulls
+  *     to the longer side. The int8 grid's values cannot overflow an
+  *     int, so the ANSI overflow check is not repeated. */
+object Int8Kernels {
+  /** This object's name as generated Java code calls it. */
+  private[functions] val javaName: String = getClass.getName.stripSuffix("$")
+
+  private def elem(x: ArrayData, isFloat: Boolean, i: Int): Double =
+    if (isFloat) x.getFloat(i).toDouble else x.getDouble(i)
+
+  /** max |x_i| over the non-null elements; NaN if one is NaN, -1 if
+    * there is no non-null element. */
+  def maxAbs(x: ArrayData, isFloat: Boolean): Double = {
+    val n = x.numElements()
+    var m = -1.0
+    var i = 0
+    while (i < n) {
+      if (!x.isNullAt(i)) {
+        val a = math.abs(elem(x, isFloat, i))
+        if (a > m || a.isNaN) m = a
+      }
+      i += 1
+    }
+    m
+  }
+
+  /** Spark's ROUND of a double to scale 0 (HALF_UP on the decimal
+    * value). For a double that is not an integer the shortest decimal
+    * lies on the same side of every k.5 as the double itself, so half
+    * away from zero on the binary value gives the same result. */
+  private def roundHalfUp(v: Double): Double =
+    if (v.isNaN || v.isInfinite) v
+    else {
+      val a = math.abs(v)
+      val f = math.floor(a)
+      math.copySign(if (a - f >= 0.5) f + 1.0 else f, v)
+    }
+
+  def quantize(x: ArrayData, isFloat: Boolean, failOnError: Boolean): ArrayData = {
+    val n = x.numElements()
+    val scale = maxAbs(x, isFloat) / 127.0
+    val out = new Array[Int](n)
+    var nulls: Array[Boolean] = null
+    var i = 0
+    while (i < n) {
+      if (x.isNullAt(i) || scale == 0.0) {
+        // x / 0.0 (an all-zero vector) is the one error before the cast
+        if (failOnError && !x.isNullAt(i))
+          throw org.apache.spark.sql.GraftBridge.divideByZero()
+        if (nulls == null) nulls = new Array[Boolean](n)
+        nulls(i) = true
+      } else {
+        val r = roundHalfUp(elem(x, isFloat, i) / scale)
+        if (failOnError && !(r >= Int.MinValue.toDouble && r <= Int.MaxValue.toDouble))
+          throw org.apache.spark.sql.GraftBridge.castOverflow(r)
+        out(i) = r.toInt
+      }
+      i += 1
+    }
+    result(out, nulls)
+  }
+
+  def sub(x: ArrayData, y: ArrayData): ArrayData = {
+    val nx = x.numElements()
+    val ny = y.numElements()
+    val n = math.max(nx, ny)
+    val out = new Array[Int](n)
+    var nulls: Array[Boolean] = null
+    var i = 0
+    while (i < n) {
+      if (i < nx && i < ny && !x.isNullAt(i) && !y.isNullAt(i))
+        out(i) = x.getInt(i) - y.getInt(i)
+      else {
+        if (nulls == null) nulls = new Array[Boolean](n)
+        nulls(i) = true
+      }
+      i += 1
+    }
+    result(out, nulls)
+  }
+
+  private def result(out: Array[Int], nulls: Array[Boolean]): ArrayData =
+    if (nulls == null) UnsafeArrayData.fromPrimitiveArray(out)
+    else new GenericArrayData(
+      Array.tabulate[Any](out.length)(i => if (nulls(i)) null else out(i)))
+}
+
+/** A float or double array in: the input side of the int8 grid. */
+sealed abstract class Int8GridInput extends UnaryExpression {
+  override lazy val resolved: Boolean = childrenResolved && (child.dataType match {
+    case ArrayType(FloatType | DoubleType, _) => true
+    case _ => false
+  })
+  protected def isFloat: Boolean =
+    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
+}
+
+/** ss05's grid step max|x| / 127 in one pass (see [[Int8Kernels]]). */
+case class Int8Scale(child: Expression) extends Int8GridInput {
+  override def dataType: DataType = DoubleType
+  override def nullable: Boolean = true
+  override def prettyName: String = "int8_scale"
+
+  override def nullSafeEval(a: Any): Any = {
+    val m = Int8Kernels.maxAbs(a.asInstanceOf[ArrayData], isFloat)
+    if (m < 0) null else m / 127.0
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, a => {
+      val m = ctx.freshName("m")
+      s"""
+         |double $m = ${Int8Kernels.javaName}.maxAbs($a, $isFloat);
+         |if ($m < 0) { ${ev.isNull} = true; } else { ${ev.value} = $m / 127.0; }
+       """.stripMargin
+    })
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+/** ss05's int8 vector: one pass for max|x|, one for round(x / scale),
+  * bit-identical to the lambda it replaced (see [[Int8Kernels]]). The
+  * ANSI mode is fixed when the expression is built, as Spark's own
+  * Divide and Cast fix theirs. */
+case class Int8Quantize(child: Expression,
+    failOnError: Boolean = SQLConf.get.ansiEnabled) extends Int8GridInput {
+  override def dataType: DataType = ArrayType(IntegerType, containsNull = true)
+  override def prettyName: String = "int8_quantize"
+
+  override def nullSafeEval(a: Any): Any =
+    Int8Kernels.quantize(a.asInstanceOf[ArrayData], isFloat, failOnError)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, a => s"${Int8Kernels.javaName}.quantize($a, $isFloat, $failOnError)")
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+/** Element-wise a - b of two int arrays, `zip_with(a, b, (x, y) -> x - y)`
+  * without the lambda (see [[Int8Kernels]]): the centering step of the
+  * PCA folds. */
+case class Int8Sub(left: Expression, right: Expression)
+    extends BinaryExpression {
+  override lazy val resolved: Boolean = childrenResolved &&
+    Seq(left, right).forall(_.dataType match {
+      case ArrayType(IntegerType, _) => true
+      case _ => false
+    })
+  override def dataType: DataType = ArrayType(IntegerType, containsNull = true)
+  override def prettyName: String = "int8_sub"
+
+  override def nullSafeEval(a: Any, b: Any): Any =
+    Int8Kernels.sub(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) => s"${Int8Kernels.javaName}.sub($a, $b)")
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+/** Σ term(a_i, b_i) in exact long arithmetic over two int or bigint
+  * arrays — `aggregate(zip_with(a, b, term), 0L, (acc, x) -> acc + x)`
+  * as one loop inside whole-stage codegen (VecDot's argument for
+  * integers). Null, as the lambda is, when either array is null, when
+  * the lengths differ (zip_with pads with nulls) or when an element is
+  * null; two empty arrays sum to 0. The right side may be a column or a
+  * literal. Int8 terms cannot overflow a long, so the ANSI overflow
+  * check is not repeated. */
+sealed abstract class Int8Fold extends BinaryExpression {
+  protected def term(a: Long, b: Long): Long
+  protected def termCode(a: String, b: String): String
+
+  override lazy val resolved: Boolean = childrenResolved &&
+    Seq(left, right).forall(_.dataType match {
+      case ArrayType(IntegerType | LongType, _) => true
+      case _ => false
+    })
+  private def isLong(e: Expression): Boolean =
+    e.dataType.asInstanceOf[ArrayType].elementType == LongType
+  private def get(x: ArrayData, e: Expression, i: Int): Long =
+    if (isLong(e)) x.getLong(i) else x.getInt(i).toLong
+  private def getter(e: Expression): String = if (isLong(e)) "getLong" else "getInt"
+
+  override def dataType: DataType = LongType
+  override def nullable: Boolean = true
+
+  override def nullSafeEval(a: Any, b: Any): Any = {
+    val x = a.asInstanceOf[ArrayData]
+    val y = b.asInstanceOf[ArrayData]
+    val n = x.numElements()
+    if (n != y.numElements()) return null
+    var s = 0L
+    var i = 0
+    while (i < n) {
+      if (x.isNullAt(i) || y.isNullAt(i)) return null
+      s += term(get(x, left, i), get(y, right, i))
+      i += 1
+    }
+    s
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) => {
+      val n = ctx.freshName("n"); val i = ctx.freshName("i")
+      val s = ctx.freshName("s"); val x = ctx.freshName("x")
+      val y = ctx.freshName("y")
+      s"""
+         |int $n = $a.numElements();
+         |long $s = 0L;
+         |if ($n != $b.numElements()) { ${ev.isNull} = true; }
+         |for (int $i = 0; $i < $n && !${ev.isNull}; $i++) {
+         |  if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; }
+         |  else {
+         |    long $x = (long)$a.${getter(left)}($i);
+         |    long $y = (long)$b.${getter(right)}($i);
+         |    $s += ${termCode(x, y)};
+         |  }
+         |}
+         |${ev.value} = $s;
+       """.stripMargin
+    })
+}
+
+/** Integer dot product Σ a_i·b_i: ss06's score and the PCA and JL
+  * projections. */
+case class Int8Dot(left: Expression, right: Expression) extends Int8Fold {
+  override def prettyName: String = "int8_dot"
+  override protected def term(a: Long, b: Long): Long = a * b
+  override protected def termCode(a: String, b: String): String = s"$a * $b"
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+/** Integer squared L2 Σ (a_i - b_i)²: the IVF cell assignment, the
+  * k-center traversal and the exact re-rank stages. */
+case class Int8SqDist(left: Expression, right: Expression) extends Int8Fold {
+  override def prettyName: String = "int8_sq_dist"
+  override protected def term(a: Long, b: Long): Long = (a - b) * (a - b)
+  override protected def termCode(a: String, b: String): String =
+    s"($a - $b) * ($a - $b)"
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
 /** Column-level wrappers + SQL registration for the vector expressions. */
 object VectorOps {
   import org.apache.spark.sql.GraftBridge
@@ -199,6 +466,22 @@ object VectorOps {
   /** Cosine similarity in double; 0-norm guarded to NaN like x/0. */
   def cosine(a: Column, b: Column): Column =
     vecDot(a, b) / (vecNorm(a) * vecNorm(b))
+
+  /** ss05's grid step max|x| / 127 of a float vector ([[Int8Scale]]). */
+  def int8Scale(x: Column): Column = asCol(Int8Scale(asExpr(x)))
+
+  /** ss05's int8 vector round(x / scale) ([[Int8Quantize]]). */
+  def int8Quantize(x: Column): Column = asCol(Int8Quantize(asExpr(x)))
+
+  /** Element-wise a - b of two int vectors ([[Int8Sub]]). */
+  def int8Sub(a: Column, b: Column): Column = asCol(Int8Sub(asExpr(a), asExpr(b)))
+
+  /** Exact integer dot product ([[Int8Dot]]). */
+  def int8Dot(a: Column, b: Column): Column = asCol(Int8Dot(asExpr(a), asExpr(b)))
+
+  /** Exact integer squared L2 ([[Int8SqDist]]). */
+  def int8SqDist(a: Column, b: Column): Column =
+    asCol(Int8SqDist(asExpr(a), asExpr(b)))
 
   /** PQ subspace codes for an int vector against `[cid, c...]`-row
     * codebooks (see [[PqEncode]]). Books ship as one plan literal. */

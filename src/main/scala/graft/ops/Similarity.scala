@@ -80,8 +80,7 @@ object Similarity {
       else {
         val m = (0 until dim).map(i => meanRows(i)._1)
         val nVecs = meanRows(0)._2
-        val scatL = q8.withColumn("c",
-            expr(s"zip_with(q, array(${m.mkString(",")}), (a, b) -> a - b)"))
+        val scatL = q8.withColumn("c", int8Sub(col("q"), typedlit(m)))
           .agg(graft.functions.Scatter.scatterMatrix(col("c"), dim).as("s"))
           .head.getSeq[scala.collection.Seq[Long]](0)
         Some((m, nVecs, scatL.map(_.toSeq).toSeq))
@@ -250,13 +249,19 @@ object Similarity {
     * (…, embedding) frame as `scale` and `q` — the stateless kernel
     * shared by ss05/ss06, the session memo below and IvfIndex's
     * build/append/probe quantization (per-row scale, so any subset
-    * quantizes identically to the whole). */
-  private[ops] def quantize(df: DataFrame): DataFrame = {
-    val xd = transform(col("embedding"), x => x.cast("double"))
-    val maxabs = array_max(transform(col("embedding"), x => abs(x.cast("double"))))
-    df.withColumn("scale", maxabs / 127.0)
-      .withColumn("q", transform(xd, x => round(x / col("scale")).cast("int")))
-  }
+    * quantizes identically to the whole).
+    *
+    * `q` is the native [[graft.functions.Int8Quantize]], which finds
+    * max|x| itself instead of reading the `scale` column. A lambda form,
+    * `transform(x, v -> round(v / scale))`, falls into a trap: once a
+    * caller drops `scale`, Catalyst inlines its definition (an
+    * `array_max` over a 64-element `transform`) into the per-element
+    * lambda, so each row recomputes the maximum for every element —
+    * O(dim²) interpreted work per row. A column that feeds a lambda must
+    * not be one a later projection can inline. */
+  private[ops] def quantize(df: DataFrame): DataFrame =
+    df.withColumn("scale", int8Scale(col("embedding")))
+      .withColumn("q", int8Quantize(col("embedding")))
 
   /** emb10's farthest-point traversal (Gonzalez greedy) over any
     * (vec_id, q) integer-vector frame — shared by the query and
@@ -279,7 +284,7 @@ object Similarity {
       var r = 2
       var exhausted = false
       while (r <= k && !exhausted) {
-        val mind = array_min(array(centers.map(int8SqDist): _*))
+        val mind = array_min(array(centers.map(sqDistTo): _*))
         val next = q8
           .filter(!col("vec_id").isin(picked.map(_._2): _*))
           .withColumn("mind", mind)
@@ -310,23 +315,21 @@ object Similarity {
     Tables.load(s, d, "embeddings").select(col("vec_id"), col("embedding"))
 
   /** Exact integer squared L2 — the driver-side twin of the in-plan
-    * zip_with fold (bounded uses only: probe lists, spec audits). */
+    * int8SqDist kernel (bounded uses only: probe lists, spec audits). */
   private def intL2(a: Seq[Int], b: Seq[Int]): Long =
     a.zip(b).map { case (x, y) => (x - y).toLong * (x - y) }.sum
 
   /** Integer L2 distance² from a q8 row's `q` column to an in-plan
     * literal center — the one kernel behind emb03/emb10/qa09 and the
     * IVF assignment. */
-  private def int8SqDist(c: Seq[Int]): Column =
-    expr(s"aggregate(zip_with(q, array(${c.mkString(",")}), " +
-      "(a, b) -> CAST(a - b AS BIGINT) * (a - b)), 0L, (acc, x) -> acc + x)")
+  private def sqDistTo(c: Seq[Int]): Column = int8SqDist(col("q"), typedlit(c))
 
   /** argmin over in-plan literal centroids as a zero-shuffle map
     * expression: struct(dist, cid) array_min ties to the lower cid. */
   private[ops] def int8Assign(
       cs: Seq[(Int, Seq[Int])]): org.apache.spark.sql.Column =
     array_min(array(cs.map { case (cid, c) =>
-      struct(int8SqDist(c).as("dist"), lit(cid).as("cid")) }: _*))
+      struct(sqDistTo(c).as("dist"), lit(cid).as("cid")) }: _*))
 
   /** The `keep` nearest centroids by exact integer L2 (ties to the
     * lower cid — int8Assign's rule extended past the minimum), as an
@@ -336,7 +339,7 @@ object Similarity {
   private[ops] def nearestCellsInt8(cs: Seq[(Int, Seq[Int])],
       keep: Int): org.apache.spark.sql.Column =
     slice(array_sort(array(cs.map { case (cid, c) =>
-      struct(int8SqDist(c).as("dist"), lit(cid).as("cid")) }: _*)), 1, keep)
+      struct(sqDistTo(c).as("dist"), lit(cid).as("cid")) }: _*)), 1, keep)
 
   // The K=16 integer IVF coarse quantizer SHARED by ss03b (one-stage
   // probe) and ss03c (ADC shortlist + exact re-rank): emb03's Lloyd
@@ -675,9 +678,7 @@ object Similarity {
           .orderBy(col("dist"), col("vec_id"))
         cells.join(probe, "cell")
           .filter(col("vec_id") =!= col("q_id"))
-          .withColumn("dist",
-            expr("aggregate(zip_with(q, qq, (a, b) -> CAST(a - b AS BIGINT) * (a - b)), " +
-              "0L, (acc, x) -> acc + x)"))
+          .withColumn("dist", int8SqDist(col("q"), col("qq")))
           .withColumn("rank", row_number().over(w))
           .filter(col("rank") <= 10)
           .select(col("q_id"), col("vec_id"), col("dist"),
@@ -742,9 +743,7 @@ object Similarity {
           .orderBy(col("l2"), col("vec_id"))
         shortlist.join(q8, Seq("vec_id"))
           .join(qvecs, Seq("q_id"))
-          .withColumn("l2",
-            expr("aggregate(zip_with(q, q_q, (a, b) -> CAST(a - b AS BIGINT) * (a - b)), " +
-              "0L, (acc, x) -> acc + x)"))
+          .withColumn("l2", int8SqDist(col("q"), col("q_q")))
           .withColumn("rank", row_number().over(w))
           .filter(col("rank") <= 10)
           .select(col("q_id"), col("vec_id"), col("l2"),
@@ -771,8 +770,7 @@ object Similarity {
       // No-op at scale (Tables.spread).
       graft.Tables.spread(q8).crossJoin(qs)
         .filter(col("vec_id") =!= col("q_id"))
-        .withColumn("score",
-          expr("aggregate(zip_with(q, q_q, (a, b) -> CAST(a AS BIGINT) * b), 0L, (acc, x) -> acc + x)"))
+        .withColumn("score", int8Dot(col("q"), col("q_q")))
         .withColumn("rank", row_number().over(w))
         .filter(col("rank") <= 10)
         .select(col("q_id"), col("vec_id"), col("score"),
@@ -920,12 +918,9 @@ object Similarity {
         case None =>
           q8.select(col("vec_id"), lit(0L).as("pc1")).limit(0)
         case Some(p) =>
-          q8.withColumn("c",
-              expr(s"zip_with(q, array(${p.m.mkString(",")}), (a, b) -> a - b)"))
+          q8.withColumn("c", int8Sub(col("q"), typedlit(p.m)))
             .select(col("vec_id"),
-              expr(s"aggregate(zip_with(c, array(${p.scaled.mkString("L,")}L), " +
-                "(a, b) -> CAST(a AS BIGINT) * b), 0L, (acc, x) -> acc + x)")
-                .as("pc1"))
+              int8Dot(col("c"), typedlit(p.scaled.toSeq)).as("pc1"))
       }
     },
 
@@ -976,12 +971,9 @@ object Similarity {
           q8.select(col("vec_id") +:
             (1 to 8).map(j => lit(0L).as(s"pc$j")): _*).limit(0)
         case Some(p) =>
-          q8.withColumn("c",
-              expr(s"zip_with(q, array(${p.m.mkString(",")}), (a, b) -> a - b)"))
+          q8.withColumn("c", int8Sub(col("q"), typedlit(p.m)))
             .select(col("vec_id") +: (1 to 8).map { j =>
-              expr(s"aggregate(zip_with(c, array(${p.comps(j - 1).mkString("L,")}L), " +
-                "(a, b) -> CAST(a AS BIGINT) * b), 0L, (acc, x) -> acc + x)")
-                .as(s"pc$j")
+              int8Dot(col("c"), typedlit(p.comps(j - 1).toSeq)).as(s"pc$j")
             }: _*)
       }
     },
@@ -1001,9 +993,7 @@ object Similarity {
       val q8 = quantized(s, d)
       val signs = jlSigns(PcaDim, JlDim)
       q8.select(col("vec_id") +: (1 to JlDim).map { j =>
-        expr(s"aggregate(zip_with(q, array(${signs(j - 1).mkString(",")}), " +
-          "(a, b) -> CAST(a AS BIGINT) * b), 0L, (acc, x) -> acc + x)")
-          .as(s"y$j")
+        int8Dot(col("q"), typedlit(signs(j - 1).toSeq)).as(s"y$j")
       }: _*)
     },
 
@@ -1026,8 +1016,7 @@ object Similarity {
           q8.select(col("vec_id") +:
             (1 to 8).map(j => lit(0L).as(s"w$j")): _*).limit(0)
         case Some(p) =>
-          q8.withColumn("c",
-              expr(s"zip_with(q, array(${p.m.mkString(",")}), (a, b) -> a - b)"))
+          q8.withColumn("c", int8Sub(col("q"), typedlit(p.m)))
             .select(col("vec_id") +: (1 to 8).map { j =>
               // λ is the SCATTER eigenvalue (Σ over the corpus of the
               // squared projection), so the per-vector std along v_j is
@@ -1035,9 +1024,7 @@ object Similarity {
               // component scale inside pc and the 1e3 output scale
               // reduce to /1000.0.
               val lam = p.lams(j - 1)
-              val pc = expr(
-                s"aggregate(zip_with(c, array(${p.comps(j - 1).mkString("L,")}L), " +
-                  "(a, b) -> CAST(a AS BIGINT) * b), 0L, (acc, x) -> acc + x)")
+              val pc = int8Dot(col("c"), typedlit(p.comps(j - 1).toSeq))
               (if (lam > 0.0)
                  round(pc.cast("double") / lit(math.sqrt(lam)) *
                      lit(math.sqrt(p.nVecs.toDouble)) / lit(1000.0))
@@ -1100,7 +1087,7 @@ object Similarity {
             r.getSeq[Int](r.fieldIndex("q")))
           .sortBy(_._1)
         val best = array_min(array(cents.map { case (cid, v) =>
-          struct(int8SqDist(v).as("d2"), lit(cid).as("cid")) }: _*))
+          struct(sqDistTo(v).as("d2"), lit(cid).as("cid")) }: _*))
         q8.select(best.getField("d2").as("d2"), best.getField("cid").as("cid"))
           .groupBy(col("cid"))
           .agg(count(lit(1)).as("n_vecs"),
@@ -1225,8 +1212,7 @@ object Similarity {
         .orderBy(col("l2"), col("vec_id"))
       shortlist.join(q8, Seq("vec_id"))
         .join(qs, Seq("q_id"))
-        .withColumn("l2",
-          expr("aggregate(zip_with(q, q_q, (a, b) -> CAST(a - b AS BIGINT) * (a - b)), 0L, (acc, x) -> acc + x)"))
+        .withColumn("l2", int8SqDist(col("q"), col("q_q")))
         .withColumn("rank", row_number().over(w))
         .filter(col("rank") <= 10)
         .select(col("q_id"), col("vec_id"), col("l2"),
@@ -1946,8 +1932,8 @@ object Similarity {
         |GROUP BY label, i""".stripMargin,
     // emb03 replayed stage-for-stage: same quantization grid, same
     // hash-ordered seeds, same integer distances (the expansion
-    // ldp(x,x) - 2·ldp(x,c) + ldp(c,c) equals the zip_with squared
-    // fold exactly — integer arithmetic has no rounding to disagree
+    // ldp(x,x) - 2·ldp(x,c) + ldp(c,c) equals the int8SqDist
+    // kernel exactly — integer arithmetic has no rounding to disagree
     // on), same truncating integer mean.
     // ss09: the ENTIRE product-quantization index replayed — same int8
     // vectors, same hash-ordered seeds per subspace, same one-round
@@ -1965,8 +1951,8 @@ object Similarity {
     // ss10: ss09's replay extended by the two-stage form — the ADC
     // shortlist is rn <= 100 over the identical (dist, vec_id) order,
     // and the exact stage is the integer L2 identity ldp(x,x) −
-    // 2·ldp(x,q) + ldp(q,q), which equals Spark's zip_with squared
-    // fold exactly (integer arithmetic has no rounding to disagree
+    // 2·ldp(x,q) + ldp(q,q), which equals Spark's int8SqDist
+    // kernel exactly (integer arithmetic has no rounding to disagree
     // on — the emb03 argument).
     "ss10_pq_rerank" ->
       s"""$pqCoreSql,
@@ -2097,7 +2083,7 @@ object Similarity {
     // mean, same argmin tie rule), then the nprobe=4 nearest cells per
     // query and exact integer L2 within them. list_dot_product's l2
     // identity ldp(x,x) − 2·ldp(x,q) + ldp(q,q) equals Spark's
-    // zip_with squared fold exactly (integer arithmetic — the emb03
+    // int8SqDist kernel exactly (integer arithmetic — the emb03
     // argument).
     "ss03b_ivf_int8_topk" ->
       """WITH q8 AS MATERIALIZED (

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Skew-mitigation join helpers.
@@ -47,18 +47,15 @@ object Skew {
       .drop(SaltCol)
   }
 
-  def queries: Map[String, (org.apache.spark.sql.SparkSession, String) => DataFrame] = Map(
-    // AQE runtime skew-split — the engine-native complement to sk01's
-    // manual salting, now driver-gated. A planted hot key (every
-    // lineitem row with l_linenumber ≠ 1, ~3/4 of the table, collapses
-    // onto k=7) makes one shuffle partition dwarf the rest; AQE
-    // re-plans the sort-merge join with the skewed partition split at
-    // runtime and results stay exact — the oracle is the plain join.
-    // The skew thresholds are scaled to testdata volume on a CHILD
-    // session (conf never leaks to the caller); at 100 TB the defaults
-    // (256 MB advisory) do this job. SkewAqeSpec asserts the final
-    // adaptive plan actually carries skew=true for this query.
-    "sk02_aqe_skew_join" -> { (s, d) =>
+  // sk02's child session, one per parent session. A child per call
+  // would be tracked as one more session, add one more SparkListener
+  // and leave its own Tables.load memo entries behind, all kept until
+  // the application ends, and would miss those memos on every call.
+  private val skewChild = new graft.SessionMemo[Unit, SparkSession]
+
+  /** `s`'s child session with sk02's skew-join thresholds, built once. */
+  private def skewSession(s: SparkSession): SparkSession =
+    skewChild.get(s, ()) {
       val s2 = s.newSession()
       // thresholds are COMPRESSED map-output sizes — a hot partition of
       // a few thousand rows compresses to tens of KB, hence the tiny
@@ -68,6 +65,23 @@ object Skew {
       s2.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "512B")
       s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       s2.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+      s2
+    }
+
+  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+    // AQE runtime skew-split — the engine-native complement to sk01's
+    // manual salting, now oracle-gated. A planted hot key (every
+    // lineitem row with l_linenumber ≠ 1, ~3/4 of the table, collapses
+    // onto k=7) makes one shuffle partition dwarf the rest; AQE
+    // re-plans the sort-merge join with the skewed partition split at
+    // runtime and results stay exact — the oracle is the plain join.
+    // The skew thresholds are scaled to testdata volume on a CHILD
+    // session, one per parent (conf never leaks to the caller); at
+    // 100 TB the defaults (256 MB advisory) do this job. SkewAqeSpec
+    // asserts the final adaptive plan actually carries skew=true for
+    // this query.
+    "sk02_aqe_skew_join" -> { (s, d) =>
+      val s2 = skewSession(s)
       // repartition(8) models the many-mapper input a real cluster has:
       // AQE splits a skewed reduce partition at MAP-OUTPUT granularity,
       // and the single-file local parquet gives exactly one mapper —

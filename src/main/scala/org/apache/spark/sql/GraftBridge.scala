@@ -13,4 +13,13 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 object GraftBridge {
   def toColumn(e: Expression): Column = classic.ExpressionUtils.column(e)
   def toExpression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+
+  /** The errors ANSI-mode `x / 0.0` and `CAST(NaN AS INT)` raise, so a
+    * native kernel fails with the same error class as the expression
+    * it replaces. */
+  def divideByZero(): ArithmeticException =
+    errors.QueryExecutionErrors.divideByZeroError(null)
+  def castOverflow(v: Double): ArithmeticException =
+    errors.QueryExecutionErrors.castingCauseOverflowError(
+      v, types.DoubleType, types.IntegerType)
 }

@@ -116,6 +116,21 @@ class GraphSpec extends SparkSpec {
       s"persisted RDDs grew $after1 -> $after9 across 8 cache-missing calls")
   }
 
+  test("a second pagerank over the same edges instance runs no job while it is built") {
+    import spark.implicits._
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 2L)).toDF("src", "dst")
+    val first = Graph.pagerank(edges).collect().map(_.toString).sorted
+    var second: org.apache.spark.sql.DataFrame = null
+    val jobs = jobsDuring(spark) { second = Graph.pagerank(edges) }
+    assert(jobs == 0, s"a warm pagerank ran $jobs job(s) before it was executed")
+    assert(second.collect().map(_.toString).sorted.sameElements(first))
+    // personalizedPagerank reads the same stored node count
+    val pprJobs = jobsDuring(spark) {
+      Graph.personalizedPagerank(edges, col("node") === 1L)
+    }
+    assert(pprJobs == 0, s"a warm personalizedPagerank ran $pprJobs job(s) while built")
+  }
+
   test("pagerank survives a 150k-spoke star that overflows the fixed 1e12 scale") {
     // worst-case mass concentration: every spoke's whole rank flows to
     // the hub, so inbound ~ 1.5e5 * scale; at the old fixed 1e12 the

@@ -73,4 +73,16 @@ class SkewAqeSpec extends SparkSpec {
     assert(rows.map(_.toString).sorted.sameElements(expected.map(_.toString).sorted),
       "sk02 differs from the plain join under default confs")
   }
+
+  test("sk02: calls on one parent session share one configured child session") {
+    val q = Skew.queries("sk02_aqe_skew_join")
+    val a = q(spark, sf).sparkSession
+    val b = q(spark, sf).sparkSession
+    assert(a ne spark, "sk02 must not set its thresholds on the caller's session")
+    assert(a eq b, "each sk02 call built a new child session")
+    assert(a.conf.get("spark.sql.autoBroadcastJoinThreshold") == "-1")
+    assert(spark.conf.get("spark.sql.autoBroadcastJoinThreshold") != "-1")
+    // the child's table loads are memoized like the parent's
+    assert(graft.Tables.load(a, sf, "customer") eq graft.Tables.load(b, sf, "customer"))
+  }
 }
