@@ -573,12 +573,9 @@ object Dedup {
         .agg(count(lit(1)).as("n_copies"), min(col("doc_id")).as("keep_id"))
     },
 
-    // Exact dedup keep-first: window rn=1 per content hash → survivors.
+    // Exact dedup keep-first: top-1 by doc_id per content hash → survivors.
     "dd02_dedup_keep_first" -> { (s, d) =>
-      val w = Window.partitionBy(md5(col("text"))).orderBy(col("doc_id"))
-      corpusExact(s, d)
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
+      Similarity.topK(corpusExact(s, d), md5(col("text")), 1, "rn", col("doc_id"))
         .select(col("doc_id"))
     },
 

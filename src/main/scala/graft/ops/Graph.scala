@@ -296,10 +296,11 @@ object Graph {
     * Returns (authorities, hubs) as two (node, a|h) frames: generic
     * directed graphs score every node on both sides, and gluing them
     * into one row per node would cost a full-outer join no consumer of
-    * a bipartite graph needs. */
-  def hits(fwd: DataFrame, rev: DataFrame, nodes: DataFrame,
+    * a bipartite graph needs. `n` is `nodes`' row count, which fixes
+    * the scale; the caller passes the count it already holds, so
+    * building the plan runs no job for it. */
+  def hits(fwd: DataFrame, rev: DataFrame, nodes: DataFrame, n: Long,
       iters: Int): (DataFrame, DataFrame) = {
-    val n = nodes.count()
     val scale = scaleFor(n)
     // Each raw sum is consumed TWICE (the max and the divide), so left
     // alone the join chain re-executes 2^half-steps times — the gr03
@@ -559,9 +560,9 @@ object Graph {
     // (kind, score) union exact: authorities live on odd (supplier)
     // nodes, hubs on even (customer) nodes, never both.
     "gr06_hits" -> { (s, d) =>
-      val nodes = adjacency(tradeEdges(s, d)).nodes
+      val Adjacency(_, nodes, n) = adjacency(tradeEdges(s, d))
       val (fwd, rev) = hitsAdj(s, d)
-      val (a, h) = hits(fwd, rev, nodes, iters = 3)
+      val (a, h) = hits(fwd, rev, nodes, n, iters = 3)
       // kind() is the ONE place the node-id parity convention lives;
       // on the bipartite graph a-side nodes are all suppliers (odd),
       // h-side all customers (even)

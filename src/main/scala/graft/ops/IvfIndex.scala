@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.VectorOps._
@@ -223,28 +222,15 @@ object IvfIndex {
     def drifted: Boolean = recall.exists(_ < floor)
   }
 
-  /** Exact brute-force cosine top-k for a bounded query sample, via the
-    * map-side partial top-k aggregator (ss04's shape — no window sort
-    * over every candidate): one corpus scan per audit, candidates never
-    * shuffle, output = |queries| × k ids. */
-  private def bruteTopK(s: SparkSession, corpus: DataFrame,
-      queries: DataFrame, topk: Int): DataFrame = {
-    import s.implicits._
-    import graft.functions.{Scored, TopK}
-    val q = broadcast(queries.select(col("vec_id").as("q_id"),
-      col("embedding").as("q_vec")))
-    corpus.crossJoin(q)
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"),
-        struct(col("vec_id").as("id"),
-          cosine(col("embedding"), col("q_vec")).as("score")).as("s"))
-      .as[(Long, Scored)]
-      .groupByKey(_._1).mapValues(_._2)
-      .agg(TopK(topk).toColumn.name("top"))
-      .toDF("q_id", "top")
-      .select(col("q_id"), posexplode(col("top")))
-      .select(col("q_id"), col("col.id").as("vec_id"))
-  }
+  /** Exact brute-force cosine top-k for a bounded query sample (ss01's
+    * shape): one corpus scan per audit, each map task's local top-k
+    * pruned before the exchange, output = |queries| × k ids. */
+  private def bruteTopK(corpus: DataFrame, queries: DataFrame,
+      topk: Int): DataFrame =
+    Similarity.topK(Similarity.queryPairs(corpus, queries)
+        .withColumn("cos", cosine(col("embedding"), col("q_vec"))),
+        col("q_id"), topk, "rank", col("cos").desc, col("vec_id"))
+      .select(col("q_id"), col("vec_id"))
 
   /** Recall@`topk` of `index` vs the exact brute force over `corpus`
     * for the bounded `queries` sample, judged against `floor`. Cost:
@@ -254,7 +240,7 @@ object IvfIndex {
   def driftStatus(s: SparkSession, corpus: DataFrame, index: Index,
       queries: DataFrame, floor: Double = DefaultRecallFloor,
       nprobe: Int = 3, topk: Int = 10): DriftStatus = {
-    val exact = bruteTopK(s, corpus, queries, topk)
+    val exact = bruteTopK(corpus, queries, topk)
     val ann = probe(s, index, queries, nprobe, topk)
       .select(col("q_id"), col("vec_id"), lit(1).as("__hit"))
     val r = exact.join(ann, Seq("q_id", "vec_id"), "left")
@@ -457,14 +443,12 @@ object IvfIndex {
     // column, so the scan gets a dynamicpruning#N partition filter and
     // still opens only the probed cells (plan-pinned in IvfIndexSpec).
     val posting = postingDf(s, index.dir)
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("vec_id"))
-    posting.join(broadcast(probes), Seq("c_id"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("q_vec"), col("vec_id"), col("embedding"))
-      .distinct()
-      .withColumn("cos", cosine(col("embedding"), col("q_vec")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= topk)
+    Similarity.topK(posting.join(broadcast(probes), Seq("c_id"))
+        .filter(col("vec_id") =!= col("q_id"))
+        .select(col("q_id"), col("q_vec"), col("vec_id"), col("embedding"))
+        .distinct()
+        .withColumn("cos", cosine(col("embedding"), col("q_vec"))),
+        col("q_id"), topk, "rank", col("cos").desc, col("vec_id"))
       .select(col("q_id"), col("vec_id"), col("cos"), col("rank"))
   }
 }

@@ -41,7 +41,7 @@ object Lineage {
   /** Truncate `df`'s plan to a scan of materialized partitions: a
     * RELIABLE checkpoint when the session has a checkpoint directory
     * configured (`SparkContext.setCheckpointDir` — survives executor
-    * loss, the cluster deployment), else an eager local checkpoint
+    * loss, the cluster deployment), else a lazy local checkpoint
     * (the local[*] form; local checkpoints die with their executors,
     * which a single-JVM test session cannot lose).
     *
@@ -87,19 +87,16 @@ object Lineage {
       ckptFiles(out.queryExecution.toRdd).foreach(q.add)
       out
     } else {
-      // LAZY by default (round 15): eager ran one materialization job
-      // per truncate at CONSTRUCTION time — round 14's GraphProf
-      // measured gr03/gr06 spending 2.2-2.7 s in those jobs vs
-      // 0.1-0.3 s executing. Deferring materialization into the first
-      // action is safe against the 2^n re-analysis trap (the logical
-      // plan is a LogicalRDD leaf either way; only WHEN the RDD
-      // materializes changes, and it caches on first compute) and
-      // measured faster like-for-like: graph family warm-min 12.4 →
-      // 10.3 s at sf0.1 (-17%), every per-query minimum lower.
-      // spark.graft.checkpoint.eager=true restores the old behavior.
-      val eager = s.conf.getOption("spark.graft.checkpoint.eager")
-        .exists(_.toBoolean)
-      df.localCheckpoint(eager)
+      // LAZY (round 15): eager ran one materialization job per
+      // truncate at CONSTRUCTION time — round 14's GraphProf measured
+      // gr03/gr06 spending 2.2-2.7 s in those jobs vs 0.1-0.3 s
+      // executing. Deferring materialization into the first action is
+      // safe against the 2^n re-analysis trap (the logical plan is a
+      // LogicalRDD leaf either way; only WHEN the RDD materializes
+      // changes, and it caches on first compute) and measured faster
+      // like-for-like: graph family warm-min 12.4 → 10.3 s at sf0.1
+      // (-17%), every per-query minimum lower.
+      df.localCheckpoint(eager = false)
     }
   }
 }

@@ -9,7 +9,7 @@ import graft.functions.VectorOps._
 /** Approximate-nearest-neighbor search over the `embeddings` table
   * (`embedding: array<float>`, 64-dim).
   *
-  * Four tiers (ss04 = ss01 through the bounded top-k Aggregator):
+  * Three tiers (ss04 is ss01 under a second registered name):
   *   - ss01: brute-force cosine top-k — the exact baseline. Queries are
   *     broadcast; the big side streams through a fused-codegen dot
   *     product, then a per-query window takes top-k. At 100 TB this is
@@ -451,21 +451,37 @@ object Similarity {
     }.mkString("(", "\n    + ", ")")
   }
 
+  /** Per-group top-k: `df`'s rows ranked 1..k in `rankCol` by `order`
+    * within each `by` group. Spark plans `row_number() <= k` as a
+    * partial WindowGroupLimit below the exchange and a final one above
+    * it, so each map task keeps only its local top-k per group before
+    * the shuffle: the local prune + global merge of distributed top-k.
+    * Ties break on whatever `order` lists last. */
+  def topK(df: DataFrame, by: Column, k: Int, rankCol: String,
+      order: Column*): DataFrame =
+    df.withColumn(rankCol, row_number().over(Window.partitionBy(by).orderBy(order: _*)))
+      .filter(col(rankCol) <= k)
+
+  /** Every (corpus vector, query) pair but a vector against itself: the
+    * bounded `queries` side, projected to `q_id`, `extra` and `q_vec`,
+    * broadcast against the streamed `corpus`. Both sides carry
+    * `vec_id` and `embedding`. */
+  def queryPairs(corpus: DataFrame, queries: DataFrame, extra: Column*): DataFrame =
+    corpus.crossJoin(broadcast(queries.select(
+        (col("vec_id").as("q_id") +: extra :+ col("embedding").as("q_vec")): _*)))
+      .filter(col("vec_id") =!= col("q_id"))
+
+  // Exact brute-force cosine top-10 for query vectors vec_id < 10 (ss01, ss04).
+  private val cosineTop10: (SparkSession, String) => DataFrame = { (s, d) =>
+    val all = emb(s, d)
+    topK(queryPairs(all, all.filter(col("vec_id") < 10))
+        .withColumn("cos", cosine(col("embedding"), col("q_vec"))),
+        col("q_id"), 10, "rank", col("cos").desc, col("vec_id"))
+      .select(col("q_id"), col("vec_id"), col("cos"), col("rank"))
+  }
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // Exact brute-force cosine top-10 for query vectors vec_id < 10.
-    "ss01_topk_bruteforce" -> { (s, d) =>
-      val all = emb(s, d)
-      val q = broadcast(all.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_vec")))
-      val w = Window.partitionBy(col("q_id"))
-        .orderBy(col("cos").desc, col("vec_id"))
-      all.crossJoin(q)
-        .filter(col("vec_id") =!= col("q_id"))
-        .withColumn("cos", cosine(col("embedding"), col("q_vec")))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 10)
-        .select(col("q_id"), col("vec_id"), col("cos"), col("rank"))
-    },
+    "ss01_topk_bruteforce" -> cosineTop10,
 
     // Random-hyperplane LSH top-k: 16 sign bits banded 4×4; candidates
     // share a band bucket. 4-bit bands keep recall usable even when true
@@ -484,11 +500,8 @@ object Similarity {
         .filter(col("vec_id") =!= col("q_id"))
         .select(col("q_id"), col("q_vec"), col("vec_id"), col("embedding"))
         .distinct()
-      val w = Window.partitionBy(col("q_id"))
-        .orderBy(col("cos").desc, col("vec_id"))
-      cands.withColumn("cos", cosine(col("embedding"), col("q_vec")))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 10)
+      topK(cands.withColumn("cos", cosine(col("embedding"), col("q_vec"))),
+          col("q_id"), 10, "rank", col("cos").desc, col("vec_id"))
         .select(col("q_id"), col("vec_id"), col("cos"), col("rank"))
     },
 
@@ -502,10 +515,7 @@ object Similarity {
     // validated via ss01).
     "ss07_range_search" -> { (s, d) =>
       val all = emb(s, d)
-      val q = broadcast(all.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_vec")))
-      all.crossJoin(q)
-        .filter(col("vec_id") =!= col("q_id"))
+      queryPairs(all, all.filter(col("vec_id") < 10))
         .withColumn("cos", cosine(col("embedding"), col("q_vec")))
         .filter(col("cos") >= 0.2)
         .select(col("q_id"), col("vec_id"), col("cos"))
@@ -515,54 +525,21 @@ object Similarity {
     // embeddings trained with dot-product objectives (two-tower
     // recommenders, DSSM), where cosine's normalization is WRONG
     // because the vector norm carries signal. Same scalable shape as
-    // ss04 (broadcast bounded queries, fused VecDot corpus scan,
-    // bounded map-side partial top-k — no window sort over all
-    // candidates), different score: the raw dot product. Exact
-    // cross-engine: VecDot's sequential double fold equals DuckDB's
-    // list_dot_product term-for-term (validated via ss01/ss07).
+    // ss01 (broadcast bounded queries, fused VecDot corpus scan,
+    // per-query top-k pruned map-side before the exchange), different
+    // score: the raw dot product. Exact cross-engine: VecDot's
+    // sequential double fold equals DuckDB's list_dot_product
+    // term-for-term (validated via ss01/ss07).
     "ss08_mips_topk" -> { (s, d) =>
-      import s.implicits._
-      import graft.functions.{Scored, TopK}
       val all = emb(s, d)
-      val q = broadcast(all.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_vec")))
-      val scored = all.crossJoin(q)
-        .filter(col("vec_id") =!= col("q_id"))
-        .select(col("q_id"),
-          struct(col("vec_id").as("id"),
-            vecDot(col("embedding"), col("q_vec")).as("score")).as("s"))
-        .as[(Long, Scored)]
-      scored.groupByKey(_._1).mapValues(_._2)
-        .agg(TopK(10).toColumn.name("top"))
-        .toDF("q_id", "top")
-        .select(col("q_id"), posexplode(col("top")))
-        .select(col("q_id"), col("col.id").as("vec_id"),
-          col("col.score").as("dot"), (col("pos") + 1).as("rank"))
+      topK(queryPairs(all, all.filter(col("vec_id") < 10))
+          .withColumn("dot", vecDot(col("embedding"), col("q_vec"))),
+          col("q_id"), 10, "rank", col("dot").desc, col("vec_id"))
+        .select(col("q_id"), col("vec_id"), col("dot"), col("rank"))
     },
 
-    // ss01's semantics through the scalable top-k primitive: a typed
-    // Aggregator with a bounded buffer (map-side partial top-k) instead
-    // of window row_number (which shuffles+sorts every candidate).
-    // Same oracle as ss01 — results must be identical.
-    "ss04_topk_aggregated" -> { (s, d) =>
-      import s.implicits._
-      import graft.functions.{Scored, TopK}
-      val all = emb(s, d)
-      val q = broadcast(all.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_vec")))
-      val scored = all.crossJoin(q)
-        .filter(col("vec_id") =!= col("q_id"))
-        .select(col("q_id"),
-          struct(col("vec_id").as("id"),
-            cosine(col("embedding"), col("q_vec")).as("score")).as("s"))
-        .as[(Long, Scored)]
-      scored.groupByKey(_._1).mapValues(_._2)
-        .agg(TopK(10).toColumn.name("top"))
-        .toDF("q_id", "top")
-        .select(col("q_id"), posexplode(col("top")))
-        .select(col("q_id"), col("col.id").as("vec_id"),
-          col("col.score").as("cos"), (col("pos") + 1).as("rank"))
-    },
+    // ss01 under a second registered name: same plan, same oracle.
+    "ss04_topk_aggregated" -> cosineTop10,
 
     // Symmetric int8 quantization per embedding (the PQ-lite compression
     // step an ANN index runs before storing vectors): scale = max|x|/127,
@@ -674,13 +651,10 @@ object Similarity {
         import s.implicits._
         val probe = broadcast(probeRows.toDF("q_id", "cell", "qq"))
 
-        val w = Window.partitionBy(col("q_id"))
-          .orderBy(col("dist"), col("vec_id"))
-        cells.join(probe, "cell")
-          .filter(col("vec_id") =!= col("q_id"))
-          .withColumn("dist", int8SqDist(col("q"), col("qq")))
-          .withColumn("rank", row_number().over(w))
-          .filter(col("rank") <= 10)
+        topK(cells.join(probe, "cell")
+            .filter(col("vec_id") =!= col("q_id"))
+            .withColumn("dist", int8SqDist(col("q"), col("qq"))),
+            col("q_id"), 10, "rank", col("dist"), col("vec_id"))
           .select(col("q_id"), col("vec_id"), col("dist"),
             col("rank").cast("int").as("rank"))
       }
@@ -728,24 +702,18 @@ object Similarity {
         val probe = broadcast(
           probeRows.toDF("q_id", "cell").join(qlut, "q_id"))
 
-        val adcW = Window.partitionBy(col("q_id"))
-          .orderBy(col("adc"), col("vec_id"))
-        val shortlist = cells.join(enc, "vec_id").join(probe, "cell")
-          .filter(col("vec_id") =!= col("q_id"))
-          .withColumn("adc", adcDist)
-          .withColumn("rn", row_number().over(adcW))
-          .filter(col("rn") <= C)
+        val shortlist = topK(cells.join(enc, "vec_id").join(probe, "cell")
+            .filter(col("vec_id") =!= col("q_id"))
+            .withColumn("adc", adcDist),
+            col("q_id"), C, "rn", col("adc"), col("vec_id"))
           .select(col("q_id"), col("vec_id"))
 
         val qvecs = broadcast(q8.filter(col("vec_id") < 10)
           .select(col("vec_id").as("q_id"), col("q").as("q_q")))
-        val w = Window.partitionBy(col("q_id"))
-          .orderBy(col("l2"), col("vec_id"))
-        shortlist.join(q8, Seq("vec_id"))
-          .join(qvecs, Seq("q_id"))
-          .withColumn("l2", int8SqDist(col("q"), col("q_q")))
-          .withColumn("rank", row_number().over(w))
-          .filter(col("rank") <= 10)
+        topK(shortlist.join(q8, Seq("vec_id"))
+            .join(qvecs, Seq("q_id"))
+            .withColumn("l2", int8SqDist(col("q"), col("q_q"))),
+            col("q_id"), 10, "rank", col("l2"), col("vec_id"))
           .select(col("q_id"), col("vec_id"), col("l2"),
             col("rank").cast("int").as("rank"))
       }
@@ -761,18 +729,15 @@ object Similarity {
       val q8 = quantize(emb(s, d)).select(col("vec_id"), col("q"))
       val qs = broadcast(q8.filter(col("vec_id") < 10)
         .select(col("vec_id").as("q_id"), col("q").as("q_q")))
-      val w = Window.partitionBy(col("q_id"))
-        .orderBy(col("score").desc, col("vec_id"))
       // spread (round 17): the quantize + 10×64-term integer dot kernel
       // fuses into the single-row-group embeddings scan — one 1.5-1.7 s
       // serial task carried the whole query (QProf). CPU-bound like
       // qa05; same-window A/B med 1.114→0.837-0.859, min 0.815→0.69-0.76.
       // No-op at scale (Tables.spread).
-      graft.Tables.spread(q8).crossJoin(qs)
-        .filter(col("vec_id") =!= col("q_id"))
-        .withColumn("score", int8Dot(col("q"), col("q_q")))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 10)
+      topK(graft.Tables.spread(q8).crossJoin(qs)
+          .filter(col("vec_id") =!= col("q_id"))
+          .withColumn("score", int8Dot(col("q"), col("q_q"))),
+          col("q_id"), 10, "rank", col("score").desc, col("vec_id"))
         .select(col("q_id"), col("vec_id"), col("score"),
           col("rank").cast("int").as("rank"))
     },
@@ -788,26 +753,19 @@ object Similarity {
     // kNN classification over embeddings: every 100th vector is treated
     // as an unlabeled query, classified by majority vote of its 5
     // cosine-nearest labeled neighbors (ties → smallest label). The
-    // query side broadcasts (bounded), the corpus streams once; per-
-    // query top-k is a window here — at a large query count the ss04
-    // bounded-Aggregator top-k replaces it, same semantics. Votes and
-    // the argmax are integer-deterministic, so the whole classifier is
-    // oracle-exact.
+    // query side broadcasts (bounded), the corpus streams once; the
+    // per-query top-k keeps each map task's local top-5 before the
+    // exchange. Votes and the argmax are integer-deterministic, so the
+    // whole classifier is oracle-exact.
     "emb02_knn_classify" -> { (s, d) =>
       val all = Tables.load(s, d, "embeddings")
-      val q = broadcast(all.filter(col("vec_id") % 100 === 0)
-        .select(col("vec_id").as("q_id"), col("label").as("true_label"),
-          col("embedding").as("q_vec")))
-      val wN = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("vec_id"))
-      val neighbors = all.filter(col("vec_id") % 100 =!= 0).crossJoin(q)
-        .withColumn("cos", cosine(col("embedding"), col("q_vec")))
-        .withColumn("rn", row_number().over(wN))
-        .filter(col("rn") <= 5)
-      val wV = Window.partitionBy(col("q_id")).orderBy(col("n_votes").desc, col("label"))
-      neighbors.groupBy(col("q_id"), col("true_label"), col("label"))
-        .agg(count(lit(1)).as("n_votes"))
-        .withColumn("vr", row_number().over(wV))
-        .filter(col("vr") === 1)
+      val neighbors = topK(queryPairs(all.filter(col("vec_id") % 100 =!= 0),
+          all.filter(col("vec_id") % 100 === 0), col("label").as("true_label"))
+          .withColumn("cos", cosine(col("embedding"), col("q_vec"))),
+        col("q_id"), 5, "rn", col("cos").desc, col("vec_id"))
+      topK(neighbors.groupBy(col("q_id"), col("true_label"), col("label"))
+          .agg(count(lit(1)).as("n_votes")),
+          col("q_id"), 1, "vr", col("n_votes").desc, col("label"))
         .select(col("q_id"), col("true_label"),
           col("label").as("pred_label"), col("n_votes"))
     },
@@ -844,13 +802,10 @@ object Similarity {
         .groupBy(col("label"))
         .agg(transform(array_sort(collect_list(struct(col("pos"), col("c")))),
           x => x.getField("c")).as("cvec"))
-      val w = Window.partitionBy(col("label"))
-        .orderBy(col("cos"), col("vec_id"))
-      e.join(broadcast(cents), "label")
-        .withColumn("cos",
-          graft.functions.VectorOps.cosine(col("embedding"), col("cvec")))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 5)
+      topK(e.join(broadcast(cents), "label")
+          .withColumn("cos",
+            graft.functions.VectorOps.cosine(col("embedding"), col("cvec"))),
+          col("label"), 5, "rank", col("cos"), col("vec_id"))
         .select(col("label"), col("vec_id"), col("cos"),
           col("rank").cast("int").as("rank"))
     },
@@ -1168,13 +1123,10 @@ object Similarity {
     // + the ss06 top-k window.
     "ss09_pq_topk" -> { (s, d) =>
       val (enc, qdf) = pqAdc(s, d)
-      val w = Window.partitionBy(col("q_id"))
-        .orderBy(col("dist"), col("vec_id"))
-      enc.crossJoin(broadcast(qdf))
-        .filter(col("vec_id") =!= col("q_id"))
-        .withColumn("dist", adcDist)
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 10)
+      topK(enc.crossJoin(broadcast(qdf))
+          .filter(col("vec_id") =!= col("q_id"))
+          .withColumn("dist", adcDist),
+          col("q_id"), 10, "rank", col("dist"), col("vec_id"))
         .select(col("q_id"), col("vec_id"), col("dist"),
           col("rank").cast("int").as("rank"))
     },
@@ -1198,23 +1150,17 @@ object Similarity {
       val C = 100
       val q8 = quantized(s, d)
       val (enc, qdf) = pqAdc(s, d)
-      val adcW = Window.partitionBy(col("q_id"))
-        .orderBy(col("dist"), col("vec_id"))
-      val shortlist = enc.crossJoin(broadcast(qdf))
-        .filter(col("vec_id") =!= col("q_id"))
-        .withColumn("dist", adcDist)
-        .withColumn("rn", row_number().over(adcW))
-        .filter(col("rn") <= C)
+      val shortlist = topK(enc.crossJoin(broadcast(qdf))
+          .filter(col("vec_id") =!= col("q_id"))
+          .withColumn("dist", adcDist),
+          col("q_id"), C, "rn", col("dist"), col("vec_id"))
         .select(col("q_id"), col("vec_id"))
       val qs = broadcast(q8.filter(col("vec_id") < 10)
         .select(col("vec_id").as("q_id"), col("q").as("q_q")))
-      val w = Window.partitionBy(col("q_id"))
-        .orderBy(col("l2"), col("vec_id"))
-      shortlist.join(q8, Seq("vec_id"))
-        .join(qs, Seq("q_id"))
-        .withColumn("l2", int8SqDist(col("q"), col("q_q")))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 10)
+      topK(shortlist.join(q8, Seq("vec_id"))
+          .join(qs, Seq("q_id"))
+          .withColumn("l2", int8SqDist(col("q"), col("q_q"))),
+          col("q_id"), 10, "rank", col("l2"), col("vec_id"))
         .select(col("q_id"), col("vec_id"), col("l2"),
           col("rank").cast("int").as("rank"))
     }
@@ -1684,7 +1630,7 @@ object Similarity {
         |  WHERE q.vec_id < 10 AND x.vec_id != q.vec_id)
         |SELECT q_id, vec_id, cos FROM scored WHERE cos >= 0.2""".stripMargin,
     // ss08: raw dot ranking; ROW_NUMBER ties broken by vec_id exactly
-    // as TopK's comparator does.
+    // as the Spark window's order does.
     "ss08_mips_topk" ->
       """WITH e AS MATERIALIZED (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
         |scored AS (

@@ -366,12 +366,9 @@ object TextAnalysis {
           split(col("g"), " ").getItem(1).as("w2"))
         .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c12"))
       val uni = big.groupBy(col("w1")).agg(sum(col("c12")).as("c1"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("w1")).orderBy(col("p").desc, col("w2"))
-      big.join(uni, "w1")
-        .withColumn("p", col("c12").cast("double") / col("c1"))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 3)
+      Similarity.topK(big.join(uni, "w1")
+          .withColumn("p", col("c12").cast("double") / col("c1")),
+          col("w1"), 3, "rank", col("p").desc, col("w2"))
         .select(col("w1"), col("w2"), col("c12"), col("c1"), col("p"),
           col("rank").cast("int").as("rank"))
     },
@@ -456,12 +453,9 @@ object TextAnalysis {
         .groupBy(col("doc_id"), col("word")).agg(count(lit(1)).as("tf"))
       val dfreq = tf.groupBy(col("word")).agg(count(lit(1)).as("df"))
       val ndocs = docs(s, d).agg(count(lit(1)).as("n_docs"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("doc_id")).orderBy(col("score").desc, col("word"))
-      tf.join(dfreq, "word").crossJoin(broadcast(ndocs))
-        .withColumn("score", (col("tf") * col("n_docs")).cast("double") / col("df"))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 3)
+      Similarity.topK(tf.join(dfreq, "word").crossJoin(broadcast(ndocs))
+          .withColumn("score", (col("tf") * col("n_docs")).cast("double") / col("df")),
+          col("doc_id"), 3, "rank", col("score").desc, col("word"))
         .select(col("doc_id"), col("word"), col("tf"), col("df"),
           col("score"), col("rank").cast("int").as("rank"))
     },
@@ -472,19 +466,18 @@ object TextAnalysis {
     // corpus explode+partial-agg shuffle on (doc, word); df and idf
     // have VOCABULARY cardinality (AQE decides that join, never a
     // forced broadcast); the query list and the one-row corpus stats
-    // are the only hint-broadcast sides. Top-10 per query goes through
-    // the bounded TopK aggregator (map-side partial top-k), not a
-    // window sort — the exchange carries k rows per task, the shape
-    // that survives a 100 TB posting stream. Determinism: idf and the
-    // final score round to 4 decimals (ties then break on doc_id, same
-    // comparator in TopK and the oracle's ROW_NUMBER); every other op
+    // are the only hint-broadcast sides. Top-10 per query is pruned
+    // map-side (the partial WindowGroupLimit) — the exchange carries k
+    // rows per task, the shape that survives a 100 TB posting stream.
+    // Determinism: idf and the final score round to 4 decimals (ties
+    // then break on doc_id, the same order in the window and the
+    // oracle's ROW_NUMBER); every other op
     // is IEEE correctly-rounded with identical association both
     // engines, so cross-engine noise (~1e-13 absolute at these
     // magnitudes) is 5 orders below the closest measured boundary
     // distance (1.1e-8 absolute, sf0.1; idf margins are 1e-2+).
     "tx16_bm25_topk" -> { (s, d) =>
       import s.implicits._
-      import graft.functions.{Scored, TopK}
       val qterms = Seq(1 -> "spark", 1 -> "join", 2 -> "dup", 2 -> "stream",
         3 -> "window", 3 -> "sort", 3 -> "merge")
       val q = broadcast(qterms.toDF("q_id", "word"))
@@ -541,18 +534,10 @@ object TextAnalysis {
           (col("idf") * (col("tf") * lit(2.2) /
             (col("tf") + lit(1.2) * (lit(0.25) +
               lit(0.75) * col("dl") / col("avgdl"))))).as("c"))
-      val scored = contrib.groupBy(col("q_id"), col("doc_id"))
-        .agg(round(sum(col("c")), 4).as("score"))
-        .select(col("q_id").cast("long").as("qk"),
-          struct(col("doc_id").as("id"), col("score")).as("s"))
-        .as[(Long, Scored)]
-      scored.groupByKey(_._1).mapValues(_._2)
-        .agg(TopK(10).toColumn.name("top"))
-        .toDF("q_id", "top")
-        .select(col("q_id"), posexplode(col("top")))
-        .select(col("q_id").cast("int").as("q_id"),
-          col("col.id").as("doc_id"), col("col.score").as("score"),
-          (col("pos") + 1).cast("int").as("rank"))
+      Similarity.topK(contrib.groupBy(col("q_id"), col("doc_id"))
+          .agg(round(sum(col("c")), 4).as("score")),
+          col("q_id"), 10, "rank", col("score").desc, col("doc_id"))
+        .select(col("q_id"), col("doc_id"), col("score"), col("rank"))
     },
 
     // BPE merge training (Sennrich et al. 2016 §3.2): learn the first

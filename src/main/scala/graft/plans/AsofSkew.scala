@@ -9,30 +9,23 @@ import org.apache.spark.sql.graft.PlanBridge
   * serializes its entire probe volume through one partition's sort +
   * merge — the same failure mode sk01 treats for equi-joins.
   *
-  * The fix is EXACT salting, and as-of joins make it unusually clean:
-  * a probe's match depends only on the build rows OF ITS KEY, so
-  * splitting a hot key's probes across S salts while REPLICATING that
-  * key's build rows to every salt changes nothing about any probe's
-  * match — each salted partition still sees the key's complete build
-  * history. (Contrast equi-join salting, which must reconcile
-  * duplicated matches; here the per-probe semantics make replication
-  * free of bookkeeping.) Build rows for a hot key are duplicated S
-  * times — the build side is the small side in every skew scenario
-  * that matters, and S·|hot build rows| stays trivially bounded.
+  * Hot PROBE keys need nothing from the caller: the runtime rule
+  * [[org.apache.spark.sql.graft.OptimizeSkewedGraftJoin]] slices a
+  * skewed probe partition by mapper ranges and replicates the build
+  * partition whole to every slice. Replication is exact for time
+  * joins: a probe's match depends only on the build rows OF ITS KEY,
+  * and every slice still sees the key's complete build history.
   *
-  * Probes salt by `pmod(hash(time), S)` — deterministic, and time
-  * spreads a hot key's probes uniformly. Cold keys keep salt 0, so
-  * their build rows are not duplicated and their partition layout is
-  * unchanged (modulo the extra join key in the hash).
+  * Hot BUILD keys are this object's: [[detectHotKeyTuples]] finds them
+  * on a sample, and [[buildSkewed]] routes each through the keyless
+  * composition of its join kind (below).
   *
   * Keys are ARBITRARY tuples: any number of key columns of any
   * equatable type (strings, ints, composites). Hot-key membership is
   * an OR-of-conjunct-equalities predicate over the ≤ 1/minShare
   * detected tuples — a few literal comparisons per row, broadcast-free
-  * and codegen-friendly. Null key components never test hot (SQL
-  * equality semantics), which is correct: null keys never match in
-  * the join either, so their layout is irrelevant. Both tiers take the
-  * join as one [[TimeJoin]] descriptor, as-of and band alike.
+  * and codegen-friendly. The join comes as one [[TimeJoin]]
+  * descriptor, as-of and band alike.
   */
 object AsofSkew {
 
@@ -42,8 +35,8 @@ object AsofSkew {
     * the share, and only that many rows are collected. Two vocab-free
     * jobs over the sample — the sk02 detection shape, usable as a
     * pre-pass at any scale. A tuple with a null component is never
-    * returned: it can never match in the join, so routing or salting
-    * it would only add a branch that yields nothing. */
+    * returned: it can never match in the join, so routing it would
+    * only add a branch that yields nothing. */
   def detectHotKeyTuples(probe: DataFrame, keys: Seq[String],
       sampleFraction: Double = 0.01, minShare: Double = 0.05)
       : Seq[Seq[Any]] = {
@@ -63,47 +56,10 @@ object AsofSkew {
     } finally { counts.unpersist(); () }
   }
 
-  /** OR-of-conjunct-equalities membership test: does this row's key
-    * tuple equal any hot tuple? Null components compare to null (never
-    * hot) under ===, matching the join's own null semantics. */
-  private def isHot(cols: Seq[String], hot: Seq[Seq[Any]]): Column =
-    hot.map(t => cols.zip(t).map { case (c, v) =>
-      if (v == null) lit(false) else col(c) === lit(v)
-    }.reduce(_ && _)).reduce(_ || _)
-
-  /** The join with the hot key tuples salted `salts` ways. Results are
-    * row-identical to the unsalted join (AsofSkewSpec pins it, including
-    * string and two-column keys); only the partition layout changes.
-    * The replication argument holds for both kinds: a probe's as-of
-    * match and its band are both functions of its key's COMPLETE build
-    * rows, so replicating the hot keys' build rows to every salt and
-    * routing each probe to one salt preserves every probe's match set
-    * exactly, with no duplicate and no reconciliation (each probe sees
-    * exactly one salt's full copy). */
-  def salted(left: DataFrame, right: DataFrame, join: TimeJoin,
-      hotKeys: Seq[Seq[Any]], salts: Int = 16): DataFrame = {
-    require(salts > 1, s"salts must be > 1, got $salts")
-    require(!join.keyless, "salting needs the join's key pairs")
-    if (hotKeys.isEmpty) return PlanBridge.timeJoin(left, right, join)
-    val l2 = left.withColumn("__graft_salt_l",
-      when(isHot(join.leftKeys, hotKeys),
-        pmod(hash(col(join.leftTime)), lit(salts)).cast("long"))
-        .otherwise(lit(0L)))
-    val r2 = right.withColumn("__graft_salt_r",
-      explode(when(isHot(join.rightKeys, hotKeys),
-        sequence(lit(0L), lit(salts - 1L)))
-        .otherwise(array(lit(0L)))))
-    // noAutoRoute: this call IS a skew treatment — the buildKeys=auto
-    // detection pre-pass must not fire inside it
-    PlanBridge.noAutoRoute(PlanBridge.timeJoin(l2, r2, join.copy(
-        keys = join.keys :+ ("__graft_salt_l" -> "__graft_salt_r"))))
-      .drop("__graft_salt_l", "__graft_salt_r")
-  }
-
   // ---- BUILD-side hot keys: the opposite skew quadrant --------------
   //
-  // Probe salting is useless here — it would REPLICATE the hot key's
-  // millions of build rows per salt. And the AQE probe-slice only
+  // Salting the probes is useless here — it would REPLICATE the hot
+  // key's millions of build rows per salt. And the AQE probe-slice only
   // helps while the probe partition is at least build-sized: every
   // slice re-fetches and re-sorts the whole hot build partition, so
   // with build >> probe the wall stays pinned at sort(build_hot). The
@@ -117,12 +73,15 @@ object AsofSkew {
   // which each branch still sees in full. Detection: sample the BUILD
   // side with [[detectHotKeyTuples]] (same bounded two-job shape).
 
-  /** Null-safe hot-membership: a null key component is never hot (it
-    * never matches in the join either), and — unlike raw `isHot`,
-    * whose three-valued NULL would make `!pred` DROP null-key rows —
-    * this is safe to negate for the cold branch. */
+  /** OR-of-conjunct-equalities membership test: does this row's key
+    * tuple equal any hot tuple? A null key component is never hot (it
+    * never matches in the join either), and the test is never NULL —
+    * a three-valued NULL would make `!pred` DROP null-key rows — so it
+    * is safe to negate for the cold branch. */
   private def isHotNullSafe(cols: Seq[String], hot: Seq[Seq[Any]]): Column =
-    coalesce(isHot(cols, hot), lit(false))
+    coalesce(hot.map(t => cols.zip(t).map { case (c, v) =>
+      if (v == null) lit(false) else col(c) === lit(v)
+    }.reduce(_ && _)).reduce(_ || _), lit(false))
 
   /** Plan-growth guard for the build-skew tiers: one keyless branch is
     * built PER hot tuple, and every branch carries its own scan of both
@@ -154,8 +113,8 @@ object AsofSkew {
     require(!join.keyless, "build-skew routing needs the join's key pairs")
     // one branch per DISTINCT tuple: a duplicated hot key (two
     // detection passes concatenated) would silently duplicate every
-    // matched row for it — the salted sibling's membership test is
-    // naturally duplicate-tolerant, this union is not
+    // matched row for it — the cold branch's membership test is
+    // duplicate-tolerant, this union is not
     val hot = hotKeys.distinct
     if (hot.isEmpty) PlanBridge.timeJoin(left, right, join)
     else {

@@ -531,8 +531,9 @@ object Pipeline {
     // argument). u ∈ (0,1] (numerator h+1 ≤ 2^52, denominator 2^52+1,
     // both exactly representable) so ln never sees 0; weight is
     // clamped ≥ 1 so a degenerate zero-length doc cannot put 0/0 NaN
-    // ordering in the window. At 10⁹ docs per source the window form
-    // swaps for the ss04 bounded-TopK aggregator, same semantics.
+    // ordering in the window. At 10⁹ docs per source the same plan
+    // holds: the partial WindowGroupLimit keeps each map task's local
+    // top-10 per source before the shuffle.
     "pp14_weighted_sample" -> { (s, d) =>
       val w = Window.partitionBy(col("source"))
         .orderBy(col("key").desc, col("doc_id"))

@@ -79,11 +79,14 @@ private[tools] object AsofGate {
     spark.conf.set(OptimizeSkewedGraftJoin.ConfKey, "false")
 
     // map-side generators: one range each, no shuffle before the join.
-    // Keyed probes (key = id % keys, time = id % span), keyless probes,
-    // and keyed build sides (`perKey` rows per key at times 0, step,
-    // 2·step, ..., id = row number)
+    // Keyed probes (key = id % keys, time = a hash of id mod span, so
+    // every key sees the whole time range: `id % span` would give each
+    // key only the times congruent to it), keyless probes, and keyed
+    // build sides (`perKey` rows per key at times 0, step, 2·step, ...,
+    // id = row number)
+    def hashedTime(span: Long) = pmod(xxhash64(col("id")), lit(span)).as("p_us")
     def keyedProbes(n: Long, keys: Long, span: Long) = spark.range(n).select(
-      (col("id") % keys).as("p_key"), (col("id") % span).as("p_us"), col("id").as("p_id"))
+      (col("id") % keys).as("p_key"), hashedTime(span), col("id").as("p_id"))
     def keylessProbes(n: Long, span: Long) = spark.range(n).select(
       (col("id") % span).as("p_us"), col("id").as("p_id"))
     def keyedBuild(p: String, keys: Long, perKey: Long, step: Long) =
@@ -128,7 +131,7 @@ private[tools] object AsofGate {
 
     // ---- small-dimension scenario: where the broadcast variant lives ----
     // 1000 keys x 100 dimension rows (times 0,100..9900) probed by the
-    // same 60M-row stream (key = id % 1000, t = id % 10000): every
+    // same 60M-row stream (key = id % 1000, t = hash(id) mod 10000): every
     // probe's match is exactly (k*100 + t/100) — closed form, verified
     // distributed. Broadcast never shuffles the probe; merge pays a
     // full probe exchange + sort for a 100k-row build side.
@@ -161,44 +164,37 @@ private[tools] object AsofGate {
     // ---- skew scenario: one key holds 20% of the 60M probes ----
     // Same dim build side and the same key-independent closed form
     // (match = p_key*100 + p_us div 100), but every 5th probe lands on
-    // key 7 — the unsalted merge sorts ~20% of the stream in ONE
-    // partition while AsofSkew's exact salting (detect → salt probes
-    // by time hash → replicate the hot key's 100 build rows) spreads
-    // it across the cluster. Gates identical for both paths: the
-    // rewrite must change the layout, never a match.
+    // key 7 — the plain merge sorts ~20% of the stream in ONE
+    // partition, while the AQE skew split (OptimizeSkewedGraftJoin)
+    // slices that partition by mapper ranges and replicates the hot
+    // key's 100 build rows to every slice. Gates identical for both
+    // runs: the split must change the layout, never a match.
     val hotKey = 7L
     val skewProbes = spark.range(nFull).select(
       when(col("id") % 5 === 0, lit(hotKey))
         .otherwise(col("id") % dimKeys).as("p_key"),
-      (col("id") % 10000).as("p_us"),
+      hashedTime(10000),
       col("id").as("p_id"))
     val detected = AsofSkew.detectHotKeyTuples(
       skewProbes, Seq("p_key"), sampleFraction = 0.001, minShare = 0.05)
     assert(detected == Seq(Seq(hotKey)),
       s"hot-key detection found $detected, expected Seq($hotKey)")
-    def unsaltedJoin = PlanBridge.asofJoin(skewProbes, dim,
+    def skewJoin = PlanBridge.asofJoin(skewProbes, dim,
       Seq("p_key" -> "d_key"), "p_us", "d_us", "merge")
-    def saltedJoin = AsofSkew.salted(skewProbes, dim,
-      TimeJoin(Seq("p_key" -> "d_key"), "p_us", "d_us", Asof(), hint = "merge"),
-      detected, salts = graft.GraftSession.cpus)
-    val uGates = dimGates("skew_unsalted")(unsaltedJoin)
-    val sGates = dimGates("skew_salted")(saltedJoin)
-    assert(uGates == sGates, s"skew gates diverge: $uGates vs $sGates")
-    assert(sGates == Seq(nFull, 0L, 0L), s"skew gates: (rows, bad, nulls) $sGates")
+    val uGates = dimGates("skew_unsalted")(skewJoin)
+    assert(uGates == Seq(nFull, 0L, 0L), s"skew gates: (rows, bad, nulls) $uGates")
 
-    // the SAME stock call with the AQE skew split on: zero user action,
-    // the runtime rule slices the hot probe partition by mapper ranges
-    // (OptimizeSkewedGraftJoin) — must match the unsalted gates exactly
-    // and land at salted-level time
+    // the SAME stock call with the AQE skew split on: zero user action —
+    // must match the plain run's gates exactly
     val aGates = withConf(OptimizeSkewedGraftJoin.ConfKey -> "true")(
-      dimGates("skew_aqe")(unsaltedJoin))
+      dimGates("skew_aqe")(skewJoin))
     assert(aGates == uGates, s"AQE skew gates diverge: $aGates vs $uGates")
 
     // ---- hot-BUILD scenario: 20%+ of the BUILD rows on one key ----
     // The opposite skew quadrant: probes uniform (12M over 1000 keys),
     // build 30M rows of which key 7 holds 6M — the stock merge sorts
-    // the 6M-row build history in ONE partition. Probe salting can't
-    // help (it would replicate those 6M rows per salt) and the AQE
+    // the 6M-row build history in ONE partition. Salting the probes
+    // can't help (it would replicate those 6M rows per salt) and the AQE
     // probe-slice can't either (each slice would re-sort the full hot
     // build partition: b_i >> p_i, the rule's warn-and-leave case), so
     // the fix measured here is the manual keyless-bucketed routing

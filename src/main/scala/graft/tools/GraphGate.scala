@@ -88,7 +88,7 @@ private[tools] object GraphGate {
       .unionByName(fwd.select(col("dst").as("node"))).distinct()
     val hitsIters = 3
     val ((aMap, hMap), hitsSec) = timed {
-      val (a, h) = graft.ops.Graph.hits(fwd, rev, nodes, hitsIters)
+      val (a, h) = graft.ops.Graph.hits(fwd, rev, nodes, nodes.count(), hitsIters)
       (a.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap,
         h.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
     }

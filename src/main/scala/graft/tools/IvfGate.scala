@@ -1,9 +1,8 @@
 package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.ops.IvfIndex
+import graft.ops.{IvfIndex, Similarity}
 import graft.tools.Scale.timed
 
 /** Incremental-IVF gate (the select gate's pattern applied to round
@@ -56,16 +55,10 @@ private[tools] object IvfGate {
       val batch = all.filter(col("vec_id") % 10 === 0)
 
       // exact ground truth: brute-force cosine top-10 for the 10 probes
-      val probes = all.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-      val w = Window.partitionBy(col("q_id"))
-        .orderBy(col("cos").desc, col("vec_id"))
-      val exact = all.crossJoin(broadcast(probes))
-        .filter(col("vec_id") =!= col("q_id"))
-        .withColumn("cos",
-          graft.functions.VectorOps.cosine(col("embedding"), col("q_vec")))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= 10)
+      val exact = Similarity.topK(Similarity.queryPairs(all, all.filter(col("vec_id") < 10))
+          .withColumn("cos",
+            graft.functions.VectorOps.cosine(col("embedding"), col("q_vec"))),
+          col("q_id"), 10, "rank", col("cos").desc, col("vec_id"))
         .select(col("q_id"), col("vec_id"))
         .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
       val (_, tExact) = timed(exact.count())

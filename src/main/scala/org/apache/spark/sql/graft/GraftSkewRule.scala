@@ -47,9 +47,9 @@ import graft.plans.{AsofJoinExec, BandJoinExec}
   * distributions off so the introduced `AQEShuffleReadExec`s (whose
   * 1:1 per-slice alignment IS the clustering, but carries no
   * `Partitioning`) pass validation, exactly as `SortMergeJoinExec`
-  * does. The manual salting API ([[graft.plans.AsofSkew]]) remains for
-  * non-AQE sessions and for pre-shuffle salting decisions; this rule
-  * makes the STOCK call fast under skew with zero user action.
+  * does. This rule makes the STOCK call fast under probe skew with
+  * zero user action; hot BUILD keys, which no probe slice can help,
+  * are routed by [[graft.plans.AsofSkew.buildSkewed]].
   * Kill switch: `spark.graft.skewJoin` (and Spark's own
   * `spark.sql.adaptive.skewJoin.enabled` gates it too).
   */

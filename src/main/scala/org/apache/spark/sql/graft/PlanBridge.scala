@@ -26,9 +26,9 @@ object PlanBridge {
   // bounded jobs at PLAN-BUILD time per stock call, which is why it is
   // opt-in. Suppressed (a) re-entrantly, so the routed composition's
   // own internal joins don't re-detect, and (b) for internal
-  // "__graft_"-prefixed keys (salt/bucket columns the salted and
-  // keyless tiers append) — those calls are already inside a
-  // skew-treated composition.
+  // "__graft_"-prefixed keys (the bucket columns the keyless tier
+  // appends) — those calls are already inside a skew-treated
+  // composition.
   private val suppressAutoRoute: ThreadLocal[java.lang.Boolean] =
     ThreadLocal.withInitial(() => java.lang.Boolean.FALSE)
 

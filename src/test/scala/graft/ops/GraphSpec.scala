@@ -51,7 +51,7 @@ class GraphSpec extends SparkSpec {
     val fwd = edges.toDF("src", "dst")
     val rev = edges.map(_.swap).toDF("src", "dst")
     val nodes = (0L to 5L).toDF("node")
-    val (aDf, hDf) = Graph.hits(fwd, rev, nodes, iters = 3)
+    val (aDf, hDf) = Graph.hits(fwd, rev, nodes, 6L, iters = 3)
     val a = aDf.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val h = hDf.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val (refA, refH) = refHits(edges, 0L to 5L, 3)
@@ -129,6 +129,25 @@ class GraphSpec extends SparkSpec {
       Graph.personalizedPagerank(edges, col("node") === 1L)
     }
     assert(pprJobs == 0, s"a warm personalizedPagerank ran $pprJobs job(s) while built")
+  }
+
+  test("a second gr06 build runs one action per HITS half-step and no " +
+      "node count, and its scores are unchanged") {
+    import org.apache.spark.scheduler.SparkListenerJobStart
+    def scores(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted
+    val first = scores(Graph.queries("gr06_hits")(spark, sf))
+    // the SQL executions the warm build's jobs run under: one lazy
+    // checkpoint per half-step (2 × 3 iterations); a count of the
+    // memoized node table would be one more
+    var second: org.apache.spark.sql.DataFrame = null
+    val actions = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    eventsDuring(spark) {
+      case e: SparkListenerJobStart =>
+        Option(e.properties.getProperty("spark.sql.execution.id")).foreach(actions.add)
+    } { second = Graph.queries("gr06_hits")(spark, sf) }
+    assert(actions.size == 2 * 3,
+      s"a warm gr06 build ran ${actions.size} actions, not one per half-step")
+    assert(scores(second).sameElements(first))
   }
 
   test("pagerank survives a 150k-spoke star that overflows the fixed 1e12 scale") {

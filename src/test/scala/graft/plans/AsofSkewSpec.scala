@@ -4,10 +4,12 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.PlanBridge
 
-/** The salted as-of rewrite's contract: row-identical results to the
-  * unsalted join under every variant (direction × tolerance ×
-  * null-key probes × keys with no build rows), and bounded hot-key
-  * detection. */
+/** The as-of skew tier's contract: bounded hot-key detection, and
+  * row-identical results to the plain join for both treatments — the
+  * AQE runtime split of a hot probe partition (OptimizeSkewedGraftJoin)
+  * and the build-skew routing (AsofSkew.buildSkewed) — under every
+  * variant (direction × tolerance × null-key probes × keys with no
+  * build rows × generic keys). */
 class AsofSkewSpec extends SparkSpec {
 
   // adversarial little corpus: one hot key (70% of probes), a cold
@@ -33,70 +35,12 @@ class AsofSkewSpec extends SparkSpec {
     .map(r => (r.getLong(0), Option(r.get(1)), Option(r.get(2))))
     .sortBy(_._1).toSeq
 
-  test("salted == unsalted, backward/forward × tolerance, hot build " +
-      "rows replicated without duplicate or lost matches") {
-    for (dir <- Seq("backward", "forward"); tol <- Seq(-1L, 10L)) {
-      val plain = rows(PlanBridge.asofJoin(probe, build,
-        Seq("user_id" -> "b_key"), "us", "b_us", "merge", dir, tol))
-      val salted = rows(AsofSkew.salted(probe, build,
-        TimeJoin(Seq("user_id" -> "b_key"), "us", "b_us", Asof(dir, tol),
-          hint = "merge"),
-        hotKeys = Seq(Seq(1L)), salts = 8))
-      assert(salted == plain, s"dir=$dir tol=$tol diverged")
-      assert(plain.size == 200)
-    }
-  }
-
-  test("multiple hot keys and the broadcast hint also match") {
-    val plain = rows(PlanBridge.asofJoin(probe, build,
-      Seq("user_id" -> "b_key"), "us", "b_us"))
-    val salted = rows(AsofSkew.salted(probe, build,
-      TimeJoin(Seq("user_id" -> "b_key"), "us", "b_us", Asof(),
-        hint = "broadcast"),
-      hotKeys = Seq(Seq(1L), Seq(2L)), salts = 4))
-    assert(salted == plain)
-  }
-
-  test("empty hot-key list degrades to the plain join") {
-    val plain = rows(PlanBridge.asofJoin(probe, build,
-      Seq("user_id" -> "b_key"), "us", "b_us"))
-    val salted = rows(AsofSkew.salted(probe, build,
-      TimeJoin(Seq("user_id" -> "b_key"), "us", "b_us", Asof(),
-        hint = "merge"),
-      hotKeys = Seq.empty, salts = 8))
-    assert(salted == plain)
-  }
-
   private def bandRows(df: org.apache.spark.sql.DataFrame) = df
     .select("event_id", "b_id", "b_us").collect()
     .map(r => (r.getLong(0),
       if (r.isNullAt(1)) -1L else r.getLong(1),
       if (r.isNullAt(2)) -1L else r.getLong(2)))
     .sorted.toSeq
-
-  test("band salted == unsalted across band shapes, merge and broadcast " +
-      "(multi-row probes: no duplicate, no lost match)") {
-    for ((lo, hi) <- Seq((-10L, 0L), (-25L, 25L), (0L, 15L));
-         hint <- Seq("merge", "broadcast")) {
-      val plain = bandRows(PlanBridge.bandJoin(probe, build,
-        Seq("user_id" -> "b_key"), "us", "b_us", lo, hi, hint = "merge"))
-      val salted = bandRows(AsofSkew.salted(probe, build,
-        TimeJoin(Seq("user_id" -> "b_key"), "us", "b_us", Band(lo, hi),
-          hint = hint),
-        hotKeys = Seq(Seq(1L)), salts = 8))
-      assert(salted == plain, s"band [$lo,$hi] hint=$hint diverged")
-    }
-  }
-
-  test("band salted: empty hot-key list degrades to the plain join") {
-    val plain = bandRows(PlanBridge.bandJoin(probe, build,
-      Seq("user_id" -> "b_key"), "us", "b_us", -10L, 0L))
-    val salted = bandRows(AsofSkew.salted(probe, build,
-      TimeJoin(Seq("user_id" -> "b_key"), "us", "b_us", Band(-10L, 0L),
-        hint = "merge"),
-      hotKeys = Seq.empty, salts = 8))
-    assert(salted == plain)
-  }
 
   test("detectHotKeys finds the dominant key and nothing else") {
     val hot = AsofSkew.detectHotKeyTuples(probe, Seq("user_id"),
@@ -111,8 +55,8 @@ class AsofSkewSpec extends SparkSpec {
 
   // the same adversarial corpus re-keyed: (tenant STRING, shard INT)
   // composite keys, with ("hot", 0) carrying 70% of probes
-  private lazy val (sProbe, sBuild) = {
-    import spark.implicits._
+  private def genericOn(s: org.apache.spark.sql.SparkSession) = {
+    import s.implicits._
     val rnd = new scala.util.Random(13)
     val probes = (0 until 200).map { i =>
       val (t, sh) = if (i % 10 < 7) ("hot", 0) else if (i % 10 < 9) ("cold", 1) else ("lone", 2)
@@ -125,32 +69,7 @@ class AsofSkewSpec extends SparkSpec {
     (probes.toDF("event_id", "tenant", "shard", "us"),
       builds.toDF("b_id", "b_tenant", "b_shard", "b_us"))
   }
-
-  test("generic keys: string + int two-column salted == unsalted, " +
-      "as-of and band") {
-    val keys = Seq("tenant" -> "b_tenant", "shard" -> "b_shard")
-    val plain = rows(PlanBridge.asofJoin(sProbe, sBuild, keys, "us", "b_us"))
-    val salted = rows(AsofSkew.salted(sProbe, sBuild,
-      TimeJoin(keys, "us", "b_us", Asof(), hint = "merge"),
-      hotKeys = Seq(Seq("hot", 0)), salts = 8))
-    assert(salted == plain)
-    assert(plain.size == 200)
-    val bPlain = bandRows(PlanBridge.bandJoin(sProbe, sBuild, keys,
-      "us", "b_us", -10L, 10L))
-    val bSalted = bandRows(AsofSkew.salted(sProbe, sBuild,
-      TimeJoin(keys, "us", "b_us", Band(-10L, 10L), hint = "merge"),
-      hotKeys = Seq(Seq("hot", 0)), salts = 8))
-    assert(bSalted == bPlain)
-  }
-
-  test("generic keys: single string key salted == unsalted") {
-    val keys = Seq("tenant" -> "b_tenant")
-    val plain = rows(PlanBridge.asofJoin(sProbe, sBuild, keys, "us", "b_us"))
-    val salted = rows(AsofSkew.salted(sProbe, sBuild,
-      TimeJoin(keys, "us", "b_us", Asof(), hint = "merge"),
-      hotKeys = Seq(Seq("hot")), salts = 4))
-    assert(salted == plain)
-  }
+  private lazy val (sProbe, sBuild) = genericOn(spark)
 
   test("detectHotKeyTuples finds the dominant composite and is bounded") {
     val hot = AsofSkew.detectHotKeyTuples(sProbe, Seq("tenant", "shard"),
@@ -258,6 +177,47 @@ class AsofSkewSpec extends SparkSpec {
       finally aqe.conf.set(
         org.apache.spark.sql.graft.OptimizeSkewedGraftJoin.ConfKey, "true")
     assert(got == want && got.size == 20000)
+  }
+
+  // Generic keys under the AQE runtime split of a hot probe partition:
+  // the split ("salted") join must return the rows of the un-split one.
+  private def genericSplitMatches(keys: Seq[(String, String)],
+      band: Boolean): Unit = {
+    import org.apache.spark.sql.graft.OptimizeSkewedGraftJoin
+    val (gProbe, gBuild) = genericOn(aqe)
+    def run(on: Boolean) = {
+      aqe.conf.set(OptimizeSkewedGraftJoin.ConfKey, on.toString)
+      try {
+        val df =
+          if (band) PlanBridge.bandJoin(gProbe, gBuild, keys, "us", "b_us",
+            -10L, 10L, hint = "merge")
+          else PlanBridge.asofJoin(gProbe, gBuild, keys, "us", "b_us",
+            hint = "merge")
+        df.collect() // finalize THIS QueryExecution's adaptive plan
+        (df, if (band) bandRows(df) else rows(df))
+      } finally aqe.conf.set(OptimizeSkewedGraftJoin.ConfKey, "true")
+    }
+    val (df, got) = run(on = true)
+    assert(walk(df.queryExecution.executedPlan).exists {
+      case j: AsofJoinExec => j.isSkewJoin
+      case j: BandJoinExec => j.isSkewJoin
+      case _ => false
+    }, s"keys=$keys band=$band: skew rule never fired:\n" +
+      df.queryExecution.executedPlan)
+    val (_, want) = run(on = false)
+    assert(got == want, s"keys=$keys band=$band diverged")
+    if (!band) assert(got.size == 200)
+  }
+
+  test("generic keys: string + int two-column salted == unsalted, " +
+      "as-of and band") {
+    val keys = Seq("tenant" -> "b_tenant", "shard" -> "b_shard")
+    genericSplitMatches(keys, band = false)
+    genericSplitMatches(keys, band = true)
+  }
+
+  test("generic keys: single string key salted == unsalted") {
+    genericSplitMatches(Seq("tenant" -> "b_tenant"), band = false)
   }
 
   test("AQE skew split reaches the KEYLESS composition's inner merge " +
@@ -403,20 +363,40 @@ class AsofSkewSpec extends SparkSpec {
         hotKeys = Seq(Seq(1L))))
       assert(bucketed == plain, s"band [$lo,$hi] diverged")
     }
-    // multiple hot keys, generic composite keys, and the empty
-    // degenerate
+    // multiple hot keys over generic composite keys
     val keys = Seq("tenant" -> "b_tenant", "shard" -> "b_shard")
     val plainG = rows(PlanBridge.asofJoin(sProbe, sBuild, keys, "us", "b_us"))
     val bucketedG = rows(AsofSkew.buildSkewed(sProbe, sBuild,
       TimeJoin(keys, "us", "b_us", Asof(), hint = "merge"),
       hotKeys = Seq(Seq("hot", 0), Seq("cold", 1))))
     assert(bucketedG == plainG)
-    val degenerate = rows(AsofSkew.buildSkewed(probe, build,
+  }
+
+  test("multiple hot keys and the broadcast hint also match") {
+    // the hint steers the keyless hot branches too
+    val plain = rows(PlanBridge.asofJoin(probe, build,
+      Seq("user_id" -> "b_key"), "us", "b_us"))
+    val routed = rows(AsofSkew.buildSkewed(probe, build,
       TimeJoin(Seq("user_id" -> "b_key"), "us", "b_us", Asof(),
-        hint = "merge"),
+        hint = "broadcast"),
+      hotKeys = Seq(Seq(1L), Seq(2L))))
+    assert(routed == plain && plain.size == 200)
+  }
+
+  test("empty hot-key list degrades to the plain join") {
+    val keys = Seq("user_id" -> "b_key")
+    val asof = rows(AsofSkew.buildSkewed(probe, build,
+      TimeJoin(keys, "us", "b_us", Asof(), hint = "merge"), hotKeys = Seq.empty))
+    assert(asof == rows(PlanBridge.asofJoin(probe, build, keys, "us", "b_us")))
+  }
+
+  test("band salted: empty hot-key list degrades to the plain join") {
+    val keys = Seq("user_id" -> "b_key")
+    val band = bandRows(AsofSkew.buildSkewed(probe, build,
+      TimeJoin(keys, "us", "b_us", Band(-10L, 0L), hint = "merge"),
       hotKeys = Seq.empty))
-    assert(degenerate == rows(PlanBridge.asofJoin(probe, build,
-      Seq("user_id" -> "b_key"), "us", "b_us")))
+    assert(band == bandRows(PlanBridge.bandJoin(probe, build, keys,
+      "us", "b_us", -10L, 0L)))
   }
 
   test("AQE skew split: a partition that is BOTH probe-skewed and " +
@@ -494,18 +474,6 @@ class AsofSkewSpec extends SparkSpec {
     assert(stock.queryExecution.analyzed.collectFirst {
       case u: Union => u }.isEmpty,
       "flag-off plan shape changed — auto routing leaked")
-    // the salted tier's internal join must NOT re-detect on the flag
-    // session (its salt keys are __graft_-prefixed and it runs under
-    // noAutoRoute): identical rows, and its plan keeps the single
-    // salted TimeJoinPlan (one Union would mean the build-skew tier
-    // fired inside the salted one)
-    val salted = AsofSkew.salted(p2, b2,
-      TimeJoin(keys, "us", "b_us", Asof(), hint = "merge"),
-      hotKeys = Seq(Seq(1L)), salts = 4)
-    assert(salted.queryExecution.analyzed.collectFirst {
-      case u: Union => u }.isEmpty,
-      "auto routing fired inside the salted composition")
-    assert(rows(salted) == rows(stock))
   }
 
   test("buildKeys=auto covers the STREAM-static probe quadrant " +

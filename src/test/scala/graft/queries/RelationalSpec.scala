@@ -23,10 +23,17 @@ class RelationalSpec extends SparkSpec {
   }
 
   test("every registered query runs at sf0.001 and yields rows") {
-    graft.SparkEntry.queries.foreach { case (name, fn) =>
-      val n = fn(spark, sf).count()
-      assert(n > 0, s"$name returned 0 rows")
+    // every query runs, so one failure cannot hide the ones after it
+    val failed = graft.SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
+      case (name, fn) =>
+        try { if (fn(spark, sf).count() > 0) None else Some(name -> "0 rows") }
+        catch { case scala.util.control.NonFatal(e) =>
+          Some(name -> (e.getClass.getSimpleName + ": " +
+            Option(e.getMessage).getOrElse("").linesIterator.take(1).mkString))
+        }
     }
+    assert(failed.isEmpty, s"${failed.length} queries failed at sf0.001:\n" +
+      failed.map { case (nm, m) => s"  $nm -> $m" }.mkString("\n"))
   }
 
   test("oracle keys are a subset of query keys") {
