@@ -36,6 +36,11 @@ object GraftSession {
     // the as-of/band tier: SQL syntax, analyzer lowering, plain-SQL
     // interval-join rewrite, planner strategy and AQE skew split
     .config("spark.sql.extensions", classOf[graft.plans.GraftExtensions].getName)
+    // The events parquet's ts physical type has drifted across testdata
+    // generations: TIMESTAMP(NANOS) is readable only through this escape
+    // hatch, as an INT64 of epoch nanos; Tables.load and
+    // EventsStream.readEvents normalize every generation to TIMESTAMP.
+    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
 
   /** `builder()` plus the caller's `overrides` (any `spark.*` key,
     * `spark.master` included), started with WARN logging. */

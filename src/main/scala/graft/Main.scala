@@ -111,7 +111,10 @@ object Main {
     * for local runs); otherwise config.yaml assembles the URL exactly
     * like the reference (main.go:162). The archive goes to the config's
     * FILE_DESTINATION whenever `--config` is given, as in the reference;
-    * with `--jdbc-url` and no `--config` it goes to /tmp/graft-archive. */
+    * with `--jdbc-url` and no `--config` it goes to /tmp/graft-archive.
+    * A loaded config's WORKER_COUNT is the number of concurrent DB
+    * writers (main.go:173); without one the input's partitioning is
+    * kept. */
   private def load(args: Args, df: DataFrame): Unit = {
     val props = new Properties()
     val cfg = Option(args.configPath)
@@ -123,7 +126,8 @@ object Main {
       props.setProperty("password", db.password)
       db.jdbcUrl
     }
-    val res = JdbcTransactionalSink.write(df, url, props, args.table)
+    val res = JdbcTransactionalSink.write(df, url, props, args.table,
+      JdbcTransactionalSink.Options(numWriters = cfg.map(_.runtime.workerCount)))
     // the reference logs total/succeeded/errors at main.go:132-138
     log.info(new StringMapMessage()
       .`with`("event", "ingest_complete")

@@ -36,11 +36,11 @@ object Tables {
   private def doLoad(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     if (name == "events") {
       // The events parquet's ts physical type has drifted across testdata
-      // generations: TIMESTAMP(NANOS) (readable only via the nanosAsLong
-      // escape hatch) vs TIMESTAMP(MICROS) (read as TIMESTAMP_NTZ when the
-      // parquet is not UTC-adjusted). Normalize both to a session-tz
-      // TimestampType column so every downstream query sees one schema.
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // generations: TIMESTAMP(NANOS) (read as epoch-nanos INT64 under
+      // GraftSession's parquet setting) vs TIMESTAMP(MICROS) (read as
+      // TIMESTAMP_NTZ when the parquet is not UTC-adjusted). Normalize
+      // both to a session-tz TimestampType column so every downstream
+      // query sees one schema.
       val raw = spark.read.parquet(s"$sfDir/events.parquet")
       raw.schema("ts").dataType match {
         case org.apache.spark.sql.types.LongType =>

@@ -90,10 +90,17 @@ object Lineage {
       // LAZY (round 15): eager ran one materialization job per
       // truncate at CONSTRUCTION time — round 14's GraphProf measured
       // gr03/gr06 spending 2.2-2.7 s in those jobs vs 0.1-0.3 s
-      // executing. Deferring materialization into the first action is
-      // safe against the 2^n re-analysis trap (the logical plan is a
-      // LogicalRDD leaf either way; only WHEN the RDD materializes
-      // changes, and it caches on first compute) and measured faster
+      // executing. Lazy in name only under AQE: building the
+      // checkpoint's RDD runs AdaptiveSparkPlanExec's stage loop, so
+      // the plan's shuffle stages still run while the DataFrame is
+      // built (a warm gr06 build at sf0.001 runs 22 jobs in 6 SQL
+      // executions, one per half-step, which GraphSpec pins); only the
+      // final stage waits for the first action. Tables.pinLazy's doc
+      // describes the same behaviour and the AQE-off planning that
+      // avoids it, which these plans cannot use (their in-step joins
+      // need AQE's runtime broadcasts). The 2^n re-analysis trap is
+      // still avoided (the logical plan is a LogicalRDD leaf either
+      // way, and it caches on first compute), and it measured faster
       // like-for-like: graph family warm-min 12.4 → 10.3 s at sf0.1
       // (-17%), every per-query minimum lower.
       df.localCheckpoint(eager = false)

@@ -3,14 +3,11 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
-/** The one Lloyd iteration skeleton shared by the float trainer
-  * (KMeans, ss03's IVF coarse quantizer) and the integer-exact
-  * clustering query (Similarity emb03) — same scaffolding, different
-  * numeric kernel, so the two implementations cannot drift apart
-  * structurally (they previously duplicated the assign/mean shape
-  * inline with different numerics).
+/** The one Lloyd iteration skeleton, shared by the integer-exact
+  * clustering (Similarity's `int8LloydTrain`: emb03 and the IVF coarse
+  * quantizer) and, in its keyed form, the product-quantization trainer.
   *
-  * Scale shape per round, identical for every kernel:
+  * Scale shape per round:
   *   - assignment is MAP-ONLY: the centroids are in-plan literals
   *     (k×dim, tiny by construction) and `assignId` computes the argmin
   *     per row — no crossJoin, no exploded k× rows, no shuffle;
@@ -18,11 +15,9 @@ import org.apache.spark.sql.functions._
   *     groupBy(cluster, dim) whose output is k×dim CELLS — the only
   *     shuffle, and the only collect (bounded by k×dim, never by data).
   *
-  * Centroids carry explicit ids (cid, vector) because the two callers
-  * disagree on empty clusters: the float trainer KEEPS an empty
-  * cluster's previous centroid (`fillEmpty = true` — k is a contract
-  * with the IVF index), while the integer query DROPS it
-  * (`fillEmpty = false` — its oracle replays exactly that).
+  * Centroids carry explicit ids (cid, vector): a cluster left empty by
+  * a round is DROPPED, so the ids that remain need not be dense (the
+  * integer query's oracle replays exactly that).
   */
 object Lloyd {
 
@@ -37,8 +32,7 @@ object Lloyd {
   def iterate[T](df: DataFrame, vecCol: String,
       init: Seq[(Int, Seq[T])], rounds: Int,
       assignId: (Column, Seq[(Int, Seq[T])]) => Column,
-      meanExpr: Column, decode: Row => T,
-      fillEmpty: Boolean): Seq[(Int, Seq[T])] = {
+      meanExpr: Column, decode: Row => T): Seq[(Int, Seq[T])] = {
     var cs = init
     for (_ <- 1 to rounds) {
       val cells = df
@@ -52,9 +46,7 @@ object Lloyd {
         .map { case (cid, rows) =>
           cid -> rows.toSeq.sortBy(_.getInt(1)).map(decode)
         }
-      cs =
-        if (fillEmpty) cs.map { case (i, old) => i -> cells.getOrElse(i, old) }
-        else cells.toSeq.sortBy(_._1)
+      cs = cells.toSeq.sortBy(_._1)
     }
     cs
   }
@@ -66,10 +58,9 @@ object Lloyd {
     * and the mean step is a single explode + (m, cluster, dim) partial
     * agg — ONE shuffle and ONE bounded collect for all M books, where M
     * separate `iterate` calls would run 2·M jobs (measured: ~10s → ~1s
-    * for ss09's 32-book build at sf0.1). Empty clusters drop (the
-    * fillEmpty = false semantics — PQ codebooks are value sets, not
-    * contracts). `decode` reads the mean cell from the
-    * (m, c_id, dim, m-value) row. */
+    * for ss09's 32-book build at sf0.1). Empty clusters drop, as in
+    * `iterate` (PQ codebooks are value sets, not contracts). `decode`
+    * reads the mean cell from the (m, c_id, dim, m-value) row. */
   def iterateKeyed[T](df: DataFrame, vecCol: String,
       init: Seq[Seq[(Int, Seq[T])]], rounds: Int, subD: Int,
       assignCodes: (Column, Seq[Seq[(Int, Seq[T])]]) => Column,

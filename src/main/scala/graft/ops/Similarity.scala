@@ -315,7 +315,8 @@ object Similarity {
     Tables.load(s, d, "embeddings").select(col("vec_id"), col("embedding"))
 
   /** Exact integer squared L2 — the driver-side twin of the in-plan
-    * int8SqDist kernel (bounded uses only: probe lists, spec audits). */
+    * int8SqDist kernel (bounded uses only: probe lists, PQ lookup tables,
+    * spec audits). */
   private def intL2(a: Seq[Int], b: Seq[Int]): Long =
     a.zip(b).map { case (x, y) => (x - y).toLong * (x - y) }.sum
 
@@ -369,8 +370,7 @@ object Similarity {
       meanExpr = ((sum(col("v").cast("long")) -
         (sum(col("v").cast("long")) % count(lit(1)))) / count(lit(1)))
         .cast("int"),
-      decode = _.getInt(2),
-      fillEmpty = false)
+      decode = _.getInt(2))
   }
 
   private[ops] def ivfInt8Centroids(s: SparkSession,
@@ -1235,15 +1235,13 @@ object Similarity {
         q8.select(col("vec_id"), pqEncode(col("q"), codebooks).as("codes"))
       }
     }
-    def il2(a: Seq[Int], b: Seq[Int]): Long =
-      a.zip(b).map { case (x, y) => (x - y).toLong * (x - y) }.sum
     val qs = q8.filter(col("vec_id") < 10).collect()
       .map(r => (r.getLong(0), r.getSeq[Int](1)))
     val lutRows = qs.toSeq.map { case (qid, qv) =>
       val lut = (0 until PqM).map { m =>
         val row = Array.fill(PqK)(Long.MaxValue)
         codebooks(m).foreach { case (cid, c) =>
-          row(cid) = il2(qv.slice(m * PqSubD, m * PqSubD + PqSubD), c) }
+          row(cid) = intL2(qv.slice(m * PqSubD, m * PqSubD + PqSubD), c) }
         row.toSeq
       }
       (qid, lut)

@@ -99,8 +99,7 @@ object TimeJoin {
 /** The time join as a native Catalyst extension — the SURVEY §2.5
   * custom-operator tier (c): this logical node, [[AsofJoinStrategy]],
   * and the four physical operators, registered through
-  * `SparkSessionExtensions` (or at runtime via
-  * [[org.apache.spark.sql.graft.PlanBridge.ensureStrategy]]).
+  * `SparkSessionExtensions` ([[GraftExtensions]]).
   *
   * Semantics: every LEFT (probe) row is kept. An [[Asof]] join matches
   * it to the single RIGHT row with equal keys and the nearest time in
@@ -200,10 +199,9 @@ object AsofJoinStrategy extends SparkStrategy {
   }
 }
 
-/** `spark.sql.extensions=graft.plans.GraftExtensions` injection point
-  * for sessions built from config; existing sessions use
-  * `PlanBridge.ensureStrategy` (same strategy object, idempotent).
-  * Injects the full as-of/band tier: the `ASOF JOIN` / `BAND JOIN`
+/** `spark.sql.extensions=graft.plans.GraftExtensions` injection point,
+  * the only way the tier reaches a session ([[graft.GraftSession]] sets
+  * it). Injects the full as-of/band tier: the `ASOF JOIN` / `BAND JOIN`
   * SQL syntax ([[AsofSqlParser]]), the analyzer lowering
   * ([[ResolveAsofJoin]]), the plain-SQL interval-join auto-rewrite
   * ([[BandJoinAutoRewrite]]), and the planner strategy. */

@@ -19,17 +19,6 @@ import graft.functions.Num._
   */
 object Events {
 
-  // ev08f's derived session carrying the GraftExtensions injection
-  // (parser + resolution rule + strategy), memoized per base session
-  // so bench reps and repeated invocations don't accumulate sessions.
-  private val sqlSessCache = new graft.SessionMemo[Unit, SparkSession]
-
-  private def asofSqlSession(s: SparkSession): SparkSession =
-    sqlSessCache.get(s, ()) {
-      org.apache.spark.sql.graft.PlanBridge.sessionWithExtensions(
-        s, new graft.plans.GraftExtensions()(_))
-    }
-
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Tumbling 1-hour windows per event type.
     "ev01_hourly_stats" -> { (s, d) =>
@@ -227,8 +216,7 @@ object Events {
     // DuckDB oracle answers the same question as a plain-SQL range
     // join. Cross-engine, cross-syntax, one hash.
     "ev07c_band_sql" -> { (s, d) =>
-      val sx = asofSqlSession(s)
-      val ev = Tables.load(sx, d, "events").withColumn("us", unix_micros(col("ts")))
+      val ev = Tables.load(s, d, "events").withColumn("us", unix_micros(col("ts")))
       val tag = java.util.UUID.randomUUID().toString.replace("-", "").take(8)
       ev.filter(col("event_type") === "error")
         .select(col("event_id"), col("user_id").as("eu"), col("us").as("eus"))
@@ -236,16 +224,16 @@ object Events {
       ev.filter(col("event_type") === "purchase")
         .select(col("user_id").as("pu"), col("us").as("pus"))
         .createOrReplaceTempView(s"graft_band_purch_$tag")
-      val out = sx.sql(
+      val out = s.sql(
         s"""SELECT event_id, COUNT(pu) AS n_prior_purchases
            |FROM graft_band_errors_$tag e BAND LEFT JOIN graft_band_purch_$tag p
            |ON e.eu = p.pu AND p.pus BETWEEN e.eus - 1800000000 AND e.eus
            |GROUP BY event_id""".stripMargin)
       // sql() analyzes eagerly — the views are resolved into the plan, so
-      // dropping them immediately keeps the shared derived session's
-      // catalog from accumulating a pair of entries per invocation.
-      sx.catalog.dropTempView(s"graft_band_errors_$tag")
-      sx.catalog.dropTempView(s"graft_band_purch_$tag")
+      // dropping them immediately keeps the caller's session catalog
+      // from accumulating a pair of entries per invocation.
+      s.catalog.dropTempView(s"graft_band_errors_$tag")
+      s.catalog.dropTempView(s"graft_band_purch_$tag")
       out
     },
 
@@ -257,8 +245,7 @@ object Events {
     // operator. BandSqlSpec pins that the rewrite actually fires on
     // this exact query shape; the driver gate pins the rows.
     "ev07d_band_auto" -> { (s, d) =>
-      val sx = asofSqlSession(s)
-      val ev = Tables.load(sx, d, "events").withColumn("us", unix_micros(col("ts")))
+      val ev = Tables.load(s, d, "events").withColumn("us", unix_micros(col("ts")))
       val tag = java.util.UUID.randomUUID().toString.replace("-", "").take(8)
       ev.filter(col("event_type") === "error")
         .select(col("event_id"), col("user_id").as("eu"), col("us").as("eus"))
@@ -266,13 +253,13 @@ object Events {
       ev.filter(col("event_type") === "purchase")
         .select(col("user_id").as("pu"), col("us").as("pus"))
         .createOrReplaceTempView(s"graft_auto_purch_$tag")
-      val out = sx.sql(
+      val out = s.sql(
         s"""SELECT event_id, COUNT(pu) AS n_prior_purchases
            |FROM graft_auto_errors_$tag e LEFT JOIN graft_auto_purch_$tag p
            |ON e.eu = p.pu AND p.pus BETWEEN e.eus - 1800000000 AND e.eus
            |GROUP BY event_id""".stripMargin)
-      sx.catalog.dropTempView(s"graft_auto_errors_$tag")
-      sx.catalog.dropTempView(s"graft_auto_purch_$tag")
+      s.catalog.dropTempView(s"graft_auto_errors_$tag")
+      s.catalog.dropTempView(s"graft_auto_purch_$tag")
       out
     },
 
@@ -285,8 +272,7 @@ object Events {
     // O(input + output) merge, same null hygiene; BandSqlSpec pins
     // that the rewrite fires on this exact shape.
     "ev07f_band_right_outer" -> { (s, d) =>
-      val sx = asofSqlSession(s)
-      val ev = Tables.load(sx, d, "events").withColumn("us", unix_micros(col("ts")))
+      val ev = Tables.load(s, d, "events").withColumn("us", unix_micros(col("ts")))
       val tag = java.util.UUID.randomUUID().toString.replace("-", "").take(8)
       ev.filter(col("event_type") === "error")
         .select(col("event_id"), col("user_id").as("eu"), col("us").as("eus"))
@@ -294,13 +280,13 @@ object Events {
       ev.filter(col("event_type") === "purchase")
         .select(col("user_id").as("pu"), col("us").as("pus"))
         .createOrReplaceTempView(s"graft_ro_purch_$tag")
-      val out = sx.sql(
+      val out = s.sql(
         s"""SELECT event_id, COUNT(pu) AS n_prior_purchases
            |FROM graft_ro_purch_$tag p RIGHT JOIN graft_ro_errors_$tag e
            |ON e.eu = p.pu AND p.pus BETWEEN e.eus - 1800000000 AND e.eus
            |GROUP BY event_id""".stripMargin)
-      sx.catalog.dropTempView(s"graft_ro_errors_$tag")
-      sx.catalog.dropTempView(s"graft_ro_purch_$tag")
+      s.catalog.dropTempView(s"graft_ro_errors_$tag")
+      s.catalog.dropTempView(s"graft_ro_purch_$tag")
       out
     },
 
@@ -437,14 +423,12 @@ object Events {
     // AsofSqlParser and lowered by ResolveAsofJoin — and the DuckDB
     // oracle answers with its NATIVE ASOF LEFT JOIN, so the driver
     // gate is a cross-engine parity check of the SQL surface itself.
-    // Runs on a memoized per-base-session derived session carrying the
-    // GraftExtensions injection (sessionWithExtensions), so the query
-    // works regardless of how the caller's session was built.
+    // Like every SQL-surface query it needs a session carrying
+    // GraftExtensions (graft.GraftSession's).
     "ev08f_asof_sql" -> { (s, d) =>
-      val sx = asofSqlSession(s)
-      val ev = Tables.load(sx, d, "events").withColumn("us", unix_micros(col("ts")))
-      // per-invocation view names: parallel test suites share the
-      // derived session, and fixed names would race across them
+      val ev = Tables.load(s, d, "events").withColumn("us", unix_micros(col("ts")))
+      // per-invocation view names: parallel callers may share the
+      // session, and fixed names would race across them
       val tag = java.util.UUID.randomUUID().toString.replace("-", "").take(8)
       ev.filter(col("event_type") === "view")
         .groupBy(col("user_id"), col("us"))
@@ -455,13 +439,13 @@ object Events {
       ev.filter(col("event_type") === "purchase")
         .select(col("user_id"), col("us"), col("event_id"))
         .createOrReplaceTempView(s"graft_asof_purchases_$tag")
-      val out = sx.sql(
+      val out = s.sql(
         s"""SELECT event_id, user_id, us,
            |  v_us AS matched_us, v_event_id AS matched_event_id
            |FROM graft_asof_purchases_$tag ASOF LEFT MERGE JOIN graft_asof_views_$tag
            |ON user_id = v_user_id AND us >= v_us""".stripMargin)
-      sx.catalog.dropTempView(s"graft_asof_views_$tag")
-      sx.catalog.dropTempView(s"graft_asof_purchases_$tag")
+      s.catalog.dropTempView(s"graft_asof_views_$tag")
+      s.catalog.dropTempView(s"graft_asof_purchases_$tag")
       out
     },
 
@@ -493,8 +477,7 @@ object Events {
     // composition — while DuckDB answers with its native keyless ASOF.
     // Two engines, two parsers, one hash.
     "ev08h_asof_keyless_sql" -> { (s, d) =>
-      val sx = asofSqlSession(s)
-      val ev = Tables.load(sx, d, "events").withColumn("us", unix_micros(col("ts")))
+      val ev = Tables.load(s, d, "events").withColumn("us", unix_micros(col("ts")))
       val tag = java.util.UUID.randomUUID().toString.replace("-", "").take(8)
       ev.filter(col("event_type") === "view")
         .groupBy(col("us").as("v_us"))
@@ -503,13 +486,13 @@ object Events {
       ev.filter(col("event_type") === "purchase")
         .select(col("event_id"), col("us"))
         .createOrReplaceTempView(s"graft_ka_purch_$tag")
-      val out = sx.sql(
+      val out = s.sql(
         s"""SELECT event_id, us, v_us AS matched_us,
            |  v_event_id AS matched_event_id
            |FROM graft_ka_purch_$tag ASOF LEFT JOIN graft_ka_views_$tag
            |ON us >= v_us""".stripMargin)
-      sx.catalog.dropTempView(s"graft_ka_views_$tag")
-      sx.catalog.dropTempView(s"graft_ka_purch_$tag")
+      s.catalog.dropTempView(s"graft_ka_views_$tag")
+      s.catalog.dropTempView(s"graft_ka_purch_$tag")
       out
     },
 

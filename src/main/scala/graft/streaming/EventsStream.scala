@@ -54,7 +54,6 @@ object EventsStream {
     * fall back to the current-generation MICROS-NTZ schema. */
   def readEvents(spark: SparkSession, dir: String,
       maxFilesPerTrigger: Int = 10): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // One batch footer read (metadata-only) tells us which generation of
     // the events parquet this directory holds; the stream then declares
     // the matching schema and normalizes ts exactly like Tables.load.

@@ -70,7 +70,7 @@ private[tools] object AsofGate {
     // split to ~advisory-sized slices
     spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "16m")
     spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16m")
-    // the residual-form baselines below must stay STOCK joins even if
+    // the residual-form baselines below must stay STOCK joins although
     // this session carries the graft extensions — the whole point is
     // measuring the operator against what Spark does without it
     spark.conf.set(BandJoinAutoRewrite.ConfKey, "false")
@@ -311,7 +311,6 @@ private[tools] object AsofGate {
     // class — the proof that plain-SQL/DataFrame users actually
     // receive the operator at scale, not just in unit tests. Gates
     // stay the closed-form per-probe counts.
-    PlanBridge.ensureBandRewrite(spark)
     val rw = withConf(BandJoinAutoRewrite.ConfKey -> "true") {
       assert(residualDense(nDense).queryExecution.executedPlan.toString
           .contains("BandJoin"),

@@ -7,11 +7,13 @@ import graft.plans.{Asof, AsofJoinStrategy, AsofKeyless, AsofSkew, Band,
 
 /** The one `private[sql]`-visibility seam the graft planner extension
   * needs: constructing a DataFrame from a custom logical node
-  * (`Dataset.ofRows`) and appending the planner strategy to a LIVE
-  * session (`experimental.extraStrategies`). Everything else in
-  * graft.plans uses public Catalyst extension points; this object
-  * exists only because `ofRows` is package-private, the standard
-  * arrangement for Spark extension libraries.
+  * (`Dataset.ofRows`) and reading a session's planner. Everything else
+  * in graft.plans uses public Catalyst extension points; this object
+  * exists only because `ofRows` and the session state are
+  * package-private, the standard arrangement for Spark extension
+  * libraries. The tier itself is installed on a session only by
+  * configuration: `spark.sql.extensions=graft.plans.GraftExtensions`,
+  * which `graft.GraftSession` sets.
   */
 object PlanBridge {
 
@@ -71,51 +73,6 @@ object PlanBridge {
     }
   }
 
-  /** Idempotently register the graft strategy on an existing session.
-    * Sessions built from config should prefer
-    * `spark.sql.extensions=graft.plans.GraftExtensions`. */
-  def ensureStrategy(spark: SparkSession): Unit = synchronized {
-    val exp = spark.experimental
-    if (!exp.extraStrategies.contains(AsofJoinStrategy))
-      exp.extraStrategies = exp.extraStrategies :+ AsofJoinStrategy
-  }
-
-  /** Idempotently register the plain-SQL interval-join auto-rewrite
-    * ([[graft.plans.BandJoinAutoRewrite]]) on an existing session —
-    * the runtime twin of `injectOptimizerRule`. Deliberately separate
-    * from [[ensureStrategy]]: the strategy only plans nodes graft
-    * itself creates, while the rewrite changes plans for STOCK joins,
-    * so it is opt-in per session (config-injected sessions get both). */
-  def ensureBandRewrite(spark: SparkSession): Unit = synchronized {
-    ensureStrategy(spark)
-    val exp = spark.experimental
-    if (!exp.extraOptimizations.contains(graft.plans.BandJoinAutoRewrite))
-      exp.extraOptimizations =
-        exp.extraOptimizations :+ graft.plans.BandJoinAutoRewrite
-  }
-
-  /** A NEW session on `base`'s context with `f`'s extensions applied —
-    * how specs exercise the config-injected surface (parser, analyzer
-    * rule, strategy) without rebuilding the shared test session. The
-    * 6-arg constructor is the same one Builder.getOrCreate uses; it is
-    * private[sql], which is this object's whole reason to exist. */
-  def sessionWithExtensions(base: SparkSession,
-      f: org.apache.spark.sql.SparkSessionExtensions => Unit): SparkSession = {
-    val b = base.asInstanceOf[classic.SparkSession]
-    val ext = new org.apache.spark.sql.SparkSessionExtensions
-    f(ext)
-    // the 6-arg constructor Builder.getOrCreate uses is fully private;
-    // reflection is confined to this one test seam
-    val ctor = classOf[classic.SparkSession].getDeclaredConstructors
-      .find(_.getParameterCount == 6)
-      .getOrElse(throw new IllegalStateException(
-        "classic.SparkSession 6-arg constructor not found"))
-    ctor.setAccessible(true)
-    ctor.newInstance(b.sparkContext, Some(b.sharedState), None, ext,
-      Map.empty[String, String], Map.empty[String, String])
-      .asInstanceOf[SparkSession]
-  }
-
   /** A DataFrame over an analyzed logical plan — the ofRows seam for
     * rules that lower a plan by COMPOSING DataFrame-level machinery
     * (the keyless ASOF SQL lowering builds AsofKeyless's composition
@@ -132,6 +89,8 @@ object PlanBridge {
   /** Time join `left` (probe) to `right` (build) as `join` describes
     * it — the one DataFrame entry of the as-of/band tier. Checks, in
     * order and before any job runs: the descriptor (its constructor),
+    * a session whose planner carries [[AsofJoinStrategy]] (else the
+    * plan would fail later with Spark's "No plan for TimeJoinPlan"),
     * disjoint column names across sides (alias before calling — also
     * what keeps a self-join's expression ids distinct), and a static
     * build side. Time columns must be LongType micros or either
@@ -147,7 +106,10 @@ object PlanBridge {
     * [[graft.plans.BandConds.lowerBandKeyless]] for a band. */
   def timeJoin(left: DataFrame, right: DataFrame, join: TimeJoin): DataFrame = {
     val spark = left.sparkSession.asInstanceOf[classic.SparkSession]
-    ensureStrategy(spark)
+    require(spark.sessionState.planner.strategies.contains(AsofJoinStrategy),
+      "time join needs a session built by graft.GraftSession, or one with " +
+        s"spark.sql.extensions=${classOf[graft.plans.GraftExtensions].getName}: " +
+        "this session's planner has no AsofJoinStrategy")
     val lPlan = left.queryExecution.analyzed
     val rPlan = right.queryExecution.analyzed
     val shared = lPlan.output.map(_.name).toSet

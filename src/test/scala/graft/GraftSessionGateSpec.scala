@@ -8,13 +8,29 @@ import org.scalatest.funsuite.AnyFunSuite
   * [[GraftSession]]. Copied builder blocks drifted apart before it
   * existed (extensions, codegen cache size, core count), so that the
   * tests and profilers ran a different engine than the bench; a builder
-  * call anywhere else is a test failure. */
+  * call anywhere else is a test failure. So is configuring a session
+  * after it is built: appending planner strategies or optimizer rules
+  * to a live session, building a second session by reflection, or
+  * setting the parquet nanos key the builder already sets. */
 class GraftSessionGateSpec extends AnyFunSuite {
 
   private val roots = Seq("src/main/scala", "src/test/scala")
     .map(java.nio.file.Paths.get(_))
 
   private val builderCall = """SparkSession\s*\.\s*builder\b""".r
+
+  /** what configures a session outside its builder → why it is refused */
+  private val runtimeConfig = Seq(
+    """\bextra(Strategies|Optimizations)\s*[:+]*=(?!=)""".r ->
+      "appends to a live session's planner or optimizer",
+    """\bensure(Strategy|BandRewrite)\b""".r ->
+      "registers the time-join tier on a live session",
+    """\bsession[W]ithExtensions\b""".r ->
+      "builds a derived session outside the builder",
+    """\bget[D]eclaredConstructors\b""".r ->
+      "reaches a private constructor by reflection",
+    """spark\.sql\.legacy\.parquet\.nanos[A]sLong""".r ->
+      "sets a builder setting per call")
 
   /** path relative to the repository root → source text */
   private val sources: Map[String, String] = roots.flatMap { root =>
@@ -46,5 +62,33 @@ class GraftSessionGateSpec extends AnyFunSuite {
         "caller needs to differ as overrides):\n" + offenders.mkString("\n"))
     assert(sources.get(home).exists(builderCall.findFirstIn(_).nonEmpty),
       s"no builder call found in $home")
+  }
+
+  test("the runtime-configuration patterns recognise the shapes they gate") {
+    val strategies = "extra" + "Strategies"
+    val flagged = Seq(s"exp.$strategies = exp.$strategies :+ x",
+      s"exp.$strategies :+= x", "exp.extra" + "Optimizations ++= rules",
+      "PlanBridge.ensure" + "Strategy(spark)", "ensure" + "BandRewrite(s)",
+      "PlanBridge.session" + "WithExtensions(s, f)",
+      "classOf[X].getDeclared" + "Constructors",
+      """conf.set("spark.sql.legacy.parquet.nanos""" + """AsLong", "true")""")
+    for (line <- flagged)
+      assert(runtimeConfig.exists(_._1.findFirstIn(line).nonEmpty), line)
+    assert(runtimeConfig.forall(_._1.findFirstIn(
+      s"assert(s.experimental.$strategies == before)").isEmpty))
+  }
+
+  test("sessions are configured only by GraftSession's builder") {
+    val home = "src/main/scala/graft/GraftSession.scala"
+    val offenders = sources.toSeq.sortBy(_._1).flatMap { case (path, text) =>
+      runtimeConfig.collect {
+        case (pattern, why) if path != home && pattern.findFirstIn(text).nonEmpty =>
+          s"$path: ${pattern.findFirstIn(text).get} ($why)"
+      }
+    }
+    assert(offenders.isEmpty,
+      "configure sessions in graft.GraftSession's builder; a caller's " +
+        "session gets the engine from spark.sql.extensions=" +
+        "graft.plans.GraftExtensions:\n" + offenders.mkString("\n"))
   }
 }

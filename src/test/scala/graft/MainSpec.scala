@@ -63,13 +63,20 @@ class MainSpec extends SparkSpec {
       "/root/reference/data-schema.json", "NoSuchModel").isEmpty)
   }
 
-  test("--config names the archive destination also when --jdbc-url is given") {
-    val url = "jdbc:derby:memory:graft_main_archive;create=true"
+  /** An embedded Derby database holding an empty sink-shaped `table`;
+    * returns its URL. */
+  private def derbyTable(db: String, table: String): String = {
+    val url = s"jdbc:derby:memory:$db;create=true"
     val c = java.sql.DriverManager.getConnection(url)
-    try c.createStatement().execute("CREATE TABLE archived (" +
+    try c.createStatement().execute(s"CREATE TABLE $table (" +
       IngestSchema.sinkColumns.map(n =>
         s""""$n" ${if (n.startsWith("dt_")) "BIGINT" else "VARCHAR(255)"}""").mkString(", ") + ")")
     finally c.close()
+    url
+  }
+
+  test("--config names the archive destination also when --jdbc-url is given") {
+    val url = derbyTable("graft_main_archive", "archived")
     val dir = tempDir("main_archive")
     val in = dir.resolve("in.json")
     java.nio.file.Files.writeString(in, """{"Records": [{"user": "u1"}]}""")
@@ -82,6 +89,35 @@ class MainSpec extends SparkSpec {
     }
     assert(!java.nio.file.Files.exists(in))
     assert(java.nio.file.Files.exists(dest.resolve("in.json")))
+  }
+
+  test("--config's WORKER_COUNT is the number of concurrent DB writers") {
+    import org.apache.spark.scheduler.SparkListenerJobStart
+    val url = derbyTable("graft_main_workers", "workers")
+    val dir = tempDir("main_workers")
+    val in = dir.resolve("in.json")
+    java.nio.file.Files.writeString(in, (1 to 7).map(i => s"""{"user": "u$i"}""")
+      .mkString("""{"Records": [""", ", ", "]}"))
+    val cfg = dir.resolve("config.yaml")
+    java.nio.file.Files.writeString(cfg, "RUNTIME:\n  WORKER_COUNT: 3\n")
+    // tasks of each job's last (result) stage; the load's write is the last job
+    val resultTasks = new java.util.concurrent.ConcurrentLinkedDeque[Int]()
+    eventsDuring(spark) { case e: SparkListenerJobStart =>
+      resultTasks.add(e.stageInfos.maxBy(_.stageId).numTasks)
+    } {
+      Console.withOut(new java.io.ByteArrayOutputStream()) {
+        Main.run(spark, Main.Args(file = in.toString, table = "workers",
+          jdbc = true, jdbcUrl = url, configPath = cfg.toString))
+      }
+    }
+    assert(resultTasks.peekLast() == 3,
+      s"result-stage task counts per job: $resultTasks")
+    val c = java.sql.DriverManager.getConnection(url)
+    try {
+      val rs = c.createStatement().executeQuery("SELECT \"user\" FROM workers")
+      val users = Iterator.continually(rs).takeWhile(_.next()).map(_.getString(1)).toSeq
+      assert(users.sorted == (1 to 7).map(i => s"u$i").sorted)
+    } finally c.close()
   }
 
   test("parse: a full command line sets every field") {

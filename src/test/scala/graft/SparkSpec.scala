@@ -87,9 +87,15 @@ object SparkSpec {
       "spark.sql.warehouse.dir" -> warehouse.toString)
   }
 
-  /** The same context WITHOUT the engine's extensions, for reference
-    * forms that must plan as stock Spark: under the band rewrite a
-    * residual join would become the operator it is compared against. */
-  lazy val plainSession: SparkSession =
-    org.apache.spark.sql.graft.PlanBridge.sessionWithExtensions(session, _ => ())
+  /** A child of [[session]] for reference forms that must plan as stock
+    * Spark: under the band rewrite a residual join would become the
+    * operator it is compared against.
+    * The child keeps the engine's extensions; with the rewrite off none
+    * of them touches a stock join (the skew rule matches only graft's
+    * execs). */
+  lazy val plainSession: SparkSession = {
+    val s = session.newSession()
+    s.conf.set(graft.plans.BandJoinAutoRewrite.ConfKey, "false")
+    s
+  }
 }

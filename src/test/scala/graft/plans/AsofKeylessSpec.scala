@@ -156,8 +156,7 @@ class AsofKeylessSpec extends SparkSpec {
 
   test("keyless ASOF SQL clause lowers to the composition (left and " +
       "inner variants, tolerance), matching the DataFrame API") {
-    val sql = org.apache.spark.sql.graft.PlanBridge
-      .sessionWithExtensions(spark, new GraftExtensions()(_))
+    val sql = spark.newSession()
     import sql.implicits._
     Seq((10L, 100L), (20L, 101L), (1000000L, 102L))
       .toDF("bt", "b_id").createOrReplaceTempView("kabuild")

@@ -94,7 +94,7 @@ class AsofSkewSpec extends SparkSpec {
     }
     assert(AsofSkew.detectHotKeyTuples(nullBuildOn(spark), Seq("b_key"),
       sampleFraction = 1.0, minShare = 0.25).isEmpty)
-    val autoS = PlanBridge.sessionWithExtensions(spark, new GraftExtensions()(_))
+    val autoS = spark.newSession()
     autoS.conf.set(OptimizeSkewedGraftJoin.BuildKeysConfKey, "auto")
     autoS.conf.set(OptimizeSkewedGraftJoin.BuildKeysSampleFractionKey, "1.0")
     autoS.conf.set(OptimizeSkewedGraftJoin.BuildKeysMinShareKey, "0.25")
@@ -123,7 +123,7 @@ class AsofSkewSpec extends SparkSpec {
   // a config-injected session with AQE on and skew thresholds tiny
   // enough that the 60%-on-one-key probe shuffle below trips them
   private lazy val aqe = {
-    val s = PlanBridge.sessionWithExtensions(spark, new GraftExtensions()(_))
+    val s = spark.newSession()
     s.conf.set("spark.sql.adaptive.enabled", "true")
     s.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
     s.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "2000")
@@ -446,7 +446,7 @@ class AsofSkewSpec extends SparkSpec {
     import org.apache.spark.sql.graft.OptimizeSkewedGraftJoin
     import org.apache.spark.sql.catalyst.plans.logical.Union
     // per-session SQLConf isolates the flag from every other suite
-    val autoS = PlanBridge.sessionWithExtensions(spark, new GraftExtensions()(_))
+    val autoS = spark.newSession()
     autoS.conf.set(OptimizeSkewedGraftJoin.BuildKeysConfKey, "auto")
     // the shared 40-row build side is far too small for the default 1%
     // detection sample — the dials exist exactly for this
@@ -483,7 +483,7 @@ class AsofSkewSpec extends SparkSpec {
     import org.apache.spark.sql.graft.OptimizeSkewedGraftJoin
     import org.apache.spark.sql.catalyst.plans.logical.Union
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val autoS = PlanBridge.sessionWithExtensions(spark, new GraftExtensions()(_))
+    val autoS = spark.newSession()
     autoS.conf.set(OptimizeSkewedGraftJoin.BuildKeysConfKey, "auto")
     autoS.conf.set(OptimizeSkewedGraftJoin.BuildKeysSampleFractionKey, "1.0")
     autoS.conf.set(OptimizeSkewedGraftJoin.BuildKeysMinShareKey, "0.5")

@@ -7,14 +7,13 @@ import org.apache.spark.sql.graft.PlanBridge
 /** The `ASOF JOIN` SQL surface: every variant the Column API exposes
   * ({backward, forward} × {merge, broadcast, auto} × tolerance ×
   * {left, inner}) must be reachable from SQL and produce results
-  * identical to the PlanBridge.asofJoin form, through a session built
-  * the way external users build one — GraftExtensions via the
-  * extension injection points. */
+  * identical to the PlanBridge.asofJoin form, through a fresh child of
+  * the engine's session — GraftExtensions via the extension injection
+  * points. */
 class AsofSqlSpec extends SparkSpec {
 
   private lazy val sql = {
-    val s = PlanBridge.sessionWithExtensions(spark,
-      new GraftExtensions()(_))
+    val s = spark.newSession()
     import s.implicits._
     Seq((1L, 10L, 100L), (1L, 20L, 101L), (1L, 30L, 102L),
       (2L, 50L, 200L), (9L, 5L, 900L))

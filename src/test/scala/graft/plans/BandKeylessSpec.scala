@@ -14,7 +14,7 @@ import org.apache.spark.sql.graft.PlanBridge
 class BandKeylessSpec extends SparkSpec {
 
   private lazy val sql = {
-    val s = PlanBridge.sessionWithExtensions(spark, new GraftExtensions()(_))
+    val s = spark.newSession()
     import s.implicits._
     Seq((100L, Option(10L)), (101L, Option(20L)), (102L, Option(31L)),
         (200L, Option(50L)), (900L, Option(5L)),
@@ -71,7 +71,7 @@ class BandKeylessSpec extends SparkSpec {
       (probeRows.toDF("id", "t"), buildRows.toDF("bt", "bid"))
     }
     val (probe, build) = frames(sql)
-    // the reference runs with no extensions: on `sql` the band rewrite
+    // the reference runs with the band rewrite off: on `sql` the rewrite
     // would plan it as the operator under test
     val (stockProbe, stockBuild) = frames(SparkSpec.plainSession)
     for ((lo, hi) <- Seq((-15L, 0L), (-7L, 7L), (3L, 30L), (0L, 0L))) {

@@ -12,7 +12,7 @@ import org.apache.spark.sql.graft.PlanBridge
 class BandSqlSpec extends SparkSpec {
 
   private lazy val sql = {
-    val s = PlanBridge.sessionWithExtensions(spark, new GraftExtensions()(_))
+    val s = spark.newSession()
     import s.implicits._
     // probe: one null-time row (300) and one null-key row (301); both
     // must come back null-extended from a LEFT join and drop from an
@@ -211,7 +211,7 @@ class BandSqlSpec extends SparkSpec {
   }
 
   test("ev07c and ev07d reproduce ev07's aggregation exactly") {
-    // the reference runs with no extensions: on `spark` the band
+    // the reference runs with the band rewrite off: on `spark` the
     // rewrite plans ev07 itself as the operator under test
     val ev07 = graft.queries.Events.queries("ev07_interval_join")(SparkSpec.plainSession, sf)
     val want = ev07.collect().map(r => (r.getLong(0), r.getLong(1))).toMap

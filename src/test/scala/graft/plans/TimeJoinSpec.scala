@@ -22,7 +22,7 @@ class TimeJoinSpec extends SparkSpec {
 
   test("bad arguments throw at the call with zero Spark jobs, also " +
       "under buildKeys=auto, whose detection pre-pass runs jobs") {
-    val s = PlanBridge.sessionWithExtensions(spark, new GraftExtensions()(_))
+    val s = spark.newSession()
     s.conf.set(OptimizeSkewedGraftJoin.BuildKeysConfKey, "auto")
     s.conf.set(OptimizeSkewedGraftJoin.BuildKeysSampleFractionKey, "1.0")
     s.conf.set(OptimizeSkewedGraftJoin.BuildKeysMinShareKey, "0.5")

@@ -258,8 +258,7 @@ class EventsStreamSpec extends SparkSpec {
 
   test("keyless ASOF SQL clause accepts a STREAMING probe (stream-static " +
       "enrichment through the parser + analyzer rule)") {
-    val sqlS = org.apache.spark.sql.graft.PlanBridge
-      .sessionWithExtensions(spark, new graft.plans.GraftExtensions()(_))
+    val sqlS = spark.newSession()
     graft.Tables.load(sqlS, sf, "events")
       .filter(col("event_type") === "view")
       .groupBy(unix_micros(col("ts")).as("v_us"))
@@ -333,8 +332,7 @@ class EventsStreamSpec extends SparkSpec {
 
   test("keyless BAND SQL clause accepts a STREAMING probe (stream-static " +
       "enrichment through the parser + resolution rule)") {
-    val sqlS = org.apache.spark.sql.graft.PlanBridge
-      .sessionWithExtensions(spark, new graft.plans.GraftExtensions()(_))
+    val sqlS = spark.newSession()
     graft.Tables.load(sqlS, sf, "events")
       .filter(col("event_type") === "purchase")
       .select(unix_micros(col("ts")).as("pus"), col("event_id").as("p_id"))
@@ -368,8 +366,7 @@ class EventsStreamSpec extends SparkSpec {
   test("KEYED BAND SQL clause accepts a STREAMING probe — broadcast by " +
       "default, explicit MERGE honored (microbatch shuffles, same rows); " +
       "both match the oracle-gated batch ev07") {
-    val sqlS = org.apache.spark.sql.graft.PlanBridge
-      .sessionWithExtensions(spark, new graft.plans.GraftExtensions()(_))
+    val sqlS = spark.newSession()
     graft.Tables.load(sqlS, sf, "events")
       .filter(col("event_type") === "purchase")
       .select(col("user_id").as("pu"), unix_micros(col("ts")).as("pus"))
@@ -459,8 +456,7 @@ class EventsStreamSpec extends SparkSpec {
       Seq("user_id" -> "v_uid"), "us", "v_us", hint = "merge")) == "merge")
     assert(bandHint(PlanBridge.bandJoin(stream, dim,
       Seq("user_id" -> "v_uid"), "us", "v_us", -10L, 0L)) == "broadcast")
-    val sqlS = org.apache.spark.sql.graft.PlanBridge
-      .sessionWithExtensions(spark, new graft.plans.GraftExtensions()(_))
+    val sqlS = spark.newSession()
     graft.Tables.load(sqlS, sf, "events").limit(10)
       .select(col("user_id").as("v_uid"), unix_micros(col("ts")).as("v_us"))
       .createOrReplaceTempView("sh_dim")

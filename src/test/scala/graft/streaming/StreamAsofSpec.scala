@@ -97,8 +97,7 @@ class StreamAsofSpec extends SparkSpec {
 
   test("SQL ASOF LEFT JOIN ... TOLERANCE over two STREAMING views lowers " +
       "to the append-mode composition and equals batch ev08e") {
-    val s = org.apache.spark.sql.graft.PlanBridge
-      .sessionWithExtensions(spark, new graft.plans.GraftExtensions()(_))
+    val s = spark.newSession()
     def side(t: String, prefix: String): DataFrame =
       EventsStream.readEvents(s, stagedDir, maxFilesPerTrigger = 1)
         .filter(col("event_type") === t)
@@ -302,8 +301,7 @@ class StreamAsofSpec extends SparkSpec {
         s"keyless streamed ${streamed.size} vs batch ${batch.size}")
       assert(streamed.exists(_._4.isDefined), "no keyless match at all")
       // SQL entry: keyless clause over two streaming views
-      val s = org.apache.spark.sql.graft.PlanBridge
-        .sessionWithExtensions(spark, new graft.plans.GraftExtensions()(_))
+      val s = spark.newSession()
       def sideOn(t: String, prefix: String): DataFrame =
         EventsStream.readEvents(s, dir.toString, maxFilesPerTrigger = 1)
           .filter(col("event_type") === t)
@@ -396,8 +394,7 @@ class StreamAsofSpec extends SparkSpec {
 
   test("SQL keyless BAND LEFT JOIN over two STREAMING views lowers to " +
       "bandAppendKeyless (round-16) and multiset-equals the batch keyless band") {
-    val s = org.apache.spark.sql.graft.PlanBridge
-      .sessionWithExtensions(spark, new graft.plans.GraftExtensions()(_))
+    val s = spark.newSession()
     def sideOn(t: String, prefix: String): DataFrame =
       EventsStream.readEvents(s, stagedDir, maxFilesPerTrigger = 1)
         .filter(col("event_type") === t)
@@ -472,8 +469,7 @@ class StreamAsofSpec extends SparkSpec {
   test("streaming BAND JOIN rejects single-side ON conjuncts exactly like " +
       "batch; a keyless out-of-grammar shape gets the loud graft error " +
       "naming the Scala API, not Spark's opaque refusal") {
-    val s = org.apache.spark.sql.graft.PlanBridge
-      .sessionWithExtensions(spark, new graft.plans.GraftExtensions()(_))
+    val s = spark.newSession()
     def sideOn(t: String, prefix: String): DataFrame =
       EventsStream.readEvents(s, stagedDir, maxFilesPerTrigger = 1)
         .filter(col("event_type") === t)
@@ -560,8 +556,7 @@ class StreamAsofSpec extends SparkSpec {
         Seq("p_user_id" -> "v_user_id"), "p_ts", "v_ts", toleranceUs = -1L)
     }
     assert(e.getMessage.contains("bounded-state"))
-    val s = org.apache.spark.sql.graft.PlanBridge
-      .sessionWithExtensions(spark, new graft.plans.GraftExtensions()(_))
+    val s = spark.newSession()
     // temp views are session-scoped: build the sides ON s
     def sideOn(t: String, prefix: String): DataFrame =
       EventsStream.readEvents(s, stagedDir, maxFilesPerTrigger = 1)
@@ -588,8 +583,7 @@ class StreamAsofSpec extends SparkSpec {
 
   test("SQL BAND LEFT JOIN over two STREAMING views is the native " +
       "stream-stream interval join; counts equal the oracle-gated ev07") {
-    val s = org.apache.spark.sql.graft.PlanBridge
-      .sessionWithExtensions(spark, new graft.plans.GraftExtensions()(_))
+    val s = spark.newSession()
     def side(t: String, prefix: String): DataFrame =
       EventsStream.readEvents(s, stagedDir, maxFilesPerTrigger = 1)
         .filter(col("event_type") === t ||
