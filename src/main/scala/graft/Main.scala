@@ -3,8 +3,7 @@ package graft
 import java.util.Properties
 import org.apache.logging.log4j.LogManager
 import org.apache.logging.log4j.message.StringMapMessage
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
-import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.ingest._
 
 /** CLI entry point mirroring the reference pipeline (main.go:24-151):
@@ -17,17 +16,15 @@ import graft.ingest._
   * read → flatten → whitelist projection → optional file sinks →
   * optional atomic JDBC load → archive input.
   *
-  * The file is read, parsed and flattened once, as the reference reads
-  * each record once and fans it out to its sinks. With `--export-dir`
-  * the run makes two or more passes, so the projected rows are persisted
-  * (`MEMORY_AND_DISK`): the first sink's job parses, flattens and caches
-  * them, every later sink reads the cache, and the cache is released
-  * after the sinks, also when one throws. A run with one sink or none
-  * reads the file in that one pass and caches nothing. The row count is
-  * observed on the first sink's job (`Dataset.observe`), not counted by
-  * a job of its own; only a run with no sink counts separately. With
-  * every sink that is 4 Spark jobs per file: CSV, JSON, xlsx and the
-  * JDBC load.
+  * A file with every sink takes 2 Spark jobs. The export job
+  * (`--export-dir`) parses and flattens the file and writes the CSV and
+  * JSON part files and the xlsx rows from that one pass
+  * ([[graft.ingest.Sinks.exportFiles]]). The JDBC load (`--jdbc`) parses it
+  * again in a job of its own: it is repartitioned into WORKER_COUNT
+  * writers, while the exports keep the record order, and one job cannot
+  * have both partitionings. Nothing is cached. The row count is the
+  * export's, else the load's `total`; only a run with no sink counts in
+  * a job of its own.
   */
 object Main {
 
@@ -86,23 +83,9 @@ object Main {
     val flat = JsonIngest.applyMapping(Flatten(raw), mapping)
     val projected = JsonIngest.projectWhitelist(flat, whitelist,
       IngestSchema.flattened.fields.map(f => f.name -> f.dataType).toMap)
-    // the exports (and the JDBC load after them) are two or more passes:
-    // they share one persisted copy; one pass would only pay for the cache
-    val exports = args.exportDir != null
-    if (exports) projected.persist()
-    val rows = Observation()
-    lazy val observed = projected.observe(rows, count(lit(1)).as("n"))
-    try {
-      if (exports) {
-        Sinks.csv(observed, s"${args.exportDir}/csv")
-        Sinks.json(projected, s"${args.exportDir}/json")
-        Sinks.xlsx(projected, s"${args.exportDir}/export.xlsx")
-      }
-      if (args.jdbc) load(args, if (exports) projected else observed)
-    } finally if (exports) projected.unpersist(blocking = true)
-    val n =
-      if (exports || args.jdbc) rows.get("n").asInstanceOf[Long]
-      else projected.count()
+    val exported = Option(args.exportDir).map(Sinks.exportFiles(projected, _))
+    val loaded = Option.when(args.jdbc)(load(args, projected))
+    val n = exported.orElse(loaded).getOrElse(projected.count())
     (projected, n)
   }
 
@@ -114,8 +97,8 @@ object Main {
     * with `--jdbc-url` and no `--config` it goes to /tmp/graft-archive.
     * A loaded config's WORKER_COUNT is the number of concurrent DB
     * writers (main.go:173); without one the input's partitioning is
-    * kept. */
-  private def load(args: Args, df: DataFrame): Unit = {
+    * kept. Returns the load's `total`. */
+  private def load(args: Args, df: DataFrame): Long = {
     val props = new Properties()
     val cfg = Option(args.configPath)
       .orElse(Option.when(args.jdbcUrl == null)(IngestConfig.discover()))
@@ -143,6 +126,7 @@ object Main {
     if (args.archive && res.committed)
       Archive.moveInputFile(args.file,
         cfg.fold("/tmp/graft-archive")(_.runtime.fileDestination))
+    res.total
   }
 
   /** Extension-based format dispatch (fileloader.go:246-253). */

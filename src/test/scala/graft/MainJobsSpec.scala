@@ -7,17 +7,15 @@ import scala.concurrent.ExecutionContext.Implicits.global
 import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 import scala.util.Try
-import org.apache.spark.scheduler.{SparkListenerBlockUpdated, SparkListenerJobEnd,
-  SparkListenerJobStart}
+import org.apache.spark.scheduler.SparkListenerBlockUpdated
 import org.apache.spark.sql.graft.CacheProbe
 import graft.ingest.IngestSchema
 
-/** `Main.run` reads and flattens the file once: with two or more passes
-  * (`--export-dir`, maybe with `--jdbc`) the first sink's job persists
-  * the projected rows, the later sinks read them, and they are released
-  * after the sinks, also when a sink throws. With every sink it runs
-  * exactly 4 Spark jobs (CSV, JSON, xlsx, JDBC), and the row count it
-  * returns is observed on the first sink's job. */
+/** `Main.run` with every sink runs exactly 2 Spark jobs: the export job,
+  * which parses and flattens the file once for the CSV, JSON and xlsx
+  * outputs, and the JDBC load. It caches nothing, also when a sink
+  * throws, and the row count it returns is the export's, else the
+  * load's. */
 class MainJobsSpec extends SparkSpec {
 
   private val url = "jdbc:derby:memory:graft_main_jobs;create=true"
@@ -88,7 +86,7 @@ class MainJobsSpec extends SparkSpec {
       .map(p => Files.readAllLines(p).size - 1L).sum
 
   for ((kind, file) <- Seq("xml" -> (() => xmlFile), "json" -> (() => jsonFile))) {
-    test(s"$kind: --export-dir and --jdbc run 4 Spark jobs, and n equals " +
+    test(s"$kind: --export-dir and --jdbc run 2 Spark jobs, and n equals " +
         "the CSV data lines and the JDBC total") {
       val table = s"main_jobs_$kind"
       createTarget(table)
@@ -103,7 +101,7 @@ class MainJobsSpec extends SparkSpec {
         }
       }
       assertReleased(cache)
-      assert(jobs == 4, s"Main.run ran $jobs Spark jobs")
+      assert(jobs == 2, s"Main.run ran $jobs Spark jobs")
       val expected = if (kind == "xml") 4L else 6L
       assert(n == expected)
       assert(csvDataLines(out) == n)
@@ -112,6 +110,19 @@ class MainJobsSpec extends SparkSpec {
       assert(total.contains(n), s"JDBC summary: $stdout")
       assert(derbyRows(table) == n)
     }
+  }
+
+  test("with --export-dir as the only sink the count rides on the export job") {
+    val out = tempDir("main_jobs_export_only")
+    var n = -1L
+    val cache = cacheState()
+    val jobs = jobsDuring(spark) {
+      n = Main.run(spark, Main.Args(file = jsonFile.toString, table = "t",
+        exportDir = out.toString))._2
+    }
+    assertReleased(cache)
+    assert(jobs == 1, s"Main.run ran $jobs Spark jobs")
+    assert(n == 6 && csvDataLines(out) == 6)
   }
 
   test("with --jdbc as the only sink the count rides on the JDBC load") {
@@ -158,27 +169,20 @@ class MainJobsSpec extends SparkSpec {
     assertReleased(cache)
   }
 
-  test("the persisted rows are built in the first sink's job only") {
-    val table = "main_jobs_once"
+  test("a run with every sink stores no RDD block") {
+    val table = "main_jobs_no_cache"
     createTarget(table)
-    val out = tempDir("main_jobs_out_once")
-    // bus order: "start"/"end" of each job, "block" for each RDD block
-    // stored (a removal reports an invalid storage level)
-    val events = scala.collection.mutable.ArrayBuffer[String]()
+    val out = tempDir("main_jobs_out_no_cache")
+    val blocks = new java.util.concurrent.atomic.AtomicInteger()
     eventsDuring(spark) {
-      case _: SparkListenerJobStart => events += "start"
-      case _: SparkListenerJobEnd => events += "end"
       case e: SparkListenerBlockUpdated if e.blockUpdatedInfo.blockId.isRDD &&
-          e.blockUpdatedInfo.storageLevel.isValid => events += "block"
+          e.blockUpdatedInfo.storageLevel.isValid => blocks.incrementAndGet()
     } {
       Console.withOut(new java.io.ByteArrayOutputStream()) {
         Main.run(spark, Main.Args(file = xmlFile.toString, table = table,
           exportDir = out.toString, jdbc = true, jdbcUrl = url))
       }
     }
-    val firstJob = events.slice(0, events.indexOf("end") + 1)
-    assert(events.count(_ == "start") == 4, events)
-    assert(firstJob.head == "start" && firstJob.contains("block"), events)
-    assert(events.count(_ == "block") == firstJob.count(_ == "block"), events)
+    assert(blocks.get == 0, "Main.run stored RDD blocks")
   }
 }

@@ -23,13 +23,14 @@ class MainSpec extends SparkSpec {
 
   test("editing the template changes the projection with no code change") {
     import spark.implicits._
-    val path = tempDir("tmpl").resolve("template.xlsx").toString
+    val dir = tempDir("tmpl").toString
     // reference template shape: row 1 display names, row 2
     // REQUIRED/OPTIONAL, row 3 DB column names (the row Main reads)
-    Sinks.xlsx(
+    Sinks.exportFiles(
       Seq(("REQUIRED", "REQUIRED", "OPTIONAL"), ("status", "user", "fnumber"))
         .toDF("Status", "User", "F Number").coalesce(1),
-      path)
+      dir)
+    val path = s"$dir/export.xlsx"
     val (df, n) = Main.run(spark, Main.Args(file = jsonFixture, table = "t",
       template = path))
     assert(df.columns.toSeq == Seq("status", "user", "fnumber"))
@@ -91,33 +92,62 @@ class MainSpec extends SparkSpec {
     assert(java.nio.file.Files.exists(dest.resolve("in.json")))
   }
 
-  test("--config's WORKER_COUNT is the number of concurrent DB writers") {
-    import org.apache.spark.scheduler.SparkListenerJobStart
-    val url = derbyTable("graft_main_workers", "workers")
-    val dir = tempDir("main_workers")
-    val in = dir.resolve("in.json")
-    java.nio.file.Files.writeString(in, (1 to 7).map(i => s"""{"user": "u$i"}""")
-      .mkString("""{"Records": [""", ", ", "]}"))
-    val cfg = dir.resolve("config.yaml")
-    java.nio.file.Files.writeString(cfg, "RUNTIME:\n  WORKER_COUNT: 3\n")
-    // tasks of each job's last (result) stage; the load's write is the last job
-    val resultTasks = new java.util.concurrent.ConcurrentLinkedDeque[Int]()
-    eventsDuring(spark) { case e: SparkListenerJobStart =>
-      resultTasks.add(e.stageInfos.maxBy(_.stageId).numTasks)
-    } {
-      Console.withOut(new java.io.ByteArrayOutputStream()) {
-        Main.run(spark, Main.Args(file = in.toString, table = "workers",
-          jdbc = true, jdbcUrl = url, configPath = cfg.toString))
+  /** The text of column `name` in each data row of a CSV export, in
+    * part order. */
+  private def csvColumn(dir: java.nio.file.Path, name: String): Seq[String] = {
+    val parts = java.nio.file.Files.list(dir).toArray.map(_.asInstanceOf[java.nio.file.Path])
+      .filter(_.getFileName.toString.startsWith("part-")).sortBy(_.getFileName.toString).toSeq
+    parts.flatMap { p =>
+      val lines = java.nio.file.Files.readAllLines(p).toArray.map(_.toString).toSeq
+      val i = lines.head.split(",").indexOf(name)
+      lines.tail.map(_.split(",", -1)(i))
+    }
+  }
+
+  // the load alone is repartitioned: the exports keep the record order
+  for (exports <- Seq(false, true)) {
+    test("--config's WORKER_COUNT is the number of concurrent DB writers" +
+        (if (exports) ", and the exports keep the record order" else "")) {
+      import org.apache.spark.scheduler.SparkListenerJobStart
+      val db = if (exports) "graft_main_workers_exports" else "graft_main_workers"
+      val url = derbyTable(db, "workers")
+      val dir = tempDir("main_workers")
+      val in = dir.resolve("in.json")
+      val users = (1 to 7).map(i => s"u$i")
+      java.nio.file.Files.writeString(in, users.map(u => s"""{"user": "$u"}""")
+        .mkString("""{"Records": [""", ", ", "]}"))
+      val cfg = dir.resolve("config.yaml")
+      java.nio.file.Files.writeString(cfg, "RUNTIME:\n  WORKER_COUNT: 3\n")
+      val out = dir.resolve("export")
+      // tasks of each job's last (result) stage; the load's write is the last job
+      val resultTasks = new java.util.concurrent.ConcurrentLinkedDeque[Int]()
+      eventsDuring(spark) { case e: SparkListenerJobStart =>
+        resultTasks.add(e.stageInfos.maxBy(_.stageId).numTasks)
+      } {
+        Console.withOut(new java.io.ByteArrayOutputStream()) {
+          Main.run(spark, Main.Args(file = in.toString, table = "workers", jdbc = true,
+            jdbcUrl = url, configPath = cfg.toString,
+            exportDir = if (exports) out.toString else null))
+        }
+      }
+      assert(resultTasks.peekLast() == 3,
+        s"result-stage task counts per job: $resultTasks")
+      val c = java.sql.DriverManager.getConnection(url)
+      try {
+        val rs = c.createStatement().executeQuery("SELECT \"user\" FROM workers")
+        val landed = Iterator.continually(rs).takeWhile(_.next()).map(_.getString(1)).toSeq
+        assert(landed.sorted == users.sorted)
+      } finally c.close()
+      if (exports) {
+        assert(csvColumn(out.resolve("csv"), "user") == users)
+        val zip = new java.util.zip.ZipFile(out.resolve("export.xlsx").toFile)
+        val sheet = try new String(zip.getInputStream(
+          zip.getEntry("xl/worksheets/sheet1.xml")).readAllBytes(), "UTF-8") finally zip.close()
+        val rows = graft.ingest.SinksSpec.rows(sheet)
+        val user = rows.head.indexOf("user")
+        assert(rows.tail.map(_(user)) == users)
       }
     }
-    assert(resultTasks.peekLast() == 3,
-      s"result-stage task counts per job: $resultTasks")
-    val c = java.sql.DriverManager.getConnection(url)
-    try {
-      val rs = c.createStatement().executeQuery("SELECT \"user\" FROM workers")
-      val users = Iterator.continually(rs).takeWhile(_.next()).map(_.getString(1)).toSeq
-      assert(users.sorted == (1 to 7).map(i => s"u$i").sorted)
-    } finally c.close()
   }
 
   test("parse: a full command line sets every field") {
