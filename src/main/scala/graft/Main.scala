@@ -162,6 +162,8 @@ object Main {
       case f :: _ if valueFlags.contains(f) => Left(s"flag needs an argument: $f")
       case f :: _ => Left(s"flag provided but not defined: $f")
     }
-    go(argv.toList, Args())
+    // model starts unset so a command line without -model is refused;
+    // the case-class default serves programmatic callers
+    go(argv.toList, Args(model = null))
   }
 }

@@ -37,7 +37,7 @@ final case class Band(lowUs: Long, highUs: Long) extends TimeJoinKind {
 }
 
 /** One time join as every entry point of the as-of/band tier describes
-  * it — PlanBridge, AsofSkew's tiers, the keyless compositions and the
+  * it — PlanBridge, the keyless compositions and the
   * stream-stream operators — validated once, here, before any of them
   * touches a plan or starts a job. `keys` pairs probe and build column
   * names; a keyless join (global time correlation) is built with

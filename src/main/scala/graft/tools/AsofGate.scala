@@ -3,8 +3,8 @@ package graft.tools
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.{OptimizeSkewedGraftJoin, PlanBridge}
-import graft.plans.{Asof, AsofSkew, BandJoinAutoRewrite, TimeJoin}
+import org.apache.spark.sql.graft.PlanBridge
+import graft.plans.BandJoinAutoRewrite
 import graft.tools.Scale.timed
 
 /** Closed-form gate for the native as-of operator (AsofJoinExec)
@@ -76,7 +76,8 @@ private[tools] object AsofGate {
     spark.conf.set(BandJoinAutoRewrite.ConfKey, "false")
     // same isolation for the AQE skew split: baselines measure the raw
     // operator; the skew scenario flips this on for its AQE leg only
-    spark.conf.set(OptimizeSkewedGraftJoin.ConfKey, "false")
+    val skewJoinKey = "spark.sql.adaptive.skewJoin.enabled"
+    spark.conf.set(skewJoinKey, "false")
 
     // map-side generators: one range each, no shuffle before the join.
     // Keyed probes (key = id % keys, time = a hash of id mod span, so
@@ -175,10 +176,6 @@ private[tools] object AsofGate {
         .otherwise(col("id") % dimKeys).as("p_key"),
       hashedTime(10000),
       col("id").as("p_id"))
-    val detected = AsofSkew.detectHotKeyTuples(
-      skewProbes, Seq("p_key"), sampleFraction = 0.001, minShare = 0.05)
-    assert(detected == Seq(Seq(hotKey)),
-      s"hot-key detection found $detected, expected Seq($hotKey)")
     def skewJoin = PlanBridge.asofJoin(skewProbes, dim,
       Seq("p_key" -> "d_key"), "p_us", "d_us", "merge")
     val uGates = dimGates("skew_unsalted")(skewJoin)
@@ -186,7 +183,7 @@ private[tools] object AsofGate {
 
     // the SAME stock call with the AQE skew split on: zero user action —
     // must match the plain run's gates exactly
-    val aGates = withConf(OptimizeSkewedGraftJoin.ConfKey -> "true")(
+    val aGates = withConf(skewJoinKey -> "true")(
       dimGates("skew_aqe")(skewJoin))
     assert(aGates == uGates, s"AQE skew gates diverge: $aGates vs $uGates")
 
@@ -197,12 +194,11 @@ private[tools] object AsofGate {
     // can't help (it would replicate those 6M rows per salt) and the AQE
     // probe-slice can't either (each slice would re-sort the full hot
     // build partition: b_i >> p_i, the rule's warn-and-leave case), so
-    // the fix measured here is the manual keyless-bucketed routing
-    // (AsofSkew.buildSkewed) against a BALANCED control of the
-    // same total size. Closed form: balanced build = 1000 keys × 24000
+    // the quadrant's cost is measured against a BALANCED control of
+    // the same total size. Closed form: balanced build = 1000 keys × 24000
     // rows at times 0..23999 (b_id = key*24000 + t); the hot variant
     // ADDS 6M rows on key 7 at times 24000.. — unreachable by any
-    // probe (t ≤ 9999), so all three runs must produce IDENTICAL
+    // probe (t ≤ 9999), so both runs must produce IDENTICAL
     // matches: d_id = p_key*24000 + p_us, no nulls, gated distributed.
     // With U users: per-key rows P = 120U/1000 (24000), probe times
     // t < 5P/12 (10000), hot rows = a quarter of the balanced build.
@@ -220,35 +216,10 @@ private[tools] object AsofGate {
       col("d_id").isNull || col("d_id") =!= col("p_key") * hbPerKey + col("p_us")))
     def hbJoin(build: DataFrame) = PlanBridge.asofJoin(hbProbes, build,
       Seq("p_key" -> "d_key"), "p_us", "d_us", "merge")
-    val hbDetected = AsofSkew.detectHotKeyTuples(
-      hotBuild, Seq("d_key"), sampleFraction = 0.001, minShare = 0.1)
-    assert(hbDetected == Seq(Seq(hotKey)),
-      s"hot BUILD key detection found $hbDetected, expected Seq($hotKey)")
-    def hbBucketed = AsofSkew.buildSkewed(hbProbes, hotBuild,
-      TimeJoin(Seq("p_key" -> "d_key"), "p_us", "d_us", Asof(), hint = "merge"),
-      hotKeys = hbDetected)
     val hbBal = hotBuildGates("hotbuild_balanced")(hbJoin(balancedBuild))
     val hbStock = hotBuildGates("hotbuild_stock")(hbJoin(hotBuild))
-    val hbFix = hotBuildGates("hotbuild_bucketed")(hbBucketed)
     assert(hbBal == Seq(nHb, 0L), s"hot-build balanced gates: $hbBal")
     assert(hbStock == hbBal, s"hot-build stock gates diverge: $hbStock vs $hbBal")
-    assert(hbFix == hbBal, s"hot-build bucketed gates diverge: $hbFix vs $hbBal")
-
-    // ---- auto hot-BUILD routing (round 15): the SAME stock call with
-    // spark.graft.skewJoin.buildKeys=auto must detect and route with
-    // zero user action — gates identical, wall within 2x of the
-    // manually-routed run (the routed plan is identical; the delta is
-    // the bounded two-job detection pre-pass at plan-build time).
-    val hbAuto = withConf(OptimizeSkewedGraftJoin.BuildKeysConfKey -> "auto",
-        OptimizeSkewedGraftJoin.BuildKeysSampleFractionKey -> "0.001",
-        OptimizeSkewedGraftJoin.BuildKeysMinShareKey -> "0.1")(
-      hotBuildGates("hotbuild_auto")(hbJoin(hotBuild)))
-    assert(hbAuto == hbBal, s"auto-routed gates diverge: $hbAuto vs $hbBal")
-    // a wall-clock bound: meaningful at the full size only, where the
-    // routed plan's work dwarfs scheduling noise
-    if (users >= Scale.gates("asof").size)
-      assert(secs("hotbuild_auto_sec") <= 2 * secs("hotbuild_bucketed_sec") + 5.0,
-        s"auto routing not within 2x of manual: $secs")
 
     // ---- band scenario: BandJoinExec vs the equi-join + residual ----
     // Same dim side, band [-199, 0]: every probe matches the multiples

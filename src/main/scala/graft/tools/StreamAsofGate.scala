@@ -74,34 +74,40 @@ private[tools] object StreamAsofGate {
         .withWatermark("p_ts", "5 minutes")
       val build = bIn.toDF().toDF("b_id", "b_ts", "b_user")
         .withWatermark("b_ts", "5 minutes")
-      val q = mk(probe, build).writeStream.format("noop")
-        .queryName(name).outputMode("append").start()
-      val states = scala.collection.mutable.ArrayBuffer[Long]()
-      val (_, secs) =
-        try timed {
-          var id = 0L
-          (0 until nBatches).foreach { b =>
-            val base = t0 + b * stepUs
-            def ts(i: Int, n: Int) =
-              new java.sql.Timestamp((base + i.toLong * stepUs / n) / 1000L)
-            pIn.addData((0 until rowsPer).map { i =>
-              id += 1; (id, ts(i, rowsPer), i % users)
-            })
-            bIn.addData((0 until rowsPer / 4).map { i =>
-              id += 1; (id, ts(i, rowsPer / 4), i % users)
-            })
-            q.processAllAvailable()
-            val p = q.lastProgress
-            if (p != null && p.stateOperators.nonEmpty)
-              states += p.stateOperators.map(_.numRowsTotal).sum
-          }
-        } catch { case t: Throwable => q.stop(); throw t }
-      // noop discards rows, so count emitted rows via the
-      // recentProgress sink numbers
-      val emitted = q.recentProgress.map(_.sink.numOutputRows)
-        .filter(_ >= 0).sum
-      q.stop()
-      (states.toSeq, emitted, secs)
+      // the gate's own checkpoint dir, removed with the query stopped:
+      // Spark's temporary one is left in the temp dir until the JVM
+      // exits when the stop interrupts a running batch
+      Scale.withTempDir("scale_stream_asof") { ckpt =>
+        val q = mk(probe, build).writeStream.format("noop")
+          .option("checkpointLocation", ckpt)
+          .queryName(name).outputMode("append").start()
+        val states = scala.collection.mutable.ArrayBuffer[Long]()
+        val (_, secs) =
+          try timed {
+            var id = 0L
+            (0 until nBatches).foreach { b =>
+              val base = t0 + b * stepUs
+              def ts(i: Int, n: Int) =
+                new java.sql.Timestamp((base + i.toLong * stepUs / n) / 1000L)
+              pIn.addData((0 until rowsPer).map { i =>
+                id += 1; (id, ts(i, rowsPer), i % users)
+              })
+              bIn.addData((0 until rowsPer / 4).map { i =>
+                id += 1; (id, ts(i, rowsPer / 4), i % users)
+              })
+              q.processAllAvailable()
+              val p = q.lastProgress
+              if (p != null && p.stateOperators.nonEmpty)
+                states += p.stateOperators.map(_.numRowsTotal).sum
+            }
+          } catch { case t: Throwable => q.stop(); throw t }
+        // noop discards rows, so count emitted rows via the
+        // recentProgress sink numbers
+        val emitted = q.recentProgress.map(_.sink.numOutputRows)
+          .filter(_ >= 0).sum
+        q.stop()
+        (states.toSeq, emitted, secs)
+      }
     }
 
     def gates(label: String, states: Seq[Long], perBatch: Long): (Long, Long) = {

@@ -33,11 +33,7 @@ import graft.plans.{AsofJoinExec, BandJoinExec}
   * one core toward sort(b_i), a win exactly while p_i ≥ b_i. When the
   * build partition is LARGER than its probe partition the slice floor
   * (a full build re-sort per slice) pins the wall, so the rule warns
-  * loudly and leaves it alone — the exact fix for that quadrant is the
-  * logical time-bucket decomposition,
-  * [[graft.plans.AsofSkew.buildSkewed]], which spreads a
-  * hot key's build history across bucket partitions so its sort
-  * distributes.
+  * loudly and leaves it alone: that partition's merge stays serialized.
   *
   * Runs as a QUERY-STAGE-PREP rule (the phase Spark's own skew rule
   * runs in, re-applied on every AQE re-optimization): by the time both
@@ -48,10 +44,8 @@ import graft.plans.{AsofJoinExec, BandJoinExec}
   * 1:1 per-slice alignment IS the clustering, but carries no
   * `Partitioning`) pass validation, exactly as `SortMergeJoinExec`
   * does. This rule makes the STOCK call fast under probe skew with
-  * zero user action; hot BUILD keys, which no probe slice can help,
-  * are routed by [[graft.plans.AsofSkew.buildSkewed]].
-  * Kill switch: `spark.graft.skewJoin` (and Spark's own
-  * `spark.sql.adaptive.skewJoin.enabled` gates it too).
+  * zero user action. It is the only skew treatment of the time joins,
+  * and Spark's own `spark.sql.adaptive.skewJoin.enabled` turns it off.
   */
 case class OptimizeSkewedGraftJoin() extends Rule[SparkPlan] {
 
@@ -70,9 +64,7 @@ case class OptimizeSkewedGraftJoin() extends Rule[SparkPlan] {
   }
 
   override def apply(plan: SparkPlan): SparkPlan = {
-    if (!conf.getConf(SQLConf.SKEW_JOIN_ENABLED) ||
-        !conf.getConfString(OptimizeSkewedGraftJoin.ConfKey, "true").toBoolean)
-      return plan
+    if (!conf.getConf(SQLConf.SKEW_JOIN_ENABLED)) return plan
     val optimized = plan.transformUp {
       case j: AsofJoinExec if !j.isSkewJoin =>
         trySplit(j.left, j.right)((l, r) =>
@@ -150,21 +142,17 @@ case class OptimizeSkewedGraftJoin() extends Rule[SparkPlan] {
       // slicing is a win only while the probe partition is at least
       // build-sized (wall drops from sort(p)+sort(b) toward sort(b)).
       // With build >> probe the split would burn k× CPU for no
-      // wall-clock gain: warn loudly instead and point at the exact
-      // logical fix (AsofSkew.buildSkewed, which buckets
-      // the hot key's build history by time so its sort distributes).
-      val buildSkewed = bSizes(i) > bThreshold
-      val buildSplit = buildSkewed && pSizes(i) >= bSizes(i)
-      if (buildSkewed) {
+      // wall-clock gain: warn loudly instead.
+      val buildHot = bSizes(i) > bThreshold
+      val buildSplit = buildHot && pSizes(i) >= bSizes(i)
+      if (buildHot) {
         nBuildHot += 1
         // b >> p is the quadrant this rule cannot heal: every probe
         // slice re-sorts the whole hot build partition, so its sort
         // stays serialized whether or not the probe side also happens
         // to be skewed (the both-hot p/2-cap split bounds the damage at
-        // ~2 slices but does NOT parallelize the build sort). Point at
-        // the exact logical fix in BOTH cases — suppressing the pointer
-        // when probeSkewed (the pre-r15 behavior) left the b>>p
-        // quadrant silently serialized whenever its probe was also hot.
+        // ~2 slices but does NOT parallelize the build sort). Warn in
+        // BOTH cases, so the quadrant is never silently serialized.
         if (!buildSplit)
           logWarning(s"graft skew join: build partition $i is hot " +
             s"(${bSizes(i)} bytes > ${bThreshold.toLong}) and larger than " +
@@ -173,11 +161,8 @@ case class OptimizeSkewedGraftJoin() extends Rule[SparkPlan] {
             (if (probeSkewed) " (the probe side is also skewed, so the " +
               "partition is split at the half-probe cap — each slice " +
               "still re-sorts the full build partition)"
-            else "; this partition's merge stays serialized") +
-            ". For a known hot build key use " +
-            "AsofSkew.buildSkewed " +
-            s"(or set ${OptimizeSkewedGraftJoin.BuildKeysConfKey}=auto " +
-            "to detect and route automatically).")
+            else "") +
+            "; this partition's merge stays serialized.")
       }
       // Slice target: the advisory target (floored at the probe
       // median, as Spark's rule does) when probe-skewed; floored at
@@ -194,9 +179,9 @@ case class OptimizeSkewedGraftJoin() extends Rule[SparkPlan] {
       // p/advisory × sort(b). Build-hot with a uniform probe side: the
       // probe-median floor would forbid any slice, so the floor is
       // max(build_i, advisory).
-      val buildFloor = if (buildSkewed) bSizes(i) else 0L
+      val buildFloor = if (buildHot) bSizes(i) else 0L
       val sliceTarget: Long =
-        if (probeSkewed && buildSkewed)
+        if (probeSkewed && buildHot)
           math.max(math.min(math.max(targetSize, buildFloor),
             pSizes(i) / 2), 1L)
         else if (probeSkewed) targetSize
@@ -229,27 +214,4 @@ case class OptimizeSkewedGraftJoin() extends Rule[SparkPlan] {
         AQEShuffleReadExec(build, bSide.result())))
     }
   }
-}
-
-object OptimizeSkewedGraftJoin {
-  val ConfKey = "spark.graft.skewJoin"
-
-  /** `=auto` makes the STOCK PlanBridge.asofJoin/bandJoin calls run the
-    * bounded two-job hot-BUILD-key detection pre-pass and route through
-    * the logical bucket+carry tier when tuples are found — healing the
-    * b >> p quadrant (the one the AQE rule above cannot) with zero user
-    * action. Unset/anything-else: behavior unchanged. */
-  val BuildKeysConfKey = "spark.graft.skewJoin.buildKeys"
-
-  /** Detection sample fraction for `buildKeys=auto` (default 0.01 —
-    * the same bounded pre-pass AsofSkew.detectHotKeyTuples defaults
-    * to; raise toward 1.0 for small build sides where a 1% sample is
-    * empty). */
-  val BuildKeysSampleFractionKey =
-    "spark.graft.skewJoin.buildKeys.sampleFraction"
-
-  /** Minimum sampled share for a build tuple to count as hot under
-    * `buildKeys=auto` (default 0.05; at most 1/minShare tuples can
-    * qualify, which also bounds the routed branch count). */
-  val BuildKeysMinShareKey = "spark.graft.skewJoin.buildKeys.minShare"
 }

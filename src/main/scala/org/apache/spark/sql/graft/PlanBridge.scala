@@ -2,8 +2,8 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession, classic}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import graft.plans.{Asof, AsofJoinStrategy, AsofKeyless, AsofSkew, Band,
-  BandConds, TimeJoin, TimeJoinPlan}
+import graft.plans.{Asof, AsofJoinStrategy, AsofKeyless, Band, BandConds,
+  TimeJoin, TimeJoinPlan}
 
 /** The one `private[sql]`-visibility seam the graft planner extension
   * needs: constructing a DataFrame from a custom logical node
@@ -16,62 +16,6 @@ import graft.plans.{Asof, AsofJoinStrategy, AsofKeyless, AsofSkew, Band,
   * which `graft.GraftSession` sets.
   */
 object PlanBridge {
-
-  // ---- automatic hot-BUILD-key routing ------------------------------
-  // `spark.graft.skewJoin.buildKeys=auto` makes the STOCK asofJoin /
-  // bandJoin calls heal the b >> p skew quadrant — the one the AQE
-  // probe-slice rule cannot (every slice re-sorts the whole hot build
-  // partition): run AsofSkew.detectHotKeyTuples on the BUILD side (the
-  // bounded two-job sample pre-pass) and, when tuples are found, route
-  // through the logical bucket+carry tier (AsofSkew.buildSkewed —
-  // row-identical by construction, pinned by AsofSkewSpec). Costs two
-  // bounded jobs at PLAN-BUILD time per stock call, which is why it is
-  // opt-in. Suppressed (a) re-entrantly, so the routed composition's
-  // own internal joins don't re-detect, and (b) for internal
-  // "__graft_"-prefixed keys (the bucket columns the keyless tier
-  // appends) — those calls are already inside a skew-treated
-  // composition.
-  private val suppressAutoRoute: ThreadLocal[java.lang.Boolean] =
-    ThreadLocal.withInitial(() => java.lang.Boolean.FALSE)
-
-  /** Run `f` with automatic build-skew routing suppressed — for
-    * compositions that call [[timeJoin]] as an internal building block
-    * of an already-skew-treated plan. */
-  def noAutoRoute[T](f: => T): T = {
-    val prev = suppressAutoRoute.get()
-    suppressAutoRoute.set(true)
-    try f finally suppressAutoRoute.set(prev)
-  }
-
-  private def autoRouteHotBuild(right: DataFrame,
-      join: TimeJoin): Option[Seq[Seq[Any]]] = {
-    val conf = right.sparkSession.conf
-    val auto = conf.getOption(OptimizeSkewedGraftJoin.BuildKeysConfKey)
-      .contains("auto")
-    // streaming PROBE is covered too (round-16): detection samples only
-    // the static BUILD side (two bounded jobs at stream-definition
-    // time, the norm for streaming setup), and every piece of the
-    // routed composition is streaming-probe-legal — filters on the
-    // stream, per-hot-key branches through the keyless bucket tier
-    // (which switches its in-bucket joins to the stateless broadcast
-    // as-of for a streaming probe), and a union of streaming
-    // DataFrames. AsofSkewSpec pins microbatch-vs-batch row parity.
-    // A streaming BUILD side never reaches here — timeJoin refuses it
-    // before routing.
-    if (!auto || suppressAutoRoute.get() || join.keyless ||
-        join.leftKeys.exists(_.startsWith("__graft_")))
-      None
-    else {
-      val frac = conf
-        .getOption(OptimizeSkewedGraftJoin.BuildKeysSampleFractionKey)
-        .map(_.toDouble).getOrElse(0.01)
-      val minShare = conf
-        .getOption(OptimizeSkewedGraftJoin.BuildKeysMinShareKey)
-        .map(_.toDouble).getOrElse(0.05)
-      Some(AsofSkew.detectHotKeyTuples(right, join.rightKeys,
-        sampleFraction = frac, minShare = minShare)).filter(_.nonEmpty)
-    }
-  }
 
   /** A DataFrame over an analyzed logical plan — the ofRows seam for
     * rules that lower a plan by COMPOSING DataFrame-level machinery
@@ -96,11 +40,8 @@ object PlanBridge {
     * build side. Time columns must be LongType micros or either
     * timestamp type (physically long micros; tolerances and bounds stay
     * micro counts either way — see [[TimeJoin.timeTypeOk]]).
-    * A keyed join plans as one [[TimeJoinPlan]]; with
-    * `spark.graft.skewJoin.buildKeys=auto`, a bounded detection
-    * pre-pass samples the build side first and routes detected hot
-    * build keys through [[graft.plans.AsofSkew.buildSkewed]]
-    * (row-identical; two extra bounded jobs at plan-build time). A
+    * A keyed join plans as one [[TimeJoinPlan]], whose skewed
+    * partitions [[OptimizeSkewedGraftJoin]] splits at runtime. A
     * keyless join runs as its range-bucketed composition:
     * [[graft.plans.AsofKeyless]] for as-of,
     * [[graft.plans.BandConds.lowerBandKeyless]] for a band. */
@@ -122,11 +63,10 @@ object PlanBridge {
     // supported stream-static shape.
     require(!right.isStreaming,
       "time join build side must be static (stream-static enrichment only)")
-    (join.kind, autoRouteHotBuild(right, join)) match {
-      case (_, Some(hot)) => AsofSkew.buildSkewed(left, right, join, hot)
-      case (asof: Asof, None) if join.keyless =>
+    join.kind match {
+      case asof: Asof if join.keyless =>
         AsofKeyless.composed(left, right, join, asof)
-      case (band: Band, None) if join.keyless =>
+      case band: Band if join.keyless =>
         val parts = BandConds.Parts(Nil, Nil,
           TimeJoin.resolve(lPlan, join.leftTime),
           TimeJoin.resolve(rPlan, join.rightTime), band.lowUs, band.highUs,

@@ -168,5 +168,6 @@ class MainSpec extends SparkSpec {
     assert(Main.parse(Array("-table", "t", "-file")) ==
       Left("flag needs an argument: -file"))
     assert(Main.parse(Array("-file", "in.xml")).isLeft)
+    assert(Main.parse(Array("-file", "in.xml", "-table", "t")).isLeft)
   }
 }

@@ -4,31 +4,14 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.PlanBridge
 
-/** The as-of skew tier's contract: bounded hot-key detection, and
-  * row-identical results to the plain join for both treatments — the
-  * AQE runtime split of a hot probe partition (OptimizeSkewedGraftJoin)
-  * and the build-skew routing (AsofSkew.buildSkewed) — under every
-  * variant (direction × tolerance × null-key probes × keys with no
-  * build rows × generic keys). */
+/** The time joins' skew treatment, the AQE runtime split of a hot
+  * partition (OptimizeSkewedGraftJoin): it fires on hot probe and hot
+  * build partitions, never slices the build side, reverts when a
+  * downstream operator needs the join's partitioning, and returns the
+  * rows of the un-split join under every variant (as-of and band,
+  * generic keys, the keyless composition). Spark's own
+  * `spark.sql.adaptive.skewJoin.enabled` is the off switch. */
 class AsofSkewSpec extends SparkSpec {
-
-  // adversarial little corpus: one hot key (70% of probes), a cold
-  // key, a probe-only key, ties on (key, time), and pre-history probes
-  private def corpusOn(s: org.apache.spark.sql.SparkSession) = {
-    import s.implicits._
-    val rnd = new scala.util.Random(11)
-    val probes = (0 until 200).map { i =>
-      val key = if (i % 10 < 7) 1L else if (i % 10 < 9) 2L else 3L
-      (i.toLong, key, rnd.nextInt(100).toLong)
-    }
-    val builds = (0 until 40).map { j =>
-      val key = if (j % 4 < 3) 1L else 2L
-      (1000L + j, key, (j * 7 % 100).toLong)
-    }
-    (probes.toDF("event_id", "user_id", "us"),
-      builds.toDF("b_id", "b_key", "b_us"))
-  }
-  private lazy val (probe, build) = corpusOn(spark)
 
   private def rows(df: org.apache.spark.sql.DataFrame) = df
     .select("event_id", "b_id", "b_us").collect()
@@ -42,19 +25,9 @@ class AsofSkewSpec extends SparkSpec {
       if (r.isNullAt(2)) -1L else r.getLong(2)))
     .sorted.toSeq
 
-  test("detectHotKeys finds the dominant key and nothing else") {
-    val hot = AsofSkew.detectHotKeyTuples(probe, Seq("user_id"),
-      sampleFraction = 1.0, minShare = 0.25)
-    assert(hot == Seq(Seq(1L)), s"got $hot")
-    // empty probe side detects nothing
-    assert(AsofSkew.detectHotKeyTuples(probe.limit(0), Seq("user_id"),
-      sampleFraction = 1.0).isEmpty)
-  }
-
-  // ---- generic-key tier: string and multi-column keys --------------
-
-  // the same adversarial corpus re-keyed: (tenant STRING, shard INT)
-  // composite keys, with ("hot", 0) carrying 70% of probes
+  // an adversarial little corpus with (tenant STRING, shard INT)
+  // composite keys: ("hot", 0) carries 70% of probes, a cold key, a
+  // probe-only key, ties on (key, time) and pre-history probes
   private def genericOn(s: org.apache.spark.sql.SparkSession) = {
     import s.implicits._
     val rnd = new scala.util.Random(13)
@@ -68,45 +41,6 @@ class AsofSkewSpec extends SparkSpec {
     }
     (probes.toDF("event_id", "tenant", "shard", "us"),
       builds.toDF("b_id", "b_tenant", "b_shard", "b_us"))
-  }
-  private lazy val (sProbe, sBuild) = genericOn(spark)
-
-  test("detectHotKeyTuples finds the dominant composite and is bounded") {
-    val hot = AsofSkew.detectHotKeyTuples(sProbe, Seq("tenant", "shard"),
-      sampleFraction = 1.0, minShare = 0.25)
-    assert(hot == Seq(Seq("hot", 0)), s"got $hot")
-    assert(AsofSkew.detectHotKeyTuples(sProbe.limit(0),
-      Seq("tenant", "shard"), sampleFraction = 1.0).isEmpty)
-  }
-
-  test("a null key is never hot: 50% null build keys and no other hot " +
-      "key detect nothing, and buildKeys=auto leaves the join unrouted") {
-    import org.apache.spark.sql.graft.OptimizeSkewedGraftJoin
-    import org.apache.spark.sql.catalyst.plans.logical.Union
-    // 40 build rows: every other key null, the rest spread over ten
-    // keys at 5% each — only the null tuple reaches minShare
-    def nullBuildOn(s: org.apache.spark.sql.SparkSession) = {
-      import s.implicits._
-      (0 until 40).map { j =>
-        (1000L + j, if (j % 2 == 0) None else Some((j % 20) / 2 + 1L),
-          (j * 7 % 100).toLong)
-      }.toDF("b_id", "b_key", "b_us")
-    }
-    assert(AsofSkew.detectHotKeyTuples(nullBuildOn(spark), Seq("b_key"),
-      sampleFraction = 1.0, minShare = 0.25).isEmpty)
-    val autoS = spark.newSession()
-    autoS.conf.set(OptimizeSkewedGraftJoin.BuildKeysConfKey, "auto")
-    autoS.conf.set(OptimizeSkewedGraftJoin.BuildKeysSampleFractionKey, "1.0")
-    autoS.conf.set(OptimizeSkewedGraftJoin.BuildKeysMinShareKey, "0.25")
-    val keys = Seq("user_id" -> "b_key")
-    val routed = PlanBridge.asofJoin(corpusOn(autoS)._1, nullBuildOn(autoS),
-      keys, "us", "b_us")
-    assert(routed.queryExecution.analyzed.collectFirst {
-      case u: Union => u }.isEmpty,
-      "a null build key was routed through the build-skew composition")
-    val stock = rows(PlanBridge.asofJoin(probe, nullBuildOn(spark),
-      keys, "us", "b_us"))
-    assert(rows(routed) == stock && stock.exists(_._2.isDefined))
   }
 
   // ---- AQE runtime skew split (OptimizeSkewedGraftJoin) -------------
@@ -130,6 +64,13 @@ class AsofSkewSpec extends SparkSpec {
     s.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1000")
     s.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2.0")
     s
+  }
+
+  /** `f` on the aqe session with the skew split on or off, through
+    * Spark's own switch, which the rule checks; on again afterwards. */
+  private def withSplit[A](on: Boolean)(f: => A): A = {
+    aqe.conf.set("spark.sql.adaptive.skewJoin.enabled", on.toString)
+    try f finally aqe.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
   }
 
   private lazy val (bigProbe, bigBuild) = {
@@ -171,11 +112,8 @@ class AsofSkewSpec extends SparkSpec {
       _.isInstanceOf[org.apache.spark.sql.execution.CoalescedPartitionSpec])),
       "build side was sliced — that scatters a key's build rows")
     // rows identical to the same join with the rule off
-    aqe.conf.set(org.apache.spark.sql.graft.OptimizeSkewedGraftJoin.ConfKey, "false")
-    val want = try rows(PlanBridge.asofJoin(bigProbe, bigBuild,
-        Seq("user_id" -> "b_key"), "us", "b_us", hint = "merge"))
-      finally aqe.conf.set(
-        org.apache.spark.sql.graft.OptimizeSkewedGraftJoin.ConfKey, "true")
+    val want = withSplit(on = false)(rows(PlanBridge.asofJoin(bigProbe,
+      bigBuild, Seq("user_id" -> "b_key"), "us", "b_us", hint = "merge")))
     assert(got == want && got.size == 20000)
   }
 
@@ -183,19 +121,15 @@ class AsofSkewSpec extends SparkSpec {
   // the split ("salted") join must return the rows of the un-split one.
   private def genericSplitMatches(keys: Seq[(String, String)],
       band: Boolean): Unit = {
-    import org.apache.spark.sql.graft.OptimizeSkewedGraftJoin
     val (gProbe, gBuild) = genericOn(aqe)
-    def run(on: Boolean) = {
-      aqe.conf.set(OptimizeSkewedGraftJoin.ConfKey, on.toString)
-      try {
-        val df =
-          if (band) PlanBridge.bandJoin(gProbe, gBuild, keys, "us", "b_us",
-            -10L, 10L, hint = "merge")
-          else PlanBridge.asofJoin(gProbe, gBuild, keys, "us", "b_us",
-            hint = "merge")
-        df.collect() // finalize THIS QueryExecution's adaptive plan
-        (df, if (band) bandRows(df) else rows(df))
-      } finally aqe.conf.set(OptimizeSkewedGraftJoin.ConfKey, "true")
+    def run(on: Boolean) = withSplit(on) {
+      val df =
+        if (band) PlanBridge.bandJoin(gProbe, gBuild, keys, "us", "b_us",
+          -10L, 10L, hint = "merge")
+        else PlanBridge.asofJoin(gProbe, gBuild, keys, "us", "b_us",
+          hint = "merge")
+      df.collect() // finalize THIS QueryExecution's adaptive plan
+      (df, if (band) bandRows(df) else rows(df))
     }
     val (df, got) = run(on = true)
     assert(walk(df.queryExecution.executedPlan).exists {
@@ -236,16 +170,11 @@ class AsofSkewSpec extends SparkSpec {
     }.toDF("id", "t")
     val builds = (0 until 500).map(j => (j * 2000L + 3L, 5000L + j))
       .toDF("bt", "b_id")
-    def run(on: Boolean) = {
-      aqe.conf.set(
-        org.apache.spark.sql.graft.OptimizeSkewedGraftJoin.ConfKey, on.toString)
-      try {
-        val df = AsofKeyless.asofJoinKeyless(probes, builds, "t", "bt")
-        df.collect() // drive THIS QueryExecution so its adaptive plan finalizes
-        (df, df.select("id", "b_id").collect()
-          .map(r => (r.getLong(0), Option(r.get(1)))).sortBy(_._1).toSeq)
-      } finally aqe.conf.set(
-        org.apache.spark.sql.graft.OptimizeSkewedGraftJoin.ConfKey, "true")
+    def run(on: Boolean) = withSplit(on) {
+      val df = AsofKeyless.asofJoinKeyless(probes, builds, "t", "bt")
+      df.collect() // drive THIS QueryExecution so its adaptive plan finalizes
+      (df, df.select("id", "b_id").collect()
+        .map(r => (r.getLong(0), Option(r.get(1)))).sortBy(_._1).toSeq)
     }
     val (df, got) = run(on = true)
     val join = walk(df.queryExecution.executedPlan)
@@ -266,17 +195,12 @@ class AsofSkewSpec extends SparkSpec {
     // user's rows across slices and the aggregate would emit partial
     // counts — the rule must detect the broken requirement
     // (ValidateRequirements) and revert to the unsplit plan.
-    def agg(on: Boolean) = {
-      aqe.conf.set(
-        org.apache.spark.sql.graft.OptimizeSkewedGraftJoin.ConfKey, on.toString)
-      try {
-        val df = PlanBridge.asofJoin(bigProbe, bigBuild,
-            Seq("user_id" -> "b_key"), "us", "b_us", hint = "merge")
-          .groupBy(col("user_id")).agg(count(col("b_id")).as("n"))
-        (df, df.collect().map(r => (r.getLong(0), r.getLong(1)))
-          .sortBy(_._1).toSeq)
-      } finally aqe.conf.set(
-        org.apache.spark.sql.graft.OptimizeSkewedGraftJoin.ConfKey, "true")
+    def agg(on: Boolean) = withSplit(on) {
+      val df = PlanBridge.asofJoin(bigProbe, bigBuild,
+          Seq("user_id" -> "b_key"), "us", "b_us", hint = "merge")
+        .groupBy(col("user_id")).agg(count(col("b_id")).as("n"))
+      (df, df.collect().map(r => (r.getLong(0), r.getLong(1)))
+        .sortBy(_._1).toSeq)
     }
     val (df, got) = agg(on = true)
     val join = walk(df.queryExecution.executedPlan)
@@ -307,16 +231,11 @@ class AsofSkewSpec extends SparkSpec {
       val key = if (j % 10 < 6) 1L else (j % 97).toLong + 1L
       (key, (j * 211 % 100000).toLong, 1000L + j)
     }.toDF("b_key", "b_us", "b_id")
-    def run(on: Boolean) = {
-      aqe.conf.set(
-        org.apache.spark.sql.graft.OptimizeSkewedGraftJoin.ConfKey, on.toString)
-      try {
-        val df = PlanBridge.asofJoin(probes, builds,
-          Seq("user_id" -> "b_key"), "us", "b_us", hint = "merge")
-        df.collect()
-        (df, rows(df))
-      } finally aqe.conf.set(
-        org.apache.spark.sql.graft.OptimizeSkewedGraftJoin.ConfKey, "true")
+    def run(on: Boolean) = withSplit(on) {
+      val df = PlanBridge.asofJoin(probes, builds,
+        Seq("user_id" -> "b_key"), "us", "b_us", hint = "merge")
+      df.collect()
+      (df, rows(df))
     }
     val (df, got) = run(on = true)
     val join = walk(df.queryExecution.executedPlan)
@@ -339,66 +258,6 @@ class AsofSkewSpec extends SparkSpec {
     assert(got == want && got.size == 200000)
   }
 
-  test("build-skewed manual API: keyless-bucketed hot build keys == " +
-      "plain join, as-of (direction × tolerance) and band") {
-    // the shared little corpus already has a hot BUILD key: key 1
-    // holds 75% of the 40 build rows (and 70% of probes — irrelevant
-    // here, the routing keys off the build side)
-    for (dir <- Seq("backward", "forward"); tol <- Seq(-1L, 10L)) {
-      val plain = rows(PlanBridge.asofJoin(probe, build,
-        Seq("user_id" -> "b_key"), "us", "b_us", "merge", dir, tol))
-      val bucketed = rows(AsofSkew.buildSkewed(probe, build,
-        TimeJoin(Seq("user_id" -> "b_key"), "us", "b_us", Asof(dir, tol),
-          hint = "merge"),
-        hotKeys = Seq(Seq(1L))))
-      assert(bucketed == plain, s"dir=$dir tol=$tol diverged")
-      assert(plain.size == 200)
-    }
-    for ((lo, hi) <- Seq((-10L, 0L), (-25L, 25L), (0L, 15L))) {
-      val plain = bandRows(PlanBridge.bandJoin(probe, build,
-        Seq("user_id" -> "b_key"), "us", "b_us", lo, hi, hint = "merge"))
-      val bucketed = bandRows(AsofSkew.buildSkewed(probe, build,
-        TimeJoin(Seq("user_id" -> "b_key"), "us", "b_us", Band(lo, hi),
-          hint = "merge"),
-        hotKeys = Seq(Seq(1L))))
-      assert(bucketed == plain, s"band [$lo,$hi] diverged")
-    }
-    // multiple hot keys over generic composite keys
-    val keys = Seq("tenant" -> "b_tenant", "shard" -> "b_shard")
-    val plainG = rows(PlanBridge.asofJoin(sProbe, sBuild, keys, "us", "b_us"))
-    val bucketedG = rows(AsofSkew.buildSkewed(sProbe, sBuild,
-      TimeJoin(keys, "us", "b_us", Asof(), hint = "merge"),
-      hotKeys = Seq(Seq("hot", 0), Seq("cold", 1))))
-    assert(bucketedG == plainG)
-  }
-
-  test("multiple hot keys and the broadcast hint also match") {
-    // the hint steers the keyless hot branches too
-    val plain = rows(PlanBridge.asofJoin(probe, build,
-      Seq("user_id" -> "b_key"), "us", "b_us"))
-    val routed = rows(AsofSkew.buildSkewed(probe, build,
-      TimeJoin(Seq("user_id" -> "b_key"), "us", "b_us", Asof(),
-        hint = "broadcast"),
-      hotKeys = Seq(Seq(1L), Seq(2L))))
-    assert(routed == plain && plain.size == 200)
-  }
-
-  test("empty hot-key list degrades to the plain join") {
-    val keys = Seq("user_id" -> "b_key")
-    val asof = rows(AsofSkew.buildSkewed(probe, build,
-      TimeJoin(keys, "us", "b_us", Asof(), hint = "merge"), hotKeys = Seq.empty))
-    assert(asof == rows(PlanBridge.asofJoin(probe, build, keys, "us", "b_us")))
-  }
-
-  test("band salted: empty hot-key list degrades to the plain join") {
-    val keys = Seq("user_id" -> "b_key")
-    val band = bandRows(AsofSkew.buildSkewed(probe, build,
-      TimeJoin(keys, "us", "b_us", Band(-10L, 0L), hint = "merge"),
-      hotKeys = Seq.empty))
-    assert(band == bandRows(PlanBridge.bandJoin(probe, build, keys,
-      "us", "b_us", -10L, 0L)))
-  }
-
   test("AQE skew split: a partition that is BOTH probe-skewed and " +
       "build-hot still splits (slice floor = build size), rows identical") {
     import aqe.implicits._
@@ -414,16 +273,11 @@ class AsofSkewSpec extends SparkSpec {
       val key = if (j % 10 < 6) 1L else (j % 97).toLong + 1L
       (key, (j * 211 % 100000).toLong, 1000L + j)
     }.toDF("b_key", "b_us", "b_id")
-    def run(on: Boolean) = {
-      aqe.conf.set(
-        org.apache.spark.sql.graft.OptimizeSkewedGraftJoin.ConfKey, on.toString)
-      try {
-        val df = PlanBridge.asofJoin(probes, builds,
-          Seq("user_id" -> "b_key"), "us", "b_us", hint = "merge")
-        df.collect()
-        (df, rows(df))
-      } finally aqe.conf.set(
-        org.apache.spark.sql.graft.OptimizeSkewedGraftJoin.ConfKey, "true")
+    def run(on: Boolean) = withSplit(on) {
+      val df = PlanBridge.asofJoin(probes, builds,
+        Seq("user_id" -> "b_key"), "us", "b_us", hint = "merge")
+      df.collect()
+      (df, rows(df))
     }
     val (df, got) = run(on = true)
     val join = walk(df.queryExecution.executedPlan)
@@ -440,90 +294,13 @@ class AsofSkewSpec extends SparkSpec {
     assert(got == want && got.size == 40000)
   }
 
-  test("buildKeys=auto: the STOCK call detects hot BUILD keys and routes " +
-      "through the bucketed composition — rows identical; flag-off plan " +
-      "shape unchanged") {
-    import org.apache.spark.sql.graft.OptimizeSkewedGraftJoin
-    import org.apache.spark.sql.catalyst.plans.logical.Union
-    // per-session SQLConf isolates the flag from every other suite
-    val autoS = spark.newSession()
-    autoS.conf.set(OptimizeSkewedGraftJoin.BuildKeysConfKey, "auto")
-    // the shared 40-row build side is far too small for the default 1%
-    // detection sample — the dials exist exactly for this
-    autoS.conf.set(OptimizeSkewedGraftJoin.BuildKeysSampleFractionKey, "1.0")
-    autoS.conf.set(OptimizeSkewedGraftJoin.BuildKeysMinShareKey, "0.5")
-    val (p2, b2) = corpusOn(autoS)
-    val keys = Seq("user_id" -> "b_key")
-    // build key 1 holds 75% of build rows >= 0.5 — must route (the
-    // routed composition is cold UNION hot branches; the stock plan
-    // has no Union anywhere)
-    val routed = PlanBridge.asofJoin(p2, b2, keys, "us", "b_us")
-    assert(routed.queryExecution.analyzed.collectFirst {
-      case u: Union => u }.isDefined,
-      "auto flag never routed through the build-skew composition")
-    assert(rows(routed) == rows(PlanBridge.asofJoin(probe, build,
-      keys, "us", "b_us")), "auto-routed rows diverged from stock")
-    val routedBand = PlanBridge.bandJoin(p2, b2, keys, "us", "b_us", -10L, 0L)
-    assert(routedBand.queryExecution.analyzed.collectFirst {
-      case u: Union => u }.isDefined,
-      "auto flag never routed the band join")
-    assert(bandRows(routedBand) == bandRows(PlanBridge.bandJoin(probe, build,
-      keys, "us", "b_us", -10L, 0L)), "auto-routed band rows diverged")
-    // flag-off (the base session): stock single-node plan, no Union
-    val stock = PlanBridge.asofJoin(probe, build, keys, "us", "b_us")
-    assert(stock.queryExecution.analyzed.collectFirst {
-      case u: Union => u }.isEmpty,
-      "flag-off plan shape changed — auto routing leaked")
-  }
-
-  test("buildKeys=auto covers the STREAM-static probe quadrant " +
-      "(round-16): detection samples only the static build side, the " +
-      "routed composition stays streaming-legal, and the streamed rows " +
-      "equal the stock batch join") {
-    import org.apache.spark.sql.graft.OptimizeSkewedGraftJoin
-    import org.apache.spark.sql.catalyst.plans.logical.Union
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val autoS = spark.newSession()
-    autoS.conf.set(OptimizeSkewedGraftJoin.BuildKeysConfKey, "auto")
-    autoS.conf.set(OptimizeSkewedGraftJoin.BuildKeysSampleFractionKey, "1.0")
-    autoS.conf.set(OptimizeSkewedGraftJoin.BuildKeysMinShareKey, "0.5")
-    val (pStatic, b2) = corpusOn(autoS)
-    implicit val sq: org.apache.spark.sql.SQLContext = autoS.sqlContext
-    import autoS.implicits._
-    val in = MemoryStream[(Long, Long, Long)]
-    val probeS = in.toDF().toDF("event_id", "user_id", "us")
-    val keys = Seq("user_id" -> "b_key")
-    val routed = PlanBridge.asofJoin(probeS, b2, keys, "us", "b_us")
-    assert(routed.isStreaming, "routing lost streaming-ness")
-    assert(routed.queryExecution.analyzed.collectFirst {
-      case u: Union => u }.isDefined,
-      "auto flag never routed the streaming probe")
-    val q = routed.writeStream.format("memory").queryName("skewautostream")
-      .outputMode("append").start()
-    try {
-      in.addData(pStatic.collect().map(r =>
-        (r.getLong(0), r.getLong(1), r.getLong(2))).toIndexedSeq: _*)
-      q.processAllAvailable()
-      val streamed = rows(autoS.table("skewautostream"))
-      val stock = rows(PlanBridge.asofJoin(probe, build, keys, "us", "b_us"))
-      assert(streamed == stock && stock.nonEmpty,
-        s"streamed auto-routed rows (${streamed.size}) diverged from " +
-          s"stock batch (${stock.size})")
-    } finally q.stop()
-  }
-
   test("AQE skew split: band join, same contract") {
-    def bandAgg(on: Boolean) = {
-      aqe.conf.set(
-        org.apache.spark.sql.graft.OptimizeSkewedGraftJoin.ConfKey, on.toString)
-      try {
-        val df = PlanBridge.bandJoin(bigProbe, bigBuild,
-          Seq("user_id" -> "b_key"), "us", "b_us", -5000L, 5000L, hint = "merge")
-        df.collect() // finalize THIS QueryExecution's adaptive plan
-        (df, df.groupBy(col("event_id")).agg(count(col("b_id")).as("n"))
-          .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq)
-      } finally aqe.conf.set(
-        org.apache.spark.sql.graft.OptimizeSkewedGraftJoin.ConfKey, "true")
+    def bandAgg(on: Boolean) = withSplit(on) {
+      val df = PlanBridge.bandJoin(bigProbe, bigBuild,
+        Seq("user_id" -> "b_key"), "us", "b_us", -5000L, 5000L, hint = "merge")
+      df.collect() // finalize THIS QueryExecution's adaptive plan
+      (df, df.groupBy(col("event_id")).agg(count(col("b_id")).as("n"))
+        .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq)
     }
     val (df, got) = bandAgg(on = true)
     val join = walk(df.queryExecution.executedPlan)

@@ -1,7 +1,7 @@
 package graft.plans
 
 import graft.SparkSpec
-import org.apache.spark.sql.graft.{OptimizeSkewedGraftJoin, PlanBridge}
+import org.apache.spark.sql.graft.PlanBridge
 
 /** The [[TimeJoin]] descriptor is the one place a time join's arguments
   * are checked, and every entry point checks them before it plans or
@@ -20,20 +20,23 @@ class TimeJoinSpec extends SparkSpec {
     assert(TimeJoin.keyless("t", "bt", Band(-1L, 1L)).keys.isEmpty)
   }
 
-  test("bad arguments throw at the call with zero Spark jobs, also " +
-      "under buildKeys=auto, whose detection pre-pass runs jobs") {
-    val s = spark.newSession()
-    s.conf.set(OptimizeSkewedGraftJoin.BuildKeysConfKey, "auto")
-    s.conf.set(OptimizeSkewedGraftJoin.BuildKeysSampleFractionKey, "1.0")
-    s.conf.set(OptimizeSkewedGraftJoin.BuildKeysMinShareKey, "0.5")
+  test("bad arguments throw and valid calls build, both with zero Spark jobs") {
+    val s = spark
     import s.implicits._
     val l = Seq((1L, 1L, 10L), (2L, 1L, 20L), (3L, 2L, 30L))
       .toDF("id", "k", "t")
     val r = Seq((1L, 5L, 100L), (1L, 15L, 101L), (2L, 25L, 102L))
       .toDF("bk", "bt", "b_id")
-    // the harness sees the detection pre-pass of a valid call
-    assert(jobsDuring(s)(PlanBridge.asofJoin(l, r, Seq("k" -> "bk"),
-      "t", "bt")) > 0, "a valid auto-routed call started no job")
+    // the harness sees the job of an action
+    assert(jobsDuring(s)(r.count()) > 0, "an action started no job")
+    val valid = Seq[(String, () => Any)](
+      "as-of" -> (() => PlanBridge.asofJoin(l, r, Seq("k" -> "bk"), "t", "bt")),
+      "band" -> (() => PlanBridge.bandJoin(l, r, Seq("k" -> "bk"), "t", "bt",
+        lowUs = -10L, highUs = 10L)))
+    for ((what, call) <- valid) {
+      val jobs = jobsDuring(s)(call())
+      assert(jobs == 0, s"$what: $jobs job(s) ran while the DataFrame was built")
+    }
     val calls = Seq[(String, () => Any)](
       "inverted band" -> (() => PlanBridge.bandJoin(l, r,
         Seq("k" -> "bk"), "t", "bt", lowUs = 10L, highUs = -10L)),

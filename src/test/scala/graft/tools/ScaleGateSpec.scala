@@ -12,9 +12,8 @@ import graft.{SessionCaches, SparkSpec}
 /** Every scale gate, run at a seconds-scale size with the same
   * closed-form assertions it makes at its full size. The derived sizes
   * keep each gate's planted structure (hot-key share, LSH tiers,
-  * divisibility, the drift plant); the two wall-clock comparisons
-  * (asof's auto routing, ivf's append vs rebuild) assert at the full
-  * size only. Each gate gets its own session, so the confs it sets
+  * divisibility, the drift plant); the one wall-clock comparison
+  * (ivf's append vs rebuild) asserts at the full size only. Each gate gets its own session, so the confs it sets
   * cannot reach later specs, and together they must leave nothing in
   * the temp dir.
   *
