@@ -16,15 +16,19 @@ import graft.ingest._
   * read → flatten → whitelist projection → optional file sinks →
   * optional atomic JDBC load → archive input.
   *
-  * A file with every sink takes 2 Spark jobs. The export job
-  * (`--export-dir`) parses and flattens the file and writes the CSV and
-  * JSON part files and the xlsx rows from that one pass
-  * ([[graft.ingest.Sinks.exportFiles]]). The JDBC load (`--jdbc`) parses it
-  * again in a job of its own: it is repartitioned into WORKER_COUNT
-  * writers, while the exports keep the record order, and one job cannot
-  * have both partitionings. Nothing is cached. The row count is the
-  * export's, else the load's `total`; only a run with no sink counts in
-  * a job of its own.
+  * The config (`--config`, or the discovered one when `--jdbc` has no
+  * `--jdbc-url`) is loaded first, so a bad one fails before any job.
+  *
+  * A file with every sink takes 2 Spark jobs over ONE physical plan of
+  * read → flatten → whitelist, which compiles into one whole-stage-codegen
+  * stage. The export job (`--export-dir`) writes the CSV and JSON part
+  * files and the xlsx rows from one pass over it
+  * ([[graft.ingest.Sinks.exportFiles]]). The JDBC load (`--jdbc`) runs the
+  * same plan again in a job of its own, so the file is parsed once per
+  * job; a WORKER_COUNT load repartitions the rows into that many writers
+  * in a plan of its own, while the exports keep the record order. Nothing
+  * is cached. The row count is the export's, else the load's `total`;
+  * only a run with no sink counts in a job of its own.
   */
 object Main {
 
@@ -61,6 +65,11 @@ object Main {
 
   /** Runs the pipeline; returns (flattened df, row count) for testability. */
   def run(spark: SparkSession, args: Args): (DataFrame, Long) = {
+    // the reference loads its config at startup: a bad one fails here,
+    // before the export replaces an earlier one
+    val cfg = Option(args.configPath)
+      .orElse(Option.when(args.jdbc && args.jdbcUrl == null)(IngestConfig.discover()))
+      .map(IngestConfig.load(_))
     // Declarative schema acquisition, as in the reference's startup
     // (main.go:65 loads db-template.xlsx row 3 as the column whitelist):
     // edit the template → the projection changes, no code change.
@@ -84,25 +93,22 @@ object Main {
     val projected = JsonIngest.projectWhitelist(flat, whitelist,
       IngestSchema.flattened.fields.map(f => f.name -> f.dataType).toMap)
     val exported = Option(args.exportDir).map(Sinks.exportFiles(projected, _))
-    val loaded = Option.when(args.jdbc)(load(args, projected))
+    val loaded = Option.when(args.jdbc)(load(args, cfg, projected))
     val n = exported.orElse(loaded).getOrElse(projected.count())
     (projected, n)
   }
 
   /** The atomic JDBC load, then the archive move if it committed.
     * `--jdbc-url` overrides the config-derived DSN (e.g. embedded Derby
-    * for local runs); otherwise config.yaml assembles the URL exactly
+    * for local runs); otherwise the config `cfg` assembles the URL exactly
     * like the reference (main.go:162). The archive goes to the config's
     * FILE_DESTINATION whenever `--config` is given, as in the reference;
     * with `--jdbc-url` and no `--config` it goes to /tmp/graft-archive.
     * A loaded config's WORKER_COUNT is the number of concurrent DB
     * writers (main.go:173); without one the input's partitioning is
     * kept. Returns the load's `total`. */
-  private def load(args: Args, df: DataFrame): Long = {
+  private def load(args: Args, cfg: Option[IngestConfig], df: DataFrame): Long = {
     val props = new Properties()
-    val cfg = Option(args.configPath)
-      .orElse(Option.when(args.jdbcUrl == null)(IngestConfig.discover()))
-      .map(IngestConfig.load(_))
     val url = Option(args.jdbcUrl).getOrElse {
       val db = cfg.get.database // loaded: there is no --jdbc-url
       props.setProperty("user", db.user)

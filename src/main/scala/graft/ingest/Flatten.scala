@@ -18,15 +18,20 @@ import org.apache.spark.sql.types.{ArrayType, StructType}
   *     NOT a cross product (:316-344).
   *
   * Spark-first: one generator pass over each record, like the
-  * reference's single read. Every array's elements are `transform`ed into
-  * rows of the full output schema (element field, else base column, else
-  * a typed null), the arrays are `concat`enated, a record whose arrays
-  * are all empty gets its base row instead, and ONE `explode` emits the
-  * rows in record order. The plan scans the source once and has no
-  * `Union`. The output columns are the union-by-name of the per-array
+  * reference's single read. The arrays' rows are numbered in field
+  * order: array j owns the indices from the sum of the sizes before it
+  * (a null array has size 0). ONE `explode` of `sequence(0, n - 1)`
+  * emits an index per output row, n being the sum of all sizes, or 1
+  * for the base row of a record whose arrays are all empty. Each output
+  * column is then a `CASE` on the index: inside array j's range, j's
+  * element field (a primitive element is the array's own column), else
+  * the base column, else null. The guard keeps every element index in
+  * range. The plan scans the source once, has no `Union` and no lambda,
+  * so scan, generator and projection compile into one whole-stage-codegen
+  * stage. The output columns are the union-by-name of the per-array
   * expansions: each expansion's unshadowed base columns, then its element
-  * fields, first appearance wins. Spark's type widening of the `concat`
-  * gives each column the type and nullability that union would.
+  * fields, first appearance wins; the `CASE` gives each column the type
+  * and nullability that union would.
   */
 object Flatten {
 
@@ -47,18 +52,27 @@ object Flatten {
     val out = (arrays.flatMap { case (_, own, _) =>
       baseCols.filterNot(own.contains) ++ own } ++ baseCols).distinct
 
-    def baseValue(c: String): Column = if (baseCols.contains(c)) col(c) else lit(null)
-    def row(value: String => Column): Column = struct(out.map(c => value(c).as(c)): _*)
-
-    val expansions = arrays.map { case (name, own, isStruct) =>
-      coalesce(transform(col(name), x => row { c =>
-        if (!own.contains(c)) baseValue(c) else if (isStruct) x.getField(c) else x
-      }), array())
+    // array j's rows are the indices [starts(j), starts(j + 1))
+    val starts = arrays.scanLeft(lit(0)) { case (start, (name, _, _)) =>
+      start + greatest(coalesce(size(col(name)), lit(0)), lit(0))
     }
-    val allEmpty = arrayFields.map(f => coalesce(size(col(f.name)), lit(0)) <= 0)
-      .reduce(_ && _)
-    df.select(explode(when(allEmpty, array(row(baseValue)))
-      .otherwise(concat(expansions: _*))).as("_r"))
-      .select("_r.*")
+    val idxName = Iterator.iterate("_i")("_" + _)
+      .find(n => !df.columns.exists(_.equalsIgnoreCase(n))).get
+    val idx = col(idxName)
+
+    def baseValue(c: String): Column = if (baseCols.contains(c)) col(c) else lit(null)
+    def value(c: String): Column = {
+      val branches = arrays.indices.filter(j => arrays(j)._2.contains(c)).map { j =>
+        val (name, _, isStruct) = arrays(j)
+        val elem = col(name).getItem(idx - starts(j))
+        (idx >= starts(j) && idx < starts(j + 1), if (isStruct) elem.getField(c) else elem)
+      }
+      if (branches.isEmpty) baseValue(c)
+      else branches.tail.foldLeft(when(branches.head._1, branches.head._2)) {
+        case (cases, (inRange, v)) => cases.when(inRange, v)
+      }.otherwise(baseValue(c))
+    }
+    df.select(col("*"), explode(sequence(lit(0), greatest(starts.last, lit(1)) - 1)).as(idxName))
+      .select(out.map(c => value(c).as(c)): _*)
   }
 }

@@ -22,7 +22,9 @@ final case class IngestConfig(database: DatabaseConfig, runtime: RuntimeConfig)
 object IngestConfig {
 
   /** Load YAML config; every key can be overridden by an environment
-    * variable of the same name (Viper AutomaticEnv parity). */
+    * variable of the same name (Viper AutomaticEnv parity). A DB_PORT or
+    * WORKER_COUNT that is not a positive integer is refused, naming the
+    * key. */
   def load(path: String, env: Map[String, String] = sys.env): IngestConfig = {
     val root: java.util.Map[String, Object] =
       new Yaml().load(new String(Files.readAllBytes(Paths.get(path)), "UTF-8"))
@@ -33,6 +35,11 @@ object IngestConfig {
       }.getOrElse(Map.empty)
     def get(sec: Map[String, String], key: String, dflt: String): String =
       env.getOrElse(key, sec.getOrElse(key, dflt))
+    def positive(sec: Map[String, String], key: String, dflt: String): Int = {
+      val v = get(sec, key, dflt)
+      v.trim.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+        s"$key must be a positive integer, got '$v' (config $path)"))
+    }
 
     val db = section("DATABASE")
     val rt = section("RUNTIME")
@@ -42,10 +49,10 @@ object IngestConfig {
         user = get(db, "DB_USER", ""),
         password = get(db, "DB_PASSWORD", ""),
         hostname = get(db, "DB_HOSTNAME", "localhost"),
-        port = get(db, "DB_PORT", "5432").toInt,
+        port = positive(db, "DB_PORT", "5432"),
         name = get(db, "DB_NAME", "")),
       RuntimeConfig(
-        workerCount = get(rt, "WORKER_COUNT", "2").toInt,
+        workerCount = positive(rt, "WORKER_COUNT", "2"),
         fileDestination = get(rt, "FILE_DESTINATION", "/tmp/archive")))
   }
 

@@ -2,9 +2,13 @@ package graft.ingest
 
 import java.sql.{Connection, DriverManager, PreparedStatement}
 import java.util.Properties
-import org.apache.spark.sql.{DataFrame, Row}
+import scala.collection.mutable.ArrayBuffer
+import org.apache.spark.sql.{DataFrame, GraftBridge}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
+import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory,
+  PhysicalWriteInfo, WriterCommitMessage}
 import org.apache.spark.sql.types._
-import org.apache.spark.util.LongAccumulator
 
 /** Whole-file-atomic JDBC sink with per-record error isolation.
   *
@@ -16,18 +20,24 @@ import org.apache.spark.util.LongAccumulator
   * semantics, not the stale-err reporting bug (SURVEY.md §2.7).
   *
   * Spark's stock `df.write.jdbc` commits per partition with no global
-  * transaction, so atomicity uses the STAGING-TABLE pattern:
-  *   1. executors append to `<table>_stg_<uuid>` in parallel
-  *      (`foreachPartition`, batched PreparedStatement — the multi-row
-  *      VALUES batching of dbtransposer-schema.go:58-87);
-  *   2. the driver promotes staging → target in ONE transaction
-  *      (`INSERT INTO target SELECT * FROM staging`), then drops staging.
+  * transaction, so atomicity uses the STAGING-TABLE pattern, run as one
+  * DataSource V2 batch write ([[GraftBridge.write]]):
+  *   1. the driver creates `<table>_stg_<uuid>`, and each task's
+  *      `DataWriter` appends its partition to it in parallel (batched
+  *      PreparedStatement — the multi-row VALUES batching of
+  *      dbtransposer-schema.go:58-87);
+  *   2. the write's `commit` promotes staging → target in ONE transaction
+  *      (`INSERT INTO target SELECT * FROM staging`); the staging table is
+  *      dropped after the commit or at the `abort`.
   * Scales to any executor count (parallel load) while the commit point
   * stays a single metadata-cheap statement — unlike a single-partition
-  * write (no parallelism) or 2PC (coordination).
+  * write (no parallelism) or 2PC (coordination). The write runs over the
+  * rows of `df`'s own physical plan, so a caller that also exports `df`
+  * plans it once.
   *
-  * Success/error counters are Spark `LongAccumulator`s — the distributed
-  * mirror of util/utils.go:10-40's mutexed Counter.
+  * Each task's success/error counts travel in its commit message and are
+  * summed at the commit — the distributed mirror of util/utils.go:10-40's
+  * mutexed Counter.
   */
 object JdbcTransactionalSink {
 
@@ -94,11 +104,20 @@ object JdbcTransactionalSink {
 
   private def write0(df: DataFrame, url: String, props: Properties, table: String,
       opts: Options, marker: Option[Long]): IngestResult = {
-    val spark = df.sparkSession
-    val schema = df.schema
     val staging = s"${table}_stg_${java.util.UUID.randomUUID().toString.replace("-", "").take(10)}"
-    val ok = spark.sparkContext.longAccumulator("ingest.succeeded")
-    val err = spark.sparkContext.longAccumulator("ingest.errors")
+    val load = new StagingLoad(url, props, table, staging, df.schema, opts, marker)
+    // WORKER_COUNT writers repartition the rows in a plan of their own;
+    // otherwise the load runs over the caller's plan of `df`
+    GraftBridge.write(opts.numWriters.fold(df)(df.repartition(_)), load)
+    load.result
+  }
+
+  /** The driver side of the load: it creates the staging table, then
+    * promotes it at the commit and drops it. */
+  private final class StagingLoad(url: String, props: Properties, table: String,
+      staging: String, schema: StructType, opts: Options, marker: Option[Long])
+      extends BatchWrite {
+    var result: IngestResult = _
 
     // Staging mirrors the TARGET's column types (not the DataFrame's),
     // so per-record type/length violations surface at staging-insert time
@@ -112,71 +131,22 @@ object JdbcTransactionalSink {
     // CONCURRENT attempts of one partition (speculation) can still
     // interleave delete/insert — run with spark.speculation=false (the
     // default) for the strict all-or-nothing guarantee.
-    withConnection(url, props) { c =>
-      val ddl = targetDdl(c, table, schema).getOrElse(ddlColumns(schema))
-      exec(c, s"CREATE TABLE $staging ($ddl, ${quoteId(PartCol)} INTEGER)")
-    }
-    try {
-      val insertSql =
-        s"""INSERT INTO $staging (${schema.fieldNames.map(quoteId).mkString(", ")}, ${quoteId(PartCol)})
-           |VALUES (${schema.fields.map(_ => "?").mkString(", ")}, ?)""".stripMargin
-      val fields = schema.fields
-      val batchSize = opts.batchSize
-      val writeDf = opts.numWriters.map(df.repartition(_)).getOrElse(df)
-      writeDf.foreachPartition { rows: Iterator[Row] =>
-        if (rows.nonEmpty) {
-          val partId = org.apache.spark.TaskContext.getPartitionId()
-          val conn = DriverManager.getConnection(url, props)
-          try {
-            conn.setAutoCommit(false)
-            // idempotency on retry: clear anything a failed prior attempt
-            // of THIS partition already committed into staging
-            val del = conn.prepareStatement(
-              s"DELETE FROM $staging WHERE ${quoteId(PartCol)} = ?")
-            try { del.setInt(1, partId); del.executeUpdate(); conn.commit() }
-            finally del.close()
-            val ps = conn.prepareStatement(insertSql)
-            def bindRow(r: Row): Unit = {
-              bind(ps, r, fields)
-              ps.setInt(fields.length + 1, partId)
-            }
-            val pending = new scala.collection.mutable.ArrayBuffer[Row](batchSize)
-            def flush(): Unit = if (pending.nonEmpty) {
-              try {
-                ps.executeBatch()
-                ok.add(pending.length)
-              } catch {
-                case _: java.sql.SQLException =>
-                  // batch poisoned: replay row-by-row so one bad record
-                  // doesn't take down its batch (skip-and-continue,
-                  // mapreduce.go:44-50)
-                  conn.rollback()
-                  pending.foreach { r =>
-                    try {
-                      bindRow(r); ps.executeUpdate(); conn.commit()
-                      ok.add(1)
-                    } catch {
-                      case _: java.sql.SQLException => conn.rollback(); err.add(1)
-                    }
-                  }
-              }
-              ps.clearBatch()
-              pending.clear()
-            }
-            rows.foreach { r =>
-              bindRow(r)
-              ps.addBatch()
-              pending += r
-              if (pending.length >= batchSize) { flush(); conn.commit() }
-            }
-            flush()
-            conn.commit()
-          } finally conn.close()
-        }
+    override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
+      withConnection(url, props) { c =>
+        val ddl = targetDdl(c, table, schema).getOrElse(ddlColumns(schema))
+        exec(c, s"CREATE TABLE $staging ($ddl, ${quoteId(PartCol)} INTEGER)")
       }
+      LoadFactory(url, props, staging, schema, opts.batchSize)
+    }
 
-      val total = ok.value + err.value
-      val commit = err.value == 0 || !opts.allOrNothing
+    // each task commits its rows to staging itself; the commit point is the promote
+    override def useCommitCoordinator(): Boolean = false
+
+    override def commit(messages: Array[WriterCommitMessage]): Unit = try {
+      val counts = messages.map(_.asInstanceOf[LoadMessage])
+      val ok = counts.map(_.succeeded).sum
+      val err = counts.map(_.errors).sum
+      val commit = err == 0 || !opts.allOrNothing
       var lostRace = false
       if (commit) {
         val cols = schema.fieldNames.map(quoteId).mkString(", ")
@@ -198,13 +168,122 @@ object JdbcTransactionalSink {
           }
         }
       }
-      IngestResult(total, ok.value, err.value,
+      result = IngestResult(ok + err, ok, err,
         committed = commit && !lostRace, staging, replayed = lostRace)
-    } finally {
-      withConnection(url, props) { c =>
-        try exec(c, s"DROP TABLE $staging") catch { case _: java.sql.SQLException => }
-      }
+    } finally dropStaging()
+
+    override def abort(messages: Array[WriterCommitMessage]): Unit = dropStaging()
+
+    private def dropStaging(): Unit = withConnection(url, props) { c =>
+      try exec(c, s"DROP TABLE $staging") catch { case _: java.sql.SQLException => }
     }
+  }
+
+  /** What a task of the load needs. */
+  private final case class LoadFactory(url: String, props: Properties, staging: String,
+      schema: StructType, batchSize: Int) extends DataWriterFactory {
+    val insertSql: String =
+      s"""INSERT INTO $staging (${schema.fieldNames.map(quoteId).mkString(", ")}, ${quoteId(PartCol)})
+         |VALUES (${schema.fields.map(_ => "?").mkString(", ")}, ?)""".stripMargin
+    override def createWriter(partition: Int, taskId: Long): DataWriter[InternalRow] =
+      new LoadTask(this, partition)
+  }
+
+  /** A task's rows inserted into staging and rows refused. */
+  private final case class LoadMessage(succeeded: Long, errors: Long)
+      extends WriterCommitMessage
+
+  /** One partition into staging, in batches of `batchSize` rows, each
+    * committed. A batch that fails is replayed row by row, so one bad
+    * record does not take down its batch (skip-and-continue,
+    * mapreduce.go:44-50). The connection opens at the first row: an empty
+    * partition opens none. */
+  private final class LoadTask(f: LoadFactory, partition: Int)
+      extends DataWriter[InternalRow] {
+    private val binders = f.schema.fields.zipWithIndex.map { case (field, i) =>
+      binder(field.dataType, i)
+    }
+    // the rows of the batch in flight, copied: the input reuses its rows
+    private val pending = new ArrayBuffer[InternalRow](f.batchSize)
+    private var conn: Connection = _
+    private var ps: PreparedStatement = _
+    private var ok = 0L
+    private var err = 0L
+
+    /** Connects and clears what a failed earlier attempt of this
+      * partition already committed into staging (idempotent retry). */
+    private def open(): Unit = {
+      conn = DriverManager.getConnection(f.url, f.props)
+      conn.setAutoCommit(false)
+      val del = conn.prepareStatement(s"DELETE FROM ${f.staging} WHERE ${quoteId(PartCol)} = ?")
+      try { del.setInt(1, partition); del.executeUpdate(); conn.commit() }
+      finally del.close()
+      ps = conn.prepareStatement(f.insertSql)
+    }
+
+    private def bindRow(r: InternalRow): Unit = {
+      var i = 0
+      while (i < binders.length) { binders(i)(ps, r); i += 1 }
+      ps.setInt(binders.length + 1, partition)
+    }
+
+    override def write(row: InternalRow): Unit = {
+      if (conn == null) open()
+      bindRow(row)
+      ps.addBatch()
+      pending += row.copy()
+      if (pending.length >= f.batchSize) flush()
+    }
+
+    private def flush(): Unit = if (pending.nonEmpty) {
+      try {
+        ps.executeBatch()
+        ok += pending.length
+      } catch {
+        case _: java.sql.SQLException =>
+          conn.rollback()
+          pending.foreach { r =>
+            try {
+              bindRow(r); ps.executeUpdate(); conn.commit()
+              ok += 1
+            } catch {
+              case _: java.sql.SQLException => conn.rollback(); err += 1
+            }
+          }
+      }
+      ps.clearBatch()
+      pending.clear()
+      conn.commit()
+    }
+
+    override def commit(): WriterCommitMessage = {
+      if (conn != null) flush()
+      LoadMessage(ok, err)
+    }
+
+    override def abort(): Unit = if (conn != null) conn.rollback()
+
+    override def close(): Unit = if (conn != null) try conn.close() finally conn = null
+  }
+
+  /** Binds field `i` of a row to parameter `i + 1`. A type with no setter
+    * here binds the text of its external value. */
+  private def binder(dt: DataType, i: Int): (PreparedStatement, InternalRow) => Unit = {
+    val p = i + 1
+    val set: (PreparedStatement, InternalRow) => Unit = dt match {
+      case LongType => (ps, r) => ps.setLong(p, r.getLong(i))
+      case IntegerType => (ps, r) => ps.setInt(p, r.getInt(i))
+      case DoubleType => (ps, r) => ps.setDouble(p, r.getDouble(i))
+      case BooleanType => (ps, r) => ps.setBoolean(p, r.getBoolean(i))
+      case TimestampType =>
+        (ps, r) => ps.setTimestamp(p, DateTimeUtils.toJavaTimestamp(r.getLong(i)))
+      case _: StringType => (ps, r) => ps.setString(p, r.getUTF8String(i).toString)
+      case _ =>
+        val toScala = CatalystTypeConverters.createToScalaConverter(dt)
+        (ps, r) => ps.setString(p, String.valueOf(toScala(r.get(i, dt))))
+    }
+    // Types.NULL is not portable (Derby rejects it) — use the column type
+    (ps, r) => if (r.isNullAt(i)) ps.setNull(p, sqlType(dt)) else set(ps, r)
   }
 
   /** DDL for the df's columns copied from the target table's metadata
@@ -259,25 +338,6 @@ object JdbcTransactionalSink {
     case BooleanType => java.sql.Types.BOOLEAN
     case TimestampType => java.sql.Types.TIMESTAMP
     case _ => java.sql.Types.VARCHAR
-  }
-
-  private def bind(ps: PreparedStatement, r: Row, fields: Array[StructField]): Unit = {
-    var i = 0
-    while (i < fields.length) {
-      val v = if (r.isNullAt(i)) null else r.get(i)
-      if (v == null) {
-        // Types.NULL is not portable (Derby rejects it) — use the column type
-        ps.setNull(i + 1, sqlType(fields(i).dataType))
-      } else fields(i).dataType match {
-        case LongType => ps.setLong(i + 1, r.getLong(i))
-        case IntegerType => ps.setInt(i + 1, r.getInt(i))
-        case DoubleType => ps.setDouble(i + 1, r.getDouble(i))
-        case BooleanType => ps.setBoolean(i + 1, r.getBoolean(i))
-        case TimestampType => ps.setTimestamp(i + 1, r.getTimestamp(i))
-        case _ => ps.setString(i + 1, String.valueOf(v))
-      }
-      i += 1
-    }
   }
 
   private def exec(c: Connection, sql: String): Unit = {

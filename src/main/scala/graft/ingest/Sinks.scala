@@ -20,9 +20,8 @@ import org.apache.spark.internal.io.FileCommitProtocol.TaskCommitMessage
 import org.apache.spark.internal.io.FileNameSpec
 import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.connector.catalog.{SupportsWrite, TableCapability}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory,
-  LogicalWriteInfo, PhysicalWriteInfo, Write, WriteBuilder, WriterCommitMessage}
+  PhysicalWriteInfo, WriterCommitMessage}
 import org.apache.spark.sql.execution.datasources.{FileFormat, OutputWriter,
   OutputWriterFactory, SQLHadoopMapReduceCommitProtocol}
 import org.apache.spark.sql.execution.datasources.csv.CSVFileFormat
@@ -56,28 +55,13 @@ object Sinks {
     * xlsx fragment of sheet rows. The driver commits once: both
     * directories, each through its own Spark commit protocol, then the
     * fragments, in partition order, into the workbook. Existing outputs
-    * are replaced; a failed job leaves no temporary file behind. */
+    * are replaced; a failed job leaves no temporary file behind. The job
+    * runs over `df`'s own physical plan ([[GraftBridge.write]]), so a
+    * later write of the same `df` runs over that plan too. */
   def exportFiles(df: DataFrame, dir: String, maxRows: Int = 1000000): Long = {
-    val table = new ExportTable(df.sparkSession, dir, df.schema, maxRows)
-    GraftBridge.append(df, table)
-    table.rows
-  }
-
-  /** The export as a DataSource V2 table: appending to it is the job. */
-  private final class ExportTable(spark: SparkSession, dir: String, rowSchema: StructType,
-      maxRows: Int) extends SupportsWrite {
-    /** Rows the committed write exported. */
-    @volatile var rows = -1L
-    override def name(): String = s"export $dir"
-    override def schema(): StructType = rowSchema
-    override def capabilities(): java.util.Set[TableCapability] =
-      java.util.EnumSet.of(TableCapability.BATCH_WRITE)
-    override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = new WriteBuilder {
-      override def build(): Write = new Write {
-        override def toBatch(): BatchWrite = new ExportWrite(spark, dir, rowSchema, maxRows,
-          n => rows = n)
-      }
-    }
+    val export = new ExportWrite(df.sparkSession, dir, df.schema, maxRows)
+    GraftBridge.write(df, export)
+    export.rows
   }
 
   /** Spark's SQL commit protocol without its own ask to the commit
@@ -120,9 +104,10 @@ object Sinks {
     (job, DirWrite(committer, factory, new SerializableConfiguration(job.getConfiguration)))
   }
 
-  /** The driver side of the export job. */
+  /** The driver side of the export job; `rows` is what it committed. */
   private final class ExportWrite(spark: SparkSession, dir: String, schema: StructType,
-      maxRows: Int, committed: Long => Unit) extends BatchWrite {
+      maxRows: Int) extends BatchWrite {
+    var rows = -1L
     private val fragments = Paths.get(dir, s"_xlsx-${UUID.randomUUID()}")
     /** the directories' jobs set up so far: csv, then json */
     private val jobs = scala.collection.mutable.ArrayBuffer[(Job, DirWrite)]()
@@ -130,18 +115,16 @@ object Sinks {
     /** Replaces what an earlier export left, as mode "overwrite" does,
       * and sets up both directories' jobs and the fragment directory. */
     override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-      try {
-        val conf = GraftBridge.hadoopConf(spark)
-        for (sub <- Seq("csv", "json", "export.xlsx")) {
-          val p = new HPath(dir, sub)
-          p.getFileSystem(conf).delete(p, true)
-        }
-        Files.createDirectories(fragments)
-        jobs += dirWrite(spark, conf, new CSVFileFormat, csvOptions, s"$dir/csv", schema)
-        jobs += dirWrite(spark, conf, new JsonFileFormat, Map.empty, s"$dir/json", schema)
-        ExportFactory(jobs(0)._2, jobs(1)._2, fragments.toString, schema, maxRows,
-          new Date().getTime.toString)
-      } catch { case e: Throwable => abort(Array.empty); throw e }
+      val conf = GraftBridge.hadoopConf(spark)
+      for (sub <- Seq("csv", "json", "export.xlsx")) {
+        val p = new HPath(dir, sub)
+        p.getFileSystem(conf).delete(p, true)
+      }
+      Files.createDirectories(fragments)
+      jobs += dirWrite(spark, conf, new CSVFileFormat, csvOptions, s"$dir/csv", schema)
+      jobs += dirWrite(spark, conf, new JsonFileFormat, Map.empty, s"$dir/json", schema)
+      ExportFactory(jobs(0)._2, jobs(1)._2, fragments.toString, schema, maxRows,
+        new Date().getTime.toString)
     }
 
     override def useCommitCoordinator(): Boolean = true
@@ -154,7 +137,7 @@ object Sinks {
       writeWorkbook(s"$dir/export.xlsx", schema.fieldNames.toSeq,
         parts.map(p => Paths.get(p.fragment) -> p.rows), maxRows)
       FileUtils.deleteDirectory(fragments.toFile)
-      committed(parts.map(_.rows).sum)
+      rows = parts.map(_.rows).sum
     }
 
     override def abort(messages: Array[WriterCommitMessage]): Unit =

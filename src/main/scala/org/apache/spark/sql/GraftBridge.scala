@@ -1,21 +1,22 @@
 package org.apache.spark.sql
 
 import org.apache.hadoop.conf.Configuration
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.plans.logical.AppendData
-import org.apache.spark.sql.connector.catalog.SupportsWrite
-import org.apache.spark.sql.execution.QueryExecution
-import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+import org.apache.spark.sql.connector.write.{BatchWrite, PhysicalWriteInfoImpl,
+  WriterCommitMessage}
+import org.apache.spark.sql.execution.datasources.v2.GraftWriteTask
 
 /** Bridge into `private[sql]` API: Column ⇄ Catalyst Expression.
   *
   * Spark 4 made the Column↔Expression converters package-private
   * (`org.apache.spark.sql.classic.ExpressionUtils`). Custom Catalyst
   * expressions still need them to surface as user-facing `Column`s, so
-  * this one-file shim lives in the `org.apache.spark.sql` package. It is
-  * the complete extent of our reliance on non-public API: those
-  * converters, two error constructors, and the session state a batch
-  * write to a DataSource V2 table needs.
+  * this shim lives in the `org.apache.spark.sql` package. Besides those
+  * converters it holds two error constructors and what a DataSource V2
+  * batch write needs: a session's Hadoop configuration, a DataFrame's
+  * physical plan and Spark's write task, whose `private[v2]` result
+  * [[org.apache.spark.sql.execution.datasources.v2.GraftWriteTask]] reads.
   */
 object GraftBridge {
   def toColumn(e: Expression): Column = classic.ExpressionUtils.column(e)
@@ -30,13 +31,34 @@ object GraftBridge {
     errors.QueryExecutionErrors.castingCauseOverflowError(
       v, types.DoubleType, types.IntegerType)
 
-  /** Appends `df` to `table` as one DataSource V2 batch write: one Spark
-    * job, in a SQL execution of its own, as `df.write` runs it. */
-  def append(df: DataFrame, table: SupportsWrite): Unit = {
-    val ds = df.asInstanceOf[classic.Dataset[Row]]
-    new QueryExecution(ds.sparkSession, AppendData.byPosition(
-      DataSourceV2Relation.create(table, None, None), ds.logicalPlan))
-      .assertCommandExecuted()
+  /** Runs `batch` over the rows of `df` as one Spark job started on this
+    * thread: the body of Spark's `V2TableWriteExec.writeWithV2`. It makes
+    * the writer factory, runs a job whose tasks are Spark's DataSource V2
+    * write task, then calls `commit`, or `abort` on any failure. The rows
+    * come from `df`'s one physical plan (`queryExecution.toRdd`), so every
+    * write over the same `df` runs over the same plan. Input with no
+    * partitions is written as one empty partition, as Spark does. The job
+    * runs outside a SQL execution: it has no SQL-tab entry and no
+    * `QueryExecutionListener` callback. */
+  def write(df: DataFrame, batch: BatchWrite): Unit = {
+    val planned = df.asInstanceOf[classic.Dataset[Row]].queryExecution.toRdd
+    val sc = planned.sparkContext
+    val rows = if (planned.partitions.isEmpty) sc.parallelize(Seq.empty[InternalRow], 1)
+      else planned
+    val messages = new Array[WriterCommitMessage](rows.partitions.length)
+    try {
+      val factory = batch.createBatchWriterFactory(PhysicalWriteInfoImpl(messages.length))
+      sc.runJob(rows, new GraftWriteTask(factory, batch.useCommitCoordinator),
+        messages.indices, (i: Int, m: WriterCommitMessage) => {
+          messages(i) = m
+          batch.onDataWriterCommit(m)
+        })
+      batch.commit(messages)
+    } catch {
+      case cause: Throwable =>
+        try batch.abort(messages) catch { case t: Throwable => cause.addSuppressed(t) }
+        throw cause
+    }
   }
 
   /** The Hadoop configuration a file write of `spark` starts from. */

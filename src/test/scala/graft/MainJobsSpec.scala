@@ -7,13 +7,15 @@ import scala.concurrent.ExecutionContext.Implicits.global
 import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 import scala.util.Try
-import org.apache.spark.scheduler.SparkListenerBlockUpdated
+import org.apache.spark.scheduler.{SparkListenerBlockUpdated, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.graft.CacheProbe
 import graft.ingest.IngestSchema
 
 /** `Main.run` with every sink runs exactly 2 Spark jobs: the export job,
   * which parses and flattens the file once for the CSV, JSON and xlsx
-  * outputs, and the JDBC load. It caches nothing, also when a sink
+  * outputs, and the JDBC load. Both run over one physical plan, each
+  * started from its own sink. It caches nothing, also when a sink
   * throws, and the row count it returns is the export's, else the
   * load's. */
 class MainJobsSpec extends SparkSpec {
@@ -109,6 +111,37 @@ class MainJobsSpec extends SparkSpec {
         .map(_.group(1).toLong)
       assert(total.contains(n), s"JDBC summary: $stdout")
       assert(derbyRows(table) == n)
+    }
+  }
+
+  /** The first program frame of the driver stack that started job `e`. */
+  private def firstProgramFrame(e: SparkListenerJobStart): String =
+    e.stageInfos.head.details.linesIterator.map(_.trim).find(_.startsWith("graft."))
+      .getOrElse("")
+
+  for ((kind, file) <- Seq("xml" -> (() => xmlFile), "json" -> (() => jsonFile))) {
+    test(s"$kind: both sink jobs run over one physical plan, each started from its sink") {
+      val table = s"main_plan_$kind"
+      createTarget(table)
+      val out = tempDir(s"main_plan_out_$kind")
+      val starts = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerJobStart]()
+      var projected: DataFrame = null
+      eventsDuring(spark) { case e: SparkListenerJobStart => starts.add(e) } {
+        projected = Console.withOut(new java.io.ByteArrayOutputStream()) {
+          Main.run(spark, Main.Args(file = file().toString, table = table,
+            exportDir = out.toString, jdbc = true, jdbcUrl = url))._1
+        }
+      }
+      val jobs = starts.asScala.toSeq.sortBy(_.jobId)
+      assert(jobs.size == 2, s"Main.run ran ${jobs.size} Spark jobs")
+      val planned = projected.queryExecution.toRdd.id
+      for (j <- jobs) {
+        val rdds = j.stageInfos.flatMap(_.rddInfos.map(_.id))
+        assert(rdds.contains(planned), s"job ${j.jobId} runs over RDDs $rdds, not $planned")
+      }
+      val frames = jobs.map(firstProgramFrame)
+      assert(frames.head.startsWith("graft.ingest.Sinks$") &&
+        frames(1).startsWith("graft.ingest.JdbcTransactionalSink$"), frames)
     }
   }
 

@@ -1,5 +1,6 @@
 package graft
 
+import scala.jdk.CollectionConverters._
 import graft.ingest.{IngestSchema, Sinks}
 
 /** Drives Main.run the way the CLI does: declarative template-driven
@@ -90,6 +91,39 @@ class MainSpec extends SparkSpec {
     }
     assert(!java.nio.file.Files.exists(in))
     assert(java.nio.file.Files.exists(dest.resolve("in.json")))
+  }
+
+  /** Every file under `dir` by relative path, with its bytes. */
+  private def snapshot(dir: java.nio.file.Path): Map[String, Seq[Byte]] = {
+    val files = java.nio.file.Files.walk(dir)
+    try files.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+      .map(f => dir.relativize(f).toString -> java.nio.file.Files.readAllBytes(f).toSeq).toMap
+    finally files.close()
+  }
+
+  test("a bad --config fails before any Spark job and leaves an earlier export as it was") {
+    val dir = tempDir("main_bad_config")
+    val in = dir.resolve("in.json")
+    java.nio.file.Files.writeString(in, """{"Records": [{"user": "u1"}, {"user": "u2"}]}""")
+    val out = dir.resolve("export")
+    Main.run(spark, Main.Args(file = in.toString, table = "t", exportDir = out.toString))
+    val before = snapshot(out)
+    assert(before.keys.exists(_.startsWith("csv")))
+    val zero = dir.resolve("zero.yaml")
+    java.nio.file.Files.writeString(zero, "RUNTIME:\n  WORKER_COUNT: 0\n")
+    for ((cfg, says) <- Seq(zero.toString -> "WORKER_COUNT",
+        dir.resolve("missing.yaml").toString -> "missing.yaml")) {
+      var result: scala.util.Try[_] = null
+      val jobs = jobsDuring(spark) {
+        result = scala.util.Try(Main.run(spark, Main.Args(file = in.toString, table = "t",
+          exportDir = out.toString, jdbc = true, jdbcUrl = "jdbc:derby:memory:graft_bad_cfg",
+          configPath = cfg)))
+      }
+      assert(result.isFailure, cfg)
+      assert(result.failed.get.getMessage.contains(says), result)
+      assert(jobs == 0, s"$cfg: Main.run ran $jobs Spark jobs")
+      assert(snapshot(out) == before, s"$cfg: the earlier export changed")
+    }
   }
 
   /** The text of column `name` in each data row of a CSV export, in

@@ -3,7 +3,10 @@ package graft.ingest
 import java.nio.file.Files
 import graft.SparkSpec
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.LambdaFunction
 import org.apache.spark.sql.catalyst.plans.logical.Union
+import org.apache.spark.sql.execution.{GenerateExec, InputAdapter, SparkPlan,
+  WholeStageCodegenExec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import scala.jdk.CollectionConverters._
@@ -12,7 +15,8 @@ import scala.util.Random
 /** The single-pass `Flatten` against the union-of-explodes form it
   * replaced, kept here as the oracle: on seeded random records both give
   * the same multiset of rows and the same schema (names, order, types and
-  * nullability). */
+  * nullability). A per-record model fixes the row order, and the plan
+  * compiles: no lambda, every generator inside whole-stage codegen. */
 class FlattenEquivalenceSpec extends SparkSpec {
 
   /** The previous Flatten: one filtered explode per array field and a
@@ -104,6 +108,61 @@ class FlattenEquivalenceSpec extends SparkSpec {
           s"round $round schema\n got ${got.schema.treeString}\nwant ${want.schema.treeString}")
         assert(multiset(got) == multiset(want), s"round $round rows differ")
       }
+    }
+  }
+
+  /** Flatten's rows for record `r` of `schema`, in order, as values of
+    * the columns `cols`: each array's elements in field order, each one
+    * its element fields, else the base columns, else null; the base row
+    * when every array is empty or null. */
+  private def model(schema: StructType, cols: Seq[String])(r: Row): Seq[Seq[Any]] = {
+    val base = schema.fields.toSeq.collect {
+      case f if !f.dataType.isInstanceOf[ArrayType] => f.name -> r.getAs[Any](f.name)
+    }.toMap
+    val elements = schema.fields.toSeq.flatMap { f =>
+      f.dataType match {
+        case ArrayType(et, _) =>
+          Option(r.getAs[collection.Seq[Any]](f.name)).getOrElse(Nil).toSeq.map { e =>
+            et match {
+              case st: StructType => st.fieldNames.map(n =>
+                n -> (if (e == null) null else e.asInstanceOf[Row].getAs[Any](n))).toMap
+              case _ => Map(f.name -> e)
+            }
+          }
+        case _ => Nil
+      }
+    }
+    (if (elements.isEmpty) Seq(Map.empty[String, Any]) else elements)
+      .map(own => cols.map(c => own.getOrElse(c, base.getOrElse(c, null))))
+  }
+
+  test("rows come out in record order, each record's arrays in field order") {
+    for ((shape, schema) <- shapes) {
+      val df = records(schema, seed = 99L + schema.size, n = 40)
+      val got = Flatten(df)
+      val want = df.collect().toSeq.flatMap(model(schema, got.columns.toSeq))
+      assert(got.collect().map(_.toSeq).toSeq == want, shape)
+    }
+  }
+
+  /** Whether each generator of `plan` runs inside a whole-stage-codegen
+    * stage: below a `WholeStageCodegenExec` and above its `InputAdapter`s. */
+  private def generatorsCompiled(plan: SparkPlan, inStage: Boolean = false): Seq[Boolean] =
+    plan match {
+      case w: WholeStageCodegenExec => generatorsCompiled(w.child, inStage = true)
+      case a: InputAdapter => generatorsCompiled(a.child)
+      case g: GenerateExec => inStage +: generatorsCompiled(g.child, inStage)
+      case p => p.children.flatMap(generatorsCompiled(_, inStage))
+    }
+
+  for ((shape, schema) <- shapes) {
+    test(s"$shape: the plan has no lambda and its generator runs in whole-stage codegen") {
+      val plan = Flatten(records(schema, seed = 7L, n = 20)).queryExecution.executedPlan
+      val lambdas = plan.collect { case p => p.expressions.flatMap(_.collect {
+        case l: LambdaFunction => l }) }.flatten
+      assert(lambdas.isEmpty, plan.treeString)
+      val compiled = generatorsCompiled(plan)
+      assert(compiled.nonEmpty && compiled.forall(identity), plan.treeString)
     }
   }
 

@@ -29,6 +29,20 @@ class IngestConfigSpec extends AnyFunSuite {
     assert(cfg.database.jdbcUrl == "jdbc:postgresql://localhost:5432/testdb")
   }
 
+  test("a DB_PORT or WORKER_COUNT that is not a positive integer is refused by name") {
+    val f = java.nio.file.Files.createTempFile("graft_config", ".yaml")
+    try {
+      for ((yaml, key) <- Seq("RUNTIME:\n  WORKER_COUNT: 0\n" -> "WORKER_COUNT",
+          "DATABASE:\n  DB_PORT: abc\n" -> "DB_PORT")) {
+        java.nio.file.Files.writeString(f, yaml)
+        val e = intercept[IllegalArgumentException](IngestConfig.load(f.toString, env = Map.empty))
+        assert(e.getMessage.contains(key), e.getMessage)
+      }
+      assert(intercept[IllegalArgumentException](IngestConfig.load(f.toString,
+        env = Map("DB_PORT" -> "5432", "WORKER_COUNT" -> "-2"))).getMessage.contains("WORKER_COUNT"))
+    } finally java.nio.file.Files.delete(f)
+  }
+
   test("CONFIG_NAME/CONFIG_DIRECTORY discovery") {
     assert(IngestConfig.discover(Map.empty) == "./config.yaml")
     assert(IngestConfig.discover(Map(

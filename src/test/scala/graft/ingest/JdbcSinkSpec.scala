@@ -53,11 +53,21 @@ class JdbcSinkSpec extends SparkSpec {
 
   test("skip-and-continue mode: good records land, bad ones only counted") {
     withTable("""CREATE TABLE tgt3 ("name" VARCHAR(5), "v" BIGINT)""", "tgt3") {
-      val df = Seq(("ok1", 1L), ("toolongvalue", 2L), ("ok2", 3L)).toDF("name", "v")
+      import org.apache.spark.sql.functions._
+      // one partition of 10 rows from a projection that reuses its output
+      // row; the bad row sits mid-batch, so its batch replays row by row
+      val df = spark.range(1, 11).select(
+        when(col("id") === 6, lit("toolongvalue")).otherwise(concat(lit("ok"), col("id")))
+          .as("name"), col("id").as("v")).coalesce(1)
       val res = JdbcTransactionalSink.write(df, url, props, "tgt3",
-        JdbcTransactionalSink.Options(allOrNothing = false))
-      assert(res.committed && res.errors == 1 && res.succeeded == 2)
-      assert(countRows("tgt3") == 2)
+        JdbcTransactionalSink.Options(allOrNothing = false, batchSize = 4))
+      assert(res.committed && res.errors == 1 && res.succeeded == 9)
+      val c = DriverManager.getConnection(url, props)
+      val landed = try {
+        val rs = c.createStatement().executeQuery("""SELECT "name", "v" FROM tgt3""")
+        Iterator.continually(rs).takeWhile(_.next()).map(r => (r.getString(1), r.getLong(2))).toSet
+      } finally c.close()
+      assert(landed == (1L to 10L).filter(_ != 6).map(i => (s"ok$i", i)).toSet)
     }
   }
 
