@@ -5,8 +5,9 @@ import javax.xml.stream.{XMLInputFactory, XMLStreamConstants, XMLStreamReader}
 import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.types.StructType
+import graft.ingest.xml.XmlDataSource
 
-/** Distributed streaming XML source.
+/** The XML reader: the one way XML enters the engine.
   *
   * Reproduces the reference's XML semantics
   * (fileloader/fileloader-schema.go:142-197, :377-510):
@@ -16,95 +17,30 @@ import org.apache.spark.sql.types.StructType
   *     (:416-425);
   *   - leaf CharData is trimmed text (:427-433).
   *
-  * Spark-first design: `binaryFiles` gives one stream handle per file, so
-  * each file is StAX-parsed *streaming* (constant memory — same property
-  * as the reference's channel pipeline) inside a partition; parallelism is
-  * per-file, which is the natural unit at scale (ingest drops batches of
-  * files). Parsed records are emitted as canonical JSON and re-read with
-  * the DECLARED schema, so type casting, PERMISSIVE null handling and
-  * column pruning are all delegated to Spark's JSON reader — one typed
-  * path for both XML and JSON inputs, exactly as the reference converges
-  * both formats on `map[string]interface{}`.
+  * `read` is the DataSource V2 source [[graft.ingest.xml.XmlDataSource]]:
+  * one input partition per file, each StAX-parsed *streaming* (constant
+  * memory — the same property as the reference's channel pipeline)
+  * inside its task, so parallelism is per file, which is the natural
+  * unit at scale (ingest drops batches of files). Each record's parse
+  * tree is converted straight to a row of the required (possibly
+  * pruned) schema. Typing rules mirror Spark's PERMISSIVE JSON reader
+  * (unparseable or type-mismatched values → null); XmlDirectSpec asserts
+  * equality with the canonical path, which emits each record as JSON and
+  * re-reads it with Spark's JSON reader (`readViaJson`).
   */
 object XmlRecordReader {
 
-  // Main reads through binaryFiles (readDirect), not the DataSource V2
-  // source: routing `read` through XmlDataSource was measured slower on
-  // perfbench's ingest_files workload (`--seconds 10`, 5 alternating
-  // pairs on seeds 3001-3005, 4 cores) — pass_cpu_s median 8.24 s
-  // (8.04-8.45) → 9.52 s (9.16-9.97), every pair worse, every run
-  // correct.
   def read(spark: SparkSession, path: String, rowTag: String,
       schema: StructType): DataFrame =
-    readDirect(spark, path, rowTag, schema)
-
-  /** Fast path: build typed Rows straight from the StAX parse tree —
-    * one parse instead of parse→JSON→parse (≈2× ingest throughput).
-    * Typing rules mirror Spark's PERMISSIVE JSON reader (unparseable or
-    * type-mismatched values → null); equivalence with the canonical
-    * JSON path is asserted in XmlDirectSpec over fixtures and random
-    * documents. */
-  def readDirect(spark: SparkSession, path: String, rowTag: String,
-      schema: StructType): DataFrame = {
-    val files = spark.sparkContext.binaryFiles(path)
-    // list the input now: a missing path fails at the read, as Spark's
-    // own file readers do, not inside the first sink (or a cache) later
-    files.partitions
-    val rows = files
-      .flatMap { case (_, pds) =>
-        treeIterator(pds.open(), rowTag).map(t => treeToRow(t, schema))
-      }
-    spark.createDataFrame(rows, schema)
-  }
+    spark.read.format(classOf[XmlDataSource].getName)
+      .schema(schema)
+      .option("rowTag", rowTag)
+      .load(path)
 
   /** Canonical (reference) path: records re-typed by Spark's JSON reader. */
-  def readViaJson(spark: SparkSession, path: String, rowTag: String,
+  private[ingest] def readViaJson(spark: SparkSession, path: String, rowTag: String,
       schema: StructType): DataFrame =
     spark.read.schema(schema).json(readAsJson(spark, path, rowTag))
-
-  /** SPLITTABLE path for huge single files: Hadoop TextInputFormat with
-    * `</rowTag>` as the record delimiter splits ONE file across tasks at
-    * record boundaries (each HDFS-block-aligned split ends at the next
-    * delimiter). Each fragment is then StAX-parsed independently.
-    * Requires the row tag to be non-self-nesting (true of flat-record
-    * ingest formats; the reference's format qualifies). `minSplits`
-    * forces finer splits for testing/small files. */
-  def readSplittable(spark: SparkSession, path: String, rowTag: String,
-      schema: StructType, minSplits: Int = 1): DataFrame = {
-    import org.apache.hadoop.conf.Configuration
-    import org.apache.hadoop.io.{LongWritable, Text}
-    import org.apache.hadoop.mapreduce.lib.input.TextInputFormat
-    val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
-    conf.set("textinputformat.record.delimiter", s"</$rowTag>")
-    if (minSplits > 1) {
-      val size = new java.io.File(path).length()
-      conf.setLong("mapreduce.input.fileinputformat.split.maxsize",
-        math.max(size / minSplits, 1L))
-    }
-    val openTag = s"<$rowTag"
-    val rows = spark.sparkContext
-      .newAPIHadoopFile(path, classOf[TextInputFormat],
-        classOf[LongWritable], classOf[Text], conf)
-      .flatMap { case (_, chunk) =>
-        val s = chunk.toString
-        // first real record start in this chunk (guard against tags that
-        // merely share the prefix, e.g. <Records>)
-        var i = s.indexOf(openTag)
-        while (i >= 0 && i + openTag.length < s.length &&
-            !(s.charAt(i + openTag.length) == '>' ||
-              s.charAt(i + openTag.length).isWhitespace ||
-              s.charAt(i + openTag.length) == '/')) {
-          i = s.indexOf(openTag, i + 1)
-        }
-        if (i < 0) Iterator.empty
-        else {
-          val fragment = s.substring(i) + s"</$rowTag>"
-          val in = new java.io.ByteArrayInputStream(fragment.getBytes("UTF-8"))
-          treeIterator(in, rowTag).map(t => treeToRow(t, schema))
-        }
-      }
-    spark.createDataFrame(rows, schema)
-  }
 
   import org.apache.spark.sql.Row
   import org.apache.spark.sql.types._
@@ -113,15 +49,11 @@ object XmlRecordReader {
     * the (possibly pruned) required schema — only referenced fields are
     * materialized. */
   private[ingest] def internalRowIterator(in: InputStream, rowTag: String,
-      schema: StructType, keep: Row => Boolean = _ => true)
-      : Iterator[org.apache.spark.sql.catalyst.InternalRow] = {
+      schema: StructType): Iterator[org.apache.spark.sql.catalyst.InternalRow] = {
     val enc = org.apache.spark.sql.catalyst.encoders.ExpressionEncoder(
       org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(schema))
     val ser = enc.createSerializer()
-    treeIterator(in, rowTag)
-      .map(t => treeToRow(t, schema))
-      .filter(keep) // pushed-filter skip, pre-serialization
-      .map(r => ser(r).copy())
+    treeIterator(in, rowTag).map(t => ser(treeToRow(t, schema)).copy())
   }
 
   private def treeToRow(tree: Any, schema: StructType): Row = tree match {
@@ -148,7 +80,7 @@ object XmlRecordReader {
   }
 
   /** Parse XML file(s) into one canonical-JSON string per record. */
-  def readAsJson(spark: SparkSession, path: String, rowTag: String): Dataset[String] = {
+  private[ingest] def readAsJson(spark: SparkSession, path: String, rowTag: String): Dataset[String] = {
     import spark.implicits._
     spark.sparkContext.binaryFiles(path)
       .flatMap { case (_, pds) => treeIterator(pds.open(), rowTag).map(toJson) }

@@ -42,8 +42,9 @@ object Ingest {
         IngestSchema.flattened.fields.map(f => f.name -> f.dataType).toMap)
     },
 
-    // Same pipeline through the DataSource V2 XML connector (16 rows;
-    // column pruning reaches the parse — see ingest.xml.XmlDataSource).
+    // Same pipeline, the DataSource V2 XML source named by format() (16
+    // rows): XmlRecordReader.read loads the same source, so in03 and in04
+    // plan the same scan.
     "in04_reference_xml_dsv2" -> { (s, _) =>
       val raw = s.read.format("graft.ingest.xml.XmlDataSource")
         .schema(IngestSchema.raw)

@@ -1,6 +1,12 @@
 package graft.tools
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.streaming.operators.stateful.StateStoreWriter
+import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+import org.apache.spark.sql.execution.streaming.state.{StateStore, StateStoreId,
+  StateStoreProviderId}
+import org.apache.spark.sql.streaming.StreamingQuery
 import graft.tools.Scale.timed
 
 /** Stream-stream as-of/band state-boundedness gate — the empirical
@@ -74,16 +80,17 @@ private[tools] object StreamAsofGate {
         .withWatermark("p_ts", "5 minutes")
       val build = bIn.toDF().toDF("b_id", "b_ts", "b_user")
         .withWatermark("b_ts", "5 minutes")
-      // the gate's own checkpoint dir, removed with the query stopped:
-      // Spark's temporary one is left in the temp dir until the JVM
-      // exits when the stop interrupts a running batch
+      // the gate's own checkpoint dir, removed with the query stopped and
+      // its state stores unloaded: Spark's temporary one is left in the
+      // temp dir until the JVM exits when the stop interrupts a running
+      // batch
       Scale.withTempDir("scale_stream_asof") { ckpt =>
         val q = mk(probe, build).writeStream.format("noop")
           .option("checkpointLocation", ckpt)
           .queryName(name).outputMode("append").start()
         val states = scala.collection.mutable.ArrayBuffer[Long]()
-        val (_, secs) =
-          try timed {
+        try {
+          val (_, secs) = timed {
             var id = 0L
             (0 until nBatches).foreach { b =>
               val base = t0 + b * stepUs
@@ -100,13 +107,16 @@ private[tools] object StreamAsofGate {
               if (p != null && p.stateOperators.nonEmpty)
                 states += p.stateOperators.map(_.numRowsTotal).sum
             }
-          } catch { case t: Throwable => q.stop(); throw t }
-        // noop discards rows, so count emitted rows via the
-        // recentProgress sink numbers
-        val emitted = q.recentProgress.map(_.sink.numOutputRows)
-          .filter(_ >= 0).sum
-        q.stop()
-        (states.toSeq, emitted, secs)
+          }
+          // noop discards rows, so count emitted rows via the
+          // recentProgress sink numbers
+          val emitted = q.recentProgress.map(_.sink.numOutputRows)
+            .filter(_ >= 0).sum
+          (states.toSeq, emitted, secs)
+        } finally {
+          q.stop()
+          unloadStateStores(q)
+        }
       }
     }
 
@@ -168,5 +178,27 @@ private[tools] object StreamAsofGate {
       "band_state_early" -> earlyB, "band_state_late" -> lateB,
       "band_emitted" -> emittedB, "band_rows_per_sec" -> (totalIn / secB).toLong,
       "state_bounded" -> true)
+  }
+
+  /** Unloads the stopped query `q`'s state-store providers, each after a
+    * last maintenance pass: a background maintenance pass would otherwise
+    * still write a snapshot into the checkpoint dir once it is deleted.
+    * Only `q`'s providers: other queries may run in this JVM meanwhile.
+    * The store names of an operator's partition are the subdirectories
+    * of its checkpoint dir, besides the default store. */
+  private def unloadStateStores(q: StreamingQuery): Unit = {
+    val exec = q.asInstanceOf[StreamingQueryWrapper].streamingQuery
+    for {
+      ex <- Option(exec.lastExecution).toSeq
+      info <- ex.executedPlan.collect { case w: StateStoreWriter => w.stateInfo }.flatten
+      part <- 0 until info.numPartitions
+      dir = new Path(info.checkpointLocation, s"${info.operatorId}/$part")
+      fs = dir.getFileSystem(ex.sparkSession.sessionState.newHadoopConf())
+      name <- StateStoreId.DEFAULT_STORE_NAME +: (if (fs.exists(dir))
+        fs.listStatus(dir).filter(_.isDirectory).map(_.getPath.getName).toSeq else Nil)
+      id = StateStoreProviderId(
+        StateStoreId(info.checkpointLocation, info.operatorId, part, name), info.queryRunId)
+      if StateStore.isLoaded(id)
+    } StateStore.doMaintenanceAndUnload(id)
   }
 }

@@ -9,8 +9,11 @@ import scala.jdk.CollectionConverters._
 import scala.util.Try
 import org.apache.spark.scheduler.{SparkListenerBlockUpdated, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{ExternalRDDScanExec, RDDScanExec}
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.graft.CacheProbe
-import graft.ingest.IngestSchema
+import graft.ingest.{IngestSchema, Sinks}
+import graft.ingest.xml.XmlScan
 
 /** `Main.run` with every sink runs exactly 2 Spark jobs: the export job,
   * which parses and flattens the file once for the CSV, JSON and xlsx
@@ -143,6 +146,31 @@ class MainJobsSpec extends SparkSpec {
       assert(frames.head.startsWith("graft.ingest.Sinks$") &&
         frames(1).startsWith("graft.ingest.JdbcTransactionalSink$"), frames)
     }
+  }
+
+  test("xml: the export job scans through the V2 source, which reads only " +
+      "the top-level columns the template keeps") {
+    import spark.implicits._
+    val tmpl = tempDir("main_jobs_template")
+    // the narrower template MainSpec writes: row 3 keeps status, user
+    // and fnumber, so every other column and scan_time are dropped
+    Sinks.exportFiles(
+      Seq(("REQUIRED", "REQUIRED", "OPTIONAL"), ("status", "user", "fnumber"))
+        .toDF("Status", "User", "F Number").coalesce(1),
+      tmpl.toString)
+    val out = tempDir("main_jobs_out_template")
+    val (projected, n) = Main.run(spark, Main.Args(file = xmlFile.toString, table = "t",
+      template = tmpl.resolve("export.xlsx").toString, exportDir = out.toString))
+    assert(n == 4 && projected.columns.toSeq == Seq("status", "user", "fnumber"))
+    val plan = projected.queryExecution.executedPlan
+    val scans = plan.collect { case b: BatchScanExec => b.scan }
+    assert(scans.size == 1 && scans.head.isInstanceOf[XmlScan], plan)
+    assert(plan.collect { case r: ExternalRDDScanExec[_] => r case r: RDDScanExec => r }.isEmpty,
+      plan)
+    // Flatten's generator reads the whole fnumbers array, so scan_time
+    // is still parsed: the pruning stops at the repeated group
+    assert(scans.head.readSchema().simpleString == "struct<user:string,status:string," +
+      "fnumbers:array<struct<fnumber:string,scan_time:string>>>", plan)
   }
 
   test("with --export-dir as the only sink the count rides on the export job") {

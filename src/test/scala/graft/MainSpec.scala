@@ -126,6 +126,40 @@ class MainSpec extends SparkSpec {
     }
   }
 
+  test("a missing -file x.xml fails before any Spark job and leaves an earlier export " +
+      "and the target table as they were") {
+    val url = derbyTable("graft_main_missing_xml", "loaded")
+    val dir = tempDir("main_missing_xml")
+    val in = dir.resolve("in.xml")
+    java.nio.file.Files.writeString(in,
+      "<Data><Record><user>u1</user></Record><Record><user>u2</user></Record></Data>")
+    val out = dir.resolve("export")
+    Console.withOut(new java.io.ByteArrayOutputStream()) {
+      Main.run(spark, Main.Args(file = in.toString, table = "loaded",
+        exportDir = out.toString, jdbc = true, jdbcUrl = url))
+    }
+    def rows(): Seq[String] = {
+      val c = java.sql.DriverManager.getConnection(url)
+      try {
+        val rs = c.createStatement().executeQuery("SELECT * FROM loaded")
+        val n = rs.getMetaData.getColumnCount
+        Iterator.continually(rs).takeWhile(_.next())
+          .map(r => (1 to n).map(r.getString).mkString("|")).toSeq.sorted
+      } finally c.close()
+    }
+    val (exported, loaded) = (snapshot(out), rows())
+    assert(exported.keys.exists(_.startsWith("csv")) && loaded.size == 2)
+    var result: scala.util.Try[_] = null
+    val jobs = jobsDuring(spark) {
+      result = scala.util.Try(Main.run(spark, Main.Args(file = dir.resolve("x.xml").toString,
+        table = "loaded", exportDir = out.toString, jdbc = true, jdbcUrl = url)))
+    }
+    assert(result.failed.toOption.exists(_.isInstanceOf[java.io.FileNotFoundException]), result)
+    assert(jobs == 0, s"Main.run ran $jobs Spark jobs")
+    assert(snapshot(out) == exported, "the earlier export changed")
+    assert(rows() == loaded, "the target table changed")
+  }
+
   /** The text of column `name` in each data row of a CSV export, in
     * part order. */
   private def csvColumn(dir: java.nio.file.Path, name: String): Seq[String] = {

@@ -1,10 +1,12 @@
 package graft.ingest
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** The XML DataSource V2: format() read path, equivalence with the RDD
-  * readers, and column pruning reaching the parse. */
+/** The XML DataSource V2: format() read path, equivalence with the
+  * canonical JSON path, column pruning reaching the parse, and how a
+  * path names its files. */
 class XmlDataSourceSpec extends SparkSpec {
 
   private val fixture = "/root/reference/test-loader.xml"
@@ -15,11 +17,31 @@ class XmlDataSourceSpec extends SparkSpec {
     .option("rowTag", "Record")
     .load(path)
 
-  test("format() read equals the RDD reader on the fixture") {
-    val a = v2(fixture).collect().map(_.toString).sorted.toSeq
-    val b = XmlRecordReader.read(spark, fixture, "Record", IngestSchema.raw)
-      .collect().map(_.toString).sorted.toSeq
-    assert(a == b && a.size == 8)
+  private def oracle(path: String) =
+    XmlRecordReader.readViaJson(spark, path, "Record", IngestSchema.raw)
+
+  private def sorted(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+
+  /** 2000 records; record i has i % 3 fnumbers. */
+  private lazy val bigXml: String = {
+    val f = tempDir("xmlv2big").resolve("big.xml")
+    val sb = new StringBuilder("<Data>")
+    (1 to 2000).foreach { i =>
+      sb.append(s"""<Record><user>user$i</user><dt_created>${1698412800L + i}</dt_created>""")
+      sb.append(s"""<json_hash>h$i</json_hash>""")
+      (0 until i % 3).foreach { j =>
+        sb.append(s"<fnumbers><fnumber>FN$i-$j</fnumber><scan_time>t$j</scan_time></fnumbers>")
+      }
+      sb.append("</Record>")
+    }
+    sb.append("</Data>")
+    java.nio.file.Files.writeString(f, sb.toString)
+    f.toString
+  }
+
+  test("format() read equals the JSON path on the fixture") {
+    val a = sorted(v2(fixture))
+    assert(a == sorted(oracle(fixture)) && a.size == 8)
   }
 
   test("column pruning reaches the scan (ReadSchema only carries referenced fields)") {
@@ -35,24 +57,25 @@ class XmlDataSourceSpec extends SparkSpec {
     assert(flat.count() == 16)
   }
 
-  test("filter pushdown: supported predicates skip records at the parse, results exact") {
-    val df = v2(fixture).filter(col("status") === "Pending" && col("dt_created") > 0L)
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("PushedFilters=[") && plan.contains("EqualTo(status,Pending)"),
-      s"expected pushed filters in scan description:\n$plan")
-    val expected = XmlRecordReader.read(spark, fixture, "Record", IngestSchema.raw)
-      .filter(col("status") === "Pending" && col("dt_created") > 0L)
-      .collect().map(_.toString).sorted.toSeq
-    assert(df.collect().map(_.toString).sorted.toSeq == expected)
+  test("a filter above the scan: results exact") {
+    val p = col("status") === "Pending" && col("dt_created") > 0L
+    val expected = sorted(oracle(fixture).filter(p))
+    assert(sorted(v2(fixture).filter(p)) == expected)
     assert(expected.nonEmpty)
   }
 
-  test("filter pushdown never wrongly drops: unsupported/contains filters still correct") {
-    val df = v2(fixture).filter(col("user").contains("o") || col("status") === "Approved")
-    val expected = XmlRecordReader.read(spark, fixture, "Record", IngestSchema.raw)
-      .filter(col("user").contains("o") || col("status") === "Approved")
-      .count()
-    assert(df.count() == expected && expected > 0)
+  test("a filter with contains and or: results exact") {
+    val p = col("user").contains("o") || col("status") === "Approved"
+    val expected = oracle(fixture).filter(p).count()
+    assert(v2(fixture).filter(p).count() == expected && expected > 0)
+  }
+
+  test("a 2000-record document: row count and flattened count") {
+    assert(v2(bigXml).count() == 2000)
+    assert(sorted(v2(bigXml)) == sorted(oracle(bigXml)))
+    // i % 3 == 0 → 1, == 1 → 1, == 2 → 2
+    val expected = (1 to 2000).map(i => math.max(1, i % 3)).sum
+    assert(Flatten(v2(bigXml)).count() == expected)
   }
 
   test("missing schema → clear error") {
@@ -92,8 +115,27 @@ class XmlDataSourceSpec extends SparkSpec {
     val df = v2(dir.toString)
     assert(df.rdd.getNumPartitions == 2)
     assert(df.count() == 5)
-    // the same files the binaryFiles reader sees
-    assert(XmlRecordReader.read(spark, dir.toString, "Record", IngestSchema.raw)
-      .count() == 5)
+  }
+
+  test("a glob names the files it matches, as Hadoop's FileInputFormat does") {
+    val dir = tempDir("xmlv2glob")
+    def write(name: String, users: Int*): Unit = java.nio.file.Files.writeString(
+      dir.resolve(name), users.map(i => s"<Record><user>u$i</user></Record>")
+        .mkString("<Data>", "", "</Data>"))
+    write("a.xml", 1, 2)
+    write("b.xml", 3)
+    write("c.txt", 4)
+    val df = v2(s"$dir/*.xml")
+    assert(df.rdd.getNumPartitions == 2)
+    assert(df.select("user").collect().map(_.getString(0)).sorted.toSeq ==
+      Seq("u1", "u2", "u3"))
+  }
+
+  test("a missing path or a glob that matches nothing fails at the load") {
+    val dir = tempDir("xmlv2missing")
+    for (path <- Seq(s"$dir/missing.xml", s"$dir/*.xml")) {
+      val e = intercept[java.io.FileNotFoundException](v2(path))
+      assert(e.getMessage.contains(path), e.getMessage)
+    }
   }
 }

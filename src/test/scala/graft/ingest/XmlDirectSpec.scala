@@ -2,18 +2,20 @@ package graft.ingest
 
 import java.nio.file.Files
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
-/** The direct-Row XML fast path must be semantically identical to the
-  * canonical StAX→JSON→Spark-JSON path. */
+/** The XML reader (the DataSource V2 source) must be semantically
+  * identical to the canonical StAX→JSON→Spark-JSON path, also when the
+  * plan prunes the columns it reads. */
 class XmlDirectSpec extends SparkSpec {
 
-  private def bothPaths(path: String, schema: StructType) = (
-    XmlRecordReader.readDirect(spark, path, "Record", schema),
-    XmlRecordReader.readViaJson(spark, path, "Record", schema))
-
-  private def assertEqualSets(path: String, schema: StructType): Unit = {
-    val (d, j) = bothPaths(path, schema)
+  private def assertEqualSets(path: String, schema: StructType,
+      columns: Seq[String] = Nil): Unit = {
+    def cols(df: DataFrame) = if (columns.isEmpty) df else df.select(columns.map(col): _*)
+    val d = cols(XmlRecordReader.read(spark, path, "Record", schema))
+    val j = cols(XmlRecordReader.readViaJson(spark, path, "Record", schema))
     assert(d.schema == j.schema)
     val ds = d.collect().map(_.toString).sorted.toSeq
     val js = j.collect().map(_.toString).sorted.toSeq
@@ -38,7 +40,9 @@ class XmlDirectSpec extends SparkSpec {
     assertEqualSets(f.toString, IngestSchema.raw)
   }
 
-  test("randomized documents: both paths agree") {
+  /** 200 records: a user each, a dt_created and an ast_name each half
+    * the time, and 0-3 fnumbers. */
+  private lazy val randomDoc: String = {
     val rnd = new scala.util.Random(11)
     val f = tempDir("direct_rand").resolve("direct_rand.xml")
     val sb = new StringBuilder("<Data>")
@@ -54,6 +58,19 @@ class XmlDirectSpec extends SparkSpec {
     }
     sb.append("</Data>")
     Files.writeString(f, sb.toString)
-    assertEqualSets(f.toString, IngestSchema.raw)
+    f.toString
+  }
+
+  test("randomized documents: both paths agree") {
+    assertEqualSets(randomDoc, IngestSchema.raw)
+  }
+
+  test("a pruned read equals the same columns of the JSON path, and the pruning reaches the scan") {
+    val columns = Seq("user", "dt_created", "fnumbers")
+    assertEqualSets(randomDoc, IngestSchema.raw, columns)
+    val plan = XmlRecordReader.read(spark, randomDoc, "Record", IngestSchema.raw)
+      .select(columns.map(col): _*).queryExecution.executedPlan.toString
+    assert(plan.contains("ReadSchema=struct<user:string,dt_created:bigint,fnumbers:array"),
+      s"expected a pruned ReadSchema in the plan:\n$plan")
   }
 }
